@@ -11,6 +11,21 @@ import org.apache.spark.sql.SparkSession
   * time-to-failure) and the process exits non-zero if any query fails.
   */
 object Bench {
+
+  /** The compact final stdout line. `cpus` is emitted as a JSON
+    * string: `*` (as in `local[*]`) is a valid setting and would
+    * make a bare number field unparseable.
+    */
+  private[graft] def summaryLine(
+      totalSec: String,
+      nFail: Int,
+      failedPart: String,
+      sfDir: String,
+      cpus: String,
+      nQueries: Int,
+  ): String =
+    s"""{"total_sec":$totalSec,"failed":$nFail$failedPart,"sf":"$sfDir","cpus":"$cpus","n_queries":$nQueries}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -125,8 +140,7 @@ object Bench {
     // A SECOND, compact summary line as the final print always fits
     // the tail; the full per-query map stays on the line above and in
     // bench_out.json. Timing methodology unchanged.
-    println(
-      s"""{"total_sec":${fmt(total)},"failed":$nFail$failedPart,"sf":"$sfDir","cpus":$cpus,"n_queries":${results.size}}""")
+    println(summaryLine(fmt(total), nFail, failedPart, sfDir, cpus, results.size))
     val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val oks = results.map { case (k, (_, ok)) => s"\"" + k + "\":" + ok }

@@ -32,8 +32,7 @@ object EmbedProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF=k=v;k2=v2 — runtime confs for A/B probes (the
-    // Bench convention; e.g. spark.graft.fusedKmeans=false restores
-    // the r17 expression+sumByKey k-means pass)
+    // Bench convention)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
@@ -49,24 +48,6 @@ object EmbedProbe {
     // "diversity" probes the one-shot D4 path at its PRODUCTION shape
     // (N/256 cells — the driver query pins nCells=16 for oracle
     // replay); no store involved
-    // "semstage"/"semstage_agg" run the one-shot semantic dedup at
-    // its PRODUCTION shape (N/256 cells, two-level assignment) with
-    // the r17 per-stage wall-time split — streamed (CellScorePlan)
-    // vs aggregation (collect_list/SemDedupCellExpr) scoring is the
-    // §6z A/B axis
-    if (mode == "semstage" || mode == "semstage_agg") {
-      val streamed = mode == "semstage"
-      val t0 = System.nanoTime()
-      val stages = operators.Similarity
-        .semanticDedupStaged(emb, threshold = 0.3, kmeansIters = 0, scoreStreamed = streamed)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val stageJson = stages.map { case (n, s) => s""""$n":${f(s)}""" }.mkString(",")
-      println(
-        s"""{"dir":"$dir","mode":"$mode","build_sec":0.0,"incr_sec":${f(sec)},""" +
-          s""""total_sec":${f(sec)},"build_stages":{$stageJson}}""")
-      spark.stop()
-      return
-    }
     if (mode == "diversity") {
       val t0 = System.nanoTime()
       operators.Similarity

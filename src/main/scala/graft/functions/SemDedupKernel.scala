@@ -1,12 +1,18 @@
 package graft.functions
 
-/** The in-memory SemDeDup cell kernel shared by
-  * [[SemDedupCellExpr]] (the collect_list aggregation form) and
-  * [[graft.operators.Similarity.cellDedupScores]]'s streamed form
-  * (repartition + sortWithinPartitions + per-cell grouping): decode
-  * rules, normalization arithmetic, candidate ordering, and verdict
-  * comparisons live HERE once, so the two physical shapes are
-  * bit-identical by construction (pinned in ScalaTest either way).
+/** The in-memory SemDeDup cell kernel behind
+  * [[graft.plans.CellScorePlan]] (the physical form of
+  * [[graft.operators.Similarity.cellDedupScores]]): normalization
+  * arithmetic, candidate ordering, and verdict comparisons.
+  *
+  * Verdicts are bit-identical to the in-cell pair self-join
+  * (`a.cell = b.cell AND a.id < b.id`, normalized dot): each dot is
+  * the same left-to-right f64 accumulation as [[DotProductExpr]] over
+  * the same normalized vectors (per-element products commute and the
+  * sum order is the element order), min/max over doubles are
+  * order-free, and members are processed in ascending-id order, so
+  * the candidate pairs are exactly the join's. Pinned in ScalaTest
+  * against that join.
   */
 object SemDedupKernel {
 
@@ -41,13 +47,6 @@ object SemDedupKernel {
     val maxSim = new Array[Double](cap)
   }
 
-  /** GRAFT_SEMDEDUP_TILED=false restores the scalar candidate loop —
-    * measurement aid for same-binary A/Bs; both paths are bit-equal
-    * by construction (same per-dot accumulation order) and pinned.
-    */
-  private val tiled: Boolean =
-    sys.env.get("GRAFT_SEMDEDUP_TILED").forall(_.toBoolean)
-
   def verdicts(
       ids: Array[Long],
       neu: Array[Boolean],
@@ -63,15 +62,15 @@ object SemDedupKernel {
     val ordBoxed = ord.take(n).sortBy(ids(_))
     val out = new CellVerdicts(n)
     // Scoring candidates compacted in ascending-id order as members
-    // are passed (exactly the lower-id non-null set the scalar loop
-    // visits) — lets the dot loop run 4 independent FMA chains per
+    // are passed (exactly the lower-id non-null set) — lets the dot
+    // loop run 4 independent FMA chains per
     // candidate group instead of one latency-bound chain per dot
     // (r17 verdict #4: Σ|cell|²/2 × d dots ARE the score-stage
     // compute at fd sf100 — census p50=90/p99=3495/Σ|cell|²=4.1e9,
     // balanced aggregate compute, not stragglers). Each scalar dot
     // still accumulates over k ascending and verdicts are applied in
-    // ascending candidate order, so results are bit-identical to the
-    // scalar form (pinned).
+    // ascending candidate order, so results are bit-identical to a
+    // one-chain-per-dot scalar loop (pinned against a test-side one).
     val candV = new Array[Array[Double]](n)
     val candId = new Array[Long](n)
     var nc = 0
@@ -97,30 +96,29 @@ object SemDedupKernel {
             }
           }
 
-          if (tiled) {
-            while (ai + 4 <= nc) {
-              val v0 = candV(ai); val v1 = candV(ai + 1)
-              val v2 = candV(ai + 2); val v3 = candV(ai + 3)
-              val d0 = math.min(v0.length, db); val d1 = math.min(v1.length, db)
-              val d2 = math.min(v2.length, db); val d3 = math.min(v3.length, db)
-              val dMin = math.min(math.min(d0, d1), math.min(d2, d3))
-              var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-              var k = 0
-              while (k < dMin) {
-                val x = vb(k)
-                s0 += v0(k) * x; s1 += v1(k) * x; s2 += v2(k) * x; s3 += v3(k) * x
-                k += 1
-              }
-              // ragged tails (same ascending-k order per chain)
-              k = dMin; while (k < d0) { s0 += v0(k) * vb(k); k += 1 }
-              k = dMin; while (k < d1) { s1 += v1(k) * vb(k); k += 1 }
-              k = dMin; while (k < d2) { s2 += v2(k) * vb(k); k += 1 }
-              k = dMin; while (k < d3) { s3 += v3(k) * vb(k); k += 1 }
-              apply1(s0, candId(ai)); apply1(s1, candId(ai + 1))
-              apply1(s2, candId(ai + 2)); apply1(s3, candId(ai + 3))
-              ai += 4
+          while (ai + 4 <= nc) {
+            val v0 = candV(ai); val v1 = candV(ai + 1)
+            val v2 = candV(ai + 2); val v3 = candV(ai + 3)
+            val d0 = math.min(v0.length, db); val d1 = math.min(v1.length, db)
+            val d2 = math.min(v2.length, db); val d3 = math.min(v3.length, db)
+            val dMin = math.min(math.min(d0, d1), math.min(d2, d3))
+            var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+            var k = 0
+            while (k < dMin) {
+              val x = vb(k)
+              s0 += v0(k) * x; s1 += v1(k) * x; s2 += v2(k) * x; s3 += v3(k) * x
+              k += 1
             }
+            // ragged tails (same ascending-k order per chain)
+            k = dMin; while (k < d0) { s0 += v0(k) * vb(k); k += 1 }
+            k = dMin; while (k < d1) { s1 += v1(k) * vb(k); k += 1 }
+            k = dMin; while (k < d2) { s2 += v2(k) * vb(k); k += 1 }
+            k = dMin; while (k < d3) { s3 += v3(k) * vb(k); k += 1 }
+            apply1(s0, candId(ai)); apply1(s1, candId(ai + 1))
+            apply1(s2, candId(ai + 2)); apply1(s3, candId(ai + 3))
+            ai += 4
           }
+          // the fewer-than-4 remainder, one candidate at a time
           while (ai < nc) {
             val va = candV(ai)
             val d = math.min(va.length, db)

@@ -401,6 +401,28 @@ case class NormalizeExpr(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** The nearest-centroid argmax order — ONE definition shared by
+  * [[NearestCellExpr]] (eval and generated code), the coarse step of
+  * [[NearestFineExpr]] and the row-tiled argmax of
+  * [[graft.operators.VectorAgg]], so every assignment path picks the
+  * same cell for the same dots.
+  */
+object NearestOrder {
+
+  /** Does candidate (s, id) beat the best so far (bestS, bestId)? The
+    * Spark struct ordering of (s, -id): highest dot wins with ±0.0
+    * equal and NaN largest and self-equal, then the smallest id.
+    * `first` marks a row's first candidate, which always wins.
+    */
+  def better(s: Double, id: Long, first: Boolean, bestS: Double, bestId: Long): Boolean = {
+    val cmp = if (s == bestS) 0 else java.lang.Double.compare(s, bestS)
+    first || cmp > 0 || (cmp == 0 && id < bestId)
+  }
+
+  /** [[better]] as generated Java calls it (the static forwarder). */
+  private[functions] val javaCall: String = "graft.functions.NearestOrder.better"
+}
+
 /** Nearest-centroid id of one vector — argmax over a FIXED centroid
   * table held as codegen reference objects (ids + a flat row-major
   * matrix), one JIT-friendly loop per row, entirely map-side.
@@ -468,10 +490,7 @@ case class NearestCellExpr(
         i += 1
       }
       val id = centIds(c)
-      // Spark struct-ordering compare of (s, -id): ±0.0 equal, NaN
-      // largest/self-equal, then smallest id
-      val cmp = if (s == bestS) 0 else java.lang.Double.compare(s, bestS)
-      if (c == 0 || cmp > 0 || (cmp == 0 && id < bestId)) { bestS = s; bestId = id }
+      if (NearestOrder.better(s, id, c == 0, bestS, bestId)) { bestS = s; bestId = id }
       c += 1
     }
     bestId
@@ -481,6 +500,7 @@ case class NearestCellExpr(
     val get = if (elemIsFloat) "getFloat" else "getDouble"
     val centsRef = ctx.addReferenceObj("nearestCents", cents, "double[]")
     val idsRef = ctx.addReferenceObj("nearestIds", centIds, "long[]")
+    val better = NearestOrder.javaCall
     nullSafeCodeGen(
       ctx,
       ev,
@@ -493,7 +513,6 @@ case class NearestCellExpr(
         val bestS = ctx.freshName("bestS")
         val bestId = ctx.freshName("bestId")
         val id = ctx.freshName("id")
-        val cmp = ctx.freshName("cmp")
         val vv = ctx.freshName("vv")
         s"""
            |int $n = java.lang.Math.min($v.numElements(), $dim);
@@ -508,8 +527,7 @@ case class NearestCellExpr(
            |    $s += $vv[$i] * $centsRef[$base + $i];
            |  }
            |  long $id = $idsRef[$c];
-           |  int $cmp = ($s == $bestS) ? 0 : java.lang.Double.compare($s, $bestS);
-           |  if ($c == 0 || $cmp > 0 || ($cmp == 0 && $id < $bestId)) { $bestS = $s; $bestId = $id; }
+           |  if ($better($s, $id, $c == 0, $bestS, $bestId)) { $bestS = $s; $bestId = $id; }
            |}
            |${ev.value} = $bestId;
            |""".stripMargin
@@ -589,8 +607,7 @@ case class NearestFineExpr(
       var s = 0.0
       var i = 0
       while (i < n) { s += vv(i) * coarseMat(base + i); i += 1 }
-      val cmp = if (s == bestS) 0 else java.lang.Double.compare(s, bestS)
-      if (c == 0 || cmp > 0 || (cmp == 0 && coarseIds(c) < coarseIds(bestC))) { bestS = s; bestC = c }
+      if (NearestOrder.better(s, coarseIds(c), c == 0, bestS, coarseIds(bestC))) { bestS = s; bestC = c }
       c += 1
     }
     val lo = fineStart(bestC)
@@ -618,6 +635,7 @@ case class NearestFineExpr(
     val fCells = ctx.addReferenceObj("nfFineCells", fineCells, "long[]")
     val fMat = ctx.addReferenceObj("nfFineMat", fineMat, "double[]")
     val fStart = ctx.addReferenceObj("nfFineStart", fineStart, "int[]")
+    val better = NearestOrder.javaCall
     nullSafeCodeGen(
       ctx,
       ev,
@@ -646,8 +664,7 @@ case class NearestFineExpr(
            |  int $base = $c * $dim;
            |  double $s = 0.0;
            |  for (int $i = 0; $i < $n; $i++) { $s += $vv[$i] * $cMat[$base + $i]; }
-           |  int $cmp = ($s == $bestS) ? 0 : java.lang.Double.compare($s, $bestS);
-           |  if ($c == 0 || $cmp > 0 || ($cmp == 0 && $cIds[$c] < $cIds[$bestC])) { $bestS = $s; $bestC = $c; }
+           |  if ($better($s, $cIds[$c], $c == 0, $bestS, $cIds[$bestC])) { $bestS = $s; $bestC = $c; }
            |}
            |int $lo = $fStart[$bestC];
            |int $hi = $fStart[$bestC + 1];
@@ -668,127 +685,6 @@ case class NearestFineExpr(
            |""".stripMargin
       },
     )
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** SemDeDup scoring of ONE cell, in memory: the input is a cell's
-  * member list `array<struct<id: long, neu: boolean,
-  * nv: array<double>>>`; the output is, for every `neu` member b, its
-  * keep-first duplicate verdict against ALL lower-id members a of the
-  * cell — `dup_of` = min qualifying a.id, `max_sim` = max qualifying
-  * dot(a.nv, b.nv) — as `array<struct<id, dup_of, max_sim>>` (nulls
-  * for keepers).
-  *
-  * This replaces the in-cell pair SELF-JOIN
-  * (`a.cell = b.cell AND a.id < b.id` over (id, nv) rows). That join
-  * materializes Σ|cell|² pair ROWS each carrying TWO d-dim f64
-  * vectors (~8 KB at d=512) through a spilling sort-merge exchange —
-  * row count is linear in the corpus at a fixed target cell size, but
-  * BYTES are pair count × payload: hundreds of GB at 2M vectors
-  * (judge-reproduced SPILL_OUT_OF_MEMORY at fd sf100, r15 verdict
-  * rows 20b/20c). Here each vector crosses the wire ONCE (the
-  * per-cell collect_list shuffle, ~corpus bytes), the O(|cell|²)
-  * dots run over in-heap primitive arrays inside one compiled loop,
-  * and only the (id, dup_of, max_sim) verdicts leave the expression.
-  *
-  * Bit-compatibility with the join form it replaces: each dot is the
-  * same left-to-right f64 accumulation as [[DotProductExpr]] over the
-  * same normalized vectors (dot is FP-commutative in its argument
-  * order — per-element products are identical and the sum order is
-  * the element order), min/max over doubles are order-free, and
-  * members are processed in ascending-id order so `a < b` pairs are
-  * exactly the join's pair set. Pinned against the join form in
-  * ScalaTest and unchanged under the DuckDB oracle's pair-join
-  * replay.
-  *
-  * Per-invocation memory is one cell (~|cell| × d × 8 B); a
-  * pathological hot cell is a data-distribution signal, same contract
-  * as the join form. CodegenFallback: invoked once per CELL (N/256
-  * rows at the default), with the k²·d work in compiled Scala — the
-  * per-row interpreted-call overhead is noise.
-  */
-case class SemDedupCellExpr(child: Expression, threshold: Double, normalize: Boolean = false)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("dup_of", LongType, nullable = true),
-      StructField("max_sim", DoubleType, nullable = true),
-    )),
-    containsNull = false,
-  )
-
-  /** With `normalize = true`, member vectors arrive RAW (float or
-    * double) — half the shuffle bytes of the f64 normalized copy at
-    * float input, and the shuffle of this expression's input IS the
-    * operator's dominant cost at scale (jstack: shuffle-write-bound
-    * at 2M d=512) — and each member is normalized here, once, with
-    * [[NormalizeExpr]]'s exact arithmetic (f64 Σx² left-to-right,
-    * per-element /√), so scores are bit-identical to pre-normalized
-    * input.
-    */
-  private lazy val elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(StructType(fields), _) =>
-      fields(2).dataType match {
-        case ArrayType(FloatType, _) => true
-        case _ => false
-      }
-    case _ => false
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val ms = a.asInstanceOf[ArrayData]
-    val n = ms.numElements()
-    val ids = new Array[Long](n)
-    val neu = new Array[Boolean](n)
-    val vecs = new Array[Array[Double]](n)
-    val lf = elemIsFloat
-    var i = 0
-    while (i < n) {
-      val r = ms.getStruct(i, 3)
-      ids(i) = r.getLong(0)
-      neu(i) = r.getBoolean(1)
-      // a null vector or any null element makes the member
-      // NON-SCORING (vecs(i) = null): the join form's dotNorm / the
-      // HOF dot returns null there, which never reaches >= threshold
-      // — so such a member is excluded from every candidate set and,
-      // if neu, emitted as a keeper. Decoding a null element as 0.0
-      // (the pre-r17 behavior) silently mis-scored it instead.
-      if (!r.isNullAt(2)) {
-        val v = r.getArray(2)
-        val d = v.numElements()
-        val arr = new Array[Double](d)
-        var k = 0
-        var anyNull = false
-        while (k < d) {
-          if (v.isNullAt(k)) { anyNull = true; k = d }
-          else { arr(k) = if (lf) v.getFloat(k).toDouble else v.getDouble(k); k += 1 }
-        }
-        if (!anyNull) {
-          if (normalize) SemDedupKernel.normalizeInPlace(arr)
-          vecs(i) = arr
-        }
-      }
-      i += 1
-    }
-    // the shared kernel: ascending-id candidate rule, found-flag
-    // verdicts, NaN/threshold comparisons — one implementation for
-    // this expression and the streamed cell-scoring form
-    val v = SemDedupKernel.verdicts(ids, neu, vecs, n, threshold)
-    val out = new Array[Any](v.nOut)
-    var j = 0
-    while (j < v.nOut) {
-      out(j) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        if (!v.found(j)) Array[Any](v.ids(j), null, null)
-        else Array[Any](v.ids(j), v.dupOf(j), v.maxSim(j))
-      )
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -822,13 +718,6 @@ object VectorExprs {
     */
   def pqAdcNative(codes: Column, table: Column, k: Int): Column =
     toColumn(PqAdcExpr(toExpression(codes), toExpression(table), k))
-
-  /** In-memory SemDeDup verdicts for one cell's member list
-    * (array<struct<id, neu, nv>> → array<struct<id, dup_of,
-    * max_sim>> for the neu members); `normalize` when nv is raw.
-    */
-  def semDedupCellNative(members: Column, threshold: Double, normalize: Boolean = false): Column =
-    toColumn(SemDedupCellExpr(toExpression(members), threshold, normalize))
 
   /** Map-side nearest-centroid assignment against a fixed centroid
     * table (ids + flat row-major matrix as codegen reference objects).

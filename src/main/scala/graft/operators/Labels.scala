@@ -612,10 +612,7 @@ object Labels {
       signOnVertical: Boolean = false,
       c: TradingCols = TradingCols.default,
   ): DataFrame = singleFrame(df, c) { df =>
-    val agg =
-      if (sys.env.contains("GRAFT_TB_JOINCORE"))
-        tripleBarrierCore(df, horizon, ptMult, slMult, volSpan, constTarget, c)
-      else tripleBarrierCoreScan(df, horizon, ptMult, slMult, volSpan, constTarget, c)
+    val agg = tripleBarrierCoreScan(df, horizon, ptMult, slMult, volSpan, constTarget, c)
     val ptFirst = col("pt_ts").isNotNull && (col("sl_ts").isNull || col("pt_ts") <= col("sl_ts"))
     val slFirst = col("sl_ts").isNotNull && !ptFirst
     val verticalLabel =
@@ -633,9 +630,8 @@ object Labels {
       )
   }
 
-  /** Shared event×path crossing aggregation behind barrierTouches and
-    * tripleBarrier: per event, the earliest pt/sl crossing ticks and
-    * realized returns plus the vertical-barrier return.
+  /** A `"<n> <unit>"` horizon (hours, minutes, days or seconds) in
+    * microseconds.
     */
   private[graft] def parseHorizonMicros(horizon: String): Long = {
     val parts = horizon.split("\\s+")
@@ -651,69 +647,8 @@ object Labels {
     n * perUnit
   }
 
-  private[graft] def tripleBarrierCore(
-      df: DataFrame,
-      horizon: String,
-      ptMult: Double,
-      slMult: Double,
-      volSpan: Int,
-      constTarget: Option[Double],
-      c: TradingCols,
-  ): DataFrame = {
-    val horizonMicros = parseHorizonMicros(horizon)
-
-    val lastTs = df
-      .groupBy(col(c.symbol))
-      .agg(max(col(c.ts)).as("__last_ts"))
-
-    val withTarget = constTarget match {
-      case Some(x) =>
-        df.select(col(c.symbol), col(c.ts), col(c.price)).withColumn("trgt", lit(x))
-      case None =>
-        val vol = dailyVol(df, volSpan, c)
-          .withColumnRenamed("daily_return_volatility", "trgt")
-        df.select(col(c.symbol), col(c.ts), col(c.price)).join(vol, Seq(c.symbol, c.ts))
-    }
-    val events = withTarget
-      .join(broadcast(lastTs), Seq(c.symbol))
-      .where(col("trgt").isNotNull && col("trgt") > 0)
-      .withColumn(
-        "t1",
-        least(col(c.ts) + expr(s"INTERVAL $horizon"), col("__last_ts")),
-      )
-      .drop("__last_ts")
-
-    // bucketed range join: event intervals [ts..t1] x path ticks
-    val path = df.select(col(c.symbol), col(c.ts).as("__u"), col(c.price).as("__pu"))
-    val touches = RangeJoin
-      .intervalJoin(
-        events,
-        path,
-        by = Seq(c.symbol),
-        startCol = c.ts,
-        endCol = "t1",
-        pointCol = "__u",
-        bucketMicros = horizonMicros,
-      )
-      .withColumn("__ret", safeDiv(col("__pu"), col(c.price)) - 1)
-      .withColumn("__pt_u", when(col("__ret") >= col("trgt") * ptMult, col("__u")))
-      .withColumn("__sl_u", when(col("__ret") <= -col("trgt") * slMult, col("__u")))
-    // min_by / arg_min skip rows with null ordering in both Spark and
-    // DuckDB, so the CASE-guarded orderings select the earliest
-    // crossing tick (and its realized return) directly.
-    touches
-      .groupBy(col(c.symbol), col(c.ts), col(c.price), col("trgt"), col("t1"))
-      .agg(
-        min(col("__pt_u")).as("pt_ts"),
-        min(col("__sl_u")).as("sl_ts"),
-        min_by(col("__ret"), col("__pt_u")).as("__pt_ret"),
-        min_by(col("__ret"), col("__sl_u")).as("__sl_ret"),
-        max_by(col("__ret"), col("__u")).as("__v_ret"),
-      )
-  }
-
   /** One event's first-crossing result from the scan core (field
-    * order mirrors the join core's groupBy output).
+    * order mirrors the interval-join form's groupBy output).
     */
   private[graft] final case class TbScanRow(
       symbol: String,
@@ -728,7 +663,9 @@ object Labels {
       v_ret: Option[Double],
   )
 
-  /** Production path for the event×path crossing aggregation: a
+  /** The event×path crossing aggregation behind barrierTouches and
+    * tripleBarrier — per event, the earliest pt/sl crossing ticks and
+    * realized returns plus the vertical-barrier return: a
     * day-chunked halo scan with per-chunk SEGMENT-TREE crossing
     * search, O((n + q)·log n) per chunk instead of the interval
     * join's O(n × ticks-per-horizon) pair materialization — the pair
@@ -747,8 +684,10 @@ object Labels {
     * found tick evaluates the identical double predicate the join
     * form evaluates per pair, and the emitted returns are the same
     * pu/p0 − 1 expression tree, so the result is BIT-identical to
-    * [[tripleBarrierCore]] (pinned in CoreOperatorsSpec) and the
-    * DuckDB oracles are unchanged.
+    * the interval-join form (a bucketed [[RangeJoin.intervalJoin]] of
+    * events × path ticks, then min/min_by/max_by per event — kept as
+    * the test-scope reference and pinned in CoreOperatorsSpec and
+    * PropertySpec) and the DuckDB oracles are unchanged.
     *
     * Ties: (symbol, ts) is unique in the canonical trades view
     * (duplicate-ts events would make the join form's min_by/max_by

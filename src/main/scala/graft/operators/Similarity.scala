@@ -339,23 +339,22 @@ object Similarity {
     * the same double comparisons, so cells are bit-equal (pinned in
     * VectorIndexSpec / StreamingVectorIndexSpec).
     */
-  private[operators] def assignToCells(nv: DataFrame, cents: DataFrame): DataFrame = {
+  private[graft] def assignToCells(nv: DataFrame, cents: DataFrame): DataFrame = {
     VectorIndex.collectCentroidsInline(cents.select(col("cent_id"), col("cv"))) match {
       case Some((ids, mat, dim)) =>
         // r18: past tiledAssignMinCells the per-row expression pays
         // one latency-bound FMA chain per dot AND re-streams the
         // whole centroid matrix from cache per row (the ~43 s
-        // assignment-dots term of the fd sf100 buildIndex,
-        // AssignProbe §2) — the 8-row tiled pass fixes both with
-        // bit-identical argmax (shared TiledArgmax comparator,
-        // pinned). Small cell counts (every oracled query shape)
-        // keep the expression form and its plan byte-identical.
+        // assignment-dots term of the fd sf100 buildIndex) — the
+        // 8-row tiled pass fixes both with bit-identical argmax
+        // (shared NearestOrder comparator, pinned). Small cell counts
+        // (every oracled query shape) keep the expression form and
+        // its plan byte-identical.
         val slim = nv.select(col("id"), col("nv"))
         val tiledOk = ids.length >= tiledAssignMinCells &&
           slim.schema(0).dataType == org.apache.spark.sql.types.LongType &&
           slim.schema(1).dataType == org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, containsNull = false) &&
-          nv.sparkSession.conf.getOption("spark.graft.tiledAssign").forall(_.toBoolean)
+            org.apache.spark.sql.types.DoubleType, containsNull = false)
         if (tiledOk) assignToCellsTiled(slim, ids, mat, dim)
         else
           nv.select(col("id"), col("nv"), VectorIndex.inlineCellExpr(ids, mat, dim, col("nv")).as("cell"))
@@ -371,7 +370,7 @@ object Similarity {
     * byte-identical). 256 cells × d512 = 1 MiB of matrix per row —
     * where the cache re-streaming term starts to bite.
     */
-  private[operators] val tiledAssignMinCells = 256
+  private[graft] val tiledAssignMinCells = 256
 
   /** The tiled form of the inline assignment: decode 8 rows, walk the
     * centroid matrix once per tile ([[VectorAgg.TiledArgmax]] — 8
@@ -482,13 +481,8 @@ object Similarity {
                 false) => true
           case _ => false
         }
-        // spark.graft.fusedKmeans=false restores the expression +
-        // sumByKey pass — measurement aid for interleaved A/Bs on one
-        // binary (both paths are pinned bit-equal); default on
-        val gateOn = nv.sparkSession.conf
-          .getOption("spark.graft.fusedKmeans").forall(_.toBoolean)
         val sums =
-          if (fusable && gateOn) VectorAgg.assignSumByMatrix(vecOnly, ids, mat, dim)
+          if (fusable) VectorAgg.assignSumByMatrix(vecOnly, ids, mat, dim)
           else
             VectorAgg.sumByKey(nv.select(
               VectorIndex.inlineCellExpr(ids, mat, dim, col("nv")).as("cell"),
@@ -675,64 +669,17 @@ object Similarity {
     )
   }
 
-  /** [[semanticDedup]] with its phases materialized and timed — the
-    * buildIndexStaged pattern (r16 verdict #1: the ~34× sf10→sf100
-    * step needed a stage account, not a guess). The driver-eager
-    * phases (coarse rounds, centroid/seed collects, fine rounds)
-    * report through the cellPartition hook; the residual lazy plan is
-    * split by ONE extra parquet barrier into `assign_materialize`
-    * (normalize + two-level argmax, corpus map pass + write) and
-    * `score` (cell exchange + sort + kernel). The barrier is probe
-    * overhead the production query doesn't pay — stage sums sit above
-    * the solo query time by about the assignment parquet round-trip;
-    * the solo-3× medians stay the headline numbers.
-    */
-  private[graft] def semanticDedupStaged(
-      emb: DataFrame,
-      threshold: Double = 0.9,
-      nCells: Int = 0,
-      kmeansIters: Int = 2,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      scoreStreamed: Boolean = cellScoreStreamedDefault,
-  ): Seq[(String, Double)] = {
-    val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      stages += ((name, (System.nanoTime() - t0) / 1e9))
-      r
-    }
-    val cells = timed("count_cells") {
-      if (nCells > 0) nCells
-      else math.max(16, (emb.count() / 256L).min(Int.MaxValue.toLong).toInt)
-    }
-    val (assigned, _) = cellPartition(
-      emb.select(col(idCol).as("id"), col(vecCol).as("v")),
-      cells,
-      kmeansIters,
-      hook = (n, s) => stages += ((n, s)),
-    )
-    val members = timed("assign_materialize") {
-      graft.sources.Checkpoint.tableGated(
-        assigned.select(col("cell"), col("id"), lit(true).as("neu"), col("vec").as("nv")),
-        "semstage-assign",
-        maxBytes = 0L, // always parquet: the barrier IS the stage split
-        codec = graft.sources.Checkpoint.vectorCodec(assigned.sparkSession),
-      )
-    }
-    timed(if (scoreStreamed) "score_streamed" else "score_agg") {
-      cellDedupScores(members, threshold, normalize = true, streamed = scoreStreamed)
-        .write.format("noop").mode("overwrite").save()
-    }
-    stages.toSeq
-  }
-
   /** In-cell keep-first duplicate verdicts WITHOUT materializing pair
-    * rows: one groupBy(cell) shuffle moves each vector's payload once
-    * (~corpus bytes), then [[graft.functions.SemDedupCellExpr]] runs
-    * the O(|cell|²) dots over the in-heap member list and emits only
-    * (id, dup_of, max_sim).
+    * rows: [[graft.plans.CellScorePlan]] — a custom physical operator
+    * whose requirements (ClusteredDistribution(cell) + ascending cell
+    * ordering) Catalyst satisfies with exactly ONE hash exchange and
+    * ONE spill-safe Tungsten sort on the 8-byte cell key (or ELIDES
+    * when the input is already cell-partitioned) — then streams each
+    * cell through [[graft.functions.SemDedupKernel]], holding one
+    * cell's primitive buffers, and emits only (vec_id, cell, is_dup,
+    * dup_of, max_sim). Each vector's payload crosses the wire once
+    * (~corpus bytes), and the whole pipeline stays visible in
+    * explain().
     *
     * The pair SELF-JOIN this replaces (r15 rows 20b/20c, judge-
     * reproduced) was row-count-linear but BYTE-quadratic in cell
@@ -742,8 +689,8 @@ object Similarity {
     * (SPILL_OUT_OF_MEMORY / disk exhaustion at fd sf100), and the
     * √N-cell incremental form died at 200k (Σ|cell|²·8 KB ≈ 360 GB).
     * Scores, dup_of, and max_sim are bit-identical to the join form
-    * (same dot tree — see the expression's Scaladoc; pinned in
-    * ScalaTest, oracle hash-green).
+    * (same dot tree — see the kernel's Scaladoc; pinned against a
+    * pair self-join in ScalaTest, oracle hash-green).
     *
     * `members`: (cell, id, neu, nv); verdicts are emitted for `neu`
     * rows, candidates range over ALL lower-id rows of the cell.
@@ -753,64 +700,7 @@ object Similarity {
     * float input); false when nv is already the normalized f64 copy
     * (the incremental store format).
     */
-  private[operators] def cellDedupScores(
-      members: DataFrame,
-      threshold: Double,
-      normalize: Boolean = false,
-      streamed: Boolean = cellScoreStreamedDefault,
-  ): DataFrame =
-    if (streamed) cellDedupScoresStreamed(members, threshold, normalize)
-    else cellDedupScoresAgg(members, threshold, normalize)
-
-  /** The r16 aggregation form: groupBy(cell).collect_list →
-    * [[graft.functions.SemDedupCellExpr]]. ObjectHashAggregate falls
-    * back to SORT-based aggregation past 128 distinct cells per task
-    * (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) —
-    * at production cell counts that sorts the corpus's vector bytes
-    * in BOTH the partial and the final aggregate (§6z r17 A/B). Kept
-    * as the non-default form: its sort-based fallback is the
-    * spill-safe shape if a deployment's per-task memory cannot hold
-    * its share of cells.
-    */
-  private[graft] def cellDedupScoresAgg(
-      members: DataFrame,
-      threshold: Double,
-      normalize: Boolean = false,
-  ): DataFrame =
-    members
-      .groupBy(col("cell"))
-      .agg(collect_list(struct(col("id"), col("neu"), col("nv"))).as("ms"))
-      .select(
-        col("cell"),
-        explode(graft.functions.VectorExprs.semDedupCellNative(col("ms"), threshold, normalize))
-          .as("r"),
-      )
-      .select(
-        col("r.id").as("vec_id"),
-        col("cell"),
-        col("r.dup_of").isNotNull.cast("int").as("is_dup"),
-        col("r.dup_of").as("dup_of"),
-        col("r.max_sim").as("max_sim"),
-      )
-
-  /** Default scoring shape — set by the r17 A/B (§6z). */
-  private[graft] val cellScoreStreamedDefault: Boolean = true
-
-  /** The streamed scoring form: [[graft.plans.CellScorePlan]] — a
-    * custom physical operator whose requirements
-    * (ClusteredDistribution(cell) + ascending cell ordering) Catalyst
-    * satisfies with exactly ONE hash exchange and ONE spill-safe
-    * Tungsten sort on the 8-byte cell key (or ELIDES when the input
-    * is already cell-partitioned), then streams each cell through the
-    * SAME [[graft.functions.SemDedupKernel]] the expression form
-    * runs, holding one cell's primitive buffers. vs the aggregation
-    * form it removes BOTH ObjectHashAggregate sort-fallback passes
-    * over vector payloads and the collect_list buffer copies, and
-    * keeps the whole pipeline visible in explain(). Verdicts are
-    * bit-identical (shared kernel, shared decode/normalize rules) —
-    * pinned in ScalaTest.
-    */
-  private[graft] def cellDedupScoresStreamed(
+  private[graft] def cellDedupScores(
       members: DataFrame,
       threshold: Double,
       normalize: Boolean = false,
@@ -860,31 +750,17 @@ object Similarity {
     * existed for the pair SELF-JOIN's two-sided read; the in-memory
     * cell scorer consumes the assignment once.
     */
-  /** No-op stage hook (the default): [[semanticDedupStaged]] passes a
-    * recorder to time the driver-eager phases in place.
-    */
-  private val noHook: (String, Double) => Unit = (_, _) => ()
-
-  private def hookTimed[T](hook: (String, Double) => Unit, name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    hook(name, (System.nanoTime() - t0) / 1e9)
-    r
-  }
-
   private def cellPartition(
       raw: DataFrame,
       cells: Int,
       kmeansIters: Int,
-      hook: (String, Double) => Unit = noHook,
   ): (DataFrame, DataFrame) = {
     val nv = withNormalized(raw, "v", "nv").select(col("id"), col("nv"))
     if (cells <= directAssignMax) {
       val cents = (0 until kmeansIters).foldLeft(
         nv.orderBy(col("id")).limit(cells).select(col("id").as("cent_id"), col("nv").as("cv"))
-      ) { (c, i) => hookTimed(hook, s"kmeans_round_$i")(kmeansRound(nv, c)) }
-      hookTimed(hook, "cents_collect")(
-        VectorIndex.collectCentroidsInline(cents.select(col("cent_id"), col("cv")))) match {
+      ) { (c, _) => kmeansRound(nv, c) }
+      VectorIndex.collectCentroidsInline(cents.select(col("cent_id"), col("cv"))) match {
         case Some((ids, mat, dim)) =>
           val assigned = raw.select(
             col("id"),
@@ -903,7 +779,7 @@ object Similarity {
             .select(col("id"), col("v").as("vec"), col("cell"))
           (assigned, cents)
       }
-    } else twoLevelAssign(raw, nv, cells, kmeansIters, hook)
+    } else twoLevelAssign(raw, nv, cells, kmeansIters)
   }
 
   /** D4-style semantic diversification (Tirumala et al. 2023's
@@ -1015,19 +891,17 @@ object Similarity {
       nv: DataFrame,
       cells: Int,
       kmeansIters: Int,
-      hook: (String, Double) => Unit = noHook,
   ): (DataFrame, DataFrame) = {
     val spark = nv.sparkSession
     val coarse = math.max(16, math.ceil(math.sqrt(cells.toDouble)).toInt)
     val finePer = math.max(1, math.ceil(cells.toDouble / coarse).toInt)
     val ccents = (0 until kmeansIters).foldLeft(
       nv.orderBy(col("id")).limit(coarse).select(col("id").as("cent_id"), col("nv").as("cv"))
-    ) { (c, i) => hookTimed(hook, s"coarse_round_$i")(kmeansRound(nv, c)) }
+    ) { (c, _) => kmeansRound(nv, c) }
     // the coarse table is √cells rows (≤ ~46341 at any legal nCells) —
     // collected PRIMITIVELY (InternalRow + toDoubleArray; the boxed
     // Row.getSeq decode held ~5× the bytes as driver objects)
-    val ccRows = hookTimed(hook, "coarse_collect")(
-      collectRowsPrimitive(ccents.select(col("cent_id"), col("cv"))))
+    val ccRows = collectRowsPrimitive(ccents.select(col("cent_id"), col("cv")))
     val dim = ccRows(0).getArray(1).numElements()
     val coarseIds = ccRows.map(_.getLong(0))
     val coarseMat = new Array[Double](coarseIds.length * dim)
@@ -1055,31 +929,26 @@ object Similarity {
       // ≤ cells × dim × 8 B per task — the same budget the gate
       // already grants the fine reference object.
       var entries: Array[(Long, Int, Array[Double])] =
-        hookTimed(hook, "fine_seeds_collect")(
-          VectorAgg.minKByKey(
-            nv.select(coarseExpr.as("coarse"), col("id"), col("nv")),
-            finePer))
+        VectorAgg.minKByKey(nv.select(coarseExpr.as("coarse"), col("id"), col("nv")), finePer)
       var fineTab = buildFineStruct(coarseIds, finePer, dim, entries)
-      (0 until kmeansIters).foreach { i =>
-        hookTimed(hook, s"fine_round_$i") {
-          val cellCol = graft.functions.VectorExprs
-            .nearestFineNative(col("nv"), coarseIds, coarseMat, fineTab._1, fineTab._2, fineTab._3, dim)
-          val sums = VectorAgg.sumByKey(nv.select(cellCol.as("cell"), col("nv")))
-          // keys not in the current fine table are the expression's
-          // empty-segment coarse-id fallback — the join form's inner
-          // join dropped those members from the round's means; replicate
-          val valid = fineTab._1.toSet
-          val meansDf = normalizeMeans(
-            VectorAgg.sumsToDF(spark, sums, valid.contains)
-              .select(col("k").as("cell"), VectorAgg.meanCol(col("s"), col("c")).as("mv"))
-          )
-          entries = collectRowsPrimitive(meansDf).map { r =>
-            val cellId = r.getLong(0)
-            (Math.floorDiv(cellId, finePer.toLong), Math.floorMod(cellId, finePer.toLong).toInt,
-              r.getArray(1).toDoubleArray())
-          }
-          fineTab = buildFineStruct(coarseIds, finePer, dim, entries)
+      (0 until kmeansIters).foreach { _ =>
+        val cellCol = graft.functions.VectorExprs
+          .nearestFineNative(col("nv"), coarseIds, coarseMat, fineTab._1, fineTab._2, fineTab._3, dim)
+        val sums = VectorAgg.sumByKey(nv.select(cellCol.as("cell"), col("nv")))
+        // keys not in the current fine table are the expression's
+        // empty-segment coarse-id fallback — the join form's inner
+        // join dropped those members from the round's means; replicate
+        val valid = fineTab._1.toSet
+        val meansDf = normalizeMeans(
+          VectorAgg.sumsToDF(spark, sums, valid.contains)
+            .select(col("k").as("cell"), VectorAgg.meanCol(col("s"), col("c")).as("mv"))
+        )
+        entries = collectRowsPrimitive(meansDf).map { r =>
+          val cellId = r.getLong(0)
+          (Math.floorDiv(cellId, finePer.toLong), Math.floorMod(cellId, finePer.toLong).toInt,
+            r.getArray(1).toDoubleArray())
         }
+        fineTab = buildFineStruct(coarseIds, finePer, dim, entries)
       }
       val assigned = raw.select(
         col("id"),

@@ -115,11 +115,12 @@ object VectorAgg {
 
   /** Fused nearest-centroid assignment + per-cell vector sums: one
     * pass over `nv`'s InternalRows that assigns each vector to its
-    * argmax centroid ([[graft.functions.NearestCellExpr]]'s exact
-    * comparator — highest dot with Spark double semantics, smallest
-    * cent_id tiebreak, dots left-to-right f64) and accumulates it
-    * into that cell's [[VecSum]] buffers in row order — the same
-    * result map as `sumByKey(nv.select(nearestCellNative(...), nv))`.
+    * argmax centroid ([[graft.functions.NearestOrder]], the
+    * expression's comparator — highest dot with Spark double
+    * semantics, smallest cent_id tiebreak, dots left-to-right f64)
+    * and accumulates it into that cell's [[VecSum]] buffers in row
+    * order — the same result map as
+    * `sumByKey(nv.select(nearestCellNative(...), nv))`.
     *
     * Why fused AND tiled (r17 verdict #1: the two ~43 s k-means
     * rounds at 2M × d512 × 1412 cells): the per-row expression runs
@@ -162,7 +163,6 @@ object VectorAgg {
       case t => throw new IllegalArgumentException(
         s"assignSumByMatrix vec column must be array<float|double> with containsNull=false, got $t")
     }
-    val nCells = centIds.length
     val rdd = nv.queryExecution.toRdd
     type M = scala.collection.mutable.LongMap[VecSum]
     val partials = rdd.mapPartitions { it =>
@@ -220,8 +220,8 @@ object VectorAgg {
     * (~1 FMA/4 cycles) AND streams cells × dim × 8 B from cache per
     * ROW — both walls measured at ~43 s per 2M × d512 × 1225-cell
     * pass. Each scalar dot still accumulates over i ascending, and
-    * the comparator is [[graft.functions.NearestCellExpr]]'s
-    * verbatim — per-(row, centroid) doubles, argmax ids, and
+    * the comparator is [[graft.functions.NearestOrder]], shared with
+    * the expression — per-(row, centroid) doubles, argmax ids, and
     * tie-breaks are bit-identical to the expression (pinned).
     *
     * Rows shorter than `dim` (dots over min(len, dim)) take the
@@ -241,11 +241,7 @@ object VectorAgg {
     private val bestS = new Array[Double](T)
     private val bestId = new Array[Long](T)
 
-    // NearestCellExpr's comparator, one row against one candidate
-    private def better(s: Double, id: Long, first: Boolean, bS: Double, bId: Long): Boolean = {
-      val cmp = if (s == bS) 0 else java.lang.Double.compare(s, bS)
-      first || cmp > 0 || (cmp == 0 && id < bId)
-    }
+    import graft.functions.NearestOrder.better
 
     // scalar argmax for one row (the expression form verbatim)
     private def argmaxScalar(v: Array[Double]): Long = {

@@ -16,10 +16,10 @@ import org.apache.spark.sql.types._
   * The child contract is (cell BIGINT, id BIGINT, neu BOOLEAN,
   * nv ARRAY&lt;FLOAT|DOUBLE&gt;); the output is one verdict row per
   * `neu` member — (vec_id, cell, is_dup, dup_of, max_sim), the
-  * keep-first semantics of the r16 collect_list/SemDedupCellExpr
-  * aggregation form, bit-identical (same kernel, pinned).
+  * keep-first semantics of the in-cell pair self-join
+  * (`a.cell = b.cell AND a.id < b.id`), bit-identical (pinned).
   *
-  * Why a custom SparkPlan and not the aggregation: collect_list is an
+  * Why a custom SparkPlan and not a collect_list aggregation: that is an
   * ObjectHashAggregate, which FALLS BACK to sort-based aggregation
   * past 128 distinct cells per task — at production cell counts both
   * the partial and the final aggregate re-sort their input with the
@@ -43,7 +43,7 @@ case class CellScorePlan(
     dupOfAttr: Attribute,
     maxSimAttr: Attribute,
 ) extends UnaryNode {
-  private def cellAttr: Attribute =
+  def cellAttr: Attribute =
     child.output.find(_.name == "cell").getOrElse(child.output.head)
   override def output: Seq[Attribute] = Seq(vecIdAttr, cellAttr, isDupAttr, dupOfAttr, maxSimAttr)
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
@@ -63,16 +63,22 @@ object CellScoreStrategy extends org.apache.spark.sql.execution.SparkStrategy {
       CellScoreExec(
         planLater(p.child),
         p.threshold, p.normalize,
-        p.vecIdAttr, p.isDupAttr, p.dupOfAttr, p.maxSimAttr,
+        p.cellAttr, p.vecIdAttr, p.isDupAttr, p.dupOfAttr, p.maxSimAttr,
       ) :: Nil
     case _ => Nil
   }
 }
 
+/** `cellAttr` is resolved once, by name, at planning time: a
+  * canonicalized copy of this node (built when a plan is compared for
+  * exchange reuse, e.g. a self-join of the verdicts) has blank child
+  * names, and its output must not depend on them.
+  */
 case class CellScoreExec(
     child: SparkPlan,
     threshold: Double,
     normalize: Boolean,
+    cellAttr: Attribute,
     vecIdAttr: Attribute,
     isDupAttr: Attribute,
     dupOfAttr: Attribute,
@@ -84,8 +90,6 @@ case class CellScoreExec(
     require(i >= 0, s"cell-score child missing column $name: ${child.output.map(_.name)}")
     i
   }
-
-  private def cellAttr: Attribute = child.output(ordinal("cell"))
 
   override def output: Seq[Attribute] = Seq(vecIdAttr, cellAttr, isDupAttr, dupOfAttr, maxSimAttr)
 
@@ -143,8 +147,9 @@ case class CellScoreExec(
           }
           ids(n) = row.getLong(idOrd)
           neu(n) = row.getBoolean(neuOrd)
-          // decode rules shared with SemDedupCellExpr: a null vector
-          // or null element makes the member non-scoring (vecs null)
+          // a null vector or null element makes the member
+          // non-scoring (vecs null): the join form's dot is null
+          // there and never reaches the threshold
           var arr: Array[Double] = null
           if (!row.isNullAt(nvOrd)) {
             val v = row.getArray(nvOrd)

@@ -1745,7 +1745,7 @@ class CoreOperatorsSpec extends SparkSpec {
       ("4 hours", None),
     )
     for ((horizon, const) <- cases) {
-      val want = Labels
+      val want = BarrierJoinReference
         .tripleBarrierCore(t, horizon, 1.0, 1.0, 100, const, TradingCols.default)
         .orderBy("symbol", "ts", "price")
         .collect()
@@ -1786,7 +1786,7 @@ class CoreOperatorsSpec extends SparkSpec {
     // must not crash; and on the non-null subset the scan must agree
     // with the join core run over the same na-dropped frame
     val clean = df.na.drop(Seq("price"))
-    val want = Labels
+    val want = BarrierJoinReference
       .tripleBarrierCore(clean, "2 hours", 1.0, 1.0, 100, Some(0.05), TradingCols.default)
       .orderBy("ts", "price")
       .collect()

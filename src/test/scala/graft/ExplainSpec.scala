@@ -582,26 +582,44 @@ class ExplainSpec extends SparkSpec {
       "no collect_list aggregation (its >128-cell fallback re-sorts vector payloads): " + p)
   }
 
-  test("semantic dedup agg twin: the r16 collect_list/SemDedupCellExpr form stays available") {
+  test("semantic dedup is bit-identical to the in-cell pair self-join reference") {
     import org.apache.spark.sql.functions._
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val got = graft.operators.Similarity
       .semanticDedup(emb, threshold = 0.3, nCells = 16, kmeansIters = 0)
-    // same members plan, aggregation scoring: the spill-safe fallback
-    // shape; results bit-equal to the streamed default (shared kernel)
-    val assigned = got.select(col("vec_id").as("id"), col("cell"))
+    // the join form, in built-in SQL only: normalize (f64 Σx²
+    // left-to-right, per-element /√), then every a.id < b.id pair of
+    // a cell scores the left-to-right f64 dot; dup_of = min
+    // qualifying id, max_sim = max qualifying dot (NaN qualifies and
+    // is largest under Spark's ordering, as in the scorer)
+    val members = got.select(col("vec_id").as("id"), col("cell"))
       .join(emb.select(col("vec_id").as("id"), col("embedding")), "id")
-    val members = assigned.select(
-      col("cell"), col("id"), lit(true).as("neu"), col("embedding").as("nv"))
-    val agg = graft.operators.Similarity
-      .cellDedupScoresAgg(members, threshold = 0.3, normalize = true)
-    val pAgg = agg.queryExecution.executedPlan.toString
-    assert(pAgg.contains("semdedupcell") || pAgg.contains("SemDedupCell"), pAgg)
-    assert(
-      rows(got.orderBy("vec_id")) ==
-        rows(agg.select("vec_id", "cell", "is_dup", "dup_of", "max_sim").orderBy("vec_id")),
-      "streamed and aggregation scoring must be bit-identical",
-    )
+      .select(
+        col("cell"), col("id"),
+        expr("""transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(aggregate(
+               |  embedding, 0D, (s, y) -> s + CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))""".stripMargin)
+          .as("nv"))
+    val hits = members.as("a")
+      .join(members.as("b"), col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
+      .select(
+        col("b.id").as("id"), col("a.id").as("a_id"),
+        expr("aggregate(zip_with(a.nv, b.nv, (x, y) -> x * y), 0D, (s, p) -> s + p)").as("s"))
+      .where(col("s") >= 0.3)
+      .groupBy("id")
+      .agg(min("a_id").as("dup_of"), max("s").as("max_sim"))
+    val want = members.join(hits, Seq("id"), "left")
+      .select(
+        col("id").as("vec_id"), col("cell"),
+        col("dup_of").isNotNull.cast("int").as("is_dup"), col("dup_of"), col("max_sim"))
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.orderBy("vec_id").collect().toSeq.map { r =>
+        Seq(r.getLong(0), r.getLong(1), r.getInt(2),
+          if (r.isNullAt(3)) null else r.getLong(3),
+          if (r.isNullAt(4)) null else java.lang.Double.doubleToRawLongBits(r.getDouble(4)))
+      }
+    val g = bits(got.select("vec_id", "cell", "is_dup", "dup_of", "max_sim"))
+    assert(g.length == 500 && g.count(_(2) == 1) > 0, "need a non-trivial verdict set")
+    assert(g == bits(want), "streamed scoring must match the pair self-join bit for bit")
   }
 
   test("vector index: probe and dedup scans dynamically prune the cell partitions") {

@@ -885,24 +885,33 @@ class PipelineOpsSpec extends SparkSpec {
     assert(recall >= 0.9, s"recall $recall under the cap parameters")
   }
 
-  test("SemDedupCellExpr: null vectors / null elements are non-scoring keepers (join-form semantics)") {
+  // One cell's member rows (cell, id, neu, nv) through the production
+  // scorer; the result columns are (id, dup_of, max_sim).
+  private def scoreOneCell(members: String): Array[org.apache.spark.sql.Row] =
+    Similarity
+      .cellDedupScores(
+        spark.sql(
+          s"""SELECT CAST(0 AS BIGINT) AS cell, m.id AS id, m.neu AS neu, m.nv AS nv
+             |FROM (SELECT explode(array($members)) AS m)""".stripMargin),
+        0.9,
+        normalize = true,
+      )
+      .select(col("vec_id").as("id"), col("dup_of"), col("max_sim"))
+      .orderBy("id")
+      .collect()
+
+  test("cellDedupScores: null vectors / null elements are non-scoring keepers") {
     // the join form's dotNorm over a null vector or null element is
     // null — never >= threshold — so such members are excluded from
     // every candidate set and, if neu, emitted as keepers. The
     // pre-r17 kernel NPE'd on a null vector and decoded a null
     // element as 0.0 (r16 advice).
-    val df = spark.sql(
-      """SELECT array(
-        |  named_struct('id', CAST(1 AS BIGINT), 'neu', true, 'nv', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))),
-        |  named_struct('id', CAST(2 AS BIGINT), 'neu', true, 'nv', CAST(NULL AS ARRAY<DOUBLE>)),
-        |  named_struct('id', CAST(3 AS BIGINT), 'neu', true, 'nv', array(CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE))),
-        |  named_struct('id', CAST(4 AS BIGINT), 'neu', true, 'nv', array(CAST(2.0 AS DOUBLE), CAST(0.0 AS DOUBLE)))
-        |) AS ms""".stripMargin)
-    val out = df
-      .select(explode(graft.functions.VectorExprs.semDedupCellNative(col("ms"), 0.9, normalize = true)).as("r"))
-      .select("r.*")
-      .orderBy("id")
-      .collect()
+    val out = scoreOneCell(
+      """named_struct('id', CAST(1 AS BIGINT), 'neu', true, 'nv', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))),
+        |named_struct('id', CAST(2 AS BIGINT), 'neu', true, 'nv', CAST(NULL AS ARRAY<DOUBLE>)),
+        |named_struct('id', CAST(3 AS BIGINT), 'neu', true, 'nv', array(CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE))),
+        |named_struct('id', CAST(4 AS BIGINT), 'neu', true, 'nv', array(CAST(2.0 AS DOUBLE), CAST(0.0 AS DOUBLE)))
+        |""".stripMargin)
     assert(out.length == 4)
     assert(out(0).isNullAt(1), "member 1 is the keep-first keeper")
     assert(out(1).isNullAt(1), "null-vector member must be a keeper, not an NPE")
@@ -911,18 +920,12 @@ class PipelineOpsSpec extends SparkSpec {
     assert(out(3).getDouble(2) == 1.0)
   }
 
-  test("SemDedupCellExpr: a legitimate negative member id is a valid dup_of (no sentinel clash)") {
-    val df = spark.sql(
-      """SELECT array(
-        |  named_struct('id', CAST(-5 AS BIGINT), 'neu', true, 'nv', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))),
-        |  named_struct('id', CAST(-4 AS BIGINT), 'neu', true, 'nv', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))),
-        |  named_struct('id', CAST(7 AS BIGINT), 'neu', true, 'nv', array(CAST(3.0 AS DOUBLE), CAST(0.0 AS DOUBLE)))
-        |) AS ms""".stripMargin)
-    val out = df
-      .select(explode(graft.functions.VectorExprs.semDedupCellNative(col("ms"), 0.9, normalize = true)).as("r"))
-      .select("r.*")
-      .orderBy("id")
-      .collect()
+  test("cellDedupScores: a legitimate negative member id is a valid dup_of") {
+    val out = scoreOneCell(
+      """named_struct('id', CAST(-5 AS BIGINT), 'neu', true, 'nv', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))),
+        |named_struct('id', CAST(-4 AS BIGINT), 'neu', true, 'nv', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE))),
+        |named_struct('id', CAST(7 AS BIGINT), 'neu', true, 'nv', array(CAST(3.0 AS DOUBLE), CAST(0.0 AS DOUBLE)))
+        |""".stripMargin)
     val byId = out.map(r => r.getLong(0) -> r).toMap
     assert(byId(-5L).isNullAt(1), "smallest id keeps")
     assert(byId(-4L).getLong(1) == -5L, "negative dup_of must survive (pre-r17: <0 meant 'no hit')")
@@ -1054,17 +1057,23 @@ class PipelineOpsSpec extends SparkSpec {
     val emb = (0 until 600).map { i =>
       (i.toLong, Seq.fill(16)(rnd.nextGaussian().toFloat))
     }.toDF("vec_id", "embedding").repartition(3)
-    def run(tiled: Boolean): Seq[String] = {
-      spark.conf.set("spark.graft.tiledAssign", tiled.toString)
-      try Similarity
-        .ivfTopK(emb, nQueries = 8, k = 5, nCells = 300, nProbe = 4, kmeansIters = 0)
-        .collect()
-        .map(_.toString)
-        .sorted
-        .toSeq
-      finally spark.conf.unset("spark.graft.tiledAssign")
-    }
-    assert(run(tiled = true) == run(tiled = false), "tiled vs expression assignment diverged")
+    // ivfTopK's shape: normalized vectors, the 300 smallest ids as
+    // centroids — past tiledAssignMinCells, so assignToCells tiles
+    val nv = emb.select(
+      col("vec_id").as("id"),
+      graft.functions.VectorExprs.normalizeNative(col("embedding")).as("nv"))
+    val cents = nv.where(col("id") < 300).select(col("id").as("cent_id"), col("nv").as("cv"))
+    assert(300 >= Similarity.tiledAssignMinCells)
+    val table = cents.orderBy("cent_id").collect()
+    val ids = table.map(_.getLong(0))
+    val mat = table.flatMap(_.getSeq[Double](1))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("id", "nv", "cell").collect().map(_.toString).sorted.toSeq
+    val tiled = rows(Similarity.assignToCells(nv, cents))
+    val expr = rows(nv.withColumn(
+      "cell", graft.functions.VectorExprs.nearestCellNative(col("nv"), ids, mat, 16)))
+    assert(tiled.length == 600)
+    assert(tiled == expr, "tiled vs expression assignment diverged")
   }
 
   test("null array elements null the LSH buckets and normalized vector (HOF-form semantics)") {

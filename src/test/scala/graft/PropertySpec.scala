@@ -548,7 +548,7 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
       val df = ticks.toDF("symbol", "ts", "price", "size", "trade_id")
       // tiny threshold (every tick crosses fast) and huge (mostly verticals)
       for (trgt <- Seq(0.0001, 0.5)) {
-        val want = operators.Labels
+        val want = BarrierJoinReference
           .tripleBarrierCore(df, "6 hours", 1.0, 1.0, 100, Some(trgt), graft.api.TradingCols.default)
           .orderBy("symbol", "ts", "price").collect()
         val got = operators.Labels

@@ -81,7 +81,7 @@ bench["embeddings"]["protocol"] = (
     "buildIndex(nCells=0 -> sqrtN cells) on 3/4 of the corpus + "
     "incremental semantic-dedup / top-k of the remaining 1/4 with the "
     "buildIndex stage decomposition; diversity = one-shot D4 at N/256; "
-    "semstage / semstage_agg = the NEW r17 semanticDedupStaged "
+    "semstage / semstage_agg = the r17 staged "
     "decomposition of the one-shot production shape (count/coarse/"
     "fine-seeds/assign-materialize/score stages; probe-only parquet "
     "barrier between assign and score), streamed CellScorePlan vs "
