@@ -112,17 +112,16 @@ object FracDiff {
     // count on the checkpointed table, gated behind a 256 MiB
     // file-bytes threshold so small corpora (every oracle/suite
     // shape) skip the count and keep byte-identical plans. `None`
-    // when the session default suffices; spark.graft.fdExchangeBytes
-    // tunes the target (0 disables — the A/B switch).
+    // when the session default suffices; the target is 128 MiB per
+    // exchange partition.
     val fdParts: Option[Int] = {
       val spark0 = chunked.sparkSession
       val default = scala.util.Try(spark0.conf.get("spark.sql.shuffle.partitions").toInt)
         .getOrElse(spark0.sparkContext.defaultParallelism)
-      val target = spark0.conf
-        .getOption("spark.graft.fdExchangeBytes").map(_.toLong).getOrElse(128L << 20)
+      val target = 128L << 20
       val leafBytes = chunked.queryExecution.optimizedPlan.collectLeaves()
         .map(_.stats.sizeInBytes).sum
-      if (target <= 0L || leafBytes <= (256L << 20)) None
+      if (leafBytes <= (256L << 20)) None
       else {
         val rows = chunked.count()
         val width = math.max(16, chunked.schema.defaultSize)

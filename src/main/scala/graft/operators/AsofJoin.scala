@@ -1,28 +1,29 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Distributed as-of join.
   *
   * Spark has no built-in as-of join (the polars primitive the
   * reference leans on for its dynamic labels —
-  * /root/reference/polars_trading/labels/dynamic_labels.py:53,133).
-  * This implements the classic scalable formulation: tag both sides,
-  * union, and resolve matches with a single window pass —
-  * one shuffle on the `by` keys, no broadcast of either side, no
-  * driver materialization, O(n log n) via sort-based exchange.
+  * polars_trading/labels/dynamic_labels.py:53,133).
+  * [[asofNative]] plans one graft.plans.AsofJoinExec: both sides
+  * co-partitioned on the `by` keys and sorted by (by, key), then one
+  * streaming merge per partition — no row duplication, no window
+  * buffering, no broadcast, no driver materialization. The exchanges
+  * and sorts are Catalyst-planned requirements, elided when the input
+  * is already partitioned/sorted (e.g. a date/symbol TradeStore).
   *
   * Semantics (both inclusive, matching polars `join_asof` and DuckDB
   * `ASOF JOIN`):
   *  - Backward: latest right row with rightOn <= leftOn.
   *  - Forward:  earliest right row with rightOn >= leftOn.
   * Ties on the key within a side resolve to the last (backward) /
-  * first (forward) right row in (key asc, insertion) order.
+  * first (forward) right row in sort order. Null keys on either side
+  * match nothing.
   *
   * At 100 TB: the shuffle is keyed on `by`; a hot key serializes its
-  * window, so callers should include a splitting component in `by`
+  * merge, so callers should include a splitting component in `by`
   * (e.g. (symbol, date)) when a single group would exceed one
   * executor's throughput and the as-of horizon permits it.
   */
@@ -44,99 +45,9 @@ object AsofJoin {
     * @param left    any columns; `leftOn` must be orderable
     * @param right   must contain `by` ++ (`rightOn`) ++ value columns;
     *                value column names must not clash with left's
-    * @param tolerance max allowed |leftOn - rightOn| in the same units
-    *                as the key (e.g. micros for timestamps cast by the
-    *                caller); None = unbounded
-    */
-  def asof(
-      left: DataFrame,
-      right: DataFrame,
-      leftOn: String,
-      rightOn: String,
-      by: Seq[String] = Nil,
-      direction: Direction = Backward,
-      tolerance: Option[Column] = None,
-  ): DataFrame = {
-    val valueCols = right.columns.filterNot(cn => by.contains(cn) || cn == rightOn).toSeq
-    require(
-      valueCols.nonEmpty && valueCols.forall(!left.columns.contains(_)),
-      s"right value columns ${valueCols.mkString(",")} must be non-empty and not clash with left",
-    )
-
-    val leftTagged = left
-      .withColumn("__key", col(leftOn))
-      .withColumn("__tag", lit(1))
-      .withColumn("__left", struct(left.columns.map(col): _*))
-      .withColumn("__right", lit(null).cast(rightStructType(right, valueCols, rightOn)))
-      .select((by.map(col) :+ col("__key") :+ col("__tag") :+ col("__left") :+ col("__right")): _*)
-
-    val rightTagged = right
-      .withColumn("__key", col(rightOn))
-      .withColumn("__tag", lit(0))
-      .withColumn("__left", lit(null).cast(leftStructType(left)))
-      .withColumn("__right", struct((valueCols :+ rightOn).map(col).toSeq: _*))
-      .select((by.map(col) :+ col("__key") :+ col("__tag") :+ col("__left") :+ col("__right")): _*)
-
-    val unioned = leftTagged.unionByName(rightTagged)
-
-    val part =
-      if (by.nonEmpty) Window.partitionBy(by.map(col): _*) else Window.partitionBy()
-    // Both directions scan with a growing unbounded-PRECEDING frame
-    // (O(n) incremental in Spark's WindowExec); forward is backward on
-    // a descending key order. An unbounded-FOLLOWING frame would
-    // recompute per row (O(n^2) per partition) — deliberately avoided.
-    // Nearest runs both scans (one exchange, two in-partition sorts)
-    // and picks the closer candidate per row.
-    val ascW = part
-      .orderBy(col("__key").asc, col("__tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val descW = part
-      .orderBy(col("__key").desc, col("__tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bwdMatch = last(col("__right"), ignoreNulls = true).over(ascW)
-    val fwdMatch = last(col("__right"), ignoreNulls = true).over(descW)
-
-    def withinTol(m: Column): Column = tolerance match {
-      case None    => lit(true)
-      case Some(t) => abs(col("__key") - m.getField(rightOn)) <= t
-    }
-
-    val withMatch = direction match {
-      case Backward => unioned.withColumn("__m", bwdMatch)
-      case Forward  => unioned.withColumn("__m", fwdMatch)
-      case Nearest =>
-        val bOk = col("__mb").isNotNull && withinTol(col("__mb"))
-        val fOk = col("__mf").isNotNull && withinTol(col("__mf"))
-        val distB = col("__key") - col("__mb").getField(rightOn)
-        val distF = col("__mf").getField(rightOn) - col("__key")
-        unioned
-          .withColumn("__mb", bwdMatch)
-          .withColumn("__mf", fwdMatch)
-          .withColumn(
-            "__m",
-            when(bOk && fOk, when(distB <= distF, col("__mb")).otherwise(col("__mf")))
-              .when(bOk, col("__mb"))
-              .when(fOk, col("__mf")),
-          )
-      }
-    val leftRows = withMatch.where(col("__tag") === 1)
-
-    // for Nearest, tolerance is already folded into candidate choice
-    val inTol = if (direction == Nearest) lit(true) else withinTol(col("__m"))
-
-    val leftOut = left.columns.toSeq.map(cn => col("__left").getField(cn).as(cn))
-    val rightOut = valueCols.map(cn =>
-      when(col("__m").isNotNull && inTol, col("__m").getField(cn)).as(cn)
-    )
-    leftRows.select(leftOut ++ rightOut: _*)
-  }
-
-  /** Native-plan variant: same contract and semantics as [[asof]],
-    * executed by graft.plans.AsofJoinExec — co-partitioned sorted
-    * children + streaming merge scan instead of tag+union+window.
-    * No row duplication, no window buffering, and the exchanges/sorts
-    * are Catalyst-planned requirements (elided when the input is
-    * already partitioned/sorted, e.g. a date/symbol TradeStore).
+    * @param tolerance max |leftOn - rightOn| in the key's native units
+    *                (micros for timestamp keys, days for dates);
+    *                None = unbounded
     */
   def asofNative(
       left: DataFrame,
@@ -145,9 +56,6 @@ object AsofJoin {
       rightOn: String,
       by: Seq[String] = Nil,
       direction: Direction = Backward,
-      /** max |leftOn - rightOn| in the key's native units (micros for
-        * timestamp keys, days for dates); None = unbounded. Scalar —
-        * unlike the window form's per-row Column tolerance. */
       tolerance: Option[Double] = None,
   ): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -186,17 +94,5 @@ object AsofJoin {
       tolerance = tolerance,
     )
     ColumnBridge.ofRows(spark, node)
-  }
-
-  private def leftStructType(left: DataFrame) =
-    org.apache.spark.sql.types.StructType(left.schema.fields)
-
-  private def rightStructType(
-      right: DataFrame,
-      valueCols: Seq[String],
-      rightOn: String,
-  ) = {
-    val fields = (valueCols :+ rightOn).map(cn => right.schema(cn))
-    org.apache.spark.sql.types.StructType(fields)
   }
 }

@@ -516,11 +516,8 @@ object Dedup {
     val default =
       scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
         .getOrElse(spark.sparkContext.defaultParallelism)
-    // spark.graft.shingleExchangeBytes: target bytes per verify-join
-    // partition (0 disables the scaling — the A/B switch)
-    val target = spark.conf
-      .getOption("spark.graft.shingleExchangeBytes").map(_.toLong).getOrElse(128L << 20)
-    if (target <= 0L) return None
+    // target bytes per verify-join partition
+    val target = 128L << 20
     val bytes = base.queryExecution.optimizedPlan.stats.sizeInBytes
     val n = (bytes / target).min(8192).toInt
     if (n > default) Some(n) else None
@@ -543,13 +540,10 @@ object Dedup {
     // hsl values are ShingleHashExpr.hash32 — 32-bit values stored in
     // int64 (upper 4 bytes always zero), NOT the "uniform 60-bit
     // ints" the r17 note claimed — so general-purpose codecs do
-    // compress them and the default is the session codec again
-    // (r18 isolated codec-only A/B; spark.graft.shingleCodec
-    // overrides — see Checkpoint.shingleCodec)
-    val hashCodec = graft.sources.Checkpoint.shingleCodec(shingled.sparkSession)
+    // compress them and the table takes the session codec (r18
+    // isolated codec-only A/B)
     val base =
-      graft.sources.Checkpoint.tableGated(
-        shingled, "lsh-shingles", shingleBarrierLeafBytes, codec = hashCodec)
+      graft.sources.Checkpoint.tableGated(shingled, "lsh-shingles", shingleBarrierLeafBytes)
     // id → representative (minimum id sharing this exact hsl array).
     // The collapse groups and joins on __hk, a 64-bit fingerprint of
     // the whole set DERIVED FROM THE CHECKPOINT (a codegen'd xxhash64
@@ -600,7 +594,6 @@ object Dedup {
           .as("sig"),
       ),
       "lsh-signatures",
-      codec = hashCodec,
     )
     val withBands = sigd
       .select(col("id"), explode(bandHashes(col("sig"), nHashes, bands)).as("band"))

@@ -112,13 +112,9 @@ object IncrementalDedup {
     val corpusBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     val docsIn = if (corpusBytes <= (64L << 20)) docs else graft.sources.Par.spread(docs)
     // hsl payloads are hash32 values (32-bit in int64 — they DO
-    // compress; Dedup.lshStages note, r18 isolated A/B): session
-    // codec by default, spark.graft.shingleCodec overrides
-    val hashCodec = graft.sources.Checkpoint.shingleCodec(docs.sparkSession)
+    // compress; Dedup.lshStages note, r18 isolated A/B): session codec
     val sh = graft.sources.Checkpoint
-      .tableGated(
-        shingled(docsIn, idCol, textCol), "incr-build-sh", Dedup.shingleBarrierLeafBytes,
-        codec = hashCodec)
+      .tableGated(shingled(docsIn, idCol, textCol), "incr-build-sh", Dedup.shingleBarrierLeafBytes)
     val keyed = graft.sources.Checkpoint.tableGated(keyedOf(sh), "incr-build-keyed")
     val members = keyed
       .join(keyed.groupBy(col("hk")).agg(min(col("id")).as("rid")), Seq("hk"))
@@ -134,9 +130,7 @@ object IncrementalDedup {
     val spark = docs.sparkSession
     val writes = Seq(
       Future {
-        sh.write.mode("overwrite")
-          .option("compression", hashCodec.getOrElse("none"))
-          .parquet(s"$dir/shingles")
+        sh.write.mode("overwrite").option("compression", "none").parquet(s"$dir/shingles")
       },
       Future { keyed.write.mode("overwrite").parquet(s"$dir/keyed") },
       Future { members.write.mode("overwrite").parquet(s"$dir/members") },
@@ -426,10 +420,7 @@ object IncrementalDedup {
     val inc = increment(spark, dir, newDocs, idCol, textCol)
     import inc._
     stKeyed.unionByName(newKeyed).write.mode("overwrite").parquet(s"$outDir/keyed")
-    stShingles.unionByName(newSh).write.mode("overwrite")
-      .option("compression", graft.sources.Checkpoint.shingleCodec(stShingles.sparkSession).getOrElse(
-        stShingles.sparkSession.conf.get("spark.sql.parquet.compression.codec", "snappy")))
-      .parquet(s"$outDir/shingles")
+    stShingles.unionByName(newSh).write.mode("overwrite").parquet(s"$outDir/shingles")
     stMembers
       .join(touchedMembers.select(col("id")), Seq("id"), "left_anti")
       .unionByName(touchedMembers.drop("__new"))

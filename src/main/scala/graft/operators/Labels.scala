@@ -112,87 +112,36 @@ object Labels {
       col(c.price).as("lookback_price"),
     )
     AsofJoin
-      .asof(left, right, leftOn = "__lookback", rightOn = "__rts", by = Seq(c.symbol))
+      .asofNative(left, right, leftOn = "__lookback", rightOn = "__rts", by = Seq(c.symbol))
       .withColumn("return24h", safeDiv(col(c.price), col("lookback_price")) - 1)
       .drop("__lookback")
   }
 
   /** Daily volatility (dynamic_labels.py:14): EWM std (span) of the
-    * 24h-lookback returns, per symbol.
-    * Output: symbol, ts, daily_return_volatility (one row per tick).
+    * 24h-lookback returns, per symbol (a frame without the symbol
+    * column is one instrument).
+    * Output: symbol, ts, daily_return_volatility (one row per tick;
+    * null for a null-ts tick, which no other tick sees).
     */
   def dailyVol(
       df: DataFrame,
       span: Int = 100,
       c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    // single-security parity (reference dynamic_labels.py:45): a frame
-    // without the symbol column is treated as one instrument
-    val hasSymbol = df.columns.contains(c.symbol)
-    val withSym = if (hasSymbol) df else df.withColumn(c.symbol, lit("__single"))
-    // Path gate: the monolithic scan is one exchange + one sorted pass
-    // with per-SYMBOL parallelism — optimal until a single symbol's
-    // history outgrows one core. Past the byte gate, switch to the
-    // (symbol, day)-chunked fused scan, which trades two extra
-    // metadata folds for a symbol x day parallelism axis.
-    //
-    // Reproducibility note (r12 advice): the auto gate reads plan-stats
-    // leaf sizeInBytes, which tracks FILE bytes — the same logical
-    // dataset can cross the boundary under a different parquet
-    // compression, and the two paths differ by ~1e-15 relative (the
-    // chunk folds use pow(decay, n) carries). Pipelines that need a
-    // bit-reproducible path choice should pin it explicitly with
-    // spark.graft.dailyVolPath=flat|chunked; the oracle sweep SFs all
-    // sit far below the default 8 GiB gate (flat path).
-    val pathConf = df.sparkSession.conf
-      .getOption("spark.graft.dailyVolPath")
-      .getOrElse("auto")
-    val useFlat = pathConf match {
-      case "flat" => true
-      case "chunked" => false
-      case "auto" =>
-        val leafBytes = withSym.queryExecution.optimizedPlan
-          .collectLeaves()
-          .map(_.stats.sizeInBytes)
-          .sum
-        // 8 GiB default (r13): the flat path's real limit is
-        // PER-SYMBOL density (one core consumes a symbol's stream at
-        // ~1-2M ticks/s), which total bytes only proxy. The sf100
-        // probe measured the old 1 GiB gate flipping too early: at
-        // 100M ticks / 50 symbols (1.8 GB) flat ran 98 s vs
-        // chunked 215 s — 2.2x the wrong way. A table past 8 GiB on
-        // a 2k-symbol universe still flips long before any single
-        // symbol saturates a core; genuinely skewed universes should
-        // pin spark.graft.dailyVolPath=chunked explicitly.
-        val gate = df.sparkSession.conf
-          .getOption("spark.graft.dailyVolChunkBytes")
-          .map(BigInt(_))
-          .getOrElse(BigInt(8L << 30))
-        leafBytes <= gate
-      case other =>
-        throw new IllegalArgumentException(
-          s"spark.graft.dailyVolPath must be auto|flat|chunked, got '$other'")
-    }
-    val vol =
-      if (useFlat) dailyVolScan(withSym, span, c)
-      else dailyVolFused(withSym, span, c)
-    if (hasSymbol) vol else vol.drop(c.symbol)
-  }
+  ): DataFrame = singleFrame(df, c)(dailyVolScan(_, span, c))
 
-  /** Monolithic fused daily-vol: one hash exchange on symbol, one
-    * in-partition sort, one streaming pass that resolves the 24h
-    * as-of lookback from a trailing ring buffer (the last 24h of
-    * ticks per symbol) and folds the return straight into the EWM std
-    * recurrence — no joins, no barriers, no second pass. Per-row
-    * arithmetic is identical to returns24h + Ewm.stdOverKey: the
-    * lookback row is the last tick with rts <= ts-24h (inclusive,
-    * insertion-order ties), x = price/lookback - 1 via the same IEEE
-    * ops, and the recurrence is the same multiply-add sequence.
+  /** Daily-vol scan: one hash exchange on symbol, one in-partition
+    * sort, one streaming pass that resolves the 24h as-of lookback
+    * from a trailing ring buffer (the last 24h of ticks per symbol)
+    * and folds the return straight into the EWM std recurrence — no
+    * joins, no barriers, no second pass. Per-row arithmetic is
+    * identical to returns24h + Ewm.stdOverKey: the lookback row is the
+    * last tick with rts <= ts-24h (inclusive), x = price/lookback - 1
+    * via the same IEEE ops, and the recurrence is the same multiply-add
+    * sequence.
     *
-    * Parallelism is per symbol, so a symbol whose full history
-    * exceeds one core's throughput bounds the wall time — dailyVol
-    * gates this path by input size and falls over to the
-    * (symbol, day)-chunked [[dailyVolFused]] beyond it.
+    * Parallelism is per symbol: one core consumes a symbol's stream
+    * (~1-2M ticks/s), so the densest symbol's history bounds the wall
+    * time.
     */
   private def dailyVolScan(df: DataFrame, span: Int, c: TradingCols): DataFrame = {
     require(span >= 1, "span must be >= 1")
@@ -202,12 +151,9 @@ object Labels {
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
     val pruned = df.select(col(c.symbol), col(c.ts), col(c.price))
-    // price as the equal-ts tiebreak (nulls first) — the SAME total
-    // order the fused path's sort and lastByOrd carry use, so the
-    // closing tick at a tied timestamp is identical across the flat
-    // scan, the fused halo, and the fused >=2-day carry (r12 advice).
-    // Rows with equal (ts, price) are interchangeable for both the
-    // lookback and the EWM fold, so this order is value-deterministic.
+    // price as the equal-ts tiebreak (nulls first): rows with equal
+    // (ts, price) are interchangeable for both the lookback and the
+    // EWM fold, so this order is value-deterministic.
     val sorted = pruned
       .repartition(col(c.symbol))
       .sortWithinPartitions(col(c.symbol), col(c.ts), col(c.price))
@@ -235,297 +181,31 @@ object Labels {
           ring = new java.util.ArrayDeque[(Long, Any)]()
           sumW = 0.0; sumWX = 0.0; sumWX2 = 0.0; sumW2 = 0.0
         }
-        // getAs keeps this agnostic to TIMESTAMP vs TIMESTAMP_NTZ
-        // external classes; micros compare exactly either way
-        val ts = row.get(tsIdx) match {
-          case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
-          case t: java.time.LocalDateTime =>
-            t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
-          case t: Long => t
-        }
-        val target = ts - dayMicros
-        while (ring.size > 1 && { val i = ring.iterator; i.next(); i.next()._1 <= target })
-          ring.pollFirst()
-        val lb: Any =
-          if (!ring.isEmpty && ring.peekFirst()._1 <= target) ring.peekFirst()._2 else null
-        val px: Any = if (row.isNullAt(pxIdx)) null else row.getDouble(pxIdx)
-        ring.addLast((ts, px))
-        sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
-        val out: Any =
-          if (px == null || lb == null || lb.asInstanceOf[Double] == 0.0) null
-          else {
-            val x = px.asInstanceOf[Double] / lb.asInstanceOf[Double] - 1
-            sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0
-            val mean = sumWX / sumW
-            val varBiased = math.max(sumWX2 / sumW - mean * mean, 0.0)
-            val denom = sumW * sumW - sumW2
-            if (denom <= 0.0) 0.0
-            else math.sqrt(varBiased * sumW * sumW / denom)
+        // a null-ts tick has no lookback point and no place in the EWM
+        // order: it emits null and leaves the ring and the sums as they are
+        if (row.isNullAt(tsIdx)) Row(sym, null, null)
+        else {
+          // getAs keeps this agnostic to TIMESTAMP vs TIMESTAMP_NTZ
+          // external classes; micros compare exactly either way
+          val ts = row.get(tsIdx) match {
+            case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+            case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
+            case t: java.time.LocalDateTime =>
+              t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
+            case t: Long => t
           }
-        Row(row.get(symIdx), row.get(tsIdx), out)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Fused daily-vol scan: the 24h as-of lookback and the EWM std
-    * recurrence in ONE (symbol, day)-chunked segmented scan, instead
-    * of a symbol-keyed as-of shuffle (5-way parallel on a 5-symbol
-    * feed) followed by the 3-pass chunked EWM.
-    *
-    * The lookback is exactly a one-day halo: for a tick at ts in day
-    * d, the as-of target ts-24h is served by day d-1's ticks (shipped
-    * into chunk d as halo rows with sort position ts+24h — the
-    * backward-inclusive predicate rts <= ts-24h is exactly
-    * rts+24h <= ts, integer-microsecond exact) plus the last price of
-    * days <= d-2 (a per-chunk carry folded from one metadata row per
-    * (symbol, day)). The EWM carry chain is the same summaries->fold->
-    * reseed composition as Ewm.stdOverKeyChunked, so per-row results
-    * are bit-identical to the unfused pipeline: same x values (same
-    * lookback row, same division), same chunk boundaries (UTC epoch
-    * day of ts), same seeded sequential recurrence.
-    *
-    * At 100 TB the shape is unchanged from the unfused plan — chunk
-    * parallelism symbol x day, carries are metadata-sized — but two
-    * full-data exchanges replace three plus the as-of window
-    * (refbench 1M/5-symbol: 2.1 s -> see SURVEY §6i round-12 row).
-    */
-  private def dailyVolFused(df: DataFrame, span: Int, c: TradingCols): DataFrame = {
-    require(span >= 1, "span must be >= 1")
-    val alpha = 2.0 / (span + 1.0)
-    val decay = 1.0 - alpha
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
-
-    val base0 = df
-      .select(col(c.symbol), col(c.ts), col(c.price))
-      .withColumn("__chunk", unix_date(to_date(col(c.ts))))
-    // a small input arrives in one or two scan partitions, which would
-    // single-thread the map side of both passes' exchanges; a 100 TB
-    // scan is already wide and must NOT pay an extra full shuffle
-    val para = df.sparkSession.sparkContext.defaultParallelism
-    val base =
-      if (base0.rdd.getNumPartitions < para) base0.repartition(para) else base0
-    val ckpt = graft.sources.Checkpoint.tableGated(base, "daily-vol")
-
-    // own rows sort at their own ts; halo rows (yesterday's ticks) at
-    // ts+24h, tag 0 < 1 so an exact-24h match is inclusive (backward).
-    // One explode, NOT a union: Catalyst pushes a repartition below a
-    // union per branch, and UnionExec concatenates the branches'
-    // partition LISTS — each (symbol, day) group would appear once per
-    // branch and the chunk scans would see it as two disjoint runs.
-    val rows = ckpt
-      .select(
-        col(c.symbol),
-        explode(
-          array(
-            struct(
-              col("__chunk"),
-              col(c.ts).as("__adj"),
-              lit(1).as("__tag"),
-              col(c.price).as("__px"),
-            ),
-            struct(
-              (col("__chunk") + 1).as("__chunk"),
-              (col(c.ts) + expr("INTERVAL 24 hours")).as("__adj"),
-              lit(0).as("__tag"),
-              col(c.price).as("__px"),
-            ),
-          )
-        ).as("__r"),
-      )
-      .select(col(c.symbol), col("__r.__chunk"), col("__r.__adj"), col("__r.__tag"), col("__r.__px"))
-
-    // one metadata row per (symbol, day): the day's closing price.
-    // ord2 = coalesce(price, -inf) keeps null-price rows IN the
-    // ordering (OrderedHead ignores null-ord rows) exactly where the
-    // nulls-first ascending sorts of the halo/flat paths place them,
-    // so all three closing-tick resolutions agree at equal-ts ties
-    // (r12 advice: one tiebreak everywhere).
-    val lastPx = ckpt
-      .groupBy(col(c.symbol), col("__chunk"))
-      .agg(
-        graft.functions.OrderedAgg
-          .lastByOrd(
-            col(c.price),
-            col(c.ts),
-            coalesce(col(c.price), lit(Double.NegativeInfinity)),
-          )
-          .as("__px"))
-
-    // price carry: for chunk d, the last price over days <= d-2 (day
-    // d-1 arrives as halo rows; gap days fall through to the carry)
-    val lpSorted = lastPx
-      .repartition(col(c.symbol))
-      .sortWithinPartitions(col(c.symbol), col("__chunk"))
-    val pcSchema = StructType(
-      Seq(
-        lpSorted.schema(c.symbol),
-        lpSorted.schema("__chunk"),
-        StructField("__lb0", DoubleType, nullable = true),
-      )
-    )
-    val symIdx = lpSorted.schema.fieldIndex(c.symbol)
-    val chIdx = lpSorted.schema.fieldIndex("__chunk")
-    val pxIdx = lpSorted.schema.fieldIndex("__px")
-    val priceCarry = lpSorted
-      .mapPartitions { it =>
-        var curSym: Any = null
-        val pending = scala.collection.mutable.Queue.empty[(Int, Any)]
-        var usable: Any = null
-        it.map { r =>
-          val sym = r.get(symIdx)
-          if (sym != curSym) { curSym = sym; pending.clear(); usable = null }
-          val d = r.getInt(chIdx)
-          while (pending.nonEmpty && pending.head._1 <= d - 2) usable = pending.dequeue()._2
-          val out = Row(r.get(symIdx), d, usable)
-          pending.enqueue((d, r.get(pxIdx)))
-          out
-        }
-      }(Encoders.row(pcSchema))
-      // carries are metadata-sized (one row per symbol-day); the
-      // barrier stops m1/m2 from re-deriving the lastPx aggregation
-      .localCheckpoint()
-    // broadcast gate: one row per (symbol, day) — e.g. 10k symbols x
-    // 25y ~ 90M rows would NOT broadcast; SMJ is the fallback there
-    val bcastCarries = priceCarry.count() <= 2000000L
-    def bc(carry: DataFrame): DataFrame = if (bcastCarries) broadcast(carry) else carry
-
-    // pass 1: per-chunk local EWM end states, lookback resolved from
-    // the halo merge (zero-seeded, same recurrence as Ewm pass 1)
-    def merged(extra: DataFrame): DataFrame = rows
-      .join(bc(extra), Seq(c.symbol, "__chunk"), "left")
-      .repartition(col(c.symbol), col("__chunk"))
-      // __px last: equal-(adj, tag) ties resolve by price (nulls
-      // first), matching the flat scan's (ts, price) sort
-      .sortWithinPartitions(
-        col(c.symbol), col("__chunk"), col("__adj"), col("__tag"), col("__px"))
-
-    val m1 = merged(priceCarry)
-    val m1Key = Seq(c.symbol, "__chunk").map(m1.schema.fieldIndex)
-    val m1Tag = m1.schema.fieldIndex("__tag")
-    val m1Px = m1.schema.fieldIndex("__px")
-    val m1Lb = m1.schema.fieldIndex("__lb0")
-    val sumSchema = StructType(
-      Seq(
-        m1.schema(c.symbol),
-        m1.schema("__chunk"),
-        StructField("__n", LongType, nullable = false),
-        StructField("__eW", DoubleType, nullable = false),
-        StructField("__eWX", DoubleType, nullable = false),
-        StructField("__eWX2", DoubleType, nullable = false),
-        StructField("__eW2", DoubleType, nullable = false),
-      )
-    )
-    val summaries = m1.mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var curKey: Seq[Any] = null
-      var lastLb: Any = null
-      var n = 0L
-      var sumW, sumWX, sumWX2, sumW2 = 0.0
-      def flush(): Unit =
-        if (curKey != null) out += Row.fromSeq(curKey ++ Seq[Any](n, sumW, sumWX, sumWX2, sumW2))
-      it.foreach { row =>
-        val key = m1Key.map(row.get)
-        if (key != curKey) {
-          flush()
-          curKey = key
-          lastLb = if (row.isNullAt(m1Lb)) null else row.getDouble(m1Lb)
-          n = 0L; sumW = 0.0; sumWX = 0.0; sumWX2 = 0.0; sumW2 = 0.0
-        }
-        if (row.getInt(m1Tag) == 0) {
-          lastLb = if (row.isNullAt(m1Px)) null else row.getDouble(m1Px)
-        } else {
-          n += 1
-          sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
-          if (!row.isNullAt(m1Px) && lastLb != null && lastLb.asInstanceOf[Double] != 0.0) {
-            val x = row.getDouble(m1Px) / lastLb.asInstanceOf[Double] - 1
-            sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0
-          }
-        }
-      }
-      flush()
-      out.iterator
-    }(Encoders.row(sumSchema))
-
-    // pass 2: fold the per-chunk summaries into carry-in states (one
-    // metadata row per chunk; identical composition to Ewm pass 2)
-    val sSorted = summaries
-      .repartition(col(c.symbol))
-      .sortWithinPartitions(col(c.symbol), col("__chunk"))
-    val carrySchema = StructType(
-      Seq(
-        m1.schema(c.symbol),
-        m1.schema("__chunk"),
-        StructField("__cW", DoubleType, nullable = false),
-        StructField("__cWX", DoubleType, nullable = false),
-        StructField("__cWX2", DoubleType, nullable = false),
-        StructField("__cW2", DoubleType, nullable = false),
-      )
-    )
-    val ewmCarry = sSorted
-      .mapPartitions { it =>
-        var curSym: Any = null
-        var cW, cWX, cWX2, cW2 = 0.0
-        it.map { s =>
-          val sym = s.get(0)
-          if (sym != curSym) {
-            curSym = sym; cW = 0.0; cWX = 0.0; cWX2 = 0.0; cW2 = 0.0
-          }
-          val carry = Row(s.get(0), s.get(1), cW, cWX, cWX2, cW2)
-          val n = s.getLong(2)
-          val dn = math.pow(decay, n.toDouble)
-          val dn2 = math.pow(decay * decay, n.toDouble)
-          cW = cW * dn + s.getDouble(3)
-          cWX = cWX * dn + s.getDouble(4)
-          cWX2 = cWX2 * dn + s.getDouble(5)
-          cW2 = cW2 * dn2 + s.getDouble(6)
-          carry
-        }
-      }(Encoders.row(carrySchema))
-      // barrier: pass 1 runs exactly once; m2's plan joins a
-      // materialized metadata table instead of replaying the scan
-      .localCheckpoint()
-
-    // pass 3: rescan each chunk seeded with its carries, emit own rows
-    val m2 = merged(priceCarry.join(ewmCarry, Seq(c.symbol, "__chunk"), "left"))
-    val m2Key = Seq(c.symbol, "__chunk").map(m2.schema.fieldIndex)
-    val m2Tag = m2.schema.fieldIndex("__tag")
-    val m2Px = m2.schema.fieldIndex("__px")
-    val m2Lb = m2.schema.fieldIndex("__lb0")
-    val m2Adj = m2.schema.fieldIndex("__adj")
-    val m2Sym = m2.schema.fieldIndex(c.symbol)
-    val cIdx = Seq("__cW", "__cWX", "__cWX2", "__cW2").map(m2.schema.fieldIndex)
-    val outSchema = StructType(
-      Seq(
-        m2.schema(c.symbol),
-        StructField(c.ts, m2.schema("__adj").dataType, nullable = true),
-        StructField("daily_return_volatility", DoubleType, nullable = true),
-      )
-    )
-    m2.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var lastLb: Any = null
-      var sumW, sumWX, sumWX2, sumW2 = 0.0
-      it.flatMap { row =>
-        val key = m2Key.map(row.get)
-        if (key != curKey) {
-          curKey = key
-          lastLb = if (row.isNullAt(m2Lb)) null else row.getDouble(m2Lb)
-          sumW = if (row.isNullAt(cIdx(0))) 0.0 else row.getDouble(cIdx(0))
-          sumWX = if (row.isNullAt(cIdx(1))) 0.0 else row.getDouble(cIdx(1))
-          sumWX2 = if (row.isNullAt(cIdx(2))) 0.0 else row.getDouble(cIdx(2))
-          sumW2 = if (row.isNullAt(cIdx(3))) 0.0 else row.getDouble(cIdx(3))
-        }
-        if (row.getInt(m2Tag) == 0) {
-          lastLb = if (row.isNullAt(m2Px)) null else row.getDouble(m2Px)
-          None
-        } else {
+          val target = ts - dayMicros
+          while (ring.size > 1 && { val i = ring.iterator; i.next(); i.next()._1 <= target })
+            ring.pollFirst()
+          val lb: Any =
+            if (!ring.isEmpty && ring.peekFirst()._1 <= target) ring.peekFirst()._2 else null
+          val px: Any = if (row.isNullAt(pxIdx)) null else row.getDouble(pxIdx)
+          ring.addLast((ts, px))
           sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
           val out: Any =
-            if (row.isNullAt(m2Px) || lastLb == null || lastLb.asInstanceOf[Double] == 0.0) null
+            if (px == null || lb == null || lb.asInstanceOf[Double] == 0.0) null
             else {
-              val x = row.getDouble(m2Px) / lastLb.asInstanceOf[Double] - 1
+              val x = px.asInstanceOf[Double] / lb.asInstanceOf[Double] - 1
               sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0
               val mean = sumWX / sumW
               val varBiased = math.max(sumWX2 / sumW - mean * mean, 0.0)
@@ -533,7 +213,7 @@ object Labels {
               if (denom <= 0.0) 0.0
               else math.sqrt(varBiased * sumW * sumW / denom)
             }
-          Some(Row(row.get(m2Sym), row.get(m2Adj), out))
+          Row(row.get(symIdx), row.get(tsIdx), out)
         }
       }
     }(Encoders.row(outSchema))
@@ -555,7 +235,7 @@ object Labels {
     )
     val right = df.select(col(c.symbol), col(c.ts).as("__rts"), col(c.ts).as("vertical_barrier"))
     AsofJoin
-      .asof(
+      .asofNative(
         left,
         right,
         leftOn = "__off",

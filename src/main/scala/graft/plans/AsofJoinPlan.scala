@@ -10,24 +10,23 @@ import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistrib
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.types._
 
-/** Native as-of join: LogicalPlan + Strategy + physical merge scan.
+/** Native as-of join: LogicalPlan + Strategy + physical merge scan,
+  * graft's one as-of join (built by graft.operators.AsofJoin.asofNative).
   *
-  * The declarative formulation (graft.operators.AsofJoin: tag+union+
-  * window) doubles the row count through one exchange; this operator
-  * instead co-partitions both sides on the `by` keys, sorts each side
-  * once by (by, key) — both requirements expressed to EnsureRequirements,
-  * so Catalyst plans the exchanges/sorts and can elide them when the
-  * input is already partitioned (e.g. read from a date/symbol
-  * TradeStore) — and resolves matches with a streaming two-pointer
-  * merge per partition: O(1) state, no row duplication, no window
-  * buffering.
+  * The operator co-partitions both sides on the `by` keys, sorts each
+  * side once by (by, key) — both requirements expressed to
+  * EnsureRequirements, so Catalyst plans the exchanges/sorts and can
+  * elide them when the input is already partitioned (e.g. read from a
+  * date/symbol TradeStore) — and resolves matches with a streaming
+  * two-pointer merge per partition: O(1) state, no row duplication,
+  * no window buffering.
   *
-  * Semantics identical to AsofJoin.asof (inclusive backward/forward;
-  * at equal keys backward takes the last right row, forward the
-  * first; nearest picks the smaller |left-right| distance, ties and
-  * equal keys to the backward candidate). Null left keys match
-  * nothing. `tolerance` is a max |left-right| distance in the key's
-  * native units (micros for timestamps, days for dates).
+  * Semantics: inclusive backward/forward; at equal keys backward
+  * takes the last right row, forward the first; nearest picks the
+  * smaller |left-right| distance, ties and equal keys to the backward
+  * candidate. Null keys on either side match nothing. `tolerance` is
+  * a max |left-right| distance in the key's native units (micros for
+  * timestamps, days for dates).
   */
 case class AsofJoinPlan(
     left: LogicalPlan,

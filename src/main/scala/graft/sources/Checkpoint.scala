@@ -64,23 +64,13 @@ object Checkpoint {
     * orders, 1.5M×d512: partitioned store write 85 s snappy vs 30 s
     * and 38 s vs 20 s uncompressed — OPTIMIZATION_r17.md).
     * `spark.graft.vectorCodec` overrides for deployments whose
-    * vectors do compress. Hashed-shingle tables are governed by
-    * [[shingleCodec]] instead — their values are NOT high-entropy
-    * longs (see there).
+    * vectors do compress. Hashed-shingle checkpoints take the session
+    * parquet codec: their values are 32-bit hashes stored in int64
+    * (upper 4 bytes always zero), which general-purpose codecs do
+    * compress (r18 isolated A/B: see OPTIMIZATION_r18.md).
     */
   def vectorCodec(spark: org.apache.spark.sql.SparkSession): Option[String] =
     Some(spark.conf.getOption("spark.graft.vectorCodec").getOrElse("none"))
-
-  /** Codec for hashed-shingle checkpoint/store tables. r17 wrote them
-    * uncompressed on the rationale "uniform 60-bit ints", but the hsl
-    * values are ShingleHashExpr.hash32 — 32-bit values stored in
-    * int64, upper 4 bytes always zero — which general-purpose codecs
-    * do compress (r18 isolated A/B: see OPTIMIZATION_r18.md). Default
-    * is therefore the SESSION parquet codec (None = no override);
-    * `spark.graft.shingleCodec` overrides.
-    */
-  def shingleCodec(spark: org.apache.spark.sql.SparkSession): Option[String] =
-    spark.conf.getOption("spark.graft.shingleCodec")
 
   /** Writes `df` to a fresh parquet table under
     * `spark.graft.checkpointDir` (default: local tmp, deleted on JVM

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming backward as-of join — the stream-enrichment twin of
-  * graft.operators.AsofJoin: each tick gets the latest reference
+  * graft.operators.AsofJoin.asofNative: each tick gets the latest reference
   * observation (quote, rate, model score) at or before its event
   * time.
   *

@@ -14,15 +14,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * labelers consume, so an online labeler sees the identical
   * volatility series the training labels were built from.
   *
-  * Bit-exactness is against the PRODUCTION batch form at streaming
-  * scale, Labels.dailyVol's monolithic fused scan (dailyVolScan): one
-  * flat carry-free EWM recurrence over the 24h-lookback returns —
-  * exactly what this per-symbol state machine runs. (Above the batch
-  * operator's size gate the chunked scan takes over batch-side; its
-  * chunk-fold arithmetic agrees with the flat recurrence to float
-  * associativity, ~1e-15 relative, not bit-for-bit.) Pinned
-  * bit-identical in StreamingBarsSpec, including across mid-symbol
-  * state splits (TestGroupState).
+  * Bit-exact against the batch form, Labels.dailyVol's per-symbol
+  * scan (dailyVolScan): one flat carry-free EWM recurrence over the
+  * 24h-lookback returns — exactly what this per-symbol state machine
+  * runs. Pinned bit-identical in StreamingBarsSpec, including across
+  * mid-symbol state splits (TestGroupState).
   *
   * State per symbol: 12 accumulator doubles + the trailing
   * lookback-horizon price buffer for the as-of lookup (bounded by
@@ -49,7 +45,7 @@ object StreamingDailyVol {
       // batch scan's last-at-equal-keys choice)
       buf: Vector[(Long, Double)],
       // flat EWM moment accumulators (identical op order to the batch
-      // monolithic scan)
+      // scan)
       sW: Double, sWX: Double, sWX2: Double, sW2: Double,
   )
 

@@ -252,46 +252,46 @@ class CoreOperatorsSpec extends SparkSpec {
     val right = Seq(("A", 8L, 1.0), ("A", 20L, 2.0), ("B", 50L, 3.0))
       .toDF("sym", "rk", "v")
     val back = AsofJoin
-      .asof(left, right, "k", "rk", by = Seq("sym"))
+      .asofNative(left, right, "k", "rk", by = Seq("sym"))
       .orderBy("sym", "k")
       .collect()
     assert(back.map(r => Option(r.getAs[Double]("v"))).toSeq == Seq(Some(1.0), Some(2.0), None))
     val fwd = AsofJoin
-      .asof(left, right, "k", "rk", by = Seq("sym"), direction = AsofJoin.Forward)
+      .asofNative(left, right, "k", "rk", by = Seq("sym"), direction = AsofJoin.Forward)
       .orderBy("sym", "k")
       .collect()
     assert(fwd.map(r => Option(r.getAs[Double]("v"))).toSeq == Seq(Some(2.0), None, Some(3.0)))
     val tol = AsofJoin
-      .asof(left, right, "k", "rk", by = Seq("sym"), tolerance = Some(lit(3L)))
+      .asofNative(left, right, "k", "rk", by = Seq("sym"), tolerance = Some(3.0))
       .orderBy("sym", "k")
       .collect()
     assert(tol.map(r => Option(r.getAs[Double]("v"))).toSeq == Seq(Some(1.0), None, None))
   }
 
-  test("native asof agrees with window asof on all strategies x tolerance") {
-    // right keys unique: with duplicate (by, key) rows the matched
-    // VALUE is unspecified in both implementations (unstable sort /
-    // arbitrary merge order between equal keys)
-    val left = Seq(("A", 10L, "x"), ("A", 25L, "y"), ("B", 10L, "z"), ("B", 9L, "w"))
-      .toDF("sym", "k", "payload")
-    val right = Seq(("A", 8L, 1.0), ("A", 20L, 2.0), ("A", 21L, 2.5), ("B", 50L, 3.0))
-      .toDF("sym", "rk", "v")
+  test("asof agrees with the brute-force reference on all strategies x tolerance") {
+    val leftRows = Seq(("A", 10L, "x"), ("A", 25L, "y"), ("B", 10L, "z"), ("B", 9L, "w"))
+    val rightRows = Seq(("A", 8L, 1.0), ("A", 20L, 2.0), ("A", 21L, 2.5), ("B", 50L, 3.0))
+    val left = leftRows.toDF("sym", "k", "payload")
+    val right = rightRows.toDF("sym", "rk", "v")
     for {
       dir <- Seq(AsofJoin.Backward, AsofJoin.Forward, AsofJoin.Nearest)
       tol <- Seq(None, Some(5.0))
     } {
-      val win = AsofJoin
-        .asof(left, right, "k", "rk", by = Seq("sym"), direction = dir,
-          tolerance = tol.map(t => lit(t.toLong)))
-        .orderBy("sym", "k")
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), Option(r.getAs[Double]("v"))))
-      val nat = AsofJoin
+      val got = AsofJoin
         .asofNative(left, right, "k", "rk", by = Seq("sym"), direction = dir, tolerance = tol)
-        .orderBy("sym", "k")
         .collect()
-        .map(r => (r.getString(0), r.getLong(1), Option(r.getAs[Double]("v"))))
-      assert(win.toSeq == nat.toSeq, s"direction $dir tolerance $tol")
+        .map(r => r.getString(2) -> Option(r.getAs[Double]("v")))
+        .toMap
+      val want = AsofReference.matches(
+        leftRows.map(l => (l._1, Some(l._2))),
+        rightRows.map(r => (r._1, Some(r._2), r._3)),
+        dir,
+        tol,
+      )
+      assert(got.size == leftRows.size)
+      leftRows.zip(want).foreach { case (l, w) =>
+        assert(AsofReference.allows(w, got(l._3)), s"direction $dir tolerance $tol row $l")
+      }
     }
     // nearest picks the closer side; ties and equal keys go backward
     val near = AsofJoin
@@ -324,19 +324,58 @@ class CoreOperatorsSpec extends SparkSpec {
     assert(fwd.getAs[Double]("v") == 2.0)
   }
 
-  test("native asof matches window asof on real trade data") {
+  test("asof matches the brute-force reference on real trade data") {
     val trades = graft.sources.TradeData.fromEvents(spark, "/root/testdata/sf0.001")
+    val dayMicros = 24L * 3600L * 1000000L
     val left = trades.select(
       col("symbol"), col("ts"), col("price"),
       (col("ts") - expr("INTERVAL 24 hours")).as("lb"),
     )
     val right = trades.select(col("symbol"), col("ts").as("rts"), col("price").as("lp"))
-    def normalize(df: org.apache.spark.sql.DataFrame) =
-      df.select("symbol", "ts", "lp").orderBy("symbol", "ts").collect()
-        .map(r => (r.getString(0), r.getTimestamp(1), Option(r.get(2)))).toSeq
-    val win = normalize(AsofJoin.asof(left, right, "lb", "rts", by = Seq("symbol")))
-    val nat = normalize(AsofJoin.asofNative(left, right, "lb", "rts", by = Seq("symbol")))
-    assert(win == nat)
+    val got = AsofJoin
+      .asofNative(left, right, "lb", "rts", by = Seq("symbol"))
+      .select(col("symbol"), unix_micros(col("ts")), col("lp"))
+      .collect()
+      .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Long]), Option(r.get(2))))
+      .toSeq
+    val ticks = trades.select(col("symbol"), unix_micros(col("ts")), col("price")).collect()
+      .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.get(2)))
+      .toSeq
+    // every left row comes out once, with a value the reference allows
+    assert(got.map(g => (g._1, g._2)).sortBy(_.toString) == ticks.map(t => (t._1, t._2)).sortBy(_.toString))
+    val want = AsofReference.matches(got.map(g => (g._1, g._2.map(_ - dayMicros))), ticks)
+    assert(want.exists(_.nonEmpty), "the fixture must exercise matched lookbacks")
+    got.zip(want).foreach { case (g, w) =>
+      assert(AsofReference.allows(w, g._3), s"row $g")
+    }
+  }
+
+  // --- a null-ts tick: no lookback, never a lookback for others ---
+  test("returns24h and dailyVol keep a null-ts tick out of every lookback") {
+    val rows = Seq(
+      ("A", Some(ts("1970-01-04 00:00:00")), 10.0, 0L),
+      ("A", None, 20.0, 1L),
+      ("A", Some(ts("1970-01-05 06:00:00")), 12.0, 2L),
+    )
+    val df = rows.map { case (s, t, p, id) => (s, t.orNull, p, 1L, id) }
+      .toDF("symbol", "ts", "price", "size", "trade_id")
+    val ret = Labels.returns24h(df).collect()
+      .map(r => r.getAs[Double]("price") -> (
+        Option(r.getAs[Any]("lookback_price")), Option(r.getAs[Any]("return24h"))))
+      .toMap
+    assert(ret(10.0) == (None, None))
+    assert(ret(20.0) == (None, None))
+    assert(ret(12.0)._1.contains(10.0))
+    assert(math.abs(ret(12.0)._2.get.asInstanceOf[Double] - 0.2) < 1e-12)
+    val vol = Labels.dailyVol(df, span = 3).collect()
+    assert(vol.length == 3)
+    val (nullTs, timed) = vol.partition(_.isNullAt(1))
+    assert(nullTs.length == 1 && nullTs.head.isNullAt(2))
+    val without = Labels.dailyVol(df.where(col("ts").isNotNull), span = 3).collect()
+    def byTs(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getAs[Timestamp]("ts"), Option(r.getAs[Any]("daily_return_volatility")))).toSet
+    assert(byTs(timed) == byTs(without))
+    assert(byTs(without).exists(_._2.nonEmpty))
   }
 
   test("tick imbalance bars close on one-sided runs and conserve volume") {

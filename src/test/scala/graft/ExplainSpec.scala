@@ -31,11 +31,29 @@ class ExplainSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), "dimension joins must not shuffle lineitem")
   }
 
-  test("window asof shuffles exactly once on the by-key") {
-    val p = plan("returns_24h")
-    val exchanges = "hashpartitioning".r.findAllIn(p).length
-    assert(exchanges <= 2, s"expected a single symbol exchange (x2 plan occurrences), got:\n$p")
-    assert(p.contains("Window"))
+  test("as-of labels run AsofJoinExec, no Window, one symbol exchange per side") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import graft.operators.Labels
+    val trades = TradeData.fromEvents(spark, dir)
+    for ((name, df) <- Seq(
+        "returns24h" -> Labels.returns24h(trades),
+        "verticalBarrier" -> Labels.verticalBarrier(trades))) {
+      val p = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      assert(p.collect { case j: graft.plans.AsofJoinExec => j }.size == 1, s"$name:\n$p")
+      assert(p.collect { case w: WindowExec => w }.isEmpty, s"$name:\n$p")
+      val exchanges = p.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(exchanges.size == 2 && exchanges.forall {
+        case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name } == Seq("symbol")
+        case _ => false
+      }, s"$name:\n$p")
+    }
   }
 
   test("native asof plans AsofJoinExec with planned exchanges") {

@@ -29,4 +29,15 @@ class LibraryEnvSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("environment reads in library code:\n", "\n", ""))
   }
+
+  // every spark.graft.* key is a knob users must learn; a new one
+  // should be a visible decision, not a side effect of an A/B
+  test("the library reads exactly five spark.graft.* keys") {
+    val key = "\"spark\\.graft\\.([A-Za-z0-9_]+)".r
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val keys = files.flatMap(f => key.findAllMatchIn(Files.readString(f)).map(_.group(1))).toSet
+    assert(keys == Set(
+      "checkpointDir", "barrierGateBytes", "shuffleHashMaxBytes", "shingleBarrierLeafBytes", "vectorCodec"))
+  }
 }

@@ -116,36 +116,38 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
     }
   }
 
+  // right keys can tie, where the reference allows any of the tied
+  // values; every 17th left and 13th right key is null
+  private def asofRandomCheck(seed: Long, dir: AsofJoin.Direction, tol: Option[Double]): Unit = {
+    val rng = new scala.util.Random(seed)
+    def key(i: Int, every: Int) = if (i % every == 0) None else Some(rng.nextInt(10000).toLong)
+    val left = (0 until 150).map(i => ("k" + i % 3, key(i, 17), i.toLong))
+    val right = (0 until 80).map(i => ("k" + i % 3, key(i, 13), rng.nextDouble()))
+    val got = AsofJoin
+      .asofNative(left.toDF("sym", "t", "lid"), right.toDF("sym", "t", "refv"),
+        leftOn = "t", rightOn = "t", by = Seq("sym"), direction = dir, tolerance = tol)
+      .select("lid", "refv")
+      .as[(Long, Option[Double])]
+      .collect()
+      .toMap
+    assert(got.size == left.size)
+    val want = AsofReference.matches(left.map(l => (l._1, l._2)), right, dir, tol)
+    left.zip(want).foreach { case (l, w) =>
+      assert(AsofReference.allows(w, got(l._3)), s"seed $seed $dir tolerance $tol row $l")
+    }
+  }
+
   test("asof backward equals brute-force reference on random series") {
+    forAll(seeds) { seed => asofRandomCheck(seed, AsofJoin.Backward, None) }
+  }
+
+  test("asof forward and nearest, with and without tolerance, equal the brute-force reference") {
     forAll(seeds) { seed =>
-      val rng = new scala.util.Random(seed)
-      val left = (0 until 150).map(i => ("k" + i % 3, rng.nextInt(10000).toLong, i.toLong))
-      val right = (0 until 80).map(i => ("k" + i % 3, rng.nextInt(10000).toLong, rng.nextDouble()))
-      val l = left.toDF("sym", "t", "lid")
-      val r = right.toDF("sym", "t", "refv")
-      val got = AsofJoin
-        .asof(l, r, leftOn = "t", rightOn = "t", by = Seq("sym"))
-        .select("sym", "t", "lid", "refv")
-        .as[(String, Long, Long, Option[Double])]
-        .collect()
-        .map(x => (x._1, x._2, x._3) -> x._4)
-        .toMap
-      for ((sym, t, lid) <- left) {
-        // reference: among rights with t' <= t, the LAST in (t', insertion) order
-        val cands = right.filter(rr => rr._1 == sym && rr._2 <= t)
-        val want = if (cands.isEmpty) None else Some(cands.maxBy(c => (c._2, right.indexOf(c)))._3)
-        val g = got((sym, t, lid))
-        if (cands.isEmpty) assert(g.isEmpty)
-        else {
-          // ties on t' make the matched VALUE order-defined; compare the
-          // matched timestamp instead (unique), then value when unique
-          val maxT = cands.map(_._2).max
-          val tied = cands.filter(_._2 == maxT)
-          if (tied.size == 1) assert(g.contains(tied.head._3), s"($sym,$t)")
-          else assert(g.isDefined && tied.map(_._3).contains(g.get))
-        }
-        want.foreach(_ => ()) // silence unused warning path
-      }
+      for {
+        dir <- Seq(AsofJoin.Backward, AsofJoin.Forward, AsofJoin.Nearest)
+        tol <- Seq(None, Some(150.0))
+        if !(dir == AsofJoin.Backward && tol.isEmpty)
+      } asofRandomCheck(seed, dir, tol)
     }
   }
 

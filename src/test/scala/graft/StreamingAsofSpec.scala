@@ -46,7 +46,7 @@ class StreamingAsofSpec extends SparkSpec {
     q.awaitTermination(120000)
 
     val streamed = spark.table("stream_asof").where(col("symbol") =!= "ZZ")
-    val batch = AsofJoin.asof(
+    val batch = AsofJoin.asofNative(
       tDf.where(col("symbol") =!= "ZZ"),
       rDf.where(col("symbol") =!= "ZZ")
         .select(col("symbol"), col("ts"), col("ts").as("bref_ts"), col("ref").as("bref")),
