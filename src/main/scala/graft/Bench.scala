@@ -23,8 +23,19 @@ object Bench {
       sfDir: String,
       cpus: String,
       nQueries: Int,
+      codegenCompiles: Long,
   ): String =
-    s"""{"total_sec":$totalSec,"failed":$nFail$failedPart,"sf":"$sfDir","cpus":"$cpus","n_queries":$nQueries}"""
+    s"""{"total_sec":$totalSec,"failed":$nFail$failedPart,"sf":"$sfDir","cpus":"$cpus","n_queries":$nQueries,""" +
+      s""""codegen_compiles":$codegenCompiles}"""
+
+  /** Classes Janino has compiled in this JVM, and their compile time in
+    * ms: Spark's codegen cache keeps at most 100, so a run whose
+    * working set is larger compiles the rest again on every use.
+    */
+  private def codegen(): (Long, Double) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6,
+  )
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -96,6 +107,7 @@ object Bench {
             s"${e.getClass.getName}: ${e.getMessage}")
     }
     val results = selected.map { case (name, fn) =>
+      val (c0, ms0) = codegen()
       val t0 = System.nanoTime()
       val ok =
         try {
@@ -112,23 +124,25 @@ object Bench {
       // barriers don't accumulate into executor-memory/GC pressure
       // for the later ones
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      name -> ((System.nanoTime() - t0) / 1e9, ok)
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      val (c1, ms1) = codegen()
+      name -> (elapsed, ok, c1 - c0, ms1 - ms0)
     }
     // stdout precision: 2 decimals keeps the line ~1.7 KB at 70
     // queries (the driver reads only the last ~2000 stdout chars);
     // bench_out.json keeps full precision
     def fmt(v: Double): String = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val nFail = results.count { case (_, (_, ok)) => !ok }
-    val failedNames = results.collect { case (k, (_, false)) => s"\"" + k + "\"" }
+    val nFail = results.count { case (_, (_, ok, _, _)) => !ok }
+    val failedNames = results.collect { case (k, (_, false, _, _)) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = results.map { case (_, (v, _)) => v }.sum
+    val total = results.map { case (_, (v, _, _, _)) => v }.sum
     // stdout line: ms-rounded timings, failures as a (normally empty)
     // name list — the driver keeps only the LAST ~2000 chars of stdout,
     // and rounds 1-5 proved a full-precision line with a per-query ok
     // map (~3 KB) gets its head truncated → "parsed": null every round.
     // This form is ~1.2 KB at 47 queries; full precision + the ok map
     // live in bench_out.json.
-    val qsShort = results.map { case (k, (v, _)) => s"\"" + k + "\":" + fmt(v) }
+    val qsShort = results.map { case (k, (v, _, _, _)) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val failedPart = if (nFail > 0) s""","failed_queries":$failedNames""" else ""
     val line =
@@ -140,13 +154,14 @@ object Bench {
     // A SECOND, compact summary line as the final print always fits
     // the tail; the full per-query map stays on the line above and in
     // bench_out.json. Timing methodology unchanged.
-    println(summaryLine(fmt(total), nFail, failedPart, sfDir, cpus, results.size))
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val oks = results.map { case (k, (_, ok)) => s"\"" + k + "\":" + ok }
-      .mkString("{", ",", "}")
+    println(summaryLine(fmt(total), nFail, failedPart, sfDir, cpus, results.size,
+      results.map { case (_, (_, _, c, _)) => c }.sum))
+    def perQuery(f: ((Double, Boolean, Long, Double)) => Any): String =
+      results.map { case (k, r) => s"\"" + k + "\":" + f(r) }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"ok":$oks,"failed":$nFail,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${perQuery(_._1)},"ok":${perQuery(_._2)},""" +
+        s""""codegen_compiles":${perQuery(_._3)},"codegen_compile_ms":${perQuery(_._4)},""" +
+        s""""failed":$nFail,"sf":"$sfDir"}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(out),

@@ -31,6 +31,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.KeyedScanStrategy)
   }
 }
 

@@ -56,26 +56,17 @@ object FracDiff {
     * summaries (≤ n_w−1 doubles each) are folded per symbol into
     * carry-ins (metadata-sized pass, same shape as
     * Ewm.stdOverKeyChunked) and each chunk scans independently seeded
-    * with its carry.
+    * with its carry. Three keyed scans in one plan: tails per
+    * (symbol, chunk), carries per symbol, the FFD per (symbol, chunk).
     *
     * The carry reaches its chunk as ONE sentinel row unioned ahead of
     * the chunk's data (sorted first via a 0/1 flag), not as a joined
     * per-row column: a left join would attach the n_w−1-double array
     * to every fact row, and at 100M rows the per-row deserialization
     * of that boxed array dominated GC (the measured sf100 superlinear
-    * step). Both scan passes are allocation-free per row — primitive
-    * rings, direct field compares, one output array per emitted row.
+    * step). No scan boxes a row: primitive rings, rows written straight
+    * into UnsafeRow buffers.
     */
-  /** Copy an internal value out of a reused InternalRow buffer (keys
-    * held across rows; tail rows buffered to partition end).
-    */
-  private def copyVal(v: Any): Any = v match {
-    case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-    case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-    case r: org.apache.spark.sql.catalyst.InternalRow => r.copy()
-    case other => other
-  }
-
   def fracDiffChunked(
       df: org.apache.spark.sql.DataFrame,
       valueCol: String,
@@ -86,18 +77,19 @@ object FracDiff {
       orderCols: Seq[String],
       outCol: String = "frac_diff",
   ): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     import org.apache.spark.sql.types._
-    val spark = df.sparkSession
+    import graft.plans.{KeyedScan, ScanKernel, ScanOut}
     val ws = weights(d, threshold)
     val nW = ws.length
-
-    val chunked = graft.sources.Checkpoint.tableGated(df.withColumn("__chunk", chunkCol), "fd-chunked")
-    val groupCols = Seq(symbolCol, "__chunk")
+    val fields = df.schema.fields
+    val m = fields.length
+    val symIdx = df.schema.fieldIndex(symbolCol)
+    val valIdx = df.schema.fieldIndex(valueCol)
+    val symType = fields(symIdx).dataType
+    val chunkType = df.select(chunkCol).schema(0).dataType
+    val carryType = ArrayType(DoubleType, containsNull = false)
+    val keys = Seq(col(symbolCol), chunkCol)
 
     // Scale-adaptive partition count for the two corpus exchanges
     // (guide §2.2 — the dedup family's §6r lesson applied here): the
@@ -109,175 +101,109 @@ object FracDiff {
     // plan-stats bytes: the events parquet is snappy-compressed
     // ~10-20× so file-size stats under-estimate sort bytes that
     // badly. The row count comes from one zero-column metadata-cheap
-    // count on the checkpointed table, gated behind a 256 MiB
-    // file-bytes threshold so small corpora (every oracle/suite
-    // shape) skip the count and keep byte-identical plans. `None`
-    // when the session default suffices; the target is 128 MiB per
-    // exchange partition.
+    // count, gated behind a 256 MiB file-bytes threshold so small
+    // corpora (every oracle/suite shape) skip the count and keep
+    // byte-identical plans. `None` when the session default
+    // suffices; the target is 128 MiB per exchange partition.
     val fdParts: Option[Int] = {
-      val spark0 = chunked.sparkSession
+      val spark0 = df.sparkSession
       val default = scala.util.Try(spark0.conf.get("spark.sql.shuffle.partitions").toInt)
         .getOrElse(spark0.sparkContext.defaultParallelism)
       val target = 128L << 20
-      val leafBytes = chunked.queryExecution.optimizedPlan.collectLeaves()
+      val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
         .map(_.stats.sizeInBytes).sum
       if (leafBytes <= (256L << 20)) None
       else {
-        val rows = chunked.count()
-        val width = math.max(16, chunked.schema.defaultSize)
+        val rows = df.count()
+        val width = math.max(16, df.schema.defaultSize + 8)
         val n = (BigInt(rows) * width / target).min(8192).toInt
         if (n > default) Some(n) else None
       }
     }
-    def repart(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      fdParts match {
-        case Some(n) => d.repartition(n, groupCols.map(col): _*)
-        case None => d.repartition(groupCols.map(col): _*)
-      }
 
-    // pass 1 only reads (keys, order, value) — project BEFORE the
-    // exchange (guide §2.3): the full-width form shuffled every fact
-    // column twice (here and again in pass 3)
-    val slimCols = (groupCols ++ orderCols :+ valueCol).distinct
-    val sorted = repart(chunked.select(slimCols.map(col): _*))
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-    val keyIdx0 = sorted.schema.fieldIndex(symbolCol)
-    val keyIdx1 = sorted.schema.fieldIndex("__chunk")
-    val valIdx = sorted.schema.fieldIndex(valueCol)
-    val keyDt0 = sorted.schema(keyIdx0).dataType
-    val keyDt1 = sorted.schema(keyIdx1).dataType
-
-    // pass 1: per-chunk tails (last <= nW-1 values, NaN for nulls).
-    // InternalRow pass — the external-Row encoder boxed every column
-    // of every row (timestamps/strings/doubles), the measured GC term
-    // of the sf100 decade step (§6t; r17 verdict #8).
-    val tailSchema = StructType(
-      groupCols.map(n => sorted.schema(n)) :+
-        StructField("__tail", ArrayType(DoubleType, containsNull = false), nullable = false)
-    )
-    val tailsRdd = sorted.queryExecution.toRdd.mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      val cap = math.max(nW - 1, 1)
-      val ring = new Array[Double](cap)
-      var len = 0
-      var pos = 0
-      var started = false
-      var k0: Any = null
-      var k1: Any = null
-      def flush(): Unit = if (started) {
-        val t = new Array[Double](len)
-        var i = 0
-        while (i < len) { t(i) = ring(((pos - len + i) % cap + cap) % cap); i += 1 }
-        out += new GenericInternalRow(Array[Any](k0, k1, new GenericArrayData(t)))
-      }
-      it.foreach { row =>
-        val a = if (row.isNullAt(keyIdx0)) null else row.get(keyIdx0, keyDt0)
-        val b = if (row.isNullAt(keyIdx1)) null else row.get(keyIdx1, keyDt1)
-        if (!started || a != k0 || b != k1) {
-          flush(); started = true; k0 = copyVal(a); k1 = copyVal(b); len = 0; pos = 0
-        }
-        if (nW > 1) {
+    // pass 1: per-chunk tails (last <= nW-1 values, NaN for nulls)
+    val tails = KeyedScan(df, keys, orderCols.map(col), StructType(Seq(
+      StructField(symbolCol, symType), StructField("__chunk", chunkType),
+      StructField("__tail", carryType, nullable = false))), fdParts) { () =>
+      new ScanKernel {
+        private val cap = math.max(nW - 1, 1)
+        private val ring = new Array[Double](cap)
+        private var len, pos = 0
+        private var key: InternalRow = null
+        def reset(k: InternalRow): Unit = { key = k; len = 0; pos = 0 }
+        def step(row: InternalRow, o: ScanOut): Unit = if (nW > 1) {
           ring(pos) = if (row.isNullAt(valIdx)) Double.NaN else row.getDouble(valIdx)
           pos = (pos + 1) % cap
           if (len < cap) len += 1
         }
-      }
-      flush()
-      out.iterator
-    }
-    val tails = ColumnBridge.ofInternalRows(spark, tailsRdd, tailSchema)
-
-    // pass 2: per-symbol fold of tails -> carry-ins (chunk-ordered)
-    val carries = tails
-      .repartition(col(symbolCol))
-      .sortWithinPartitions(groupCols.map(col): _*)
-      .mapPartitions { it =>
-        var curSym: Any = null
-        var carry: Vector[Double] = Vector.empty
-        it.map { s =>
-          val sym = s.get(0)
-          if (sym != curSym) { curSym = sym; carry = Vector.empty }
-          val row = Row.fromSeq(Seq(s.get(0), s.get(1), carry))
-          carry = (carry ++ s.getSeq[Double](2)).takeRight(nW - 1)
-          row
+        def flush(o: ScanOut): Unit = {
+          val t = new Array[Double](len)
+          var i = 0
+          while (i < len) { t(i) = ring(((pos - len + i) % cap + cap) % cap); i += 1 }
+          o.begin()
+          o.copy(0, key, 0, symType); o.copy(1, key, 1, chunkType); o.array(2, t)
+          o.emit()
         }
-      }(Encoders.row(StructType(
-        groupCols.map(n => sorted.schema(n)) :+
-          StructField("__carry", ArrayType(DoubleType, containsNull = false), nullable = false)
-      )))
+      }
+    }
+
+    // pass 2: per-symbol fold of tails -> carry-ins (chunk-ordered),
+    // written as pass 3's sentinel rows: the data columns null but the
+    // symbol, then (__chunk, __carry, __sent = 0)
+    val sentinels = KeyedScan(tails, Seq(col(symbolCol)), Seq(col("__chunk")), StructType(
+      fields.map(_.copy(nullable = true)).toSeq ++ Seq(StructField("__chunk", chunkType),
+        StructField("__carry", carryType), StructField("__sent", IntegerType)))) { () =>
+      new ScanKernel {
+        private var carry: Vector[Double] = Vector.empty
+        def reset(k: InternalRow): Unit = carry = Vector.empty
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          val w = o.begin()
+          var i = 0
+          while (i < m) { if (i == symIdx) o.copy(i, row, 0, symType) else w.setNullAt(i); i += 1 }
+          o.copy(m, row, 1, chunkType)
+          o.array(m + 1, carry.toArray)
+          w.write(m + 2, 0)
+          o.emit()
+          carry = (carry ++ row.getArray(2).toDoubleArray()).takeRight(nW - 1)
+        }
+        def flush(o: ScanOut): Unit = ()
+      }
+    }
 
     // pass 3: per-chunk scan seeded with the carry. The carry arrives
     // as a sentinel row (__sent=0, sorted ahead of its chunk's data)
     // so no fact row ever materializes the carry array.
-    val carryType = ArrayType(DoubleType, containsNull = false)
-    val dataSide = chunked
-      .withColumn("__carry", lit(null).cast(carryType))
-      .withColumn("__sent", lit(1))
-    val sentSide = carries.select(
-      chunked.schema.fieldNames.map { n =>
-        if (n == symbolCol || n == "__chunk") col(n)
-        else lit(null).cast(chunked.schema(n).dataType).as(n)
-      }.toSeq :+ col("__carry") :+ lit(0).as("__sent"): _*)
-    val arranged = repart(dataSide.unionByName(sentSide))
-      .sortWithinPartitions(
-        (groupCols.map(col) :+ col("__sent")) ++ orderCols.map(col): _*)
-    val aSchema = arranged.schema
-    val aK0 = aSchema.fieldIndex(symbolCol)
-    val aK1 = aSchema.fieldIndex("__chunk")
-    val aVal = aSchema.fieldIndex(valueCol)
-    val aCarry = aSchema.fieldIndex("__carry")
-    val aSent = aSchema.fieldIndex("__sent")
-    val aKeyDt0 = aSchema(aK0).dataType
-    val aKeyDt1 = aSchema(aK1).dataType
-    val keepIdx = chunked.schema.fieldNames.filter(_ != "__chunk").map(aSchema.fieldIndex)
-    val keepDts = keepIdx.map(aSchema.fields(_).dataType)
-    val nKeep = keepIdx.length
-    val outSchema = StructType(
-      keepIdx.map(aSchema.fields(_)).toSeq :+ StructField(outCol, DoubleType, nullable = true)
-    )
-
-    // InternalRow scan (same GC rationale as pass 1): values are
-    // fetched internally and serialized through one UnsafeProjection
-    // per partition — no boxed Row, no per-column object churn
-    val outRdd = arranged.queryExecution.toRdd.mapPartitions { it =>
-      val proj = UnsafeProjection.create(outSchema)
-      val outVals = new Array[Any](nKeep + 1)
-      val outRow = new GenericInternalRow(outVals)
-      var started = false
-      var k0: Any = null
-      var k1: Any = null
-      val ring = new Array[Double](nW) // ring(0)=current, grows backward
-      var hist = 0L // values preceding the current row (uncapped count, capped seed)
-      var pos = 0
-      it.flatMap { row =>
-        val a = if (row.isNullAt(aK0)) null else row.get(aK0, aKeyDt0)
-        val b = if (row.isNullAt(aK1)) null else row.get(aK1, aKeyDt1)
-        if (!started || a != k0 || b != k1) {
-          started = true; k0 = copyVal(a); k1 = copyVal(b)
-          java.util.Arrays.fill(ring, Double.NaN)
-          pos = 0
-          hist = 0L
-        }
-        if (row.getInt(aSent) == 0) {
-          // sentinel: seed so that "index (pos - k) mod nW" is lag k
-          // of the current row — the last carry value is lag 1 of the
-          // chunk's first data row
-          if (!row.isNullAt(aCarry)) {
-            val carry = row.getArray(aCarry).toDoubleArray()
-            val n = carry.length
-            var back = 0
-            while (back < n) {
-              ring(((pos - 1 - back) % nW + nW) % nW) = carry(n - 1 - back)
-              back += 1
+    val arranged = df
+      .select(col("*"), chunkCol.as("__chunk"), lit(null).cast(carryType).as("__carry"), lit(1).as("__sent"))
+      .union(sentinels)
+    KeyedScan(arranged, Seq(col(symbolCol), col("__chunk")), col("__sent") +: orderCols.map(col),
+      StructType(fields.toSeq :+ StructField(outCol, DoubleType, nullable = true)), fdParts) { () =>
+      new ScanKernel {
+        private val ring = new Array[Double](nW) // ring(0)=current, grows backward
+        private var hist = 0L // values preceding the current row (uncapped count, capped seed)
+        private var pos = 0
+        def reset(k: InternalRow): Unit = { java.util.Arrays.fill(ring, Double.NaN); pos = 0; hist = 0L }
+        def step(row: InternalRow, o: ScanOut): Unit =
+          if (row.getInt(m + 2) == 0) {
+            // sentinel: seed so that "index (pos - k) mod nW" is lag k
+            // of the current row — the last carry value is lag 1 of the
+            // chunk's first data row
+            if (!row.isNullAt(m + 1)) {
+              val carry = row.getArray(m + 1).toDoubleArray()
+              val n = carry.length
+              var back = 0
+              while (back < n) {
+                ring(((pos - 1 - back) % nW + nW) % nW) = carry(n - 1 - back)
+                back += 1
+              }
+              hist = n.toLong
             }
-            hist = n.toLong
-          }
-          None
-        } else {
-          val x = if (row.isNullAt(aVal)) Double.NaN else row.getDouble(aVal)
-          ring(pos) = x
-          val out: Any =
-            if (hist + 1 < nW) null
+          } else {
+            ring(pos) = if (row.isNullAt(valIdx)) Double.NaN else row.getDouble(valIdx)
+            val w = o.begin()
+            var i = 0
+            while (i < m) { o.copy(i, row, i, fields(i).dataType); i += 1 }
+            if (hist + 1 < nW) w.setNullAt(m)
             else {
               var acc = 0.0
               var k = 0
@@ -287,24 +213,15 @@ object FracDiff {
                 if (v.isNaN) bad = true else acc += ws(k) * v
                 k += 1
               }
-              if (bad) null else acc
+              if (bad) w.setNullAt(m) else w.write(m, acc)
             }
-          pos = (pos + 1) % nW
-          hist += 1
-          var i = 0
-          while (i < nKeep) {
-            outVals(i) = if (row.isNullAt(keepIdx(i))) null else row.get(keepIdx(i), keepDts(i))
-            i += 1
+            o.emit()
+            pos = (pos + 1) % nW
+            hist += 1
           }
-          outVals(nKeep) = out
-          // proj copies the values into its UnsafeRow buffer before
-          // the next input row is read; downstream operators copy if
-          // they buffer (the CellScoreExec contract)
-          Some(proj(outRow): InternalRow)
-        }
+        def flush(o: ScanOut): Unit = ()
       }
     }
-    ColumnBridge.ofInternalRows(spark, outRdd, outSchema)
   }
 
   /** The same dot product as ANSI SQL for the DuckDB oracle, with the

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.api.TradingCols
 
@@ -168,46 +170,100 @@ object Bars {
       .select(col(c.symbol) +: barCols(c).map(col): _*)
   }
 
-  /** One trade with its overflow-mode bar assignment. */
-  private[operators] final case class OverflowRow(
-      symbol: String,
-      date: java.sql.Date,
-      ts: java.sql.Timestamp,
-      price: Double,
-      size: Long,
-      trade_id: Long,
-      bar_id: Long,
+  /** Input of the fused bar scans, in kernel column order. */
+  private[operators] def barInput(df: DataFrame, c: TradingCols): DataFrame =
+    typed(df, c.symbol -> StringType, c.ts -> TimestampType, c.price -> DoubleType,
+      c.size -> LongType, c.tradeId -> LongType)
+
+  /** `df` pruned to `cols` in this order, each cast only where its type
+    * differs — a pure column selection otherwise, which Catalyst folds
+    * into the scan below the exchange.
+    */
+  /** The rows `na.drop(price)` drops: a null or NaN price at `i`. */
+  private[operators] def noPrice(row: InternalRow, i: Int): Boolean = row.isNullAt(i) || row.getDouble(i).isNaN
+
+  private[operators] def typed(df: DataFrame, cols: (String, DataType)*): DataFrame =
+    df.select(cols.map { case (n, t) => typedCol(df, n, t) }: _*)
+
+  private[operators] def typedCol(df: DataFrame, n: String, t: DataType): Column =
+    if (df.schema(n).dataType == t) col(n) else col(n).cast(t).as(n)
+
+  private def barSchema(c: TradingCols): StructType = StructType(
+    Seq(StructField("symbol", StringType)) ++ barCols(c).map { n =>
+      StructField(n, n match {
+        case "ts_start" | "ts_end" => TimestampType
+        case "volume" | "n_trades" => LongType
+        case _ => DoubleType
+      })
+    }
   )
 
-  /** One completed overflow-mode bar (the fused scan's output row;
-    * field order mirrors `symbol +: barCols`).
+  private def barKeys(c: TradingCols, splitByDate: Boolean): Seq[Column] =
+    col(c.symbol) +: (if (splitByDate) Seq(to_date(col(c.ts))) else Nil)
+
+  /** One open OHLCV bar of a fused overflow scan over (symbol, ts,
+    * price, size, trade_id) rows with a price (neither null nor NaN),
+    * folded in scan order. It gives what the groupBy form (`ohlcvAggs`
+    * per bar) gives: open/close come from rows whose ts and trade_id
+    * are non-null, ts_start/ts_end from rows with a non-null ts, and
+    * vwap from exact cents·size in a long.
     */
-  private[operators] final case class OverflowBar(
-      symbol: String,
-      ts_start: java.sql.Timestamp,
-      ts_end: java.sql.Timestamp,
-      open: Double,
-      high: Double,
-      low: Double,
-      close: Double,
-      volume: Long,
-      vwap: Double,
-      n_trades: Long,
-  )
+  private abstract class BarScan extends graft.plans.ScanKernel {
+    private var key: InternalRow = null
+    private var n, vol, centVol, tsStart, tsEnd = 0L
+    private var open, high, low, close = 0.0
+    private var hasTs, hasOpen = false
+
+    def reset(k: InternalRow): Unit = { key = k; n = 0L; vol = 0L; centVol = 0L }
+
+    protected def volume: Long = vol
+
+    /** Adds `units` of the trade in `row` to the open bar. */
+    protected def add(row: InternalRow, units: Long): Unit = {
+      val price = row.getDouble(2)
+      if (n == 0L) { hasTs = false; hasOpen = false; high = price; low = price }
+      else {
+        if (price > high) high = price
+        if (price < low) low = price
+      }
+      if (!row.isNullAt(1)) {
+        tsEnd = row.getLong(1)
+        if (!hasTs) { tsStart = tsEnd; hasTs = true }
+        if (!row.isNullAt(4)) {
+          close = price
+          if (!hasOpen) { open = price; hasOpen = true }
+        }
+      }
+      n += 1L
+      vol += units
+      // HALF_UP like Catalyst's round(): math.round alone rounds -234.5
+      // toward +inf (-234) where round() gives -235
+      centVol += (if (price >= 0) math.round(price * 100) else -math.round(-price * 100)) * units
+    }
+
+    private def closeBar(out: graft.plans.ScanOut): Unit = {
+      val w = out.begin()
+      out.copy(0, key, 0, StringType)
+      if (hasTs) { w.write(1, tsStart); w.write(2, tsEnd) } else { w.setNullAt(1); w.setNullAt(2) }
+      if (hasOpen) { w.write(3, open); w.write(6, close) } else { w.setNullAt(3); w.setNullAt(6) }
+      w.write(4, high); w.write(5, low); w.write(7, vol)
+      w.write(8, centVol.toDouble / 100.0 / vol.toDouble)
+      w.write(9, n)
+      out.emit()
+      n = 0L; vol = 0L; centVol = 0L
+    }
+
+    def flush(out: graft.plans.ScanOut): Unit = if (n > 0L) closeBar(out)
+  }
 
   /** Volume bars with overflow semantics (bar_groups
     * allow_splits=false, /root/reference/src/bars.rs:53): the whole
     * trade joins the open bar; the bar closes when its total reaches
     * barSize and the next trade starts a fresh bar. The reset-cumsum
-    * is inherently sequential per (symbol,date) — a streaming
-    * per-partition scan with O(1) state after one hash repartition.
-    *
-    * The OHLCV aggregation is FUSED into the scan (rows arrive
-    * bar-contiguous, so open/close are the first/last trade and vwap
-    * accumulates exact cents·size in a long): one exchange total,
-    * instead of scan → second full-tick shuffle → hash agg. Bit-equal
-    * to the groupBy form ([[volumeBarsOverflowAgg]], pinned in
-    * CoreOperatorsSpec): min/max/Σ over doubles and longs are the
+    * is inherently sequential per (symbol,date): one keyed scan
+    * (one exchange, one sort) with the OHLCV aggregation fused in —
+    * rows arrive bar-contiguous. Bit-equal to the groupBy form (pinned
+    * in CoreOperatorsSpec): min/max/Σ over doubles and longs are the
     * same values in any order, and vwap's two double divisions see
     * identical exact-integer operands.
     */
@@ -216,137 +272,16 @@ object Bars {
       barSize: Long,
       splitByDate: Boolean,
       c: TradingCols,
-  ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dateExpr = if (splitByDate) to_date(col(c.ts)) else to_date(lit("1970-01-01"))
-    df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        dateExpr.as("date"),
-        col(c.ts).as("ts"),
-        col(c.price).cast("double").as("price"),
-        col(c.size).cast("long").as("size"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"), col("date"))
-      .sortWithinPartitions(col("symbol"), col("date"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Date, java.sql.Timestamp, Double, Long, Long)]
-      .mapPartitions { it =>
-        new Iterator[OverflowBar] {
-          private val out = scala.collection.mutable.ArrayDeque.empty[OverflowBar]
-          private var curSym: String = null
-          private var curDateMs = Long.MinValue
-          private var n = 0L
-          private var tsStart: java.sql.Timestamp = null
-          private var tsEnd: java.sql.Timestamp = null
-          private var open = 0.0
-          private var high = 0.0
-          private var low = 0.0
-          private var close = 0.0
-          private var vol = 0L
-          private var centVol = 0L // Σ cents·size, exact
-
-          private def closeBar(): Unit = {
-            out.append(
-              OverflowBar(curSym, tsStart, tsEnd, open, high, low, close, vol,
-                centVol.toDouble / 100.0 / vol.toDouble, n)
-            )
-            n = 0L; vol = 0L; centVol = 0L
-          }
-
-          private def advance(): Unit = {
-            while (out.isEmpty && it.hasNext) {
-              val (sym, date, ts, price, size, _) = it.next()
-              if (curSym != null && (sym != curSym || date.getTime != curDateMs) && n > 0L) {
-                closeBar()
-              }
-              curSym = sym
-              curDateMs = date.getTime
-              if (n == 0L) { tsStart = ts; open = price; high = price; low = price }
-              else {
-                if (price > high) high = price
-                if (price < low) low = price
-              }
-              tsEnd = ts
-              close = price
-              n += 1L
-              vol += size
-              // HALF_UP like the twin's Catalyst round(): math.round
-              // alone rounds -234.5 toward +inf (-234) where round()
-              // gives -235 — mirror it for negative prices
-              centVol += (if (price >= 0) math.round(price * 100)
-                          else -math.round(-price * 100)) * size
-              if (vol >= barSize) closeBar()
-            }
-            if (out.isEmpty && n > 0L && !it.hasNext) closeBar()
-          }
-
-          override def hasNext: Boolean = {
-            if (out.isEmpty) advance()
-            out.nonEmpty
-          }
-
-          override def next(): OverflowBar = {
-            if (!hasNext) throw new NoSuchElementException
-            out.removeHead()
+  ): DataFrame =
+    graft.plans.KeyedScan(barInput(df, c), barKeys(c, splitByDate), Seq(col(c.ts), col(c.tradeId)), barSchema(c)) {
+      () =>
+        new BarScan {
+          def step(row: InternalRow, out: graft.plans.ScanOut): Unit = if (!noPrice(row, 2)) {
+            add(row, row.getLong(3))
+            if (volume >= barSize) flush(out)
           }
         }
-      }
-      .toDF(("symbol" +: barCols(c)): _*)
-  }
-
-  /** The pre-fusion groupBy formulation of [[volumeBarsOverflow]] —
-    * kept as the declarative twin the fused scan is pinned against.
-    */
-  private[graft] def volumeBarsOverflowAgg(
-      df: DataFrame,
-      barSize: Long,
-      splitByDate: Boolean,
-      c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dateExpr = if (splitByDate) to_date(col(c.ts)) else to_date(lit("1970-01-01"))
-    val sorted = df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        dateExpr.as("date"),
-        col(c.ts).as("ts"),
-        col(c.price).cast("double").as("price"),
-        col(c.size).cast("long").as("size"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"), col("date"))
-      .sortWithinPartitions(col("symbol"), col("date"), col("ts"), col("trade_id"))
-
-    val assigned = sorted
-      .as[(String, java.sql.Date, java.sql.Timestamp, Double, Long, Long)]
-      .mapPartitions { it =>
-        var curSym: String = null
-        var curDate: java.sql.Date = null
-        var cur = 0L
-        var barId = 0L
-        it.map { case (sym, date, ts, price, size, tradeId) =>
-          if (sym != curSym || curDate == null || date.getTime != curDate.getTime) {
-            curSym = sym; curDate = date; cur = 0L; barId = 0L
-          }
-          val row = OverflowRow(sym, date, ts, price, size, tradeId, barId)
-          cur += size
-          if (cur >= barSize) { barId += 1; cur = 0L }
-          row
-        }
-      }
-      .toDF()
-
-    val pc = TradingCols(symbol = "symbol", ts = "ts", price = "price", size = "size", tradeId = "trade_id")
-    assigned
-      .groupBy(col("symbol"), col("date"), col("bar_id"))
-      .agg(ohlcvAggs(pc, col("size")).head, ohlcvAggs(pc, col("size")).tail: _*)
-      .select(col("symbol") +: barCols(c).map(col): _*)
-  }
+    }
 
   /** Dollar bars with split-at-boundary semantics (the
     * bar_groups(price*size, allow_splits=true) composition the
@@ -422,25 +357,14 @@ object Bars {
       )
   }
 
-  /** One split piece of a trade assigned to a dollar bar. */
-  private[operators] final case class DollarPiece(
-      symbol: String,
-      date: java.sql.Date,
-      ts: java.sql.Timestamp,
-      price: Double,
-      units: Long,
-      trade_id: Long,
-      bar_id: Long,
-  )
-
   /** Dollar bars replicating the reference's unit-level overflow
     * semantics (bars.py:247: explode each trade into `size` unit
     * trades, then bars.rs allow_splits=false — a bar closes on the
     * unit that pushes its dollar total to >= barSize, overflow
     * allowed). Instead of materialising Σsize rows, each trade's unit
-    * span is split in closed form given the carry-in, and the carry
-    * scan streams per (symbol,date) with O(1) state after a single
-    * hash repartition.
+    * span is split in closed form given the carry-in, and each piece
+    * folds straight into its bar: one keyed scan per (symbol,date),
+    * O(1) state, bars out in the shape of the volume-overflow bars.
     *
     * Prices are converted to exact integer cents (testdata prices
     * have 2 decimals) so bar assignment is engine-independent.
@@ -451,73 +375,43 @@ object Bars {
       splitByDate: Boolean = true,
       c: TradingCols = TradingCols.default,
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val barCents = math.round(barSize * 100)
-    // splitByDate=false: one carry scan per symbol across all days
-    val dateExpr = if (splitByDate) to_date(col(c.ts)) else to_date(lit("1970-01-01"))
+    graft.plans.KeyedScan(barInput(df, c), barKeys(c, splitByDate), Seq(col(c.ts), col(c.tradeId)), barSchema(c)) {
+      () =>
+        new BarScan {
+          private var carry = 0L // cents accumulated in the open bar
 
-    val sorted = df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        dateExpr.as("date"),
-        col(c.ts).as("ts"),
-        col(c.price).cast("double").as("price"),
-        col(c.size).cast("long").as("size"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"), col("date"))
-      .sortWithinPartitions(col("symbol"), col("date"), col("ts"), col("trade_id"))
+          override def reset(k: InternalRow): Unit = { super.reset(k); carry = 0L }
 
-    val pieces = sorted
-      .as[(String, java.sql.Date, java.sql.Timestamp, Double, Long, Long)]
-      .mapPartitions { it =>
-        var curSym: String = null
-        var curDate: java.sql.Date = null
-        var carry = 0L // cents accumulated in the open bar
-        var barId = 0L
-        it.flatMap { case (sym, date, ts, price, size, tradeId) =>
-          if (sym != curSym || curDate == null || date.getTime != curDate.getTime) {
-            curSym = sym; curDate = date; carry = 0L; barId = 0L
-          }
-          val pc = math.round(price * 100) // cents per unit
-          val out = scala.collection.mutable.ArrayBuffer.empty[DollarPiece]
-          def emit(units: Long): Unit =
-            if (units > 0)
-              out += DollarPiece(sym, date, ts, price, units, tradeId, barId)
-          // degenerate-price policy: a tick whose price rounds to
-          // zero cents contributes no dollar value — it can never
-          // close a bar, so it is skipped (carry unchanged) instead
-          // of dividing by zero. The canonical trades view filters
-          // these upstream; this is the operator-level guard.
-          if (pc > 0L) {
-            // units needed to push carry to >= barCents
-            val k1 = (barCents - carry + pc - 1) / pc
-            if (size < k1) {
-              emit(size)
-              carry += size * pc
-            } else {
-              emit(k1)
-              barId += 1; carry = 0L
-              val rem = size - k1
-              val k2 = (barCents + pc - 1) / pc // units per full bar at this price
-              val nFull = rem / k2
-              var i = 0L
-              while (i < nFull) { emit(k2); barId += 1; i += 1 }
-              val r = rem % k2
-              if (r > 0) { emit(r); carry = r * pc }
+          private def piece(row: InternalRow, units: Long): Unit = if (units > 0) add(row, units)
+
+          def step(row: InternalRow, out: graft.plans.ScanOut): Unit = if (!noPrice(row, 2)) {
+            val pc = math.round(row.getDouble(2) * 100) // cents per unit
+            val size = row.getLong(3)
+            // degenerate-price policy: a tick whose price rounds to
+            // zero cents contributes no dollar value — it can never
+            // close a bar, so it is skipped (carry unchanged) instead
+            // of dividing by zero. The canonical trades view filters
+            // these upstream; this is the operator-level guard.
+            if (pc > 0L) {
+              // units needed to push carry to >= barCents
+              val k1 = (barCents - carry + pc - 1) / pc
+              if (size < k1) {
+                piece(row, size)
+                carry += size * pc
+              } else {
+                piece(row, k1)
+                flush(out); carry = 0L
+                val rem = size - k1
+                val k2 = (barCents + pc - 1) / pc // units per full bar at this price
+                var i = rem / k2
+                while (i > 0) { piece(row, k2); flush(out); i -= 1 }
+                val r = rem % k2
+                if (r > 0) { piece(row, r); carry = r * pc }
+              }
             }
           }
-          out
         }
-      }
-      .toDF()
-
-    val pc = TradingCols(symbol = "symbol", ts = "ts", price = "price", size = "units", tradeId = "trade_id")
-    pieces
-      .groupBy(col("symbol"), col("date"), col("bar_id"))
-      .agg(ohlcvAggs(pc, col("units")).head, ohlcvAggs(pc, col("units")).tail: _*)
-      .select(col("symbol") +: barCols(c).map(col): _*)
+    }
   }
 }

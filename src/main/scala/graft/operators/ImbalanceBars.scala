@@ -1,12 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.api.TradingCols
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Tick-imbalance bars (AFML ch.2.3.2.1 — beyond the reference's
-  * four bar types, on the same streaming-scan machinery as
+  * four bar types, on the same keyed-scan machinery as
   * Bars.dollarBars).
   *
   * Tick rule: b_t = sign(Δprice), carrying the previous sign on
@@ -18,55 +21,107 @@ import graft.api.TradingCols
   * faster.
   *
   * Inherently sequential per symbol (threshold state feeds forward),
-  * so: one hash repartition on symbol, sortWithinPartitions, and an
-  * O(1)-state streaming pass — bars span days, so no date splitting.
+  * so: one keyed scan per symbol (one hash exchange, one sort, an
+  * O(1)-state kernel) — bars span days, so no date splitting. The
+  * trailing open bar of a symbol is not emitted.
+  *
+  * `alpha` is the EWMA adaptivity of the expected-ticks/imbalance
+  * estimates; alpha = 0 freezes both at their seeds, i.e. a fixed
+  * threshold initTicks·max(|initImbalance|, minImbalance) — the
+  * SQL-oracle-able configuration.
   */
 object ImbalanceBars {
 
-  // NOT private: the Dataset encoder's generated (Janino) code invokes
-  // the accessors reflectively-by-name; a private nested class makes
-  // them unresolvable and every imbalance query silently falls back to
-  // interpreted serialization (observed in the r6 Verify log).
-  final case class BarRow(
-      symbol: String,
-      ts_start: java.sql.Timestamp,
-      ts_end: java.sql.Timestamp,
-      open: Double,
-      high: Double,
-      low: Double,
-      close: Double,
-      volume: Long,
-      vwap: Double,
-      n_trades: Long,
-      theta: Long,
+  private def schema(extra: String*): StructType = StructType(
+    Seq(StructField("symbol", StringType), StructField("ts_start", TimestampType),
+      StructField("ts_end", TimestampType)) ++
+      Seq("open", "high", "low", "close").map(StructField(_, DoubleType)) ++
+      Seq(StructField("volume", LongType), StructField("vwap", DoubleType), StructField("n_trades", LongType)) ++
+      extra.map(StructField(_, LongType))
   )
 
-  /** @param alpha EWMA adaptivity of the expected-ticks/imbalance
-    *              estimates; alpha = 0 freezes both at their seeds,
-    *              i.e. a fixed threshold initTicks·max(|initImbalance|,
-    *              minImbalance) — the SQL-oracle-able configuration.
+  /** Tick rule and open-bar OHLCV over (symbol, ts, price, size,
+    * trade_id) rows of one symbol. A subclass accumulates its
+    * imbalance per tick, says when the bar closes, writes its extra
+    * columns from ordinal 10 and adapts its expectations.
     */
-  final case class RunBarRow(
-      symbol: String,
-      ts_start: java.sql.Timestamp,
-      ts_end: java.sql.Timestamp,
-      open: Double,
-      high: Double,
-      low: Double,
-      close: Double,
-      volume: Long,
-      vwap: Double,
-      n_trades: Long,
-      up_ticks: Long,
-      down_ticks: Long,
-  )
+  private abstract class ImbalanceScan(alpha: Double) extends ScanKernel {
+    private var key: InternalRow = null
+    private var prevPrice = Double.NaN
+    private var prevSign = 1
+    protected var n = 0L
+    private var tsSNull, tsENull = false
+    private var tsS, tsE, vol, pv = 0L
+    private var o, h, l, cl = 0.0
+
+    protected def start(): Unit
+    protected def accumulate(sign: Int, price: Double, size: Long): Unit
+    protected def closes: Boolean
+    protected def writeExtra(out: ScanOut): Unit
+    protected def adapt(): Unit
+
+    def reset(k: InternalRow): Unit = {
+      key = k; prevPrice = Double.NaN; prevSign = 1; n = 0L; vol = 0L; pv = 0L; start()
+    }
+
+    def step(row: InternalRow, out: ScanOut): Unit = if (!Bars.noPrice(row, 2)) {
+      val price = row.getDouble(2)
+      val size = row.getLong(3)
+      val sign =
+        if (prevPrice.isNaN || price == prevPrice) prevSign
+        else if (price > prevPrice) 1
+        else -1
+      prevPrice = price; prevSign = sign
+      if (n == 0L) { tsSNull = row.isNullAt(1); tsS = row.getLong(1); o = price; h = price; l = price }
+      n += 1
+      tsENull = row.isNullAt(1); tsE = row.getLong(1)
+      h = math.max(h, price); l = math.min(l, price); cl = price
+      vol += size; pv += math.round(price * 100) * size // exact price·size cents
+      accumulate(sign, price, size)
+      if (closes) {
+        val w = out.begin()
+        out.copy(0, key, 0, StringType)
+        if (tsSNull) w.setNullAt(1) else w.write(1, tsS)
+        if (tsENull) w.setNullAt(2) else w.write(2, tsE)
+        w.write(3, o); w.write(4, h); w.write(5, l); w.write(6, cl); w.write(7, vol)
+        w.write(8, pv.toDouble / 100.0 / vol.toDouble); w.write(9, n)
+        writeExtra(out)
+        out.emit()
+        if (alpha > 0) adapt()
+        n = 0L; vol = 0L; pv = 0L; start()
+      }
+    }
+
+    def flush(out: ScanOut): Unit = ()
+  }
+
+  /** θ = Σ sign·unit; closes at |θ| >= E[T]·max(|E[θ/tick]|, floor). */
+  private final class ThetaScan(initT: Double, initB: Double, floor: Double, alpha: Double,
+      unit: (Double, Long) => Long) extends ImbalanceScan(alpha) {
+    private var expT = initT
+    private var expB = initB
+    private var theta = 0L
+    override def reset(k: InternalRow): Unit = { expT = initT; expB = initB; super.reset(k) }
+    protected def start(): Unit = theta = 0L
+    protected def accumulate(sign: Int, price: Double, size: Long): Unit = theta += sign * unit(price, size)
+    protected def closes: Boolean = math.abs(theta.toDouble) >= expT * math.max(math.abs(expB), floor)
+    protected def writeExtra(out: ScanOut): Unit = out.w.write(10, theta)
+    protected def adapt(): Unit = {
+      expT = (1 - alpha) * expT + alpha * n
+      expB = (1 - alpha) * expB + alpha * (theta.toDouble / n)
+    }
+  }
+
+  private def thetaBars(df: DataFrame, c: TradingCols, alpha: Double)(scan: () => ThetaScan): DataFrame = {
+    require(alpha >= 0 && alpha <= 1, "alpha in [0,1]")
+    KeyedScan(Bars.barInput(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), schema("theta"))(scan)
+  }
 
   /** Dollar imbalance bars (AFML ch.2.3.2.2): θ accumulates
     * sign_t · dollarValue_t (exact integer cents); the bar closes when
     * |θ| reaches E[T]·|E[signed dollars/tick]| — EWMA-adaptive, or
     * frozen at initTicks·initDollarImbalance·100 cents when alpha=0
-    * (the SQL-oracle-able configuration). Same O(1)-state streaming
-    * scan per symbol as [[tickImbalanceBars]].
+    * (the SQL-oracle-able configuration).
     */
   def dollarImbalanceBars(
       df: DataFrame,
@@ -76,60 +131,9 @@ object ImbalanceBars {
       minDollarImbalance: Double = 1.0,
       alpha: Double = 0.1,
       c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    require(alpha >= 0 && alpha <= 1, "alpha in [0,1]")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sorted = sortedTicks(df, c)
-    sorted
-      .mapPartitions { it =>
-        var curSym: String = null
-        var prevPrice = Double.NaN
-        var prevSign = 1
-        var expT = initTicks
-        var expB = initDollarImbalance * 100.0 // cents
-        val minB = minDollarImbalance * 100.0
-        var n = 0L; var theta = 0L
-        var tsS: java.sql.Timestamp = null; var tsE: java.sql.Timestamp = null
-        var o, h, l, cl = 0.0
-        var vol = 0L; var pv = 0L // pv: exact price·size cents (associative; oracle-bit-stable)
-        def resetBar(): Unit = { n = 0L; theta = 0L; tsS = null; vol = 0L; pv = 0L }
-        new Iterator[BarRow] {
-          private var pending: BarRow = null
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ts, price, size, _) = it.next()
-              if (sym != curSym) {
-                curSym = sym; prevPrice = Double.NaN; prevSign = 1
-                expT = initTicks; expB = initDollarImbalance * 100.0
-                resetBar()
-              }
-              val sign =
-                if (prevPrice.isNaN || price == prevPrice) prevSign
-                else if (price > prevPrice) 1
-                else -1
-              prevPrice = price; prevSign = sign
-              if (n == 0L) { tsS = ts; o = price; h = price; l = price }
-              val cents = math.round(price * 100) * size
-              n += 1; theta += sign * cents; tsE = ts
-              h = math.max(h, price); l = math.min(l, price); cl = price
-              vol += size; pv += math.round(price * 100) * size
-              val threshold = expT * math.max(math.abs(expB), minB)
-              if (math.abs(theta.toDouble) >= threshold) {
-                pending = BarRow(sym, tsS, tsE, o, h, l, cl, vol, pv.toDouble / 100.0 / vol.toDouble, n, theta)
-                if (alpha > 0) {
-                  expT = (1 - alpha) * expT + alpha * n
-                  expB = (1 - alpha) * expB + alpha * (theta.toDouble / n)
-                }
-                resetBar()
-              }
-            }
-            pending != null
-          }
-          override def next(): BarRow = { val r = pending; pending = null; r }
-        }
-      }
-      .toDF()
+  ): DataFrame = thetaBars(df, c, alpha) { () =>
+    new ThetaScan(initTicks, initDollarImbalance * 100.0, minDollarImbalance * 100.0, alpha,
+      (price, size) => math.round(price * 100) * size)
   }
 
   /** Volume imbalance bars (AFML ch.2.3.2.2, volume form): θ
@@ -144,58 +148,19 @@ object ImbalanceBars {
       minVolumeImbalance: Double = 1.0,
       alpha: Double = 0.1,
       c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    require(alpha >= 0 && alpha <= 1, "alpha in [0,1]")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sorted = sortedTicks(df, c)
-    sorted
-      .mapPartitions { it =>
-        var curSym: String = null
-        var prevPrice = Double.NaN
-        var prevSign = 1
-        var expT = initTicks
-        var expB = initVolumeImbalance
-        var n = 0L; var theta = 0L
-        var tsS: java.sql.Timestamp = null; var tsE: java.sql.Timestamp = null
-        var o, h, l, cl = 0.0
-        var vol = 0L; var pv = 0L // pv: exact price·size cents (associative; oracle-bit-stable)
-        def resetBar(): Unit = { n = 0L; theta = 0L; tsS = null; vol = 0L; pv = 0L }
-        new Iterator[BarRow] {
-          private var pending: BarRow = null
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ts, price, size, _) = it.next()
-              if (sym != curSym) {
-                curSym = sym; prevPrice = Double.NaN; prevSign = 1
-                expT = initTicks; expB = initVolumeImbalance
-                resetBar()
-              }
-              val sign =
-                if (prevPrice.isNaN || price == prevPrice) prevSign
-                else if (price > prevPrice) 1
-                else -1
-              prevPrice = price; prevSign = sign
-              if (n == 0L) { tsS = ts; o = price; h = price; l = price }
-              n += 1; theta += sign * size; tsE = ts
-              h = math.max(h, price); l = math.min(l, price); cl = price
-              vol += size; pv += math.round(price * 100) * size
-              val threshold = expT * math.max(math.abs(expB), minVolumeImbalance)
-              if (math.abs(theta.toDouble) >= threshold) {
-                pending = BarRow(sym, tsS, tsE, o, h, l, cl, vol, pv.toDouble / 100.0 / vol.toDouble, n, theta)
-                if (alpha > 0) {
-                  expT = (1 - alpha) * expT + alpha * n
-                  expB = (1 - alpha) * expB + alpha * (theta.toDouble / n)
-                }
-                resetBar()
-              }
-            }
-            pending != null
-          }
-          override def next(): BarRow = { val r = pending; pending = null; r }
-        }
-      }
-      .toDF()
+  ): DataFrame = thetaBars(df, c, alpha) { () =>
+    new ThetaScan(initTicks, initVolumeImbalance, minVolumeImbalance, alpha, (_, size) => size)
+  }
+
+  def tickImbalanceBars(
+      df: DataFrame,
+      initTicks: Double = 100.0,
+      initImbalance: Double = 0.2,
+      minImbalance: Double = 0.05,
+      alpha: Double = 0.1,
+      c: TradingCols = TradingCols.default,
+  ): DataFrame = thetaBars(df, c, alpha) { () =>
+    new ThetaScan(initTicks, initImbalance, minImbalance, alpha, (_, _) => 1L)
   }
 
   /** Tick run bars (AFML ch.2.3.2.3): θ = max(up-tick count,
@@ -212,139 +177,23 @@ object ImbalanceBars {
   ): DataFrame = {
     require(alpha >= 0 && alpha <= 1, "alpha in [0,1]")
     require(initPmax >= 0.5 && initPmax <= 1.0, "initPmax in [0.5,1]")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sorted = sortedTicks(df, c)
-    sorted
-      .mapPartitions { it =>
-        var curSym: String = null
-        var prevPrice = Double.NaN
-        var prevSign = 1
-        var expT = initTicks
-        var pMax = initPmax
-        var n = 0L; var up = 0L; var down = 0L
-        var tsS: java.sql.Timestamp = null; var tsE: java.sql.Timestamp = null
-        var o, h, l, cl = 0.0
-        var vol = 0L; var pv = 0L // pv: exact price·size cents (associative; oracle-bit-stable)
-        def resetBar(): Unit = { n = 0L; up = 0L; down = 0L; tsS = null; vol = 0L; pv = 0L }
-        new Iterator[RunBarRow] {
-          private var pending: RunBarRow = null
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ts, price, size, _) = it.next()
-              if (sym != curSym) {
-                curSym = sym; prevPrice = Double.NaN; prevSign = 1
-                expT = initTicks; pMax = initPmax
-                resetBar()
-              }
-              val sign =
-                if (prevPrice.isNaN || price == prevPrice) prevSign
-                else if (price > prevPrice) 1
-                else -1
-              prevPrice = price; prevSign = sign
-              if (n == 0L) { tsS = ts; o = price; h = price; l = price }
-              n += 1; if (sign > 0) up += 1 else down += 1
-              tsE = ts
-              h = math.max(h, price); l = math.min(l, price); cl = price
-              vol += size; pv += math.round(price * 100) * size
-              val threshold = expT * pMax
-              if (math.max(up, down).toDouble >= threshold) {
-                pending = RunBarRow(sym, tsS, tsE, o, h, l, cl, vol, pv.toDouble / 100.0 / vol.toDouble, n, up, down)
-                if (alpha > 0) {
-                  expT = (1 - alpha) * expT + alpha * n
-                  pMax = (1 - alpha) * pMax + alpha * (math.max(up, down).toDouble / n)
-                }
-                resetBar()
-              }
-            }
-            pending != null
-          }
-          override def next(): RunBarRow = { val r = pending; pending = null; r }
+    KeyedScan(Bars.barInput(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)),
+      schema("up_ticks", "down_ticks")) { () =>
+      new ImbalanceScan(alpha) {
+        private var expT = initTicks
+        private var pMax = initPmax
+        private var up, down = 0L
+        override def reset(k: InternalRow): Unit = { expT = initTicks; pMax = initPmax; super.reset(k) }
+        protected def start(): Unit = { up = 0L; down = 0L }
+        protected def accumulate(sign: Int, price: Double, size: Long): Unit =
+          if (sign > 0) up += 1 else down += 1
+        protected def closes: Boolean = math.max(up, down).toDouble >= expT * pMax
+        protected def writeExtra(out: ScanOut): Unit = { out.w.write(10, up); out.w.write(11, down) }
+        protected def adapt(): Unit = {
+          expT = (1 - alpha) * expT + alpha * n
+          pMax = (1 - alpha) * pMax + alpha * (math.max(up, down).toDouble / n)
         }
       }
-      .toDF()
-  }
-
-  /** Shared per-symbol sorted tick stream for the streaming scans. */
-  private def sortedTicks(df: DataFrame, c: TradingCols) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        col(c.ts).cast("timestamp").as("ts"),
-        col(c.price).cast("double").as("price"),
-        col(c.size).cast("long").as("size"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Timestamp, Double, Long, Long)]
-  }
-
-  def tickImbalanceBars(
-      df: DataFrame,
-      initTicks: Double = 100.0,
-      initImbalance: Double = 0.2,
-      minImbalance: Double = 0.05,
-      alpha: Double = 0.1,
-      c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    require(alpha >= 0 && alpha <= 1, "alpha in [0,1]")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sorted = sortedTicks(df, c)
-    sorted
-      .mapPartitions { it =>
-        var curSym: String = null
-        // tick-rule and threshold state
-        var prevPrice = Double.NaN
-        var prevSign = 1
-        var expT = initTicks
-        var expB = initImbalance
-        // open-bar accumulators
-        var n = 0L; var theta = 0L
-        var tsS: java.sql.Timestamp = null; var tsE: java.sql.Timestamp = null
-        var o, h, l, cl = 0.0
-        var vol = 0L; var pv = 0L // pv: exact price·size cents (associative; oracle-bit-stable)
-
-        def resetBar(): Unit = { n = 0L; theta = 0L; tsS = null; vol = 0L; pv = 0L }
-
-        new Iterator[BarRow] {
-          private var pending: BarRow = null
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ts, price, size, _) = it.next()
-              if (sym != curSym) {
-                curSym = sym; prevPrice = Double.NaN; prevSign = 1
-                expT = initTicks; expB = initImbalance
-                resetBar()
-              }
-              val sign =
-                if (prevPrice.isNaN || price == prevPrice) prevSign
-                else if (price > prevPrice) 1
-                else -1
-              prevPrice = price; prevSign = sign
-              if (n == 0L) { tsS = ts; o = price; h = price; l = price }
-              n += 1; theta += sign; tsE = ts
-              h = math.max(h, price); l = math.min(l, price); cl = price
-              vol += size; pv += math.round(price * 100) * size
-              val threshold = expT * math.max(math.abs(expB), minImbalance)
-              if (math.abs(theta.toDouble) >= threshold) {
-                pending = BarRow(sym, tsS, tsE, o, h, l, cl, vol, pv.toDouble / 100.0 / vol.toDouble, n, theta)
-                expT = (1 - alpha) * expT + alpha * n
-                expB = (1 - alpha) * expB + alpha * (theta.toDouble / n)
-                resetBar()
-              }
-            }
-            pending != null
-          }
-          override def next(): BarRow = {
-            val r = pending; pending = null; r
-          }
-        }
-      }
-      .toDF()
+    }
   }
 }

@@ -130,7 +130,7 @@ object IncrementalDedup {
     val spark = docs.sparkSession
     val writes = Seq(
       Future {
-        sh.write.mode("overwrite").option("compression", "none").parquet(s"$dir/shingles")
+        sh.write.mode("overwrite").parquet(s"$dir/shingles")
       },
       Future { keyed.write.mode("overwrite").parquet(s"$dir/keyed") },
       Future { members.write.mode("overwrite").parquet(s"$dir/members") },

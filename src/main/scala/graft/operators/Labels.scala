@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.api.TradingCols
 import graft.functions.Ewm
@@ -147,76 +149,60 @@ object Labels {
     require(span >= 1, "span must be >= 1")
     val alpha = 2.0 / (span + 1.0)
     val decay = 1.0 - alpha
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-
-    val pruned = df.select(col(c.symbol), col(c.ts), col(c.price))
+    val input = df.select(col(c.symbol), col(c.ts), col(c.price))
+    val symType = input.schema(0).dataType
+    val tsType = input.schema(1).dataType
+    val out = StructType(Seq(input.schema(0), input.schema(1),
+      StructField("daily_return_volatility", DoubleType, nullable = true)))
+    val dayMicros = 24L * 3600L * 1000000L
     // price as the equal-ts tiebreak (nulls first): rows with equal
     // (ts, price) are interchangeable for both the lookback and the
     // EWM fold, so this order is value-deterministic.
-    val sorted = pruned
-      .repartition(col(c.symbol))
-      .sortWithinPartitions(col(c.symbol), col(c.ts), col(c.price))
-    val symIdx = sorted.schema.fieldIndex(c.symbol)
-    val tsIdx = sorted.schema.fieldIndex(c.ts)
-    val pxIdx = sorted.schema.fieldIndex(c.price)
-    val outSchema = StructType(
-      Seq(
-        sorted.schema(c.symbol),
-        sorted.schema(c.ts),
-        StructField("daily_return_volatility", DoubleType, nullable = true),
-      )
-    )
-    val dayMicros = 24L * 3600L * 1000000L
-    sorted.mapPartitions { it =>
-      var curSym: Any = null
-      // trailing 24h of (ts micros, price-or-null); head is the
-      // current as-of candidate once its successor passes the target
-      var ring = new java.util.ArrayDeque[(Long, Any)]()
-      var sumW, sumWX, sumWX2, sumW2 = 0.0
-      it.map { row =>
-        val sym = row.get(symIdx)
-        if (sym != curSym) {
-          curSym = sym
-          ring = new java.util.ArrayDeque[(Long, Any)]()
-          sumW = 0.0; sumWX = 0.0; sumWX2 = 0.0; sumW2 = 0.0
+    graft.plans.KeyedScan(input, Seq(col(c.symbol)), Seq(col(c.ts), col(c.price)), out) { () =>
+      new graft.plans.ScanKernel {
+        private var key: InternalRow = null
+        // trailing 24h of (ts micros, price-or-null); head is the
+        // current as-of candidate once its successor passes the target
+        private val ring = new java.util.ArrayDeque[(Long, Any)]()
+        private var sumW, sumWX, sumWX2, sumW2 = 0.0
+
+        def reset(k: InternalRow): Unit = {
+          key = k; ring.clear(); sumW = 0.0; sumWX = 0.0; sumWX2 = 0.0; sumW2 = 0.0
         }
-        // a null-ts tick has no lookback point and no place in the EWM
-        // order: it emits null and leaves the ring and the sums as they are
-        if (row.isNullAt(tsIdx)) Row(sym, null, null)
-        else {
-          // getAs keeps this agnostic to TIMESTAMP vs TIMESTAMP_NTZ
-          // external classes; micros compare exactly either way
-          val ts = row.get(tsIdx) match {
-            case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-            case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
-            case t: java.time.LocalDateTime =>
-              t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
-            case t: Long => t
-          }
-          val target = ts - dayMicros
-          while (ring.size > 1 && { val i = ring.iterator; i.next(); i.next()._1 <= target })
-            ring.pollFirst()
-          val lb: Any =
-            if (!ring.isEmpty && ring.peekFirst()._1 <= target) ring.peekFirst()._2 else null
-          val px: Any = if (row.isNullAt(pxIdx)) null else row.getDouble(pxIdx)
-          ring.addLast((ts, px))
-          sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
-          val out: Any =
-            if (px == null || lb == null || lb.asInstanceOf[Double] == 0.0) null
+
+        def step(row: InternalRow, o: graft.plans.ScanOut): Unit = {
+          val w = o.begin()
+          o.copy(0, key, 0, symType)
+          o.copy(1, row, 1, tsType)
+          // a null-ts tick has no lookback point and no place in the EWM
+          // order: it emits null and leaves the ring and the sums as they are
+          if (row.isNullAt(1)) w.setNullAt(2)
+          else {
+            val ts = row.getLong(1) // micros, TIMESTAMP or TIMESTAMP_NTZ
+            val target = ts - dayMicros
+            while (ring.size > 1 && { val i = ring.iterator; i.next(); i.next()._1 <= target })
+              ring.pollFirst()
+            val lb: Any =
+              if (!ring.isEmpty && ring.peekFirst()._1 <= target) ring.peekFirst()._2 else null
+            val px: Any = if (row.isNullAt(2)) null else row.getDouble(2)
+            ring.addLast((ts, px))
+            sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
+            if (px == null || lb == null || lb.asInstanceOf[Double] == 0.0) w.setNullAt(2)
             else {
               val x = px.asInstanceOf[Double] / lb.asInstanceOf[Double] - 1
               sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0
               val mean = sumWX / sumW
               val varBiased = math.max(sumWX2 / sumW - mean * mean, 0.0)
               val denom = sumW * sumW - sumW2
-              if (denom <= 0.0) 0.0
-              else math.sqrt(varBiased * sumW * sumW / denom)
+              w.write(2, if (denom <= 0.0) 0.0 else math.sqrt(varBiased * sumW * sumW / denom))
             }
-          Row(row.get(symIdx), row.get(tsIdx), out)
+          }
+          o.emit()
         }
+
+        def flush(o: graft.plans.ScanOut): Unit = ()
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Vertical barrier (dynamic_labels.py:89): first observed
@@ -262,8 +248,7 @@ object Labels {
       volSpan: Int = 100,
       c: TradingCols = TradingCols.default,
   ): DataFrame = singleFrame(df, c) { df =>
-    tripleBarrierCoreScan(df, horizon, ptMult, slMult, volSpan, constTarget, c)
-      .select(col(c.symbol), col(c.ts), col("trgt"), col("t1"), col("pt_ts"), col("sl_ts"))
+    tripleBarrierCoreScan(df, horizon, ptMult, slMult, volSpan, constTarget, c, TouchCols)
   }
 
   /** Triple-barrier label (AFML pg.45; completes the reference's
@@ -292,22 +277,7 @@ object Labels {
       signOnVertical: Boolean = false,
       c: TradingCols = TradingCols.default,
   ): DataFrame = singleFrame(df, c) { df =>
-    val agg = tripleBarrierCoreScan(df, horizon, ptMult, slMult, volSpan, constTarget, c)
-    val ptFirst = col("pt_ts").isNotNull && (col("sl_ts").isNull || col("pt_ts") <= col("sl_ts"))
-    val slFirst = col("sl_ts").isNotNull && !ptFirst
-    val verticalLabel =
-      if (signOnVertical) signum(col("__v_ret")).cast("int") else lit(0)
-    agg
-      .withColumn("touch_ts", when(ptFirst, col("pt_ts")).when(slFirst, col("sl_ts")).otherwise(col("t1")))
-      .withColumn(
-        "touch_return",
-        when(ptFirst, col("__pt_ret")).when(slFirst, col("__sl_ret")).otherwise(col("__v_ret")),
-      )
-      .withColumn("label", when(ptFirst, 1).when(slFirst, -1).otherwise(verticalLabel).cast("int"))
-      .select(
-        col(c.symbol), col(c.ts), col("trgt"), col("t1"),
-        col("touch_ts"), col("touch_return"), col("label"),
-      )
+    tripleBarrierCoreScan(df, horizon, ptMult, slMult, volSpan, constTarget, c, LabelCols(signOnVertical))
   }
 
   /** A `"<n> <unit>"` horizon (hours, minutes, days or seconds) in
@@ -327,21 +297,14 @@ object Labels {
     n * perUnit
   }
 
-  /** One event's first-crossing result from the scan core (field
-    * order mirrors the interval-join form's groupBy output).
-    */
-  private[graft] final case class TbScanRow(
-      symbol: String,
-      ts_us: Long,
-      price: Double,
-      trgt: Double,
-      t1_us: Long,
-      pt_us: Option[Long],
-      sl_us: Option[Long],
-      pt_ret: Option[Double],
-      sl_ret: Option[Double],
-      v_ret: Option[Double],
-  )
+  /** The columns the barrier scan emits per event. */
+  private[graft] sealed trait BarrierCols
+  /** symbol, ts, price, trgt, t1, pt_ts, sl_ts, __pt_ret, __sl_ret, __v_ret */
+  private[graft] case object CoreCols extends BarrierCols
+  /** barrierTouches: symbol, ts, trgt, t1, pt_ts, sl_ts */
+  private case object TouchCols extends BarrierCols
+  /** tripleBarrier: symbol, ts, trgt, t1, touch_ts, touch_return, label */
+  private final case class LabelCols(signOnVertical: Boolean) extends BarrierCols
 
   /** The event×path crossing aggregation behind barrierTouches and
     * tripleBarrier — per event, the earliest pt/sl crossing ticks and
@@ -354,6 +317,11 @@ object Labels {
     * form shuffles and hash-aggregates; the scan shuffles each tick
     * ~twice: once to its own day chunk, once as the previous day's
     * halo).
+    *
+    * First, one keyed scan per symbol in time order caps each tick's
+    * vertical barrier at the symbol's last tick (it holds a tick only
+    * until a later one reaches ts + horizon) and writes the tick's
+    * home-chunk row and halo copies: no last-ts aggregate, no join.
     *
     * Per chunk: ticks sorted by (ts, trade_id); max/min segment trees
     * over price; each event binary-searches its (ts, t1] range and
@@ -383,224 +351,248 @@ object Labels {
       volSpan: Int,
       constTarget: Option[Double],
       c: TradingCols,
+      cols: BarrierCols = CoreCols,
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val hUs = parseHorizonMicros(horizon)
     val dayUs = 86400000000L
     val hDays = ((hUs + dayUs - 1) / dayUs).toInt
 
-    // degenerate-data guard (the volumeBarsOverflow precedent): null
-    // prices/timestamps cannot ride a primitive-Double scan tuple —
-    // the canonical trades view drops them at the source, this is the
-    // operator-level backstop
-    val clean = df.na.drop(Seq(c.price, c.ts))
-    val lastTs = clean.groupBy(col(c.symbol)).agg(max(col(c.ts)).as("__last_ts"))
-    val tid: Column =
-      if (df.columns.contains(c.tradeId)) col(c.tradeId).cast("long") else lit(0L)
+    val ticks = df.select(col(c.symbol), Bars.typedCol(df, c.ts, TimestampType),
+      Bars.typedCol(df, c.price, DoubleType),
+      if (df.columns.contains(c.tradeId)) Bars.typedCol(df, c.tradeId, LongType) else lit(0L).as("__tid"))
     val withTarget = constTarget match {
-      case Some(x) =>
-        clean.select(col(c.symbol), col(c.ts), col(c.price), tid.as("__tid"))
-          .withColumn("trgt", lit(x))
+      case Some(_) => ticks
       case None =>
-        val vol = dailyVol(clean, volSpan, c)
+        val vol = dailyVol(df.na.drop(Seq(c.price, c.ts)), volSpan, c)
           .withColumnRenamed("daily_return_volatility", "trgt")
-        clean.select(col(c.symbol), col(c.ts), col(c.price), tid.as("__tid"))
-          .join(vol, Seq(c.symbol, c.ts), "left")
+        ticks.join(vol, Seq(c.symbol, c.ts), "left")
     }
-    val annotated = withTarget
-      .join(broadcast(lastTs), Seq(c.symbol))
-      .withColumn("__t1", least(col(c.ts) + expr(s"INTERVAL $horizon"), col("__last_ts")))
-      .withColumn("__tsus", expr(s"unix_micros(${c.ts})"))
-      .withColumn("__d", expr(s"unix_micros(${c.ts}) div ${dayUs}L"))
-      .select(
-        col(c.symbol).as("sym"),
-        explode(
-          filter(
-            transform(sequence(lit(0), lit(hDays)), k => col("__d") - k.cast("long")),
-            ch => (ch === col("__d")) || (col("__tsus") < (ch + lit(1L)) * lit(dayUs) + lit(hUs)),
-          )
-        ).as("chunk"),
-        col("__tsus").as("tsus"),
-        col(c.price).cast("double").as("price"),
-        col("__tid").as("tid"),
-        col("trgt"),
-        col("__d").as("homeDay"),
-        expr("unix_micros(__t1)").as("t1us"),
-      )
-      // halo copies are path-only: they are events in their HOME chunk
-      .withColumn("trgt", when(col("chunk") === col("homeDay"), col("trgt")))
-      .drop("homeDay")
+    val symType = df.schema(c.symbol).dataType
+    // per symbol in time order: each tick's capped vertical barrier
+    // t1 = min(ts + horizon, the symbol's last ts), then the tick to its
+    // home day chunk (an event there) and, path-only, to every earlier
+    // chunk whose horizon reaches it
+    val annotated = graft.plans.KeyedScan(withTarget, Seq(col(c.symbol)), Seq(col(c.ts), col(ticks.columns(3))),
+      StructType(Seq(StructField("sym", symType), StructField("chunk", LongType), StructField("tsus", LongType),
+        StructField("price", DoubleType), StructField("tid", LongType), StructField("trgt", DoubleType),
+        StructField("t1us", LongType)))
+    ) { () => new BarrierEvents(hUs, hDays, constTarget, symType) }
 
-    annotated
-      .repartition(col("sym"), col("chunk"))
-      .sortWithinPartitions(col("sym"), col("chunk"), col("tsus"), col("tid"))
-      .as[(String, Long, Long, Double, Long, Option[Double], Long)]
-      .mapPartitions { it =>
-        val pt = ptMult
-        val sl = slMult
-        new Iterator[TbScanRow] {
-          private val out = scala.collection.mutable.ArrayDeque.empty[TbScanRow]
-          private var curSym: String = null
-          private var curChunk = 0L
-          private val tsA = new scala.collection.mutable.ArrayBuffer[Long]
-          private val prA = new scala.collection.mutable.ArrayBuffer[Double]
-          private val tgA = new scala.collection.mutable.ArrayBuffer[Double] // NaN = not an event
-          private val t1A = new scala.collection.mutable.ArrayBuffer[Long]
+    val ts = TimestampType
+    val out = StructType((cols match {
+      case CoreCols => Seq(c.symbol -> symType, c.ts -> ts, c.price -> DoubleType, "trgt" -> DoubleType,
+        "t1" -> ts, "pt_ts" -> ts, "sl_ts" -> ts, "__pt_ret" -> DoubleType, "__sl_ret" -> DoubleType,
+        "__v_ret" -> DoubleType)
+      case TouchCols => Seq(c.symbol -> symType, c.ts -> ts, "trgt" -> DoubleType, "t1" -> ts,
+        "pt_ts" -> ts, "sl_ts" -> ts)
+      case LabelCols(_) => Seq(c.symbol -> symType, c.ts -> ts, "trgt" -> DoubleType, "t1" -> ts,
+        "touch_ts" -> ts, "touch_return" -> DoubleType, "label" -> IntegerType)
+    }).map { case (n, t) => StructField(n, t) })
+    graft.plans.KeyedScan(annotated, Seq(col("sym"), col("chunk")), Seq(col("tsus"), col("tid")), out) { () =>
+      new BarrierScan(ptMult, slMult, symType, cols)
+    }
+  }
 
-          private def process(): Unit = {
-            val n = tsA.length
-            if (n == 0) return
-            val ts = tsA.toArray
-            val pr = prA.toArray
-            val tg = tgA.toArray
-            val t1 = t1A.toArray
-            var sz = 1
-            while (sz < n) sz <<= 1
-            val mx = Array.fill(2 * sz)(Double.NegativeInfinity)
-            val mn = Array.fill(2 * sz)(Double.PositiveInfinity)
-            var i = 0
-            while (i < n) {
-              // a NaN price must never enable a crossing (NaN
-              // comparisons are false in the join core) and must not
-              // poison subtree aggregates (math.max(NaN, x) = NaN
-              // would false-prune whole ranges): map it to the
-              // never-crossing sentinel in each tree
-              val pv = pr(i)
-              mx(sz + i) = if (java.lang.Double.isNaN(pv)) Double.NegativeInfinity else pv
-              mn(sz + i) = if (java.lang.Double.isNaN(pv)) Double.PositiveInfinity else pv
-              i += 1
-            }
-            i = sz - 1
-            while (i >= 1) {
-              mx(i) = math.max(mx(2 * i), mx(2 * i + 1))
-              mn(i) = math.min(mn(2 * i), mn(2 * i + 1))
-              i -= 1
-            }
-            // first index with ts > x
-            def upperBound(x: Long): Int = {
-              var lo = 0
-              var hi = n
-              while (lo < hi) {
-                val m = (lo + hi) >>> 1
-                if (ts(m) <= x) lo = m + 1 else hi = m
-              }
-              lo
-            }
-            // leftmost index in [l, r] whose price satisfies pred,
-            // pruned by subtree max (crossing up) or min (crossing down)
-            def leftmost(l: Int, r: Int, useMax: Boolean, pred: Double => Boolean): Int = {
-              def go(node: Int, nl: Int, nr: Int): Int = {
-                if (nr < l || nl > r) return -1
-                if (!pred(if (useMax) mx(node) else mn(node))) return -1
-                if (nl == nr) return nl
-                val m = (nl + nr) >>> 1
-                val lf = go(2 * node, nl, m)
-                if (lf >= 0) lf else go(2 * node + 1, m + 1, nr)
-              }
-              go(1, 0, sz - 1)
-            }
-            var lastTsSeen = Long.MinValue
-            val seenPrices = new java.util.HashSet[java.lang.Double]()
-            i = 0
-            while (i < n) {
-              val t = tg(i)
-              if (!java.lang.Double.isNaN(t) && t > 0.0) {
-                // the join core groups by (symbol, ts, price, trgt, t1):
-                // duplicate event keys collapse to one output row
-                if (ts(i) != lastTsSeen) { lastTsSeen = ts(i); seenPrices.clear() }
-                if (seenPrices.add(pr(i))) {
-                  val lo = upperBound(ts(i))
-                  val hi = upperBound(t1(i)) - 1
-                  if (lo <= hi) { // events with an empty (ts, t1] path drop out (inner join)
-                    val p0 = pr(i)
-                    if (p0 == 0.0) {
-                      // degenerate event price: every pair return is null
-                      out.append(TbScanRow(curSym, ts(i), p0, t, t1(i), None, None, None, None, None))
-                    } else {
-                      val thrP = t * pt
-                      val thrS = (-t) * sl
-                      // the tree descent's pruning is only valid when
-                      // p/p0 − 1 is monotone NON-DECREASING in p, i.e.
-                      // p0 > 0 (the data policy); a negative or NaN p0
-                      // falls back to the exact linear scan, which
-                      // evaluates the same per-pair predicates the
-                      // join core does (NaN comparisons are false)
-                      var kp = -1
-                      var ks = -1
-                      if (p0 > 0.0) {
-                        kp = leftmost(lo, hi, useMax = true, p => (p / p0 - 1.0) >= thrP)
-                        ks = leftmost(lo, hi, useMax = false, p => (p / p0 - 1.0) <= thrS)
-                      } else {
-                        var k = lo
-                        while (k <= hi && (kp < 0 || ks < 0)) {
-                          val r = pr(k) / p0 - 1.0
-                          if (kp < 0 && r >= thrP) kp = k
-                          if (ks < 0 && r <= thrS) ks = k
-                          k += 1
-                        }
-                      }
-                      out.append(
-                        TbScanRow(
-                          curSym,
-                          ts(i),
-                          p0,
-                          t,
-                          t1(i),
-                          if (kp >= 0) Some(ts(kp)) else None,
-                          if (ks >= 0) Some(ts(ks)) else None,
-                          if (kp >= 0) Some(pr(kp) / p0 - 1.0) else None,
-                          if (ks >= 0) Some(pr(ks) / p0 - 1.0) else None,
-                          Some(pr(hi) / p0 - 1.0),
-                        )
-                      )
-                    }
-                  }
+  /** Per symbol of [[tripleBarrierCoreScan]], over (symbol, ts, price,
+    * trade_id[, trgt]) rows in time order: holds each tick until its
+    * capped vertical barrier is known (a later tick at or past ts +
+    * horizon, or the symbol's end), then writes its chunk rows. Ticks
+    * with a null ts or a null or NaN price (what `na.drop` drops) are
+    * no events and no path.
+    */
+  private final class BarrierEvents(hUs: Long, hDays: Int, const: Option[Double], symType: DataType)
+      extends graft.plans.ScanKernel {
+    private val dayUs = 86400000000L
+    private var key: InternalRow = null
+    private val pending = new java.util.ArrayDeque[(Long, Double, Long, Double)]() // ts, price, tid, trgt
+    private var last = 0L
+
+    def reset(k: InternalRow): Unit = key = k
+
+    private def write(o: graft.plans.ScanOut, t: (Long, Double, Long, Double), t1: Long): Unit = {
+      val d = t._1 / dayUs
+      var k = 0
+      while (k <= hDays) {
+        val ch = d - k
+        if (k == 0 || t._1 < (ch + 1L) * dayUs + hUs) {
+          val w = o.begin()
+          o.copy(0, key, 0, symType)
+          w.write(1, ch); w.write(2, t._1); w.write(3, t._2); w.write(4, t._3)
+          // path-only halo copies carry no target
+          if (k == 0 && !t._4.isNaN) w.write(5, t._4) else w.setNullAt(5)
+          w.write(6, t1)
+          o.emit()
+        }
+        k += 1
+      }
+    }
+
+    def step(row: InternalRow, o: graft.plans.ScanOut): Unit = if (!row.isNullAt(1) && !Bars.noPrice(row, 2)) {
+      last = row.getLong(1)
+      val trgt = const.getOrElse(if (row.isNullAt(4)) Double.NaN else row.getDouble(4))
+      pending.addLast((last, row.getDouble(2), row.getLong(3), trgt))
+      while (!pending.isEmpty && pending.peekFirst()._1 + hUs <= last) {
+        val t = pending.pollFirst()
+        write(o, t, t._1 + hUs)
+      }
+    }
+
+    def flush(o: graft.plans.ScanOut): Unit =
+      while (!pending.isEmpty) {
+        val t = pending.pollFirst()
+        write(o, t, math.min(t._1 + hUs, last))
+      }
+  }
+
+  /** Per (symbol, day chunk) of [[tripleBarrierCoreScan]]: buffers the
+    * chunk's (tsus, price, trgt or NaN for path-only rows, t1us) rows,
+    * then resolves each event's first crossings and writes `cols`.
+    */
+  private final class BarrierScan(pt: Double, sl: Double, symType: DataType, cols: BarrierCols)
+      extends graft.plans.ScanKernel {
+    private var key: InternalRow = null
+    private val tsA = new scala.collection.mutable.ArrayBuffer[Long]
+    private val prA = new scala.collection.mutable.ArrayBuffer[Double]
+    private val tgA = new scala.collection.mutable.ArrayBuffer[Double] // NaN = not an event
+    private val t1A = new scala.collection.mutable.ArrayBuffer[Long]
+
+    def reset(k: InternalRow): Unit = key = k
+
+    def step(row: InternalRow, o: graft.plans.ScanOut): Unit = {
+      tsA += row.getLong(2)
+      prA += row.getDouble(3)
+      tgA += (if (row.isNullAt(5)) Double.NaN else row.getDouble(5))
+      t1A += row.getLong(6)
+    }
+
+    /** One event's result; a crossing index of -1 means none, and a
+      * zero event price leaves every return null.
+      */
+    private def write(o: graft.plans.ScanOut, i: Int, trgt: Double, kp: Int, ks: Int, hi: Int,
+        pr: Array[Double], ts: Array[Long], t1: Array[Long]): Unit = {
+      val w = o.begin()
+      val p0 = pr(i)
+      val rets = p0 != 0.0
+      def ts_(ord: Int, k: Int): Unit = if (k >= 0) w.write(ord, ts(k)) else w.setNullAt(ord)
+      def ret(ord: Int, k: Int): Unit = if (rets && k >= 0) w.write(ord, pr(k) / p0 - 1.0) else w.setNullAt(ord)
+      o.copy(0, key, 0, symType)
+      w.write(1, ts(i))
+      cols match {
+        case CoreCols =>
+          w.write(2, p0); w.write(3, trgt); w.write(4, t1(i))
+          ts_(5, kp); ts_(6, ks); ret(7, kp); ret(8, ks); ret(9, hi)
+        case TouchCols =>
+          w.write(2, trgt); w.write(3, t1(i)); ts_(4, kp); ts_(5, ks)
+        case LabelCols(signOnVertical) =>
+          w.write(2, trgt); w.write(3, t1(i))
+          val ptFirst = kp >= 0 && (ks < 0 || ts(kp) <= ts(ks))
+          val slFirst = ks >= 0 && !ptFirst
+          val touch = if (ptFirst) kp else if (slFirst) ks else -1
+          if (touch >= 0) w.write(4, ts(touch)) else w.write(4, t1(i))
+          ret(5, if (touch >= 0) touch else hi)
+          if (ptFirst) w.write(6, 1)
+          else if (slFirst) w.write(6, -1)
+          else if (!signOnVertical) w.write(6, 0)
+          else if (rets) w.write(6, math.signum(pr(hi) / p0 - 1.0).toInt)
+          else w.setNullAt(6)
+      }
+      o.emit()
+    }
+
+    def flush(o: graft.plans.ScanOut): Unit = {
+      val n = tsA.length
+      val ts = tsA.toArray
+      val pr = prA.toArray
+      val tg = tgA.toArray
+      val t1 = t1A.toArray
+      tsA.clear(); prA.clear(); tgA.clear(); t1A.clear()
+      var sz = 1
+      while (sz < n) sz <<= 1
+      val mx = Array.fill(2 * sz)(Double.NegativeInfinity)
+      val mn = Array.fill(2 * sz)(Double.PositiveInfinity)
+      var i = 0
+      while (i < n) {
+        // a NaN price must never enable a crossing (NaN comparisons
+        // are false in the join core) and must not poison subtree
+        // aggregates (math.max(NaN, x) = NaN would false-prune whole
+        // ranges): map it to the never-crossing sentinel in each tree
+        val pv = pr(i)
+        mx(sz + i) = if (java.lang.Double.isNaN(pv)) Double.NegativeInfinity else pv
+        mn(sz + i) = if (java.lang.Double.isNaN(pv)) Double.PositiveInfinity else pv
+        i += 1
+      }
+      i = sz - 1
+      while (i >= 1) {
+        mx(i) = math.max(mx(2 * i), mx(2 * i + 1))
+        mn(i) = math.min(mn(2 * i), mn(2 * i + 1))
+        i -= 1
+      }
+      // first index with ts > x
+      def upperBound(x: Long): Int = {
+        var lo = 0
+        var hi = n
+        while (lo < hi) {
+          val m = (lo + hi) >>> 1
+          if (ts(m) <= x) lo = m + 1 else hi = m
+        }
+        lo
+      }
+      // leftmost index in [l, r] whose price satisfies pred,
+      // pruned by subtree max (crossing up) or min (crossing down)
+      def leftmost(l: Int, r: Int, useMax: Boolean, pred: Double => Boolean): Int = {
+        def go(node: Int, nl: Int, nr: Int): Int = {
+          if (nr < l || nl > r) return -1
+          if (!pred(if (useMax) mx(node) else mn(node))) return -1
+          if (nl == nr) return nl
+          val m = (nl + nr) >>> 1
+          val lf = go(2 * node, nl, m)
+          if (lf >= 0) lf else go(2 * node + 1, m + 1, nr)
+        }
+        go(1, 0, sz - 1)
+      }
+      var lastTsSeen = Long.MinValue
+      val seenPrices = new java.util.HashSet[java.lang.Double]()
+      i = 0
+      while (i < n) {
+        val t = tg(i)
+        if (!java.lang.Double.isNaN(t) && t > 0.0) {
+          // the join core groups by (symbol, ts, price, trgt, t1):
+          // duplicate event keys collapse to one output row
+          if (ts(i) != lastTsSeen) { lastTsSeen = ts(i); seenPrices.clear() }
+          if (seenPrices.add(pr(i))) {
+            val lo = upperBound(ts(i))
+            val hi = upperBound(t1(i)) - 1
+            if (lo <= hi) { // events with an empty (ts, t1] path drop out (inner join)
+              val p0 = pr(i)
+              val thrP = t * pt
+              val thrS = (-t) * sl
+              // the tree descent's pruning is only valid when p/p0 − 1
+              // is monotone NON-DECREASING in p, i.e. p0 > 0 (the data
+              // policy); a negative or NaN p0 falls back to the exact
+              // linear scan, which evaluates the same per-pair
+              // predicates the join core does (NaN comparisons are
+              // false); a zero p0 makes every pair return null
+              var kp = -1
+              var ks = -1
+              if (p0 > 0.0) {
+                kp = leftmost(lo, hi, useMax = true, p => (p / p0 - 1.0) >= thrP)
+                ks = leftmost(lo, hi, useMax = false, p => (p / p0 - 1.0) <= thrS)
+              } else if (p0 != 0.0) {
+                var k = lo
+                while (k <= hi && (kp < 0 || ks < 0)) {
+                  val r = pr(k) / p0 - 1.0
+                  if (kp < 0 && r >= thrP) kp = k
+                  if (ks < 0 && r <= thrS) ks = k
+                  k += 1
                 }
               }
-              i += 1
+              write(o, i, t, kp, ks, hi, pr, ts, t1)
             }
-            tsA.clear(); prA.clear(); tgA.clear(); t1A.clear()
-          }
-
-          private def advance(): Unit = {
-            while (out.isEmpty && it.hasNext) {
-              val (sym, chunk, tsus, price, _, trgt, t1us) = it.next()
-              if (curSym != null && (sym != curSym || chunk != curChunk)) process()
-              curSym = sym
-              curChunk = chunk
-              tsA += tsus
-              prA += price
-              tgA += trgt.getOrElse(Double.NaN)
-              t1A += t1us
-            }
-            if (out.isEmpty && !it.hasNext) process()
-          }
-
-          override def hasNext: Boolean = {
-            if (out.isEmpty) advance()
-            out.nonEmpty
-          }
-
-          override def next(): TbScanRow = {
-            if (!hasNext) throw new NoSuchElementException
-            out.removeHead()
           }
         }
+        i += 1
       }
-      .toDF()
-      .select(
-        col("symbol").as(c.symbol),
-        timestamp_micros(col("ts_us")).as(c.ts),
-        col("price").as(c.price),
-        col("trgt"),
-        timestamp_micros(col("t1_us")).as("t1"),
-        timestamp_micros(col("pt_us")).as("pt_ts"),
-        timestamp_micros(col("sl_us")).as("sl_ts"),
-        col("pt_ret").as("__pt_ret"),
-        col("sl_ret").as("__sl_ret"),
-        col("v_ret").as("__v_ret"),
-      )
+    }
   }
 
   /** AFML ch.3.6 meta-labeling: given a primary model's side (+1/-1)
@@ -655,15 +647,6 @@ object Labels {
     * `* N / Σw` step) is the caller's: it is a two-value global
     * reduction whose float order the caller controls.
     */
-  /** One (event, day-chunk) partial fold from the weight scan. */
-  private[graft] final case class WeightPartial(
-      symbol: String,
-      event_id: Long,
-      chunk: Long,
-      part: Double,
-      n: Long,
-  )
-
   /** Shared scan core behind [[uniquenessWeights]] and
     * [[returnAttribution]]: per event, the ordered fold of
     * value/concurrency over the ticks its [t0, t1] interval covers —
@@ -688,11 +671,11 @@ object Labels {
     *
     * @param ticks  (symbol: string, tsus: long, tid: long, v: double)
     * @param events (symbol: string, t0us: long, t1us: long, event_id: long)
-    * @return (symbol, event_id, s: chunk-folded Σ v/c, n_ticks)
+    * @return (symbol, event_id, `name`: finish(chunk-folded Σ v/c, n_ticks), n_ticks)
     */
-  private def intervalConcFold(ticks: DataFrame, events: DataFrame): DataFrame = {
-    val spark = ticks.sparkSession
-    import spark.implicits._
+  private def intervalConcFold(ticks: DataFrame, events: DataFrame, name: String)(
+      finish: (Double, Long) => Double
+  ): DataFrame = {
     val dayUs = 86400000000L
     // kind 0 = event (a = t0us, b = t1us, id = event_id, v unused)
     // kind 1 = tick  (a = tsus,  b = 0,    id = trade_id, v = value)
@@ -716,109 +699,101 @@ object Labels {
       col("tid").as("id"),
       col("v"),
     )
-    evRows
-      .unionByName(tkRows)
-      .repartition(col("symbol"), col("chunk"))
-      .sortWithinPartitions(col("symbol"), col("chunk"), col("kind"), col("a"), col("id"))
-      .as[(String, Long, Int, Long, Long, Long, Double)]
-      .mapPartitions { it =>
-        new Iterator[WeightPartial] {
-          private val out = scala.collection.mutable.ArrayDeque.empty[WeightPartial]
-          private var curSym: String = null
-          private var curChunk = 0L
-          private val e0 = new scala.collection.mutable.ArrayBuffer[Long] // t0, sorted (arrival order)
-          private val e1 = new scala.collection.mutable.ArrayBuffer[Long] // t1, arrival order
-          private val eid = new scala.collection.mutable.ArrayBuffer[Long]
-          private val ts = new scala.collection.mutable.ArrayBuffer[Long]
-          private val tv = new scala.collection.mutable.ArrayBuffer[Double]
-
-          private def process(): Unit = {
-            val q = e0.length
-            val n = ts.length
-            if (q > 0 && n > 0) {
-              val t0s = e0.toArray // already ascending (sort key (kind, a, id))
-              val t1arr = e1.toArray
-              val t1s = t1arr.clone()
-              java.util.Arrays.sort(t1s)
-              val tsA = ts.toArray
-              val tvA = tv.toArray
-              // c_u = #{t0 <= u} - #{t1 < u}, both by binary search
-              def countLe(arr: Array[Long], x: Long): Int = {
-                var lo = 0
-                var hi = arr.length
-                while (lo < hi) {
-                  val m = (lo + hi) >>> 1
-                  if (arr(m) <= x) lo = m + 1 else hi = m
-                }
-                lo
-              }
-              def countLt(arr: Array[Long], x: Long): Int = {
-                var lo = 0
-                var hi = arr.length
-                while (lo < hi) {
-                  val m = (lo + hi) >>> 1
-                  if (arr(m) < x) lo = m + 1 else hi = m
-                }
-                lo
-              }
-              val cArr = new Array[Double](n) // concurrency as double divisor
-              var j = 0
-              while (j < n) {
-                cArr(j) = (countLe(t0s, tsA(j)) - countLt(t1s, tsA(j))).toDouble
-                j += 1
-              }
-              var i = 0
-              while (i < q) {
-                val lo = countLt(tsA, t0s(i)) // first tick with ts >= t0 (inclusive start)
-                val hi = countLe(tsA, t1arr(i)) - 1 // last tick with ts <= t1
-                if (lo <= hi) {
-                  var acc = 0.0
-                  var k = lo
-                  while (k <= hi) {
-                    acc += tvA(k) / cArr(k)
-                    k += 1
-                  }
-                  out.append(WeightPartial(curSym, eid(i), curChunk, acc, (hi - lo + 1).toLong))
-                }
-                i += 1
-              }
-            }
-            e0.clear(); e1.clear(); eid.clear(); ts.clear(); tv.clear()
-          }
-
-          private def advance(): Unit = {
-            while (out.isEmpty && it.hasNext) {
-              val (sym, chunk, kind, a, b, id, v) = it.next()
-              if (curSym != null && (sym != curSym || chunk != curChunk)) process()
-              curSym = sym
-              curChunk = chunk
-              if (kind == 0) { e0 += a; e1 += b; eid += id }
-              else { ts += a; tv += v }
-            }
-            if (out.isEmpty && !it.hasNext) process()
-          }
-
-          override def hasNext: Boolean = {
-            if (out.isEmpty) advance()
-            out.nonEmpty
-          }
-
-          override def next(): WeightPartial = {
-            if (!hasNext) throw new NoSuchElementException
-            out.removeHead()
-          }
+    val rows = evRows.unionByName(tkRows)
+    val symType = rows.schema(0).dataType
+    val partials = graft.plans.KeyedScan(rows, Seq(col("symbol"), col("chunk")),
+      Seq(col("kind"), col("a"), col("id")),
+      StructType(Seq(StructField("symbol", symType), StructField("event_id", LongType),
+        StructField("chunk", LongType), StructField("part", DoubleType), StructField("n", LongType)))
+    ) { () => new ConcScan(symType) }
+    // total = left fold of the partials in chunk order, from 0.0
+    graft.plans.KeyedScan(partials, Seq(col("symbol"), col("event_id")), Seq(col("chunk")),
+      StructType(Seq(StructField("symbol", symType), StructField("event_id", LongType),
+        StructField(name, DoubleType), StructField("n_ticks", LongType)))
+    ) { () =>
+      new graft.plans.ScanKernel {
+        private var key: InternalRow = null
+        private var acc = 0.0
+        private var n = 0L
+        def reset(k: InternalRow): Unit = { key = k; acc = 0.0; n = 0L }
+        def step(row: InternalRow, o: graft.plans.ScanOut): Unit = { acc += row.getDouble(3); n += row.getLong(4) }
+        def flush(o: graft.plans.ScanOut): Unit = {
+          val w = o.begin()
+          o.copy(0, key, 0, symType); o.copy(1, key, 1, LongType)
+          w.write(2, finish(acc, n)); w.write(3, n)
+          o.emit()
         }
       }
-      .toDF()
-      .groupBy(col("symbol"), col("event_id"))
-      .agg(
-        aggregate(
-          array_sort(collect_list(struct(col("chunk"), col("part")))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("part"),
-        ).as("s"),
-        sum(col("n")).cast("long").as("n_ticks"),
-      )
+    }
+  }
+
+  /** Per (symbol, day chunk) of [[intervalConcFold]]: buffers the
+    * chunk's events (t0 ascending) and ticks, then emits one partial
+    * (symbol, event_id, chunk, Σ v/c, ticks) per event that covers a tick.
+    */
+  private final class ConcScan(symType: DataType) extends graft.plans.ScanKernel {
+    private var key: InternalRow = null
+    private val e0 = new scala.collection.mutable.ArrayBuffer[Long] // t0, sorted (arrival order)
+    private val e1 = new scala.collection.mutable.ArrayBuffer[Long] // t1, arrival order
+    private val eid = new scala.collection.mutable.ArrayBuffer[Long]
+    private val ts = new scala.collection.mutable.ArrayBuffer[Long]
+    private val tv = new scala.collection.mutable.ArrayBuffer[Double]
+
+    def reset(k: InternalRow): Unit = key = k
+
+    def step(row: InternalRow, o: graft.plans.ScanOut): Unit =
+      if (row.getInt(2) == 0) { e0 += row.getLong(3); e1 += row.getLong(4); eid += row.getLong(5) }
+      else { ts += row.getLong(3); tv += row.getDouble(6) }
+
+    // number of entries of sorted `arr` that are <= x (or < x)
+    private def count(arr: Array[Long], x: Long, inclusive: Boolean): Int = {
+      var lo = 0
+      var hi = arr.length
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (arr(m) < x || inclusive && arr(m) == x) lo = m + 1 else hi = m
+      }
+      lo
+    }
+
+    def flush(o: graft.plans.ScanOut): Unit = {
+      val q = e0.length
+      val n = ts.length
+      if (q > 0 && n > 0) {
+        val t0s = e0.toArray // already ascending (sort key (kind, a, id))
+        val t1arr = e1.toArray
+        val t1s = t1arr.clone()
+        java.util.Arrays.sort(t1s)
+        val tsA = ts.toArray
+        val tvA = tv.toArray
+        // c_u = #{t0 <= u} - #{t1 < u}, both by binary search
+        val cArr = new Array[Double](n) // concurrency as double divisor
+        var j = 0
+        while (j < n) {
+          cArr(j) = (count(t0s, tsA(j), inclusive = true) - count(t1s, tsA(j), inclusive = false)).toDouble
+          j += 1
+        }
+        var i = 0
+        while (i < q) {
+          val lo = count(tsA, t0s(i), inclusive = false) // first tick with ts >= t0 (inclusive start)
+          val hi = count(tsA, t1arr(i), inclusive = true) - 1 // last tick with ts <= t1
+          if (lo <= hi) {
+            var acc = 0.0
+            var k = lo
+            while (k <= hi) {
+              acc += tvA(k) / cArr(k)
+              k += 1
+            }
+            val w = o.begin()
+            o.copy(0, key, 0, symType)
+            w.write(1, eid(i)); w.write(2, key.getLong(1)); w.write(3, acc); w.write(4, (hi - lo + 1).toLong)
+            o.emit()
+          }
+          i += 1
+        }
+      }
+      e0.clear(); e1.clear(); eid.clear(); ts.clear(); tv.clear()
+    }
   }
 
   /** @param bucket used only by the pair-materializing twin
@@ -846,13 +821,7 @@ object Labels {
       unix_micros(col("t1")).as("t1us"),
       col("event_id"),
     )
-    intervalConcFold(ticks, ev)
-      .select(
-        col("symbol"),
-        col("event_id"),
-        abs(col("s")).as("attribution"),
-        col("n_ticks"),
-      )
+    intervalConcFold(ticks, ev, "attribution")((s, _) => math.abs(s))
   }
 
   /** Pair-materializing twin of [[returnAttribution]] (quadratic in
@@ -939,13 +908,7 @@ object Labels {
       unix_micros(col("t1")).as("t1us"),
       col("event_id"),
     )
-    intervalConcFold(ticks, ev)
-      .select(
-        col("symbol"),
-        col("event_id"),
-        (col("s") / col("n_ticks").cast("double")).as("avg_uniqueness"),
-        col("n_ticks"),
-      )
+    intervalConcFold(ticks, ev, "avg_uniqueness")((s, n) => s / n.toDouble)
   }
 
   /** Time-decay sample weights (AFML ch.4.11): newest information

@@ -115,8 +115,14 @@ object Checkpoint {
   ): DataFrame = {
     val gate =
       if (maxBytes >= 0L) maxBytes
-      else df.sparkSession.conf
-        .getOption("spark.graft.barrierGateBytes").map(_.toLong).getOrElse(2L << 30)
+      else df.sparkSession.conf.getOption("spark.graft.barrierGateBytes").map { v =>
+        try v.trim.toLong
+        catch {
+          case _: NumberFormatException =>
+            throw new IllegalArgumentException(
+              s"spark.graft.barrierGateBytes must be a byte count in decimal, got '$v'")
+        }
+      }.getOrElse(2L << 30)
     val bytes = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
     if (bytes <= gate) df.localCheckpoint() else table(df, name, codec)

@@ -55,6 +55,20 @@ class ApiSpec extends SparkSpec {
     assert(TradingCols.fromSession(spark) == TradingCols.default)
   }
 
+  test("a garbage byte-count setting fails with an error that names its key") {
+    val df = graft.sources.TradeData.synthetic(spark, 10)
+    for ((key, call) <- Seq[(String, () => Any)](
+        "spark.graft.barrierGateBytes" -> (() => graft.sources.Checkpoint.tableGated(df, "gate")),
+        "spark.graft.shingleBarrierLeafBytes" -> (() => graft.operators.Dedup.shingleBarrierLeafBytes),
+      )) {
+      spark.conf.set(key, "2GiB")
+      try {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(key) && e.getMessage.contains("2GiB"), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("synthetic trade generator is deterministic") {
     val a = TradeData.synthetic(spark, 200, 3).collect()
     val b = TradeData.synthetic(spark, 200, 3).collect()

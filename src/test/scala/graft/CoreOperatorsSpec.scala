@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.TradingCols
@@ -48,17 +49,13 @@ class CoreOperatorsSpec extends SparkSpec {
     assert(one.map(_.getAs[Long]("volume")).toSeq == Seq(8L))
   }
 
-  test("volume bars overflow: fused scan == groupBy twin, bit-exact on real ticks") {
-    val t = graft.sources.TradeData.fromEvents(spark, "/root/testdata/sf0.001")
+  /** `got` and `want` ordered by (symbol, ts_start, ts_end) are equal
+    * row by row, doubles bit for bit.
+    */
+  private def assertBarsBitEqual(got0: DataFrame, want0: DataFrame): Unit = {
     val key = Seq("symbol", "ts_start", "ts_end")
-    val want = graft.operators.Bars
-      .volumeBarsOverflowAgg(t, barSize = 500L, splitByDate = true, graft.api.TradingCols.default)
-      .orderBy(key.head, key.tail: _*)
-      .collect()
-    val got = Bars
-      .volumeBars(t, barSize = 500L, allowSplits = false)
-      .orderBy(key.head, key.tail: _*)
-      .collect()
+    val want = want0.orderBy(key.head, key.tail: _*).collect()
+    val got = got0.orderBy(key.head, key.tail: _*).collect()
     assert(got.length == want.length && got.nonEmpty)
     got.zip(want).foreach { case (g, w) =>
       (0 until g.length).foreach { i =>
@@ -72,6 +69,23 @@ class CoreOperatorsSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  test("volume bars overflow: fused scan == groupBy twin, bit-exact on real ticks") {
+    val t = graft.sources.TradeData.fromEvents(spark, "/root/testdata/sf0.001")
+    assertBarsBitEqual(
+      Bars.volumeBars(t, barSize = 500L, allowSplits = false),
+      BarsReference.volumeBarsOverflowAgg(t, barSize = 500L, splitByDate = true),
+    )
+  }
+
+  test("dollar bars: fused scan == groupBy twin, bit-exact on real ticks, with and without days") {
+    val t = graft.sources.TradeData.fromEvents(spark, "/root/testdata/sf0.001")
+    for (split <- Seq(true, false))
+      assertBarsBitEqual(
+        Bars.dollarBars(t, barSize = 50000.0, splitByDate = split),
+        BarsReference.dollarBarsAgg(t, barSize = 50000.0, splitByDate = split),
+      )
   }
 
   // --- dollar bars, split mode (bar_groups(price*size, splits=true)):

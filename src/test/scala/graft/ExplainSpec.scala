@@ -418,16 +418,16 @@ class ExplainSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("triple-barrier scan core: one chunk exchange, broadcast last-ts, no pair join") {
+  test("triple-barrier scan core: a symbol scan then a chunk scan, no join, no aggregate") {
     import graft.api.TradingCols
     val t = TradeData.fromEvents(spark, dir)
     val p = graft.operators.Labels
       .tripleBarrierCoreScan(t, "4 hours", 1.0, 1.0, 100, Some(0.02), TradingCols.default)
       .queryExecution.executedPlan.toString
-    // exchanges: the lastTs aggregation + the (sym, chunk) repartition
+    // exchanges: symbol (capped t1 + halo copies), then (sym, chunk)
     assert("Exchange hashpartitioning".r.findAllIn(p).length <= 2, p)
-    assert(p.contains("BroadcastHashJoin"), "per-symbol last-ts must broadcast")
-    assert(!p.contains("SortMergeJoin"), "no event x path pair join may appear")
+    assert("KeyedScan keys".r.findAllIn(p).length == 2, p)
+    assert(!p.contains("Join") && !p.contains("Aggregate"), s"no last-ts join, no pair join:\n$p")
   }
 
   test("purged CV rank is distributed: no single-partition exchange, broadcast spans") {

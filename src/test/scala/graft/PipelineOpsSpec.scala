@@ -301,6 +301,30 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
+  test("store shingles are written with the session codec by buildStore and appendStore") {
+    import graft.operators.IncrementalDedup
+    import scala.jdk.CollectionConverters._
+    def df(b: Seq[(Long, String)]) =
+      b.map { case (i, t) => (i, t, "src") }.toDF("doc_id", "text", "source")
+    // codecs named in the parquet footers of a table's files
+    def codecs(table: String): Set[String] =
+      new java.io.File(table).listFiles().filter(_.getName.endsWith(".parquet")).toSet.flatMap {
+        (f: java.io.File) =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(f.getPath), new org.apache.hadoop.conf.Configuration()))
+          try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+          finally r.close()
+      }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-incr-codec").toString
+    IncrementalDedup.buildStore(df(Seq(1L -> "the quick brown fox jumps over the lazy dog")), s"$tmp/s1")
+    IncrementalDedup.appendStore(spark, s"$tmp/s1",
+      df(Seq(2L -> "a different text about plankton migration")), s"$tmp/s2")
+    val session = spark.conf.get("spark.sql.parquet.compression.codec").toUpperCase
+    assert(codecs(s"$tmp/s1/shingles") == Set(session))
+    assert(codecs(s"$tmp/s2/shingles") == Set(session))
+  }
+
   test("appendStore rolls the snapshot to exactly buildStore of the union; chained increments stay exact") {
     import graft.operators.IncrementalDedup
     val base =
