@@ -538,6 +538,42 @@ case class NearestCellExpr(
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** The `n` nearest centroid ids of one vector, nearest first: the
+  * [[NearestCellExpr]] dots and comparator, i.e. the order of a
+  * `row_number()` window over `(dot DESC, cent_id)`. A null vector
+  * ties every centroid (a null score), so the `n` smallest ids come
+  * first. Evaluated without codegen: it serves query-sized inputs.
+  */
+case class NearestCellsExpr(child: Expression, centIds: Array[Long], cents: Array[Double], dim: Int, n: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    val s =
+      if (v == null) new Array[Double](centIds.length)
+      else {
+        val vv = v.asInstanceOf[ArrayData]
+        val float = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+        val len = math.min(vv.numElements(), dim)
+        val x = Array.tabulate(len)(j => if (float) vv.getFloat(j).toDouble else vv.getDouble(j))
+        Array.tabulate(centIds.length) { c =>
+          var acc = 0.0
+          var i = 0
+          while (i < len) { acc += x(i) * cents(c * dim + i); i += 1 }
+          acc
+        }
+      }
+    val order = centIds.indices.sortWith((a, b) => NearestOrder.better(s(a), centIds(a), first = false, s(b), centIds(b)))
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(order.take(n).map(c => centIds(c): Any).toArray)
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** Two-level (coarse → fine) nearest-centroid cell id in ONE map-side
   * pass: argmax over the coarse table picks a coarse position, then
   * argmax over THAT position's fine-centroid segment yields the
@@ -724,6 +760,10 @@ object VectorExprs {
     */
   def nearestCellNative(v: Column, centIds: Array[Long], cents: Array[Double], dim: Int): Column =
     toColumn(NearestCellExpr(toExpression(v), centIds, cents, dim))
+
+  /** The `n` nearest centroid ids, nearest first; see [[NearestCellsExpr]]. */
+  def nearestCells(v: Column, centIds: Array[Long], cents: Array[Double], dim: Int, n: Int): Column =
+    toColumn(NearestCellsExpr(toExpression(v), centIds, cents, dim, n))
 
   /** Map-side two-level (coarse → fine) cell assignment; see
     * [[NearestFineExpr]].

@@ -1,8 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 import graft.operators.TextAnalysis.normText
 
@@ -86,15 +91,48 @@ object Dedup {
 
   /** Exact duplicates by normalized-content fingerprint: every doc
     * with its canonical keeper (minimum doc_id sharing the
-    * fingerprint) and the duplicate-group size.
+    * fingerprint) and the duplicate-group size. One keyed scan per
+    * fingerprint, ids ascending: a group's keeper is its first
+    * non-null id, and the kernel holds the group's rows until it
+    * knows the group size.
     */
   def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(col("fingerprint"))
-    docs
-      .select(col(idCol), TextAnalysis.fingerprint(col(textCol)).as("fingerprint"))
-      .withColumn("keep_id", min(col(idCol)).over(w))
-      .withColumn("group_size", count(lit(1)).over(w).cast("long"))
-      .withColumn("is_dup", (col(idCol) =!= col("keep_id")).cast("int"))
+    val keyed = docs.select(col(idCol), TextAnalysis.fingerprint(col(textCol)).as("fingerprint"))
+    val id = keyed.schema(0)
+    val out = StructType(Seq(
+      id,
+      keyed.schema(1),
+      StructField("keep_id", id.dataType, nullable = true),
+      StructField("group_size", LongType, nullable = false),
+      StructField("is_dup", IntegerType, nullable = true),
+    ))
+    KeyedScan(keyed, Seq(col("fingerprint")), Seq(col(idCol)), out)(() => new ExactGroupKernel(id.dataType))
+  }
+
+  /** [[exact]]'s kernel over (id, fingerprint) rows, ids ascending. */
+  private final class ExactGroupKernel(idType: DataType) extends ScanKernel {
+    private val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    private var keep: InternalRow = null
+    // `=!=` semantics: NaN equals NaN, -0.0 equals 0.0
+    private val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(idType)
+
+    def reset(key: InternalRow): Unit = { rows.clear(); keep = null }
+
+    def step(row: InternalRow, out: ScanOut): Unit = {
+      rows += row.copy()
+      if (keep == null && !row.isNullAt(0)) keep = rows.last
+    }
+
+    def flush(out: ScanOut): Unit = rows.foreach { r =>
+      val w = out.begin()
+      out.copy(0, r, 0, idType)
+      out.copy(1, r, 1, StringType)
+      if (keep == null) w.setNullAt(2) else out.copy(2, keep, 0, idType)
+      w.write(3, rows.length.toLong)
+      if (keep == null || r.isNullAt(0)) w.setNullAt(4)
+      else w.write(4, if (ord.equiv(r.get(0, idType), keep.get(0, idType))) 0 else 1)
+      out.emit()
+    }
   }
 
   /** Paragraph-granularity exact dedup (the C4/Gopher pipeline step:
@@ -367,7 +405,7 @@ object Dedup {
       )
   }
 
-  /** Near-duplicate pairs via shingle→minhash→band→bucket-join, with
+  /** Near-duplicate pairs via shingle→minhash→band→bucket, with
     * exact Jaccard verification of the LSH candidates.
     *
     * Scale: web duplication is dominated by byte-identical mirrors —
@@ -375,21 +413,28 @@ object Dedup {
     * 10^6 times. Those docs have IDENTICAL hsl arrays, identical
     * minhash signatures, and pairwise Jaccard exactly 1.0, so running
     * them through LSH individually builds C(k,2) candidate pairs per
-    * k-copy cluster, each dragging two full shingle arrays through the
-    * verification joins (the docdens100 probe fills local disk this
-    * way). Instead: collapse identical hsl arrays to one
-    * REPRESENTATIVE (groupBy on the array — min(id) partial-aggregates
-    * map-side, so a 10^6-copy cluster collapses before the exchange),
-    * run LSH + verification on representatives only, then expand
-    * member pairs back by id arithmetic — intra-cluster pairs are
-    * emitted directly at Jaccard 1.0, cross-cluster rep pairs fan out
-    * to member combinations carrying the rep pair's Jaccard. The
-    * expansion is pure (id, id, double) rows — output-bound, no
-    * arrays. Output is bit-identical to the uncollapsed plan (pinned
-    * in PipelineOpsSpec). Near-dup-but-not-identical clusters still
-    * verify C(k,2) candidates — inherent to an exact-Jaccard PAIR
-    * surface whose output is itself C(k,2); the cluster surface
-    * ([[clusters]]) is the scale-preferred API for that shape.
+    * k-copy cluster, each verified against two full shingle arrays
+    * (the docdens100 probe fills local disk this way). Instead:
+    * collapse identical hsl arrays to one REPRESENTATIVE (one keyed
+    * scan per set fingerprint, ids ascending: the smallest id
+    * represents, the rest become its member list — a 10^6-copy
+    * cluster is one task holding 10^6 ids), run LSH + verification
+    * on representatives only, then expand member pairs back —
+    * intra-cluster pairs are emitted directly at Jaccard 1.0,
+    * cross-cluster rep pairs fan out to member combinations carrying
+    * the rep pair's Jaccard. The expansion is pure (id, id, double)
+    * rows — output-bound, no arrays. Output is bit-identical to the
+    * uncollapsed plan (pinned in PipelineOpsSpec) and to the join
+    * form (`LshReference`, KeyedScanPinsSpec). Near-dup-but-not-
+    * identical clusters still verify C(k,2) candidates — inherent to
+    * an exact-Jaccard PAIR surface whose output is itself C(k,2); the
+    * cluster surface ([[clusters]]) is the scale-preferred API for
+    * that shape.
+    *
+    * The whole pipeline is two keyed scans: no join, no aggregate but
+    * the final `distinct`, no barrier and no plan-time job. The price
+    * is one shuffle of every doc's shingle set into its exact-set
+    * group. Ids are bigints; a null id is no member.
     *
     * `maxBucket` bounds the one remaining super-linear input shape:
     * band buckets whose minhashes are swallowed by a corpus-hot
@@ -407,7 +452,65 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5,
       maxBucket: Int = 4096,
-  ): DataFrame = lshStages(shingled, nHashes, bands, threshold, maxBucket).pairs
+  ): DataFrame = {
+    val idType = shingled.schema("id").dataType
+    require(idType == LongType, s"LSH pairs need bigint ids, got $idType")
+    // Exact-set groups: __hk is a 64-bit fingerprint of the whole set
+    // (a codegen'd xxhash64 over the array). Two DISTINCT shingle sets
+    // colliding in __hk would merge their clusters; at 2^-64 per pair
+    // that is the same acceptance class as the md5 shingle hashing
+    // (2^-32). hsl has one consumer, this projection (CollapseProject
+    // keeps the multiply-referenced shingle alias below it, so it is
+    // computed once per row), hence no barrier and no plan-time job.
+    // Signatures and band hashes are computed for every doc in the map
+    // stage; the kernel keeps the representative's, and only the
+    // representative's hsl leaves it.
+    val sigd = shingled.select(
+      xxhash64(col("hsl")).as("__hk"),
+      col("id"),
+      (size(col("hsl")) > 0).as("__ne"),
+      col("hsl"),
+      graft.functions.TextExprs
+        .minhashSig(col("hsl"), nHashes, MinhashP, (0 until nHashes).map(minhashA),
+          (0 until nHashes).map(minhashB))
+        .as("sig"),
+    )
+    val banded = sigd.select(col("__hk"), col("id"), col("__ne"), col("hsl"),
+      bandHashes(col("sig"), nHashes, bands).as("bands"))
+    val hsl = banded.schema("hsl")
+    val repsOut = StructType(Seq(
+      StructField("band", StringType, nullable = false),
+      StructField("band_idx", IntegerType, nullable = false),
+      StructField("rid", LongType, nullable = false),
+      StructField("members", ArrayType(LongType, containsNull = false), nullable = false),
+      StructField("ne_members", ArrayType(LongType, containsNull = false), nullable = false),
+      hsl,
+    ))
+    val reps = KeyedScan(banded, Seq(col("__hk")), Seq(col("id")), repsOut)(() => new ExactSetKernel(hsl.dataType))
+    // One keyed scan per band value over the representatives' band
+    // rows: it counts the bucket, drops it past `maxBucket`, verifies
+    // each id pair a < b by exact Jaccard and expands a passing pair
+    // to its clusters' member pairs. A band value shared by more than
+    // `maxBucket` band rows is boilerplate-dominated noise (the shared
+    // prefix's min-hashes swallow the whole band for short docs; the
+    // members are mutually DISsimilar — measured 7,090 reps in one
+    // bucket = 25M false candidates on the docdens10 probe); true
+    // near-dup pairs co-occur in their other, content-determined
+    // bands. Exact-dup mega-clusters are immune: they collapsed to ONE
+    // rep above. Deterministic, so the DuckDB oracle replays it. A
+    // pair sharing several buckets is found in each: `distinct`.
+    val pairsOut = StructType(Seq("id_a", "id_b").map(StructField(_, LongType)) :+ StructField("jaccard", DoubleType))
+    // the verify join's Jaccard, built here so it carries the session's
+    // null and ANSI semantics
+    val jaccard = {
+      import org.apache.spark.sql.catalyst.expressions._
+      val a = BoundReference(0, hsl.dataType, nullable = true)
+      val b = BoundReference(1, hsl.dataType, nullable = true)
+      Divide(Cast(Size(ArrayIntersect(a, b)), DoubleType), Cast(Size(ArrayUnion(a, b)), DoubleType))
+    }
+    KeyedScan(reps, Seq(col("band")), Seq(col("rid")), pairsOut)(
+      () => new BucketKernel(maxBucket, threshold, jaccard)).distinct()
+  }
 
   /** shuffle_hash ONLY when the build side is small enough to hold as
     * per-partition hash relations. The hint exists because sort-merge
@@ -484,19 +587,6 @@ object Dedup {
       }
       .getOrElse(128L << 20) // no active session / unset -> 128 MiB default
 
-  /** The [[lshJaccardPairs]] pipeline with its intermediate stages
-    * exposed — the measured pair-growth account ([[graft.MinhashAccount]])
-    * counts each stage so scale claims about this operator come from
-    * the operator, not estimates. `pairs` is the public output.
-    */
-  private[graft] case class LshStages(
-      members: DataFrame,
-      reps: DataFrame,
-      cand: DataFrame,
-      repPairs: DataFrame,
-      pairs: DataFrame,
-  )
-
   /** Scale-adaptive partition count for the exchanges that carry the
     * SHINGLE table (hsl arrays, ~8 B per input character): plan-stats
     * bytes / 128 MiB, clamped to 8192. The suite pins
@@ -523,140 +613,99 @@ object Dedup {
     if (n > default) Some(n) else None
   }
 
-  private[graft] def lshStages(
-      shingled: DataFrame,
-      nHashes: Int,
-      bands: Int,
-      threshold: Double,
-      maxBucket: Int,
-  ): LshStages = {
-    // Checkpoint barriers are load-bearing twice over: (a) hsl/sig are
-    // reused by several consumers and must be stored columns
-    // (interpreted HOFs get no CSE; CollapseProject would re-inline
-    // the subtrees); (b) at scale the hashed-shingle sets are larger
-    // than the corpus, so they live in a columnar parquet table each
-    // consumer scans (pruned to its columns), not an executor cache —
-    // see graft.sources.Checkpoint.
-    // hsl values are ShingleHashExpr.hash32 — 32-bit values stored in
-    // int64 (upper 4 bytes always zero), NOT the "uniform 60-bit
-    // ints" the r17 note claimed — so general-purpose codecs do
-    // compress them and the table takes the session codec (r18
-    // isolated codec-only A/B)
-    val base =
-      graft.sources.Checkpoint.tableGated(shingled, "lsh-shingles", shingleBarrierLeafBytes)
-    // id → representative (minimum id sharing this exact hsl array).
-    // The collapse groups and joins on __hk, a 64-bit fingerprint of
-    // the whole set DERIVED FROM THE CHECKPOINT (a codegen'd xxhash64
-    // over the stored array — never attached to `shingled` itself,
-    // where a second reference to the interpreted shingle HOF would
-    // recompute it; measured 1.3-2.8 s). The exchanges then move
-    // ~16 bytes/doc instead of the full multi-KB shingle arrays
-    // (twice — at corpus scale the array-keyed exchange would move
-    // more bytes than the corpus itself). Two DISTINCT shingle sets
-    // colliding in __hk would merge their clusters; at 2^-64 per pair
-    // that is the same acceptance class as the md5 shingle hashing
-    // above (2^-32).
-    val keyed = base.select(
-      col("id"),
-      xxhash64(col("hsl")).as("__hk"),
-      (size(col("hsl")) > 0).as("__ne"),
-    )
-    val members = graft.sources.Checkpoint.tableGated(
-      keyed
-        .join(keyed.groupBy(col("__hk")).agg(min(col("id")).as("rid")), Seq("__hk"))
-        .select(col("id"), col("rid"), col("__ne").as("nonempty")),
-      "lsh-members",
-    )
-    // the verify-join exchanges below carry hsl — size them from the
-    // checkpoint's real file stats (scaledShinglePartitions note).
-    // NOT applied to the reps semi join: its slim side (rep ids) can
-    // broadcast, in which case base streams with NO exchange and a
-    // repartition would ADD a corpus-sized round trip.
-    val shingleParts = scaledShinglePartitions(base)
-    def scaled(df: DataFrame, key: String): DataFrame =
-      shingleParts.map(n => df.repartition(n, col(key))).getOrElse(df)
-    val reps = base.join(
-      members.where(col("id") === col("rid")).select(col("id")),
-      Seq("id"),
-      "left_semi",
-    )
-    val sigd = graft.sources.Checkpoint.tableGated(
-      reps.select(
-        col("id"),
-        graft.functions.TextExprs
-          .minhashSig(
-            col("hsl"),
-            nHashes,
-            MinhashP,
-            (0 until nHashes).map(minhashA),
-            (0 until nHashes).map(minhashB),
-          )
-          .as("sig"),
-      ),
-      "lsh-signatures",
-    )
-    val withBands = sigd
-      .select(col("id"), explode(bandHashes(col("sig"), nHashes, bands)).as("band"))
-    // Drop adversarially hot buckets: a band value shared by more
-    // than `maxBucket` DISTINCT representatives is boilerplate-
-    // dominated noise (the shared prefix's min-hashes swallow the
-    // whole band for short docs; the members are mutually DISsimilar
-    // — measured 7,090 reps in one bucket = 25M false candidates on
-    // the docdens10 probe). True near-dup pairs co-occur in their
-    // other, content-determined bands. Exact-dup mega-clusters are
-    // immune: they collapsed to ONE rep above. groupBy partial-aggs
-    // map-side; the cnt<=cap set semi-joins back (the dupSpans
-    // de-skew pattern). Deterministic, so the DuckDB oracle replays
-    // it exactly.
-    val okBands = withBands
-      .groupBy(col("band"))
-      .agg(count(lit(1)).as("s"))
-      .where(col("s") <= maxBucket)
-      .select(col("band"))
-    val pruned = withBands.join(okBands, Seq("band"), "left_semi")
-    val cand = pruned
-      .as("a")
-      .join(pruned.as("b"), col("a.band") === col("b.band") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    // exact Jaccard over the md5-hashed shingle space (long compares,
-    // not string compares; 2^-32 collision rate, engine-identical).
-    // shuffle_hash, not sort-merge: the probe side carries full
-    // shingle arrays — hashing the (small) rep table avoids sorting
-    // array-fat rows twice.
-    val repPairs = cand
-      .join(hashIfSmall(scaled(base.select(col("id").as("id_a"), col("hsl").as("sh_a")), "id_a")), "id_a")
-      .join(hashIfSmall(scaled(base.select(col("id").as("id_b"), col("hsl").as("sh_b")), "id_b")), "id_b")
-      .withColumn(
-        "jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"),
-      )
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    // intra-cluster expansion: identical sets are Jaccard 1.0 exactly
-    // (array_intersect == array_union on the deduped hash space); the
-    // empty-set guard preserves the uncollapsed plan's NaN-drop
-    val intra = members
-      .where(col("nonempty"))
-      .as("a")
-      .join(
-        members.where(col("nonempty")).as("b"),
-        col("a.rid") === col("b.rid") && col("a.id") < col("b.id"),
-      )
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), lit(1.0).as("jaccard"))
-      .where(lit(1.0) >= threshold)
-    // cross-cluster expansion: every member pair inherits its rep
-    // pair's Jaccard (identical sets ⇒ identical intersections)
-    val inter = repPairs
-      .join(hashIfSmall(members.select(col("rid").as("id_a"), col("id").as("ma"))), "id_a")
-      .join(hashIfSmall(members.select(col("rid").as("id_b"), col("id").as("mb"))), "id_b")
-      .select(
-        least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"),
-        col("jaccard"),
-      )
-    LshStages(members, reps, cand, repPairs, intra.unionByName(inter))
+  /** Per exact-set group (rows of (__hk, id, __ne, hsl, bands), ids
+    * ascending, nulls first): the representative is the first non-null
+    * id. At the group's end, one row per non-null band hash of the
+    * representative: (band, row number within the group, rid, its
+    * members' ids, the ids of those whose set is non-empty, its hsl).
+    * Null ids are no members.
+    */
+  private final class ExactSetKernel(hslType: DataType) extends ScanKernel {
+    private var rep: InternalRow = null
+    private val members = new scala.collection.mutable.ArrayBuilder.ofLong
+    private val nonEmpty = new scala.collection.mutable.ArrayBuilder.ofLong
+
+    def reset(key: InternalRow): Unit = { rep = null; members.clear(); nonEmpty.clear() }
+
+    def step(row: InternalRow, out: ScanOut): Unit = if (!row.isNullAt(1)) {
+      if (rep == null) rep = row.copy()
+      members += row.getLong(1)
+      if (!row.isNullAt(2) && row.getBoolean(2)) nonEmpty += row.getLong(1)
+    }
+
+    def flush(out: ScanOut): Unit = if (rep != null && !rep.isNullAt(4)) {
+      val ms = UnsafeArrayData.fromPrimitiveArray(members.result())
+      val ne = UnsafeArrayData.fromPrimitiveArray(nonEmpty.result())
+      val bs = rep.getArray(4)
+      var i = 0
+      var k = 0
+      while (i < bs.numElements()) {
+        if (!bs.isNullAt(i)) {
+          val w = out.begin()
+          w.write(0, bs.getUTF8String(i))
+          w.write(1, k)
+          w.write(2, rep.getLong(1))
+          out.arrayData(3, ms)
+          out.arrayData(4, ne)
+          out.copy(5, rep, 3, hslType)
+          out.emit()
+          k += 1
+        }
+        i += 1
+      }
+    }
+  }
+
+  /** Per band bucket (rows of [[ExactSetKernel]], representatives
+    * ascending). A representative's first band row also carries its
+    * cluster's intra pairs: identical sets are Jaccard 1.0 exactly
+    * (array_intersect == array_union on the deduped hash space), and
+    * empty sets are never paired (0/0); emitted whatever the bucket's
+    * fate, when 1.0 passes the threshold. A bucket of at most
+    * `maxBucket` rows pairs its representatives a < b, keeps a pair
+    * whose Jaccard (Spark's own expression) is >= `threshold`, and
+    * emits every member pair of the two clusters at that Jaccard, as
+    * (least, greatest). Output streams out lazily, so a bucket's
+    * pairs are never held at once.
+    */
+  private final class BucketKernel(maxBucket: Int, threshold: Double, jaccard: Expression)
+      extends ScanKernel {
+    private val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    private var n = 0
+    private val intra = 1.0 >= threshold
+
+    def reset(key: InternalRow): Unit = { rows.clear(); n = 0 }
+
+    def step(row: InternalRow, out: ScanOut): Unit = {
+      n += 1
+      if (n <= maxBucket) rows += row.copy() else rows.clear()
+      if (intra && row.getInt(1) == 0) {
+        val ne = row.getArray(4).toLongArray()
+        out.stream(for {
+          i <- Iterator.range(0, ne.length)
+          j <- Iterator.range(i + 1, ne.length) if ne(i) < ne(j)
+        } yield () => { out.w.write(0, ne(i)); out.w.write(1, ne(j)); out.w.write(2, 1.0) })
+      }
+    }
+
+    def flush(out: ScanOut): Unit = if (n <= maxBucket) {
+      val g = rows.toArray
+      val both = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
+      out.stream(for {
+        i <- Iterator.range(0, g.length)
+        j <- Iterator.range(i + 1, g.length) if g(i).getLong(2) < g(j).getLong(2)
+        jac <- {
+          both.update(0, g(i).getArray(5))
+          both.update(1, g(j).getArray(5))
+          val v = jaccard.eval(both)
+          if (v != null && org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+              .compareDoubles(v.asInstanceOf[Double], threshold) >= 0) Iterator.single(v.asInstanceOf[Double])
+          else Iterator.empty
+        }
+        ma <- g(i).getArray(3).toLongArray().iterator
+        mb <- g(j).getArray(3).toLongArray().iterator
+      } yield () => { out.w.write(0, math.min(ma, mb)); out.w.write(1, math.max(ma, mb)); out.w.write(2, jac) })
+    }
   }
 
   /** MinHash+LSH near-dup pairs on character 5-shingles. */

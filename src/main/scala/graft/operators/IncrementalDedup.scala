@@ -112,7 +112,7 @@ object IncrementalDedup {
     val corpusBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     val docsIn = if (corpusBytes <= (64L << 20)) docs else graft.sources.Par.spread(docs)
     // hsl payloads are hash32 values (32-bit in int64 — they DO
-    // compress; Dedup.lshStages note, r18 isolated A/B): session codec
+    // compress; Dedup.lshJaccardPairs note, r18 isolated A/B): session codec
     val sh = graft.sources.Checkpoint
       .tableGated(shingled(docsIn, idCol, textCol), "incr-build-sh", Dedup.shingleBarrierLeafBytes)
     val keyed = graft.sources.Checkpoint.tableGated(keyedOf(sh), "incr-build-keyed")

@@ -274,7 +274,11 @@ object Similarity {
     * ([[kmeansRound]]: inline-argmax assignment + one primitive
     * vector-sum pass per round, no shuffle inside the inline gate).
     * Cells that lose all members drop out (standard k-means
-    * shrinkage).
+    * shrinkage). Ranking is `row_number` semantics without a window:
+    * a query's probe cells come from the centroid matrix per row
+    * (highest cosine, then smallest cent_id), and its top `k`
+    * candidates (highest score, then smallest neighbor id) from one
+    * keyed scan per query.
     *
     * nCells = 0 derives √N cells (the classic IVF balance point:
     * probe cost ≈ cell size ≈ √N) from a metadata-cheap count.
@@ -296,33 +300,82 @@ object Similarity {
     // row over-estimate at d=512, §6z). √ halves the estimate's
     // error and the IVF balance point is flat around its optimum, so
     // a 2-4× N error moves probe cost by well under 2×.
-    val cells =
-      if (nCells > 0) nCells
-      else VectorIndex.sqrtCellsFromStats(emb.select(col(idCol), col(vecCol)), vecCol)
     val nv = withNormalized(emb.select(col(idCol).as("id"), col(vecCol).as("v")), "v", "nv")
       .select(col("id"), col("nv"))
-    val seed = nv.where(col("id") < cells).select(col("id").as("cent_id"), col("nv").as("cv"))
-    val cents = (0 until kmeansIters).foldLeft(seed) { (c, _) => kmeansRound(nv, c) }
+    val cells =
+      if (nCells > 0) nCells
+      else VectorIndex.sqrtCellsFromStats(emb.select(col(idCol), col(vecCol)), vecCol, nv)
+    val seed = seedsBelow(nv, cells,
+      nv.where(col("id") < cells).select(col("id").as("cent_id"), col("nv").as("cv")))
+    val cents = kmeans(nv, seed, kmeansIters)
     // cell assignment: nearest centroid by cosine with the SMALLEST
-    // centroid id tiebreak — per-row inline argmax at ≤4096 cells
-    // (see assignToCells), the join + max_by partial-agg form above
+    // centroid id tiebreak — per-row inline argmax inside the inline
+    // gate (see assignToCells), the join + max_by form past it
     val assigned = assignToCells(nv, cents)
-    // queries probe their nProbe nearest cells
-    val qProbe = nv
-      .where(col("id") < nQueries)
-      .join(broadcast(cents), lit(true))
-      .withColumn("cs", dotNorm(col("nv"), col("cv")))
-      .withColumn("r", row_number().over(Window.partitionBy(col("id")).orderBy(col("cs").desc, col("cent_id"))))
-      .where(col("r") <= nProbe)
-      .select(col("id").as("query_id"), col("nv").as("qv"), col("cent_id").as("cell"))
-    val wRank = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id"))
-    assigned
-      .join(broadcast(qProbe), Seq("cell"))
-      .where(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("neighbor_id"), dotNorm(col("qv"), col("nv")).as("score"))
-      .withColumn("rnk", row_number().over(wRank))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("score"))
+    // queries probe their nProbe nearest cells: a per-row ranking over
+    // the centroid matrix already held for the inline assignment, or a
+    // keyed top-n over the query × centroid product past the gate
+    val queries = nv.where(col("id") < nQueries)
+    val qProbe = cents match {
+      case Left((ids, mat, dim)) =>
+        queries.select(
+          col("id").as("query_id"),
+          col("nv").as("qv"),
+          explode(graft.functions.VectorExprs.nearestCells(col("nv"), ids, mat, dim, nProbe)).as("cell"),
+        )
+      case Right(table) =>
+        firstN(
+          queries.join(broadcast(table), lit(true))
+            .select(col("id"), col("nv"), col("cent_id"), dotNorm(col("nv"), col("cv")).as("cs")),
+          Seq(col("id")), Seq(col("cs").desc, col("cent_id")), nProbe,
+          Seq("query_id" -> "id", "qv" -> "nv", "cell" -> "cent_id"),
+        )
+    }
+    firstN(
+      assigned
+        .join(broadcast(qProbe), Seq("cell"))
+        .where(col("id") =!= col("query_id"))
+        .select(col("query_id"), col("id").as("neighbor_id"), dotNorm(col("qv"), col("nv")).as("score")),
+      Seq(col("query_id")), Seq(col("score").desc, col("neighbor_id")), k,
+      Seq("query_id" -> "query_id", "neighbor_id" -> "neighbor_id", "rnk" -> "", "score" -> "score"),
+    )
+  }
+
+  /** The first `n` rows of each `keys` group in `order` — a
+    * `row_number()` window filtered to `<= n` — as one keyed scan. The
+    * output fields are (name, input column) pairs; an empty input
+    * column is the 1-based int rank.
+    */
+  private def firstN(
+      df: DataFrame,
+      keys: Seq[Column],
+      order: Seq[Column],
+      n: Int,
+      fields: Seq[(String, String)],
+  ): DataFrame = {
+    import org.apache.spark.sql.types._
+    val from = fields.map { case (_, c) => if (c.isEmpty) -1 else df.schema.fieldIndex(c) }
+    val types = from.map(i => if (i < 0) IntegerType else df.schema(i).dataType)
+    val out = StructType(fields.zip(from).map { case ((name, _), i) =>
+      if (i < 0) StructField(name, IntegerType, nullable = false) else df.schema(i).copy(name = name)
+    })
+    graft.plans.KeyedScan(df, keys, order, out)(() => new graft.plans.ScanKernel {
+      private var rank = 0
+      def reset(key: org.apache.spark.sql.catalyst.InternalRow): Unit = rank = 0
+      def step(row: org.apache.spark.sql.catalyst.InternalRow, o: graft.plans.ScanOut): Unit = {
+        rank += 1
+        if (rank <= n) {
+          val w = o.begin()
+          var f = 0
+          while (f < from.length) {
+            if (from(f) < 0) w.write(f, rank) else o.copy(f, row, from(f), types(f))
+            f += 1
+          }
+          o.emit()
+        }
+      }
+      def flush(o: graft.plans.ScanOut): Unit = ()
+    })
   }
 
   /** Final nearest-centroid assignment, smallest-cent_id tiebreak.
@@ -339,9 +392,9 @@ object Similarity {
     * the same double comparisons, so cells are bit-equal (pinned in
     * VectorIndexSpec / StreamingVectorIndexSpec).
     */
-  private[graft] def assignToCells(nv: DataFrame, cents: DataFrame): DataFrame = {
-    VectorIndex.collectCentroidsInline(cents.select(col("cent_id"), col("cv"))) match {
-      case Some((ids, mat, dim)) =>
+  private[graft] def assignToCells(nv: DataFrame, cents: Cents): DataFrame = {
+    cents match {
+      case Left((ids, mat, dim)) =>
         // r18: past tiledAssignMinCells the per-row expression pays
         // one latency-bound FMA chain per dot AND re-streams the
         // whole centroid matrix from cache per row (the ~43 s
@@ -358,8 +411,8 @@ object Similarity {
         if (tiledOk) assignToCellsTiled(slim, ids, mat, dim)
         else
           nv.select(col("id"), col("nv"), VectorIndex.inlineCellExpr(ids, mat, dim, col("nv")).as("cell"))
-      case None =>
-        assignToCellsJoin(nv, cents)
+      case Right(table) =>
+        assignToCellsJoin(nv, table)
     }
   }
 
@@ -443,85 +496,173 @@ object Similarity {
     }
   }
 
+  /** A centroid table: the driver's primitive arrays (ids, row-major
+    * ids × dim matrix, dim) inside the inline gate
+    * ([[VectorIndex.maxInlineCells]] / [[VectorIndex.maxInlineBytes]]),
+    * else a (cent_id, cv) DataFrame for the join forms.
+    */
+  private[graft] type Cents = Either[(Array[Long], Array[Double], Int), DataFrame]
+
+  /** `cents` (cent_id, cv) collected into driver arrays when it fits
+    * the inline gate. */
+  private[graft] def centroids(cents: DataFrame): Cents =
+    VectorIndex.collectCentroidsInline(cents.select(col("cent_id"), col("cv"))).toLeft(cents)
+
+  /** `iters` spherical k-means rounds from `seed`. */
+  private[operators] def kmeans(nv: DataFrame, seed: Cents, iters: Int): Cents =
+    (0 until iters).foldLeft(seed) { (c, _) => kmeansRound(nv, c) }
+
+  /** The rows of a normalized (id, nv) frame. Every driver-side pass
+    * over the corpus — the row count, the first row, the seed picks,
+    * the k-means sums — reads this one plan, so they share one
+    * generated stage.
+    */
+  private[graft] def normalizedRows(nv: DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    nv.select(col("id"), col("nv")).queryExecution.toRdd
+
+  /** Seed centroids: the (id, nv) rows with `id < below` (null ids
+    * excluded), in scan order — `table` past the inline gate. */
+  private def seedsBelow(nv: DataFrame, below: Long, table: => DataFrame): Cents = {
+    val cap = VectorIndex.maxInlineCells + 1
+    val rows = normalizedRows(nv)
+      .mapPartitions(_.filter(r => !r.isNullAt(0) && r.getLong(0) < below).map(_.copy()).take(cap))
+      .collect()
+      .take(cap)
+    VectorIndex.inlineRows(rows).toLeft(table)
+  }
+
+  /** Seed centroids: the `n` (id, nv) rows of smallest id (nulls
+    * first, as `orderBy(id).limit(n)` picks them) — `table` past the
+    * inline gate. */
+  private def seedsSmallest(nv: DataFrame, n: Int, table: => DataFrame): Cents = {
+    val byId: Ordering[org.apache.spark.sql.catalyst.InternalRow] = (a, b) =>
+      if (a.isNullAt(0)) { if (b.isNullAt(0)) 0 else -1 }
+      else if (b.isNullAt(0)) 1
+      else java.lang.Long.compare(a.getLong(0), b.getLong(0))
+    val rows = if (n <= 0) Array.empty[org.apache.spark.sql.catalyst.InternalRow]
+      else normalizedRows(nv).map(_.copy()).takeOrdered(n)(byId)
+    VectorIndex.inlineRows(rows).toLeft(table)
+  }
+
   /** One spherical k-means round. Assignment is the shared
-    * [[assignToCells]]; the centroid means run through
-    * [[VectorAgg.sumByKey]] — ONE primitive-buffer pass over the
-    * corpus, no posexplode (the r16-named 40-60 s/round term: the
-    * explode form hash-aggregated N·d (cell, pos, x) rows, ~2×10⁹
-    * per round at 2M×d512). The mean/normalize Column tree is
-    * op-for-op the explode form's (`avg` = Σ/n in the same
-    * per-partition row order, null where a position had no non-null
-    * contributions; then √Σm² and the per-element divide), so
-    * refined centroids match to the partial-merge-order ulp — the
-    * same nondeterminism class both forms always had.
+    * [[assignToCells]] argmax; inside the inline gate the centroid
+    * sums run through [[VectorAgg.assignSumByMatrix]] — ONE
+    * primitive-buffer pass over the corpus, no posexplode (the
+    * r16-named 40-60 s/round term: the explode form hash-aggregated
+    * N·d (cell, pos, x) rows, ~2×10⁹ per round at 2M×d512) — and the
+    * mean→sphere step runs on the driver's sums ([[sphereMeans]]),
+    * with no plan of its own. Refined centroids match the explode
+    * form to the partial-merge-order ulp — the same nondeterminism
+    * class both forms always had.
     *
-    * Past the inline gate ([[VectorIndex.maxInlineCells]] /
-    * [[VectorIndex.maxInlineBytes]] — where the driver could not hold
+    * Past the inline gate (where the driver could not hold
     * keys × dim sums anyway) the distributed explode form remains.
     *
-    * NOTE: the fast path is EAGER (the sum pass runs at call time);
-    * callers fold rounds sequentially, which is also what the lazy
-    * form's checkpoint gates forced.
+    * NOTE: the inline round is EAGER (the sum pass runs at call time);
+    * callers fold rounds sequentially.
     */
-  private[operators] def kmeansRound(nv: DataFrame, cents: DataFrame): DataFrame = {
-    VectorIndex.collectCentroidsInline(cents.select(col("cent_id"), col("cv"))) match {
-      case Some((ids, mat, dim)) =>
-        // r18: row-tiled fused argmax+sum when the element type rules
-        // out null elements (NormalizeExpr output — every caller):
-        // 8 independent FMA chains per centroid row instead of the
-        // expression form's one latency-bound chain per dot, and the
-        // centroid matrix streams from cache once per 8 rows instead
-        // of once per row. Same dots, same comparator, same row-order
-        // sums — bit-equal (pinned); any other element shape keeps
-        // the expression + sumByKey pass.
-        val vecOnly = nv.select(col("nv"))
-        val fusable = vecOnly.schema(0).dataType match {
-          case org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.FloatType | org.apache.spark.sql.types.DoubleType,
-                false) => true
-          case _ => false
-        }
-        val sums =
-          if (fusable) VectorAgg.assignSumByMatrix(vecOnly, ids, mat, dim)
-          else
-            VectorAgg.sumByKey(nv.select(
-              VectorIndex.inlineCellExpr(ids, mat, dim, col("nv")).as("cell"),
-              col("nv"),
-            ))
-        normalizeMeans(
-          VectorAgg.sumsToDF(nv.sparkSession, sums)
-            .select(col("k").as("cell"), VectorAgg.meanCol(col("s"), col("c")).as("mv"))
-        )
-      case None =>
-        val assigned = assignToCellsJoin(nv, cents)
-        normalizeMeans(
-          assigned
-            .select(col("cell"), posexplode(col("nv")).as(Seq("pos", "x")))
-            .groupBy(col("cell"), col("pos"))
-            .agg(avg(col("x")).as("m"))
-            .groupBy(col("cell"))
-            .agg(
-              transform(
-                array_sort(collect_list(struct(col("pos"), col("m")))),
-                s => s.getField("m"),
-              ).as("mv")
-            )
-        )
+  private[operators] def kmeansRound(nv: DataFrame, cents: Cents): Cents = cents match {
+    case Left((ids, mat, dim)) =>
+      // r18: row-tiled fused argmax+sum when the element type rules
+      // out null elements (NormalizeExpr output — every caller):
+      // 8 independent FMA chains per centroid row instead of the
+      // expression form's one latency-bound chain per dot, and the
+      // centroid matrix streams from cache once per 8 rows instead
+      // of once per row. Same dots, same comparator, same row-order
+      // sums — bit-equal (pinned); any other element shape keeps
+      // the expression + sumByKey pass.
+      val fusable = nv.schema("nv").dataType match {
+        case org.apache.spark.sql.types.ArrayType(
+              org.apache.spark.sql.types.FloatType | org.apache.spark.sql.types.DoubleType,
+              false) => true
+        case _ => false
+      }
+      val sums =
+        if (fusable) VectorAgg.assignSumByMatrix(nv.select(col("id"), col("nv")), ids, mat, dim)
+        else
+          VectorAgg.sumByKey(nv.select(
+            VectorIndex.inlineCellExpr(ids, mat, dim, col("nv")).as("cell"),
+            col("nv"),
+          ))
+      val (keys, means) = sphereMeans(sums)
+      inlineCents(nv.sparkSession, keys, means)
+    case Right(table) =>
+      centroids(table) match {
+        case inline @ Left(_) => kmeansRound(nv, inline)
+        case Right(_) =>
+          val assigned = assignToCellsJoin(nv, table)
+          Right(
+            assigned
+              .select(col("cell"), posexplode(col("nv")).as(Seq("pos", "x")))
+              .groupBy(col("cell"), col("pos"))
+              .agg(avg(col("x")).as("m"))
+              .groupBy(col("cell"))
+              .agg(
+                transform(
+                  array_sort(collect_list(struct(col("pos"), col("m")))),
+                  s => s.getField("m"),
+                ).as("mv")
+              )
+              .withColumn("__nrm", sqrt(dot(col("mv"), col("mv"))))
+              .where(col("__nrm") > 0)
+              .select(col("cell").as("cent_id"), transform(col("mv"), x => x / col("__nrm")).as("cv"))
+          )
+      }
+  }
+
+  /** The mean→sphere step of a k-means round on the driver's sums, in
+    * the sums' iteration order, for the keys `keep` accepts: op for op
+    * the Column form (`VectorAgg.meanCol`, √Σm², drop cells whose norm
+    * is not > 0, per-element divide), so the doubles are bit-equal. A
+    * position no member reached reads 0.0, as the dot and the
+    * collected matrix read that form's null mean.
+    */
+  private[operators] def sphereMeans(
+      sums: scala.collection.mutable.LongMap[VectorAgg.VecSum],
+      keep: Long => Boolean = _ => true,
+  ): (Array[Long], Array[Array[Double]]) = {
+    val kept = sums.iterator.filter(e => keep(e._1)).flatMap { case (k, v) =>
+      val m = Array.tabulate(v.s.length)(i => if (v.c(i) == 0L) 0.0 else v.s(i) / v.c(i).toDouble)
+      var ss = 0.0
+      m.foreach(x => ss += x * x)
+      val nrm = math.sqrt(ss)
+      // Spark's `>` on doubles: NaN is greater than everything
+      if (nrm > 0 || nrm.isNaN) Some(k -> Array.tabulate(m.length)(i => if (v.c(i) == 0L) 0.0 else m(i) / nrm))
+      else None
+    }.toArray
+    (kept.map(_._1), kept.map(_._2))
+  }
+
+  /** Driver-held centroids: inline arrays inside the gate, else a table
+    * for the join forms. */
+  private def inlineCents(spark: org.apache.spark.sql.SparkSession, ids: Array[Long], vecs: Array[Array[Double]]): Cents = {
+    val dim = vecs.headOption.fold(0)(_.length)
+    if (ids.isEmpty || ids.length.toLong * dim * 8 > VectorIndex.maxInlineBytes) Right(centroidTable(spark, ids, vecs))
+    else {
+      vecs.foreach(v => require(v.length == dim, s"ragged centroid table: ${v.length} vs $dim"))
+      Left((ids, vecs.flatten, dim))
     }
   }
 
-  /** The shared mean→sphere tail of every k-means round: √Σm², drop
-    * zero-norm cells, per-element divide — unchanged from the explode
-    * form (op-for-op, oracle-compatible).
-    */
-  private def normalizeMeans(means: DataFrame): DataFrame =
-    means
-      .withColumn("__nrm", sqrt(dot(col("mv"), col("mv"))))
-      .where(col("__nrm") > 0)
-      .select(
-        col("cell").as("cent_id"),
-        transform(col("mv"), x => x / col("__nrm")).as("cv"),
-      )
+  /** A (cent_id, cv) table of driver-held centroids, typed as the
+    * k-means rounds' Column form typed it. */
+  private def centroidTable(spark: org.apache.spark.sql.SparkSession, ids: Array[Long], vecs: Array[Array[Double]]): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(
+      java.util.Arrays.asList(ids.indices.map(r => org.apache.spark.sql.Row(ids(r), vecs(r).toSeq)): _*),
+      StructType(Seq(
+        StructField("cent_id", LongType, nullable = false),
+        StructField("cv", ArrayType(DoubleType, containsNull = true), nullable = true),
+      )),
+    )
+  }
+
+  /** Centroids as a (cent_id, cv) table. */
+  private[operators] def centroidTable(spark: org.apache.spark.sql.SparkSession, cents: Cents): DataFrame =
+    cents.fold(
+      { case (ids, mat, dim) => centroidTable(spark, ids, ids.indices.map(r => mat.slice(r * dim, (r + 1) * dim)).toArray) },
+      identity,
+    )
 
   /** Embedding near-duplicate pairs: sharing an LSH bucket in any
     * table and cosine above `threshold`.
@@ -542,25 +683,7 @@ object Similarity {
       dim: Int = 0,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-  ): DataFrame = cosineStages(emb, threshold, nTables, nPlanes, probeBits, dim, idCol, vecCol).pairs
-
-  /** [[cosinePairs]] with its intermediate stages exposed — the
-    * embedding analog of [[Dedup.lshStages]]: the measured pair-growth
-    * account ([[graft.EmbedAccount]]) counts each stage so decade
-    * claims about this operator come from the operator itself.
-    */
-  private[graft] case class CosineStages(buckets: DataFrame, cand: DataFrame, pairs: DataFrame)
-
-  private[graft] def cosineStages(
-      emb: DataFrame,
-      threshold: Double = 0.9,
-      nTables: Int = 0,
-      nPlanes: Int = 0,
-      probeBits: Int = 0,
-      dim: Int = 0,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-  ): CosineStages = {
+  ): DataFrame = {
     val (t, p, pb) =
       if (nTables > 0 && nPlanes > 0) (nTables, nPlanes, probeBits)
       else autoLshParams(emb.count())
@@ -605,13 +728,12 @@ object Similarity {
     // SHUFFLE_HASH: a sort-merge join would SORT the pair+vector
     // payload — a second on-disk copy of the largest shuffle in the
     // operator; hash-building the slim vector side avoids it
-    val pairs = candIds
+    candIds
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")).hint("SHUFFLE_HASH"), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")).hint("SHUFFLE_HASH"), "id_b")
       .withColumn("s", cosine(col("v_a"), col("v_b")))
       .where(col("s") >= threshold)
       .select(col("id_a"), col("id_b"), col("s").as("score"))
-    CosineStages(bk, cand, pairs)
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
@@ -653,11 +775,8 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
   ): DataFrame = {
-    val cells =
-      if (nCells > 0) nCells
-      else math.max(16, (emb.count() / 256L).min(Int.MaxValue.toLong).toInt)
     val (assigned, _) =
-      cellPartition(emb.select(col(idCol).as("id"), col(vecCol).as("v")), cells, kmeansIters)
+      cellPartition(emb.select(col(idCol).as("id"), col(vecCol).as("v")), nCells, kmeansIters)
     // the grouping shuffle ships the RAW vector (half the bytes of
     // the f64 normalized copy at float input — the shuffle is this
     // operator's dominant cost at 2M d=512, jstack-measured §6z);
@@ -752,16 +871,19 @@ object Similarity {
     */
   private def cellPartition(
       raw: DataFrame,
-      cells: Int,
+      nCells: Int,
       kmeansIters: Int,
-  ): (DataFrame, DataFrame) = {
+  ): (DataFrame, Cents) = {
     val nv = withNormalized(raw, "v", "nv").select(col("id"), col("nv"))
+    // nCells = 0: max(16, N/256) from an exact count of the corpus
+    val cells =
+      if (nCells > 0) nCells
+      else math.max(16, (normalizedRows(nv).count() / 256L).min(Int.MaxValue.toLong).toInt)
     if (cells <= directAssignMax) {
-      val cents = (0 until kmeansIters).foldLeft(
-        nv.orderBy(col("id")).limit(cells).select(col("id").as("cent_id"), col("nv").as("cv"))
-      ) { (c, _) => kmeansRound(nv, c) }
-      VectorIndex.collectCentroidsInline(cents.select(col("cent_id"), col("cv"))) match {
-        case Some((ids, mat, dim)) =>
+      val seed = seedsSmallest(nv, cells,
+        nv.orderBy(col("id")).limit(cells).select(col("id").as("cent_id"), col("nv").as("cv")))
+      kmeans(nv, seed, kmeansIters) match {
+        case cents @ Left((ids, mat, dim)) =>
           val assigned = raw.select(
             col("id"),
             col("v").as("vec"),
@@ -770,10 +892,10 @@ object Similarity {
               .as("cell"),
           )
           (assigned, cents)
-        case None =>
+        case cents @ Right(table) =>
           // ≤ directAssignMax cells but over the byte cap (huge dim):
           // slim join argmax, raw vector re-joined by id
-          val assigned = assignToCellsJoin(nv, cents)
+          val assigned = assignToCellsJoin(nv, table)
             .select(col("id"), col("cell"))
             .join(raw, Seq("id"))
             .select(col("id"), col("v").as("vec"), col("cell"))
@@ -809,15 +931,12 @@ object Similarity {
       vecCol: String = "embedding",
   ): DataFrame = {
     require(removeFrac >= 0.0 && removeFrac < 1.0, "removeFrac in [0, 1)")
-    val cells =
-      if (nCells > 0) nCells
-      else math.max(16, (emb.count() / 256L).min(Int.MaxValue.toLong).toInt)
     val (assigned, cents) =
-      cellPartition(emb.select(col(idCol).as("id"), col(vecCol).as("v")), cells, kmeansIters)
+      cellPartition(emb.select(col(idCol).as("id"), col(vecCol).as("v")), nCells, kmeansIters)
     val wCell = Window.partitionBy(col("cell")).orderBy(col("proto_sim").desc, col("id"))
     val wN = Window.partitionBy(col("cell"))
     assigned
-      .join(cents, col("cell") === col("cent_id"))
+      .join(centroidTable(emb.sparkSession, cents), col("cell") === col("cent_id"))
       // vec is RAW — normalize inline (bit-equal to the f64 copy)
       .withColumn(
         "proto_sim",
@@ -891,22 +1010,30 @@ object Similarity {
       nv: DataFrame,
       cells: Int,
       kmeansIters: Int,
-  ): (DataFrame, DataFrame) = {
+  ): (DataFrame, Cents) = {
     val spark = nv.sparkSession
     val coarse = math.max(16, math.ceil(math.sqrt(cells.toDouble)).toInt)
     val finePer = math.max(1, math.ceil(cells.toDouble / coarse).toInt)
-    val ccents = (0 until kmeansIters).foldLeft(
-      nv.orderBy(col("id")).limit(coarse).select(col("id").as("cent_id"), col("nv").as("cv"))
-    ) { (c, _) => kmeansRound(nv, c) }
-    // the coarse table is √cells rows (≤ ~46341 at any legal nCells) —
-    // collected PRIMITIVELY (InternalRow + toDoubleArray; the boxed
-    // Row.getSeq decode held ~5× the bytes as driver objects)
-    val ccRows = collectRowsPrimitive(ccents.select(col("cent_id"), col("cv")))
-    val dim = ccRows(0).getArray(1).numElements()
-    val coarseIds = ccRows.map(_.getLong(0))
-    val coarseMat = new Array[Double](coarseIds.length * dim)
-    ccRows.zipWithIndex.foreach { case (r, i) =>
-      System.arraycopy(r.getArray(1).toDoubleArray(), 0, coarseMat, i * dim, dim)
+    val ccents = kmeans(
+      nv,
+      seedsSmallest(nv, coarse,
+        nv.orderBy(col("id")).limit(coarse).select(col("id").as("cent_id"), col("nv").as("cv"))),
+      kmeansIters,
+    )
+    val (coarseIds, coarseMat, dim) = ccents match {
+      case Left(inline) => inline
+      case Right(table) =>
+        // the coarse table is √cells rows (≤ ~46341 at any legal
+        // nCells) — collected PRIMITIVELY (InternalRow +
+        // toDoubleArray; the boxed Row.getSeq decode held ~5× the
+        // bytes as driver objects)
+        val ccRows = collectRowsPrimitive(table.select(col("cent_id"), col("cv")))
+        val d = ccRows(0).getArray(1).numElements()
+        val m = new Array[Double](ccRows.length * d)
+        ccRows.zipWithIndex.foreach { case (r, i) =>
+          System.arraycopy(r.getArray(1).toDoubleArray(), 0, m, i * d, d)
+        }
+        (ccRows.map(_.getLong(0)), m, d)
     }
     val coarseExpr = VectorIndex.inlineCellExpr(coarseIds, coarseMat, dim, col("nv"))
     // The fine table fits the reference-object budget up to the
@@ -939,15 +1066,10 @@ object Similarity {
         // empty-segment coarse-id fallback — the join form's inner
         // join dropped those members from the round's means; replicate
         val valid = fineTab._1.toSet
-        val meansDf = normalizeMeans(
-          VectorAgg.sumsToDF(spark, sums, valid.contains)
-            .select(col("k").as("cell"), VectorAgg.meanCol(col("s"), col("c")).as("mv"))
-        )
-        entries = collectRowsPrimitive(meansDf).map { r =>
-          val cellId = r.getLong(0)
-          (Math.floorDiv(cellId, finePer.toLong), Math.floorMod(cellId, finePer.toLong).toInt,
-            r.getArray(1).toDoubleArray())
-        }
+        val (keys, means) = sphereMeans(sums, valid.contains)
+        entries = keys.indices.map { r =>
+          (Math.floorDiv(keys(r), finePer.toLong), Math.floorMod(keys(r), finePer.toLong).toInt, means(r))
+        }.toArray
         fineTab = buildFineStruct(coarseIds, finePer, dim, entries)
       }
       val assigned = raw.select(
@@ -963,7 +1085,7 @@ object Similarity {
       val cents = entries.toSeq
         .map { case (cid, fine, cv) => (cid * finePer + fine, cv) }
         .toDF("cent_id", "cv")
-      (assigned, cents)
+      (assigned, Right(cents))
     } else {
       // past the inline gate: join-form fine rounds + slim argmax
       // final assignment (the §6z byte rule: no SortAggregate ever
@@ -998,7 +1120,7 @@ object Similarity {
         (col("coarse").cast("long") * finePer + col("fine")).as("cent_id"),
         col("cv"),
       )
-      (assigned, cents)
+      (assigned, Right(cents))
     }
   }
 

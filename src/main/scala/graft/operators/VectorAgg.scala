@@ -156,8 +156,10 @@ object VectorAgg {
       dim: Int,
   ): scala.collection.mutable.LongMap[VecSum] = {
     val schema = nv.schema
-    require(schema.length == 1, s"assignSumByMatrix wants (vec), got ${schema.map(_.name)}")
-    val isFloat = schema(0).dataType match {
+    // the vector is the last column; any before it ride along unread
+    val vec = schema.length - 1
+    require(vec >= 0, "assignSumByMatrix wants (..., vec)")
+    val isFloat = schema(vec).dataType match {
       case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, false) => true
       case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType, false) => false
       case t => throw new IllegalArgumentException(
@@ -179,8 +181,8 @@ object VectorAgg {
 
       while (it.hasNext) {
         val row = it.next()
-        if (!row.isNullAt(0)) {
-          val arr = row.getArray(0)
+        if (!row.isNullAt(vec)) {
+          val arr = row.getArray(vec)
           val d = arr.numElements()
           val v =
             if (isFloat) {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity.{dotNorm, kmeansRound, withNormalized}
+import graft.operators.Similarity.{dotNorm, kmeans, withNormalized}
 
 /** Incremental (cross-run) vector index: a persisted IVF index over
   * an embedding corpus that NEW batches join without re-indexing the
@@ -94,8 +94,14 @@ object VectorIndex {
     */
   private[graft] def collectCentroidsInline(
       df: DataFrame
+  ): Option[(Array[Long], Array[Double], Int)] =
+    inlineRows(df.limit(maxInlineCells + 1).queryExecution.executedPlan.executeCollect())
+
+  /** [[collectCentroidsInline]] over already collected (key, vec)
+    * rows: `None` past the gate or when empty. */
+  private[graft] def inlineRows(
+      rows: Array[org.apache.spark.sql.catalyst.InternalRow]
   ): Option[(Array[Long], Array[Double], Int)] = {
-    val rows = df.limit(maxInlineCells + 1).queryExecution.executedPlan.executeCollect()
     if (rows.length > maxInlineCells || rows.isEmpty) return None
     val dim = rows(0).getArray(1).numElements()
     if (rows.length.toLong * dim * 8 > maxInlineBytes) return None
@@ -126,25 +132,12 @@ object VectorIndex {
   ): org.apache.spark.sql.Column =
     graft.functions.VectorExprs.nearestCellNative(nv, ids, mat, dim)
 
-  private[graft] def inlineCellExpr(
-      cents: Seq[(Long, Seq[Double])],
-      nv: org.apache.spark.sql.Column,
-  ): org.apache.spark.sql.Column = {
-    val dim = cents.head._2.length
-    graft.functions.VectorExprs.nearestCellNative(
-      nv,
-      cents.map(_._1).toArray,
-      cents.flatMap(_._2).toArray,
-      dim,
-    )
-  }
-
   /** Nearest-centroid cell per vector, smallest-cent_id tiebreak —
     * the shared [[Similarity.assignToCells]] (inline argmax at
     * ≤ [[maxInlineCells]], broadcast-join + max_by above it).
     */
   private def assignCells(nv: DataFrame, cents: DataFrame): DataFrame =
-    Similarity.assignToCells(nv, cents)
+    Similarity.assignToCells(nv, Similarity.centroids(cents))
 
   /** `cell` comes back as a partition column (directory value) —
     * type it BIGINT via an explicit read schema rather than a cast:
@@ -176,8 +169,16 @@ object VectorIndex {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
   ): Unit = {
-    buildIndexStaged(emb, dir, nCells, kmeansIters, idCol, vecCol)
-    ()
+    val nv = normalized(emb, idCol, vecCol)
+    val cells = if (nCells > 0) nCells else sqrtCellsFromStats(emb, vecCol, nv)
+    val seed = graft.sources.Checkpoint.tableGated(
+      nv.orderBy(col("id")).limit(cells).select(col("id").as("cent_id"), col("nv").as("cv")),
+      "vidx-seed",
+    )
+    val cents = kmeans(nv, Similarity.centroids(seed), kmeansIters)
+    val table = if (kmeansIters == 0) seed else Similarity.centroidTable(emb.sparkSession, cents)
+    table.write.mode("overwrite").parquet(s"$dir/centroids")
+    writeVectors(Similarity.assignToCells(nv, cents), dir, "overwrite", cells.toLong)
   }
 
   /** √N cell count from PLAN METADATA — no count() action (r9
@@ -189,64 +190,24 @@ object VectorIndex {
     * r15 EmbedProbe built at fd sf1 had 1817 cells for 15k vectors —
     * cell size ~8, and a 1817-entry centroid literal in every plan).
     * One row is read to size the vector column at its real length
-    * (the same one-row scan cosineStages uses for dim inference).
+    * (the same one-row scan cosinePairs uses for dim inference).
     */
-  private[graft] def sqrtCellsFromStats(emb: DataFrame, vecCol: String): Int = {
+  private[graft] def sqrtCellsFromStats(emb: DataFrame, vecCol: String, nv: DataFrame): Int = {
     val stats = emb.queryExecution.optimizedPlan.stats
     val estRows = stats.rowCount.map(_.toLong).getOrElse {
       val elemBytes = emb.schema(vecCol).dataType match {
         case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType, _) => 8L
         case _ => 4L
       }
-      val dim = emb.select(size(col(vecCol))).take(1).headOption.map(_.getInt(0)).getOrElse(0)
+      // the first row's length, read off the normalized (id, nv) pass
+      // every caller runs anyway (normalizing keeps the length; a null
+      // vector counts as no elements)
+      val dim = Similarity.normalizedRows(nv).take(1).headOption
+        .map(r => if (r.isNullAt(1)) 0 else r.getArray(1).numElements()).getOrElse(0)
       val rowWidth = math.max(1L, emb.schema.defaultSize.toLong + math.max(0, dim - 1) * elemBytes)
       stats.sizeInBytes.toLong / rowWidth
     }
     math.max(16, math.min(65536, math.round(math.sqrt(estRows.toDouble)).toInt))
-  }
-
-  /** [[buildIndex]] with its phases materialized and timed — the
-    * stage decomposition the embeddings decade artifact reports
-    * (r15 verdict #4). Each k-means round is checkpoint-gated, which
-    * is also a fix: the un-gated foldLeft re-executed round R-1's
-    * whole plan inside round R's `take` action AND again in the
-    * final centroid materialization (round 1 ran 3× at kmeansIters=2).
-    */
-  private[graft] def buildIndexStaged(
-      emb: DataFrame,
-      dir: String,
-      nCells: Int = 0,
-      kmeansIters: Int = 2,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-  ): Seq[(String, Double)] = {
-    val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      stages += ((name, (System.nanoTime() - t0) / 1e9))
-      r
-    }
-    val cells = timed("cells_estimate") {
-      if (nCells > 0) nCells else sqrtCellsFromStats(emb, vecCol)
-    }
-    val nv = normalized(emb, idCol, vecCol)
-    val seed = timed("normalize_seed") {
-      graft.sources.Checkpoint.tableGated(
-        nv.orderBy(col("id"))
-          .limit(cells)
-          .select(col("id").as("cent_id"), col("nv").as("cv")),
-        "vidx-seed",
-      )
-    }
-    val cents = (0 until kmeansIters).foldLeft(seed) { (c, round) =>
-      timed(s"kmeans_round_$round") {
-        graft.sources.Checkpoint.tableGated(kmeansRound(nv, c), s"vidx-round-$round")
-      }
-    }
-    timed("centroid_write")(cents.write.mode("overwrite").parquet(s"$dir/centroids"))
-    timed("assign_write")(writeVectors(assignCells(nv, cents), dir, "overwrite", cells.toLong))
-    stages.toSeq
   }
 
   /** Cell-partitioned vector write, pre-shuffled ON the partition

@@ -118,10 +118,10 @@ case class AsofJoinExec(
     val outputAttrs = output
 
     left.execute().zipPartitions(right.execute()) { (lIt, rIt0) =>
+      // one key projection per side, (by..., on): the group is its
+      // leading fields
       val lKeyProj = UnsafeProjection.create(lBy :+ lOn, leftOutput)
       val rKeyProj = UnsafeProjection.create(rBy :+ rOn, rightOutput)
-      val lGroupProj = UnsafeProjection.create(lBy, leftOutput)
-      val rGroupProj = UnsafeProjection.create(rBy, rightOutput)
       val rValProj = UnsafeProjection.create(rVals, rightOutput)
       val resultProj = UnsafeProjection.create(outputAttrs, outputAttrs)
       val ordering =
@@ -131,8 +131,9 @@ case class AsofJoinExec(
       val joined = new JoinedRow
 
       val rIt = rIt0.buffered
-      // backward state: latest right row seen with (group,key) <= current left
-      var lastGroup: UnsafeRow = null
+      // backward state: key and values of the latest right row seen
+      // with (group,key) <= current left
+      var lastKey: UnsafeRow = null
       var lastVal: UnsafeRow = null
       var lastKeyD = 0.0
 
@@ -140,15 +141,14 @@ case class AsofJoinExec(
 
       lIt.map { lRow =>
         val lKey = lKeyProj(lRow)
-        val lGroup = lGroupProj(lRow)
         val lNull = lKey.isNullAt(keyIdx)
         if (fwd && !near) {
           while (rIt.hasNext && ordering.compare(rKeyProj(rIt.head), lKey) < 0)
             rIt.next()
           val matched = rIt.hasNext && !lNull && {
-            val h = rIt.head
-            rGroupProj(h) == lGroup &&
-            (!needDist || inTol(readKey(rKeyProj(h), keyIdx) - readKey(lKey, keyIdx)))
+            val hk = rKeyProj(rIt.head)
+            AsofJoinExec.sameGroup(hk, lKey, keyTypes) &&
+            (!needDist || inTol(readKey(hk, keyIdx) - readKey(lKey, keyIdx)))
           }
           resultProj(joined(lRow, if (matched) rValProj(rIt.head) else nullRight))
         } else {
@@ -158,23 +158,22 @@ case class AsofJoinExec(
             // rows with null right keys are consumed but never match
             val rk = rKeyProj(r)
             if (!rk.isNullAt(keyIdx)) {
-              lastGroup = rGroupProj(r).copy()
+              lastKey = rk.copy()
               lastVal = rValProj(r).copy()
               if (needDist) lastKeyD = readKey(rk, keyIdx)
             }
           }
           // null left key sorts first -> never advances, never matches
           val lKeyD = if (needDist && !lNull) readKey(lKey, keyIdx) else 0.0
-          val bwdOk = lastGroup != null && lastGroup == lGroup && !lNull &&
+          val bwdOk = lastKey != null && AsofJoinExec.sameGroup(lastKey, lKey, keyTypes) && !lNull &&
             (!needDist || inTol(lKeyD - lastKeyD))
           if (!near) {
             resultProj(joined(lRow, if (bwdOk) lastVal else nullRight))
           } else {
             // forward candidate: the first unconsumed right row (> left key)
             val fwdOk = rIt.hasNext && !lNull && {
-              val h = rIt.head
-              val hk = rKeyProj(h)
-              rGroupProj(h) == lGroup && !hk.isNullAt(keyIdx) &&
+              val hk = rKeyProj(rIt.head)
+              AsofJoinExec.sameGroup(hk, lKey, keyTypes) && !hk.isNullAt(keyIdx) &&
               inTol(readKey(hk, keyIdx) - lKeyD)
             }
             val pick =
@@ -194,4 +193,18 @@ case class AsofJoinExec(
 
   override protected def withNewChildrenInternal(l: SparkPlan, r: SparkPlan): AsofJoinExec =
     copy(left = l, right = r)
+}
+
+object AsofJoinExec {
+
+  /** Do two key rows, (by..., on) of `types`, agree on every by field?
+    * Nulls equal nulls and values compare by bytes, as equality of the
+    * group-only rows did. */
+  private[plans] def sameGroup(a: UnsafeRow, b: UnsafeRow, types: Seq[DataType]): Boolean =
+    types.indices.init.forall { i =>
+      a.isNullAt(i) == b.isNullAt(i) && (a.isNullAt(i) || (types(i) match {
+        case BinaryType => java.util.Arrays.equals(a.getBinary(i), b.getBinary(i))
+        case t => a.get(i, t).equals(b.get(i, t))
+      }))
+    }
 }

@@ -8,9 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.{
   UnsafeProjection, UnsafeRow
 }
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** A per-key sequential kernel, one instance per task. For each key
@@ -29,20 +30,29 @@ trait ScanKernel {
 /** A kernel's output rows, written straight into UnsafeRow buffers: no
   * encoder, no generated projection. `begin` starts a row with every
   * field unset; a kernel sets each field once (or `setNullAt` it), then
-  * calls `emit`.
+  * calls `emit`. A kernel whose group output is too large to buffer
+  * hands a lazy sequence to `stream` instead: each element writes one
+  * row after `begin`, when the consumer asks for it. Emitted rows come
+  * out before streamed ones.
   */
 final class ScanOut(numFields: Int) {
   val w = new UnsafeRowWriter(numFields)
   private val rows = new java.util.ArrayDeque[UnsafeRow]()
+  private var later: Iterator[() => Unit] = Iterator.empty
 
   def begin(): UnsafeRowWriter = { w.reset(); w.zeroOutNullBytes(); w }
   def emit(): Unit = rows.add(w.getRow.copy())
-  def isEmpty: Boolean = rows.isEmpty
-  def next(): UnsafeRow = rows.poll()
+  def stream(writers: Iterator[() => Unit]): Unit = later = if (later.hasNext) later ++ writers else writers
+  def isEmpty: Boolean = rows.isEmpty && !later.hasNext
+  def next(): UnsafeRow =
+    if (!rows.isEmpty) rows.poll()
+    else { begin(); later.next()(); w.getRow }
 
-  def array(ordinal: Int, values: Array[Double]): Unit = {
+  def array(ordinal: Int, values: Array[Double]): Unit = arrayData(ordinal, UnsafeArrayData.fromPrimitiveArray(values))
+
+  def arrayData(ordinal: Int, values: UnsafeArrayData): Unit = {
     val at = w.cursor()
-    w.write(UnsafeArrayData.fromPrimitiveArray(values))
+    w.write(values)
     w.setOffsetAndSizeFromPreviousCursor(ordinal, at)
   }
 
@@ -60,6 +70,7 @@ final class ScanOut(numFields: Int) {
       case ByteType => w.write(ordinal, row.getByte(from))
       case BinaryType => w.write(ordinal, row.getBinary(from))
       case t: DecimalType => w.write(ordinal, row.getDecimal(from, t.precision, t.scale), t.precision, t.scale)
+      case _: ArrayType => arrayData(ordinal, row.getArray(from).asInstanceOf[UnsafeArrayData])
       case other => throw new IllegalArgumentException(s"keyed scan cannot copy a $other field")
     }
 }
@@ -76,14 +87,14 @@ final class ScanOut(numFields: Int) {
   * Null keys: a null is a key value like any other. Rows whose key
   * expressions are all equal, nulls included, form one group, as in
   * GROUP BY (hash partitioning sends them to one task and the sort
-  * puts them next to each other). Null values in the order columns
-  * sort first within their group; what a null means is the kernel's
-  * business.
+  * puts them next to each other). Null values in an ascending order
+  * column sort first within their group, in a descending one last;
+  * what a null means is the kernel's business.
   */
 case class KeyedScanPlan(
     child: LogicalPlan,
     keys: Seq[Expression],
-    order: Seq[Expression],
+    order: Seq[SortOrder],
     newKernel: () => ScanKernel,
     output: Seq[Attribute],
     partitions: Option[Int],
@@ -107,7 +118,7 @@ object KeyedScanStrategy extends org.apache.spark.sql.execution.SparkStrategy {
 case class KeyedScanExec(
     child: SparkPlan,
     keys: Seq[Expression],
-    order: Seq[Expression],
+    order: Seq[SortOrder],
     newKernel: () => ScanKernel,
     output: Seq[Attribute],
     partitions: Option[Int],
@@ -120,7 +131,7 @@ case class KeyedScanExec(
     (if (keys.isEmpty) AllTuples else ClusteredDistribution(keys, requiredNumPartitions = partitions)) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq((keys ++ order).map(SortOrder(_, Ascending)))
+    Seq(keys.map(SortOrder(_, Ascending)) ++ order)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val keyExprs = keys
@@ -165,7 +176,7 @@ case class KeyedScanExec(
 
 object KeyedScan {
 
-  private[plans] def describe(keys: Seq[Expression], order: Seq[Expression], output: Seq[Attribute]): String =
+  private[plans] def describe(keys: Seq[Expression], order: Seq[SortOrder], output: Seq[Attribute]): String =
     s"KeyedScan keys=[${keys.mkString(", ")}] order=[${order.mkString(", ")}] output=[${output.mkString(", ")}]"
 
   /** `df` scanned per key group of `keys`, each group in `order`, by a
@@ -173,7 +184,9 @@ object KeyedScan {
     * kernel reads `df`'s columns by ordinal, so callers pass `df`
     * already pruned to the columns it reads (a pure column selection,
     * which Catalyst folds into the scan below the exchange).
-    * `partitions` fixes the exchange's partition count.
+    * An `order` column may carry a direction (`col("x").desc`);
+    * a plain column sorts ascending, nulls first. `partitions` fixes
+    * the exchange's partition count.
     */
   def apply(df: DataFrame, keys: Seq[Column], order: Seq[Column], out: StructType,
       partitions: Option[Int] = None)(kernel: () => ScanKernel): DataFrame = {
@@ -182,14 +195,17 @@ object KeyedScan {
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ KeyedScanStrategy
     }
     val child = df.queryExecution.analyzed
-    val exprs = df.select(keys ++ order: _*).queryExecution.analyzed match {
+    val keyExprs = df.select(keys: _*).queryExecution.analyzed match {
       case Project(list, _) => list.map { case Alias(e, _) => e; case e => e }
       case other => throw new IllegalStateException(s"unexpected key plan $other")
     }
+    val sortOrder =
+      if (order.isEmpty) Nil
+      else df.sortWithinPartitions(order: _*).queryExecution.analyzed match {
+        case Sort(o, false, _, _) => o
+        case other => throw new IllegalStateException(s"unexpected order plan $other")
+      }
     val attrs = out.fields.toSeq.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(
-      spark,
-      KeyedScanPlan(child, exprs.take(keys.length), exprs.drop(keys.length), kernel, attrs, partitions),
-    )
+    ColumnBridge.ofRows(spark, KeyedScanPlan(child, keyExprs, sortOrder, kernel, attrs, partitions))
   }
 }

@@ -16,21 +16,24 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.FracDiff
-import graft.operators.{AsofJoin, Bars, ImbalanceBars, Labels}
+import graft.operators.{AsofJoin, Bars, Dedup, ImbalanceBars, Labels, Similarity, TextAnalysis}
 import graft.sources.TradeData
 
-/** Codegen working set of the tick-label job.
+/** Codegen working set of graftbench's two workloads.
   *
   * Spark keeps at most 100 compiled classes
   * (`spark.sql.codegen.cache.maxEntries`, a static conf). A job whose
   * passes need more than that recompiles part of its classes with
-  * Janino on every pass, and the JIT compiles them again. This suite
-  * runs the ten calls of graftbench's `tick_labels` pass, with the
-  * same parameters and the same observe-plus-noop emit, twice on a
-  * cached `TradeData.fromEvents` frame, starting from an empty
+  * Janino on every pass, and the JIT compiles them again. Each case
+  * runs the calls of one graftbench pass (the ten of `tick_labels` on
+  * a cached `TradeData.fromEvents` frame, the six of `corpus_dedup`
+  * on cached documents and embeddings), with the same parameters and
+  * the same observe-plus-noop emit, twice, starting from an empty
   * codegen cache, and counts the distinct classes compiled: one per
   * (driver or executor side, generated source), since driver and
   * executors compile under different class loaders in local mode.
+  * Both stay within one budget of 80: `tick_labels` compiles 63,
+  * `corpus_dedup` 70 (132 before its ops moved onto keyed scans).
   */
 class CodegenBudgetSpec extends SparkSpec {
 
@@ -115,10 +118,12 @@ class CodegenBudgetSpec extends SparkSpec {
     finally t.unpersist(blocking = true)
   }
 
-  test(s"two tick_labels passes compile at most $budget distinct classes") {
-    val dir = Files.createTempDirectory("graft-codegen-budget").toString
-    writeEvents(dir, ticks = 3000, symbols = 4, days = 3)
-
+  /** Distinct classes compiled over two passes of `pass`, starting from
+    * an empty codegen cache, and the first pass's per-op attribution.
+    * `pass` reports each finished op through its callback and returns
+    * the op fingerprints, which must repeat across the passes.
+    */
+  private def census(pass: (String => Unit) => Seq[(String, String)]): (Int, Seq[(String, Int)]) = {
     val compiled = new ConcurrentLinkedQueue[(String, String)]()
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val config = ctx.getConfiguration
@@ -155,21 +160,123 @@ class CodegenBudgetSpec extends SparkSpec {
     }
     val (first, second) =
       try {
-        val a = pass(dir, attribute)
-        val b = pass(dir, _ => ())
+        val a = pass(attribute)
+        val b = pass(_ => ())
         (a, b)
       } finally {
         config.removeLogger(name)
         ctx.updateLoggers()
         appender.stop()
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       }
-    seen ++= compiled.asScala
-    val keys = seen.size
-    info(s"distinct compiled classes over two passes: $keys (budget $budget); " +
-      s"first pass by op: ${perOp.map { case (k, v) => s"$k=$v" }.mkString(", ")}")
-    println(s"[codegen-budget] total=$keys ${perOp.map { case (k, v) => s"$k=$v" }.mkString(" ")}")
     assert(first == second, "fingerprints differ between passes")
+    seen ++= compiled.asScala
+    (seen.size, perOp.toSeq)
+  }
+
+  private def check(job: String, keys: Int, perOp: Seq[(String, Int)]): Unit = {
+    val ops = perOp.map { case (k, v) => s"$k=$v" }
+    info(s"distinct compiled classes over two passes: $keys (budget $budget); " +
+      s"first pass by op: ${ops.mkString(", ")}")
+    println(s"[codegen-budget] $job total=$keys ${ops.mkString(" ")}")
     assert(keys <= budget, s"$keys distinct compiled classes exceed the budget of $budget")
+  }
+
+  test(s"two tick_labels passes compile at most $budget distinct classes") {
+    val dir = Files.createTempDirectory("graft-codegen-budget").toString
+    try {
+      writeEvents(dir, ticks = 3000, symbols = 4, days = 3)
+      val (keys, perOp) = census(onOp => pass(dir, onOp))
+      check("tick_labels", keys, perOp)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  /** A graftbench-shaped corpus: documents with near-duplicate
+    * families (~4% of words edited) and exact copies, and unit vectors
+    * in clusters of ragged size, some of them near-copies of an earlier
+    * member.
+    */
+  private def writeCorpus(dir: String, docs: Int, vectors: Int, dim: Int): Unit = {
+    val rnd = new scala.util.Random(2L)
+    val vocab = Array.tabulate(3000)(i => s"w${Integer.toString(i * 7919 % 3000, 36)}")
+    def word(): String = vocab(math.min(vocab.length - 1, (math.exp(rnd.nextDouble() * 8) - 1).toInt))
+    val texts = new Array[String](docs)
+    for (i <- 0 until docs) {
+      val u = rnd.nextDouble()
+      texts(i) =
+        if (i > 0 && u < 0.03) texts(rnd.nextInt(i))
+        else if (i > 0 && u < 0.23)
+          texts(rnd.nextInt(i)).split(" ").map(w => if (rnd.nextDouble() < 0.04) word() else w).mkString(" ")
+        else Seq.fill(20 + rnd.nextInt(120))(word()).mkString(" ")
+    }
+    val docRows = texts.indices.map { i =>
+      Row(i.toLong, texts(i), Seq("en", "de", "fr")(i % 3), s"src${i % 8}", texts(i).length.toLong)
+    }
+    spark.createDataFrame(docRows.asJava, StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = false),
+      StructField("lang", StringType, nullable = false),
+      StructField("source", StringType, nullable = false),
+      StructField("n_chars", LongType, nullable = false),
+    ))).write.parquet(s"$dir/documents.parquet")
+
+    def unit(v: Array[Double]): Array[Double] = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
+    val centers = Array.fill(vectors / 200)(unit(Array.fill(dim)(rnd.nextGaussian())))
+    val vecs = new Array[Array[Float]](vectors)
+    for (i <- 0 until vectors) {
+      val c = centers((centers.length * math.pow(rnd.nextDouble(), 2)).toInt)
+      val v =
+        if (i > 0 && rnd.nextDouble() < 0.05) vecs(rnd.nextInt(i)).map(x => x + 0.03 * rnd.nextGaussian() / math.sqrt(dim))
+        else Array.tabulate(dim)(x => c(x) + 0.8 * rnd.nextGaussian() / math.sqrt(dim))
+      vecs(i) = unit(v.map(_.toDouble)).map(_.toFloat)
+    }
+    val ids = rnd.shuffle((0 until vectors).toVector)
+    val embRows = (0 until vectors).map(i => Row(ids(i).toLong, vecs(i).toSeq, i % 7))
+    spark.createDataFrame(embRows.asJava, StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = false), nullable = false),
+      StructField("label", IntegerType, nullable = false),
+    ))).write.parquet(s"$dir/embeddings.parquet")
+  }
+
+  /** One corpus_dedup pass: op name -> fingerprint(s). */
+  private def corpusPass(dir: String, onOp: String => Unit): Seq[(String, String)] = {
+    var d: DataFrame = null
+    var e: DataFrame = null
+    def op(name: String)(dfs: => Seq[DataFrame]): (String, String) = {
+      val fp = dfs.map(emit).mkString("+"); onOp(name); name -> fp
+    }
+    Seq(
+      op("read_corpus") {
+        d = spark.read.parquet(s"$dir/documents.parquet").cache()
+        e = spark.read.parquet(s"$dir/embeddings.parquet").cache()
+        Seq(d)
+      },
+      op("dedup_exact")(Seq(Dedup.exact(d))),
+      op("dedup_minhash")(Seq(Dedup.minhashLsh(d, threshold = 0.5))),
+      op("text_quality")(Seq(
+        TextAnalysis.gopherFilter(d),
+        d.select(
+          col("doc_id"),
+          TextAnalysis.qualityScore(col("text")).as("quality"),
+          TextAnalysis.tokenCounts(col("text")).getField("bpe_tokens").as("bpe_tokens"),
+          TextAnalysis.langId(col("text")).as("lang_pred")),
+      )),
+      op("semantic_dedup")(Seq(Similarity.semanticDedup(e))),
+      op("ann_ivf_topk")(Seq(Similarity.ivfTopK(e))),
+    )
+  }
+
+  // 66,000 vectors, as graftbench: semanticDedup's N/256 and ivfTopK's
+  // sqrt(N) cell counts both pass 256, so the tiled paths run
+  test(s"two corpus_dedup passes compile at most $budget distinct classes") {
+    val dir = Files.createTempDirectory("graft-codegen-budget").toString
+    try {
+      writeCorpus(dir, docs = 2000, vectors = 66000, dim = 32)
+      val (keys, perOp) = census(onOp => corpusPass(dir, onOp))
+      check("corpus_dedup", keys, perOp)
+    } finally {
+      spark.catalog.clearCache()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 }

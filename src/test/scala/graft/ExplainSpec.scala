@@ -181,11 +181,8 @@ class ExplainSpec extends SparkSpec {
     // banding, and a band value shared by more than maxBucket DISTINCT
     // reps is dropped (boilerplate-dominated buckets of mutually
     // dissimilar docs). Within the cap, a hot bucket costs at most
-    // C(maxBucket, 2) streamed candidate rows inside its partition —
-    // bounded by construction, which is why the old AQE-skew assertion
-    // is gone (the capped semi-join now shares a stage with the band
-    // self-join, so there is no shuffle boundary for AQE to split;
-    // AQE remains the backstop on the array verification joins).
+    // C(maxBucket, 2) candidate pairs, streamed out of one keyed scan
+    // over the band's rows — bounded by construction.
     // Plant the worst case — 30% of the corpus near-identical but
     // DISTINCT (a shared body dominating every band) — and pin that
     // (a) every hot pair is found under the default cap, and (b) a
@@ -228,7 +225,8 @@ class ExplainSpec extends SparkSpec {
       // the realized count stable) — 7000 of the 7140 is a safe floor
       assert(got.length >= 7000, s"expected ~all hot pairs, got ${got.length}")
       val plan = pairs.queryExecution.executedPlan.toString
-      assert(plan.contains("LeftSemi"), s"bucket-cap semi-join missing:\n$plan")
+      assert(plan.contains("KeyedScan keys=[band"), s"band bucket scan missing:\n$plan")
+      assert(!plan.contains("Join"), s"no join left in the LSH plan:\n$plan")
       // a cap below the hot-bucket size must DROP the bucket, not join
       // it: only sub-cap buckets remain (tail-shingle subsets — e.g.
       // docs sharing a "tail1…" shingle min), an order of magnitude
@@ -249,11 +247,14 @@ class ExplainSpec extends SparkSpec {
     // ≤4096 cells: nearest-centroid is a per-row argmax over the
     // inlined centroid literal — no corpus × centroid join, no
     // ObjectHashAggregate (the old max_by(struct) + first(nv) agg
-    // demoted the whole aggregation off whole-stage codegen)
-    // (the one remaining nested-loop product is the bounded
-    // query × centroid probe, nQueries·nCells rows)
+    // demoted the whole aggregation off whole-stage codegen); the
+    // probe cells come from the same centroid matrix and the top k
+    // from one keyed scan: no query × centroid product, no window
     assert(!p.contains("ObjectHashAggregate"), p)
     assert(!p.contains("partial_max_by"), p)
+    assert(!p.contains("NestedLoopJoin"), p)
+    assert(!p.contains("Window"), p)
+    assert(p.contains("KeyedScan keys=[query_id"), p)
   }
 
   test("microstructure moments aggregate with a map-side partial phase") {

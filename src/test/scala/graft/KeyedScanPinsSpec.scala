@@ -1,0 +1,84 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Dedup, Similarity}
+
+/** The corpus ops rebuilt on keyed scans and driver-side k-means means
+  * give exactly the rows of the forms they replaced (`LshReference`,
+  * `WindowReference`): every value, doubles by bit pattern.
+  */
+class KeyedScanPinsSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def bits(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+      case null => "null"
+      case v => v.toString
+    }.mkString("|")).sorted
+
+  private def assertSame(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType))
+    val g = bits(got)
+    val w = bits(want)
+    assert(g.nonEmpty)
+    assert(g == w, s"only new: ${g.diff(w).take(5)}; only reference: ${w.diff(g).take(5)}")
+  }
+
+  /** A hot band shared by 120 distinct near-identical docs, exact-copy
+    * clusters of 2-6 docs, empty and whitespace-only texts, and
+    * unrelated docs. */
+  private lazy val corpus: DataFrame = {
+    val rnd = new scala.util.Random(7)
+    val body = "identical hot duplicate document text shared by many many rows here and padded " +
+      "with a long enough boilerplate body that the shared shingles dominate every minhash band"
+    val hot = (0 until 120).map(i => s"$body tail$i")
+    val plain = (0 until 150).map(i => Seq.fill(30)(s"w${rnd.nextInt(400)}").mkString(" "))
+    val near = plain.take(40).map(_.split(" ").map(w => if (rnd.nextDouble() < 0.05) "edit" else w).mkString(" "))
+    val copies = plain.take(25).zipWithIndex.flatMap { case (t, i) => Seq.fill(1 + i % 5)(t) }
+    val texts = rnd.shuffle(hot ++ plain ++ near ++ copies ++ Seq("", "", "   ", "x"))
+    texts.zipWithIndex.map { case (t, i) => (i.toLong * 3 + 1, t) }.toDF("doc_id", "text")
+  }
+
+  test("minhash LSH: keyed-scan plan == join-form reference, bit-exact (hot band, exact-dup clusters)") {
+    for ((threshold, cap) <- Seq((0.5, 4096), (0.9, 50), (0.3, 3)))
+      assertSame(Dedup.minhashLsh(corpus, threshold, maxBucket = cap),
+        LshReference.minhashLsh(corpus, threshold, maxBucket = cap))
+  }
+
+  test("LSH pairs on raw shingle sets: empty, null and repeated sets match the join-form reference") {
+    val rnd = new scala.util.Random(11)
+    val sets: Seq[Option[Seq[Long]]] =
+      Seq(Some(Nil), Some(Nil), None, None, Some(Seq(1L, 2L, 3L)), Some(Seq(1L, 2L, 3L)), Some(Seq(1L, 2L, 3L, 4L))) ++
+        (0 until 60).map(i => Some((0 until 12).map(_ => rnd.nextInt(40).toLong).distinct)) ++
+        (0 until 20).map(i => Some(Seq(5L, 6L, 7L, 8L, 100L + i)))
+    val shingled = sets.zipWithIndex.map { case (h, i) => (i.toLong, h.orNull) }.toDF("id", "hsl")
+    for ((threshold, cap) <- Seq((0.2, 4096), (0.5, 4), (1.0, 4096)))
+      assertSame(Dedup.lshJaccardPairs(shingled, threshold = threshold, maxBucket = cap),
+        LshReference.pairs(shingled, threshold = threshold, maxBucket = cap))
+  }
+
+  test("exact dedup: keyed scan == window-form reference, bit-exact") {
+    val withNullId = corpus.union(Seq((Option.empty[Long], "x"), (None, "unique null text")).toDF("doc_id", "text"))
+    assertSame(Dedup.exact(withNullId), WindowReference.exact(withNullId))
+  }
+
+  test("ivf top-k: keyed ranking and driver k-means == window-form reference, bit-exact with score ties") {
+    // a few directions, each many times: identical centroids tie in the
+    // probe ranking, identical vectors and mirror pairs (equal dots
+    // with the query, different cells) tie in the top-k
+    val dirs = Seq(Seq(1f, 0f, 0f, 0f), Seq(0.6f, 0.8f, 0f, 0f), Seq(0.6f, -0.8f, 0f, 0f),
+      Seq(0f, 0f, 1f, 0f), Seq(0f, 0.6f, 0f, 0.8f), Seq(0f, 0.6f, 0f, -0.8f), Seq(-1f, 0f, 0f, 0f))
+    val rnd = new scala.util.Random(3)
+    val emb = (0 until 400).map { i =>
+      val d = dirs(rnd.nextInt(dirs.length))
+      (i.toLong, if (i % 3 == 0) d.map(x => x + (rnd.nextInt(3) - 1) * 0.25f) else d)
+    }.toDF("vec_id", "embedding").repartition(3)
+    for (iters <- Seq(0, 2); probe <- Seq(1, 3))
+      assertSame(
+        Similarity.ivfTopK(emb, nQueries = 12, k = 15, nCells = 20, nProbe = probe, kmeansIters = iters),
+        WindowReference.ivfTopK(emb, nQueries = 12, k = 15, nCells = 20, nProbe = probe, kmeansIters = iters))
+  }
+}

@@ -1093,7 +1093,7 @@ class PipelineOpsSpec extends SparkSpec {
     val mat = table.flatMap(_.getSeq[Double](1))
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select("id", "nv", "cell").collect().map(_.toString).sorted.toSeq
-    val tiled = rows(Similarity.assignToCells(nv, cents))
+    val tiled = rows(Similarity.assignToCells(nv, Similarity.centroids(cents)))
     val expr = rows(nv.withColumn(
       "cell", graft.functions.VectorExprs.nearestCellNative(col("nv"), ids, mat, 16)))
     assert(tiled.length == 600)

@@ -1,10 +1,8 @@
 #!/bin/bash
 # Round-15 final measurement sweep, fully sequential:
 #  1. embeddings decade probe (solo-3x queries at 3 decades)
-#  2. production incremental probes (EmbedProbe, sf10/sf100, 2 runs)
-#  3. EmbedAccount stage counts (3 decades)
-#  4. multimodal_meta sub-3s solo-3x at sf10 (r14 #6)
-#  5. r13-binary A/B: tick_qc sf10 + multimodal_decode/feature_ic sf0.1 (r14 #7)
+#  2. multimodal_meta sub-3s solo-3x at sf10 (r14 #6)
+#  3. r13-binary A/B: tick_qc sf10 + multimodal_decode/feature_ic sf0.1 (r14 #7)
 set -u
 OUT=/tmp/emb_final.jsonl
 AB=/tmp/r13_ab.jsonl
@@ -16,21 +14,6 @@ for d in emb_sf1 emb_sf10 emb_sf100; do
     echo "done $d $q"
   done
 done
-for d in emb_sf10 emb_sf100; do
-  for m in dedup topk; do
-    for i in 1 2; do
-      if ! pgrep -x java >/dev/null 2>&1; then rm -rf /tmp/graft-ckpt-* /tmp/blockmgr-* /tmp/graft-embprobe* 2>/dev/null; fi
-      L=$(SPARK_GRAFT_CPUS=32 GRAFT_HEAP=24g tools/graftjava.sh graft.EmbedProbe "/tmp/graft_$d" "$m" 2>/dev/null | grep build_sec | tail -1)
-      echo "{\"probe\":\"$m\",\"dir\":\"$d\",\"run\":$i,\"r\":$L}" >> "$OUT"
-    done
-    echo "done probe $d $m"
-  done
-done
-if ! pgrep -x java >/dev/null 2>&1; then rm -rf /tmp/graft-ckpt-* /tmp/blockmgr-* 2>/dev/null; fi
-SPARK_GRAFT_CPUS=32 GRAFT_HEAP=24g tools/graftjava.sh graft.EmbedAccount \
-  /tmp/graft_emb_sf1 /tmp/graft_emb_sf10 /tmp/graft_emb_sf100 2>/dev/null \
-  | grep '"dir"' >> "$OUT"
-echo ACCOUNT_DONE
 tools/solo3x.sh /tmp/graft_sf10 multimodal_meta 3 24g /tmp/sub3.jsonl
 echo SUB3_DONE
 run_one() {
