@@ -46,13 +46,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF=k=v;k2=v2 applies runtime confs (probe aid —
-    // e.g. spark.graft.barrierGateBytes=0 forces the parquet barrier
-    // path for scale A/Bs; the driver never sets it)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
+    HarnessConf.applyEnv(spark)
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }

@@ -14,12 +14,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF=k=v;k2=v2 applies runtime confs (same knob as
-    // Bench — e.g. spark.sql.ansi.enabled=true for the ANSI sweep)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
+    HarnessConf.applyEnv(spark)
     new java.io.File(outDir).mkdirs()
     var nFail = 0
     // SPARK_GRAFT_ONLY=a,b restricts the dump (local iteration aid;

@@ -124,7 +124,7 @@ object FracDiff {
     // pass 1: per-chunk tails (last <= nW-1 values, NaN for nulls)
     val tails = KeyedScan(df, keys, orderCols.map(col), StructType(Seq(
       StructField(symbolCol, symType), StructField("__chunk", chunkType),
-      StructField("__tail", carryType, nullable = false))), fdParts) { () =>
+      StructField("__tail", carryType, nullable = false))), fdParts, keyOut = Seq(symbolCol, "__chunk")) { () =>
       new ScanKernel {
         private val cap = math.max(nW - 1, 1)
         private val ring = new Array[Double](cap)
@@ -152,7 +152,7 @@ object FracDiff {
     // symbol, then (__chunk, __carry, __sent = 0)
     val sentinels = KeyedScan(tails, Seq(col(symbolCol)), Seq(col("__chunk")), StructType(
       fields.map(_.copy(nullable = true)).toSeq ++ Seq(StructField("__chunk", chunkType),
-        StructField("__carry", carryType), StructField("__sent", IntegerType)))) { () =>
+        StructField("__carry", carryType), StructField("__sent", IntegerType))), keyOut = Seq(symbolCol)) { () =>
       new ScanKernel {
         private var carry: Vector[Double] = Vector.empty
         def reset(k: InternalRow): Unit = carry = Vector.empty
@@ -177,7 +177,8 @@ object FracDiff {
       .select(col("*"), chunkCol.as("__chunk"), lit(null).cast(carryType).as("__carry"), lit(1).as("__sent"))
       .union(sentinels)
     KeyedScan(arranged, Seq(col(symbolCol), col("__chunk")), col("__sent") +: orderCols.map(col),
-      StructType(fields.toSeq :+ StructField(outCol, DoubleType, nullable = true)), fdParts) { () =>
+      StructType(fields.toSeq :+ StructField(outCol, DoubleType, nullable = true)), fdParts,
+      keyOut = Seq(symbolCol)) { () =>
       new ScanKernel {
         private val ring = new Array[Double](nW) // ring(0)=current, grows backward
         private var hist = 0L // values preceding the current row (uncapped count, capped seed)

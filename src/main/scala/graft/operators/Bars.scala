@@ -273,7 +273,8 @@ object Bars {
       splitByDate: Boolean,
       c: TradingCols,
   ): DataFrame =
-    graft.plans.KeyedScan(barInput(df, c), barKeys(c, splitByDate), Seq(col(c.ts), col(c.tradeId)), barSchema(c)) {
+    graft.plans.KeyedScan(barInput(df, c), barKeys(c, splitByDate), Seq(col(c.ts), col(c.tradeId)), barSchema(c),
+      keyOut = Seq("symbol")) {
       () =>
         new BarScan {
           def step(row: InternalRow, out: graft.plans.ScanOut): Unit = if (!noPrice(row, 2)) {
@@ -376,7 +377,8 @@ object Bars {
       c: TradingCols = TradingCols.default,
   ): DataFrame = {
     val barCents = math.round(barSize * 100)
-    graft.plans.KeyedScan(barInput(df, c), barKeys(c, splitByDate), Seq(col(c.ts), col(c.tradeId)), barSchema(c)) {
+    graft.plans.KeyedScan(barInput(df, c), barKeys(c, splitByDate), Seq(col(c.ts), col(c.tradeId)), barSchema(c),
+      keyOut = Seq("symbol")) {
       () =>
         new BarScan {
           private var carry = 0L // cents accumulated in the open bar

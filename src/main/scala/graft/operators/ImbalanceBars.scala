@@ -114,7 +114,8 @@ object ImbalanceBars {
 
   private def thetaBars(df: DataFrame, c: TradingCols, alpha: Double)(scan: () => ThetaScan): DataFrame = {
     require(alpha >= 0 && alpha <= 1, "alpha in [0,1]")
-    KeyedScan(Bars.barInput(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), schema("theta"))(scan)
+    KeyedScan(Bars.barInput(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), schema("theta"),
+      keyOut = Seq("symbol"))(scan)
   }
 
   /** Dollar imbalance bars (AFML ch.2.3.2.2): θ accumulates
@@ -178,7 +179,7 @@ object ImbalanceBars {
     require(alpha >= 0 && alpha <= 1, "alpha in [0,1]")
     require(initPmax >= 0.5 && initPmax <= 1.0, "initPmax in [0.5,1]")
     KeyedScan(Bars.barInput(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)),
-      schema("up_ticks", "down_ticks")) { () =>
+      schema("up_ticks", "down_ticks"), keyOut = Seq("symbol")) { () =>
       new ImbalanceScan(alpha) {
         private var expT = initTicks
         private var pMax = initPmax

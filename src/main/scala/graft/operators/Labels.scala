@@ -158,7 +158,8 @@ object Labels {
     // price as the equal-ts tiebreak (nulls first): rows with equal
     // (ts, price) are interchangeable for both the lookback and the
     // EWM fold, so this order is value-deterministic.
-    graft.plans.KeyedScan(input, Seq(col(c.symbol)), Seq(col(c.ts), col(c.price)), out) { () =>
+    graft.plans.KeyedScan(input, Seq(col(c.symbol)), Seq(col(c.ts), col(c.price)), out,
+        keyOut = Seq(c.symbol)) { () =>
       new graft.plans.ScanKernel {
         private var key: InternalRow = null
         // trailing 24h of (ts micros, price-or-null); head is the
@@ -375,7 +376,7 @@ object Labels {
     val annotated = graft.plans.KeyedScan(withTarget, Seq(col(c.symbol)), Seq(col(c.ts), col(ticks.columns(3))),
       StructType(Seq(StructField("sym", symType), StructField("chunk", LongType), StructField("tsus", LongType),
         StructField("price", DoubleType), StructField("tid", LongType), StructField("trgt", DoubleType),
-        StructField("t1us", LongType)))
+        StructField("t1us", LongType))), keyOut = Seq("sym")
     ) { () => new BarrierEvents(hUs, hDays, constTarget, symType) }
 
     val ts = TimestampType
@@ -388,7 +389,8 @@ object Labels {
       case LabelCols(_) => Seq(c.symbol -> symType, c.ts -> ts, "trgt" -> DoubleType, "t1" -> ts,
         "touch_ts" -> ts, "touch_return" -> DoubleType, "label" -> IntegerType)
     }).map { case (n, t) => StructField(n, t) })
-    graft.plans.KeyedScan(annotated, Seq(col("sym"), col("chunk")), Seq(col("tsus"), col("tid")), out) { () =>
+    graft.plans.KeyedScan(annotated, Seq(col("sym"), col("chunk")), Seq(col("tsus"), col("tid")), out,
+        keyOut = Seq(c.symbol)) { () =>
       new BarrierScan(ptMult, slMult, symType, cols)
     }
   }
@@ -704,12 +706,14 @@ object Labels {
     val partials = graft.plans.KeyedScan(rows, Seq(col("symbol"), col("chunk")),
       Seq(col("kind"), col("a"), col("id")),
       StructType(Seq(StructField("symbol", symType), StructField("event_id", LongType),
-        StructField("chunk", LongType), StructField("part", DoubleType), StructField("n", LongType)))
+        StructField("chunk", LongType), StructField("part", DoubleType), StructField("n", LongType))),
+      keyOut = Seq("symbol")
     ) { () => new ConcScan(symType) }
     // total = left fold of the partials in chunk order, from 0.0
     graft.plans.KeyedScan(partials, Seq(col("symbol"), col("event_id")), Seq(col("chunk")),
       StructType(Seq(StructField("symbol", symType), StructField("event_id", LongType),
-        StructField(name, DoubleType), StructField("n_ticks", LongType)))
+        StructField(name, DoubleType), StructField("n_ticks", LongType))),
+      keyOut = Seq("symbol", "event_id")
     ) { () =>
       new graft.plans.ScanKernel {
         private var key: InternalRow = null

@@ -1,10 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.api.TradingCols
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Microstructural features (AFML ch.19): per-(symbol, day)
   * estimators of effective spread and price impact from the tick
@@ -545,25 +549,12 @@ object Microstructure {
     )
   }
 
-  // private[graft], not private: a JVM-private case class makes Janino
-  // unable to call the accessors, silently dropping the output
-  // projection to interpreted mode (same class of bug as the r6b
-  // BarRow fix). Qualified private compiles to public accessors.
-  private[graft] case class EntropyDayRow(
-      symbol: String,
-      date: java.sql.Date,
-      n_ticks: Long,
-      h1: Double,
-      h2: Double,
-      h3: Double,
-  )
-
-  /** Production path for [[signEntropy]]: ONE repartition on
-    * (symbol, date) + sort-within-partitions, then a single streaming
-    * pass that derives the tick-rule u/d character AND accumulates
-    * the k-gram counters inline — O(1) state per group (14 counters
-    * for the binary alphabet + last sign + two lag codes), no
-    * collect_list array, no array_sort, no interpreted fold.
+  /** Production path for [[signEntropy]]: one keyed scan per
+    * (symbol, day) in (ts, trade_id) order that derives the tick-rule
+    * u/d character AND accumulates the k-gram counters inline — O(1)
+    * state per group (14 counters for the binary alphabet + last sign
+    * + two lag codes), no collect_list array, no array_sort, no
+    * interpreted fold. On a symbol-clustered tape it plans no exchange.
     *
     * Bit-identical to the declarative form (pinned in
     * CoreOperatorsSpec): the k-gram counts are exact integers, and
@@ -573,33 +564,29 @@ object Microstructure {
     * ((-p)·ln p)/ln 2 term tree (StrictMath.log == Catalyst LOG).
     */
   def signEntropyScan(df: DataFrame, c: TradingCols = TradingCols.default): DataFrame = {
-    import df.sparkSession.implicits._
     val ln2 = math.log(2.0)
-    df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        to_date(col(c.ts)).as("date"),
-        col(c.ts).as("ts"),
-        round(col(c.price) * 100).cast("long").as("pc"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"), col("date"))
-      .sortWithinPartitions(col("symbol"), col("date"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Date, java.sql.Timestamp, Long, Long)]
-      .mapPartitions { it =>
-        new Iterator[EntropyDayRow] {
-          private var pending: EntropyDayRow = null
-          private var curSym: String = null
-          private var curDate: java.sql.Date = null
-          private var nTicks = 0L
-          private var prevPc = 0L
-          private var lastSgn = 1
-          private var lag1 = -1 // code of previous char, -1 = none
-          private var lag2 = -1 // code of char before that
+    signScan(df, c, Seq(StructField("h1", DoubleType, nullable = false),
+      StructField("h2", DoubleType, nullable = false), StructField("h3", DoubleType, nullable = false))) {
+      () =>
+        new SignScan {
           private val c1 = new Array[Long](2)
           private val c2 = new Array[Long](4)
           private val c3 = new Array[Long](8)
+          private var lag1 = -1 // code of previous char, -1 = none
+          private var lag2 = -1 // code of char before that
+
+          protected def start(): Unit = {
+            lag1 = -1; lag2 = -1
+            java.util.Arrays.fill(c1, 0L); java.util.Arrays.fill(c2, 0L); java.util.Arrays.fill(c3, 0L)
+          }
+
+          protected def add(code: Int): Unit = {
+            c1(code) += 1L
+            if (lag1 >= 0) c2((lag1 << 1) | code) += 1L
+            if (lag2 >= 0) c3((lag2 << 2) | (lag1 << 1) | code) += 1L
+            lag2 = lag1
+            lag1 = code
+          }
 
           private def entropy(counts: Array[Long], nGrams: Long, k: Int): Double = {
             if (nTicks < k) return 0.0
@@ -617,63 +604,71 @@ object Microstructure {
             acc / k.toDouble
           }
 
-          private def flush(): EntropyDayRow = {
-            val out = EntropyDayRow(
-              curSym,
-              curDate,
-              nTicks,
-              entropy(c1, nTicks, 1),
-              entropy(c2, nTicks - 1, 2),
-              entropy(c3, nTicks - 2, 3),
-            )
-            nTicks = 0L
-            lastSgn = 1
-            lag1 = -1
-            lag2 = -1
-            java.util.Arrays.fill(c1, 0L)
-            java.util.Arrays.fill(c2, 0L)
-            java.util.Arrays.fill(c3, 0L)
-            out
-          }
-
-          private def advance(): Unit = {
-            while (pending == null && it.hasNext) {
-              val (sym, date, _, pc, _) = it.next()
-              if (curSym != null && (sym != curSym || date.getTime != curDate.getTime)) {
-                pending = flush()
-              }
-              curSym = sym
-              curDate = date
-              if (nTicks > 0L) {
-                val d = pc - prevPc
-                if (d != 0L) lastSgn = if (d > 0L) 1 else -1
-              }
-              prevPc = pc
-              val code = if (lastSgn > 0) 1 else 0 // u=1, d=0; 'd' < 'u'
-              c1(code) += 1L
-              if (lag1 >= 0) c2((lag1 << 1) | code) += 1L
-              if (lag2 >= 0) c3((lag2 << 2) | (lag1 << 1) | code) += 1L
-              lag2 = lag1
-              lag1 = code
-              nTicks += 1L
-            }
-            if (pending == null && nTicks > 0L) pending = flush()
-          }
-
-          override def hasNext: Boolean = {
-            if (pending == null) advance()
-            pending != null
-          }
-
-          override def next(): EntropyDayRow = {
-            if (!hasNext) throw new NoSuchElementException
-            val out = pending
-            pending = null
-            out
+          protected def write(w: UnsafeRowWriter): Unit = {
+            w.write(3, entropy(c1, nTicks, 1))
+            w.write(4, entropy(c2, nTicks - 1, 2))
+            w.write(5, entropy(c3, nTicks - 2, 3))
           }
         }
+    }
+  }
+
+  /** The per-(symbol, day) tick-rule scan behind [[signEntropyScan]] and
+    * [[lzEntropyScan]], over the ticks with a price in (ts, trade_id)
+    * order. Output: symbol, date, n_ticks, then `stats`.
+    */
+  private def signScan(df: DataFrame, c: TradingCols, stats: Seq[StructField])(
+      kernel: () => SignScan): DataFrame = {
+    val ticks = df.na
+      .drop(Seq(c.price))
+      .select(
+        col(c.symbol).cast("string").as("symbol"),
+        to_date(col(c.ts)).as("date"),
+        col(c.ts).as("ts"),
+        round(col(c.price) * 100).cast("long").as("pc"),
+        col(c.tradeId).cast("long").as("trade_id"),
+      )
+    val out = StructType(Seq(StructField("symbol", StringType), StructField("date", DateType),
+      StructField("n_ticks", LongType, nullable = false)) ++ stats)
+    KeyedScan(ticks, Seq(col("symbol"), col("date")), Seq(col("ts"), col("trade_id")), out,
+      keyOut = Seq("symbol", "date"))(kernel)
+  }
+
+  /** One (symbol, day) of [[signScan]]: the tick-rule code of each tick
+    * (u = 1, d = 0; the first tick of a day counts as up) goes to `add`,
+    * and `flush` writes the day's row with `write` filling the stats.
+    */
+  private abstract class SignScan extends ScanKernel {
+    private var key: InternalRow = null
+    protected var nTicks = 0L
+    private var prevPc = 0L
+    private var lastSgn = 1
+
+    protected def start(): Unit
+    protected def add(code: Int): Unit
+    protected def write(w: UnsafeRowWriter): Unit
+
+    def reset(k: InternalRow): Unit = { key = k; nTicks = 0L; lastSgn = 1; start() }
+
+    def step(row: InternalRow, o: ScanOut): Unit = {
+      val pc = row.getLong(3)
+      if (nTicks > 0L) {
+        val d = pc - prevPc
+        if (d != 0L) lastSgn = if (d > 0L) 1 else -1
       }
-      .toDF()
+      prevPc = pc
+      add(if (lastSgn > 0) 1 else 0)
+      nTicks += 1L
+    }
+
+    def flush(o: ScanOut): Unit = {
+      val w = o.begin()
+      o.copy(0, key, 0, StringType)
+      o.copy(1, key, 1, DateType)
+      w.write(2, nTicks)
+      write(w)
+      o.emit()
+    }
   }
 
   /** Per-day Kontoyiannis LZ accumulator shared by the batch scan
@@ -747,14 +742,6 @@ object Microstructure {
     }
   }
 
-  private[graft] case class LzDayRow(
-      symbol: String,
-      date: java.sql.Date,
-      n_ticks: Long,
-      n_points: Long,
-      lz_entropy: Option[Double],
-  )
-
   /** Kontoyiannis window LZ entropy of the tick-rule sign stream
     * (AFML ch.18.4's second entropy estimator next to the plug-in
     * [[signEntropyScan]]): per (symbol, day), for every point i with
@@ -768,73 +755,25 @@ object Microstructure {
     * the query is rows-only; the estimator is pinned in ScalaTest on
     * constant / alternating / pseudo-random streams plus a brute-
     * force replay of the textbook matchLength definition. Same
-    * single repartition + sorted scan shape as [[signEntropyScan]];
-    * O(window) state, O(window) work per tick (bit-parallel match).
+    * per-(symbol, day) keyed scan as [[signEntropyScan]]; O(window)
+    * state, O(window) work per tick (bit-parallel match).
     */
-  def lzEntropyScan(df: DataFrame, window: Int = 32, c: TradingCols = TradingCols.default): DataFrame = {
-    import df.sparkSession.implicits._
-    df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        to_date(col(c.ts)).as("date"),
-        col(c.ts).as("ts"),
-        round(col(c.price) * 100).cast("long").as("pc"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"), col("date"))
-      .sortWithinPartitions(col("symbol"), col("date"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Date, java.sql.Timestamp, Long, Long)]
-      .mapPartitions { it =>
-        new Iterator[LzDayRow] {
-          private var pending: LzDayRow = null
-          private var curSym: String = null
-          private var curDate: java.sql.Date = null
-          private var nTicks = 0L
-          private var prevPc = 0L
-          private var lastSgn = 1
-          private val acc = new LzAccumulator(window)
-
-          private def flush(): LzDayRow = {
-            val out = LzDayRow(curSym, curDate, nTicks, acc.points, acc.entropy)
-            nTicks = 0L; lastSgn = 1; acc.reset()
-            out
-          }
-
-          private def advance(): Unit = {
-            while (pending == null && it.hasNext) {
-              val (sym, date, _, pc, _) = it.next()
-              if (curSym != null && (sym != curSym || date.getTime != curDate.getTime)) {
-                pending = flush()
-              }
-              curSym = sym
-              curDate = date
-              if (nTicks > 0L) {
-                val d = pc - prevPc
-                if (d != 0L) lastSgn = if (d > 0L) 1 else -1
-              }
-              prevPc = pc
-              acc.add(if (lastSgn > 0) 1 else 0)
-              nTicks += 1L
-            }
-            if (pending == null && nTicks > 0L) pending = flush()
-          }
-
-          override def hasNext: Boolean = {
-            if (pending == null) advance()
-            pending != null
-          }
-
-          override def next(): LzDayRow = {
-            if (!hasNext) throw new NoSuchElementException
-            val out = pending
-            pending = null
-            out
+  def lzEntropyScan(df: DataFrame, window: Int = 32, c: TradingCols = TradingCols.default): DataFrame =
+    signScan(df, c, Seq(StructField("n_points", LongType, nullable = false),
+      StructField("lz_entropy", DoubleType))) { () =>
+      new SignScan {
+        private val acc = new LzAccumulator(window)
+        protected def start(): Unit = acc.reset()
+        protected def add(code: Int): Unit = acc.add(code)
+        protected def write(w: UnsafeRowWriter): Unit = {
+          w.write(3, acc.points)
+          acc.entropy match {
+            case Some(h) => w.write(4, h)
+            case None => w.setNullAt(4)
           }
         }
       }
-      .toDF()
-  }
+    }
 
   /** Hasbrouck's lambda (Hasbrouck 2009; AFML ch.19.4's third impact
     * estimator next to Kyle and Amihud): per (symbol, day), the

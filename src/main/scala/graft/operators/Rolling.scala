@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.api.TradingCols
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Event-time rolling features over trailing time windows.
   *
@@ -16,13 +18,11 @@ import graft.api.TradingCols
   *    recomputes sliding frames per row (no retraction), so this is
   *    O(n·w) per partition — fine at bench scale, quadratic-ish for
   *    wide windows at 100 TB.
-  *  - [[features]] (default for windows <= 1 day): a halo-chunked
-  *    monotonic-deque scan. Rows are chunked by calendar day and the
-  *    previous day's tail (within `window` of the boundary) is
-  *    duplicated into each chunk as context, so every chunk computes
-  *    independently — parallelism symbol × day with NO sequential
-  *    cross-chunk pass, O(n) amortized per chunk (incremental sums,
-  *    min/max via monotonic deques).
+  *  - [[features]] (default for windows <= 1 day): one keyed scan per
+  *    symbol in time order with monotonic deques, O(n) amortized
+  *    (incremental sums, min/max via monotonic deques). It reads the
+  *    tape once: on a symbol-clustered input (`TradeData.fromEvents`)
+  *    it plans no exchange at all.
   *
   * Bit-exactness: the mean/vwap sums accumulate in exact integer
   * CENTS (prices are 2-decimal, so `round(price*100)` is an exact
@@ -41,7 +41,7 @@ object Rolling {
     *  - rolling_vwap, rolling_mean_price, rolling_min/max, rolling_n
     *
     * Column contract: by default the output carries EVERY input
-    * column, so the shuffle moves full rows — the right default for
+    * column, so a shuffle moves full rows — the right default for
     * the bench queries (they consume all columns), but real money on
     * a wide table at 100 TB. Pass `keep` to project the input to
     * `keep` ∪ the compute columns (symbol/ts/price/size) BEFORE the
@@ -59,7 +59,7 @@ object Rolling {
       else df.select((Seq(c.symbol, c.ts, c.price, c.size) ++ keep).distinct.map(col): _*)
     val m = windowMicros(window)
     if (m > 86400000000L) featuresDeclarative(base, window, c)
-    else featuresScan(base, m, c)
+    else featuresScan(base, Seq("" -> m), c)
   }
 
   /** RANGE-frame formulation (also the shape the DuckDB oracle uses). */
@@ -89,144 +89,15 @@ object Rolling {
       .withColumn("rolling_n", count(lit(1)).over(w))
   }
 
-  /** Halo-chunked deque scan; requires windowMicros <= 1 day so the
-    * halo (context) rows of a chunk all come from the previous
-    * calendar day's tail.
-    */
-  private def featuresScan(df: DataFrame, m: Long, c: TradingCols): DataFrame = {
-    val day = 86400000000L
-    val withUts = df
-      .withColumn("__uts", unix_micros(col(c.ts)))
-      .withColumn("__day", unix_micros(date_trunc("DAY", col(c.ts))))
-    val base = withUts
-      .withColumn("__chunk", col("__day"))
-      .withColumn("__ctx", lit(false))
-    // previous-day tail duplicated into the next chunk as context
-    val halo = withUts
-      .where(col("__day") + day - col("__uts") <= m)
-      .withColumn("__chunk", col("__day") + day)
-      .withColumn("__ctx", lit(true))
-    val unioned = base.unionByName(halo).drop("__day")
-
-    val sorted = unioned
-      .repartition(col(c.symbol), col("__chunk"))
-      .sortWithinPartitions(col(c.symbol), col("__chunk"), col("__uts"))
-
-    val schema = sorted.schema
-    val symIdx = schema.fieldIndex(c.symbol)
-    val chunkIdx = schema.fieldIndex("__chunk")
-    val utsIdx = schema.fieldIndex("__uts")
-    val priceIdx = schema.fieldIndex(c.price)
-    val sizeIdx = schema.fieldIndex(c.size)
-    val ctxIdx = schema.fieldIndex("__ctx")
-    val keepIdx = schema.fieldNames.zipWithIndex
-      .collect { case (n, i) if n != "__uts" && n != "__chunk" && n != "__ctx" => i }
-    val outSchema = StructType(
-      keepIdx.map(schema.fields(_)).toSeq ++ Seq(
-        StructField("rolling_vwap", DoubleType, nullable = true),
-        StructField("rolling_mean_price", DoubleType, nullable = true),
-        StructField("rolling_min", DoubleType, nullable = true),
-        StructField("rolling_max", DoubleType, nullable = true),
-        StructField("rolling_n", LongType, nullable = false),
-      )
-    )
-
-    sorted.mapPartitions { it =>
-      val buf = it.buffered
-      new Iterator[Row] {
-        // per-(symbol, chunk) deque state
-        var curSym: Any = null
-        var curChunk: Long = Long.MinValue
-        val q = new java.util.ArrayDeque[(Long, Double, Long)]() // (uts, price, size)
-        val minQ = new java.util.ArrayDeque[(Long, Double)]()
-        val maxQ = new java.util.ArrayDeque[(Long, Double)]()
-        // exact integer accumulation: cents = round(price*100) is an
-        // exact Long for 2-decimal prices, so add/evict cannot drift
-        var sumPS, sumP = 0L
-        var sumS, n = 0L
-        // rows of one uts group awaiting emission (non-ctx only)
-        var pendingOut: List[Row] = Nil
-
-        private def resetChunk(): Unit = {
-          q.clear(); minQ.clear(); maxQ.clear()
-          sumPS = 0L; sumP = 0L; sumS = 0L; n = 0L
-        }
-
-        private def add(uts: Long, p: Double, s: Long): Unit = {
-          q.addLast((uts, p, s))
-          val cents = math.round(p * 100)
-          sumPS += cents * s; sumP += cents; sumS += s; n += 1
-          while (!minQ.isEmpty && minQ.peekLast()._2 > p) minQ.removeLast()
-          minQ.addLast((uts, p))
-          while (!maxQ.isEmpty && maxQ.peekLast()._2 < p) maxQ.removeLast()
-          maxQ.addLast((uts, p))
-        }
-
-        private def evict(nowUts: Long): Unit = {
-          while (!q.isEmpty && q.peekFirst()._1 < nowUts - m) {
-            val (u, p, s) = q.removeFirst()
-            val cents = math.round(p * 100)
-            sumPS -= cents * s; sumP -= cents; sumS -= s; n -= 1
-            if (!minQ.isEmpty && minQ.peekFirst()._1 == u && minQ.peekFirst()._2 == p) minQ.removeFirst()
-            if (!maxQ.isEmpty && maxQ.peekFirst()._1 == u && maxQ.peekFirst()._2 == p) maxQ.removeFirst()
-          }
-        }
-
-        override def hasNext: Boolean = {
-          while (pendingOut.isEmpty && buf.hasNext) {
-            val head = buf.head
-            val sym = head.get(symIdx)
-            val chunk = head.getLong(chunkIdx)
-            if (sym != curSym || chunk != curChunk) {
-              curSym = sym; curChunk = chunk; resetChunk()
-            }
-            // consume the whole equal-uts group first (RANGE-frame tie
-            // semantics: ties see each other)
-            val uts = head.getLong(utsIdx)
-            var group: List[Row] = Nil
-            while (
-              buf.hasNext && buf.head.get(symIdx) == sym &&
-              buf.head.getLong(chunkIdx) == chunk && buf.head.getLong(utsIdx) == uts
-            ) {
-              val r = buf.next()
-              add(uts, r.getDouble(priceIdx), r.getLong(sizeIdx))
-              if (!r.getBoolean(ctxIdx)) group = r :: group
-            }
-            evict(uts)
-            pendingOut = group.reverse.map { r =>
-              Row.fromSeq(
-                // Seq[Any]: a bare Seq would widen the Long count to
-                // Double and break the BIGINT field
-                keepIdx.map(r.get).toSeq ++ Seq[Any](
-                  sumPS.toDouble / sumS / 100.0,
-                  sumP.toDouble / n / 100.0,
-                  minQ.peekFirst()._2,
-                  maxQ.peekFirst()._2,
-                  n,
-                )
-              )
-            }
-          }
-          pendingOut.nonEmpty
-        }
-
-        override def next(): Row = {
-          val r = pendingOut.head; pendingOut = pendingOut.tail; r
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
-
   /** Multi-window features in ONE pass: every window's
     * vwap/mean/min/max/n columns (suffixed `_<name>`, where name is
     * the window spec with spaces stripped, e.g. `rolling_vwap_30minutes`)
-    * computed from a single halo-chunk scan — one shuffle, one sort,
-    * one pass over the ticks regardless of window count. The
+    * computed from a single per-symbol scan — at most one shuffle, one
+    * sort, one pass over the ticks regardless of window count. The
     * per-window marginal cost is just its deque bookkeeping; Spark's
     * sliding RANGE frames would pay an O(n·w) recompute PER WINDOW
-    * plus repeated window passes. The halo is sized by the LARGEST
-    * window (all must be <= 1 day; otherwise compose
-    * featuresDeclarative per long window).
+    * plus repeated window passes. All windows must be <= 1 day, as in
+    * [[features]]; compose featuresDeclarative per longer window.
     */
   def featuresMulti(
       df: DataFrame,
@@ -235,74 +106,56 @@ object Rolling {
       keep: Seq[String] = Nil,
   ): DataFrame = {
     require(windows.nonEmpty)
-    val specs = windows.map(w => (w.trim.replaceAll("\\s+", ""), windowMicros(w)))
-    require(specs.forall(_._2 <= 86400000000L), "all windows must be <= 1 day (halo bound)")
+    val specs = windows.map(w => ("_" + w.trim.replaceAll("\\s+", ""), windowMicros(w)))
+    require(specs.forall(_._2 <= 86400000000L), "all windows must be <= 1 day (featuresDeclarative for longer ones)")
     val base =
       if (keep.isEmpty) df
       else df.select((Seq(c.symbol, c.ts, c.price, c.size) ++ keep).distinct.map(col): _*)
-    featuresMultiScan(base, specs, c)
+    featuresScan(base, specs, c)
   }
 
-  private def featuresMultiScan(
-      df: DataFrame,
-      specs: Seq[(String, Long)],
-      c: TradingCols,
-  ): DataFrame = {
-    val day = 86400000000L
-    val mMax = specs.map(_._2).max
-    val withUts = df
-      .withColumn("__uts", unix_micros(col(c.ts)))
-      .withColumn("__day", unix_micros(date_trunc("DAY", col(c.ts))))
-    val base = withUts
-      .withColumn("__chunk", col("__day"))
-      .withColumn("__ctx", lit(false))
-    val halo = withUts
-      .where(col("__day") + day - col("__uts") <= mMax)
-      .withColumn("__chunk", col("__day") + day)
-      .withColumn("__ctx", lit(true))
-    val unioned = base.unionByName(halo).drop("__day")
-    val sorted = unioned
-      .repartition(col(c.symbol), col("__chunk"))
-      .sortWithinPartitions(col(c.symbol), col("__chunk"), col("__uts"))
-
-    val schema = sorted.schema
-    val symIdx = schema.fieldIndex(c.symbol)
-    val chunkIdx = schema.fieldIndex("__chunk")
-    val utsIdx = schema.fieldIndex("__uts")
-    val priceIdx = schema.fieldIndex(c.price)
-    val sizeIdx = schema.fieldIndex(c.size)
-    val ctxIdx = schema.fieldIndex("__ctx")
-    val keepIdx = schema.fieldNames.zipWithIndex
-      .collect { case (n, i) if n != "__uts" && n != "__chunk" && n != "__ctx" => i }
-    val outSchema = StructType(
-      keepIdx.map(schema.fields(_)).toSeq ++ specs.flatMap { case (nm, _) =>
-        Seq(
-          StructField(s"rolling_vwap_$nm", DoubleType, nullable = true),
-          StructField(s"rolling_mean_price_$nm", DoubleType, nullable = true),
-          StructField(s"rolling_min_$nm", DoubleType, nullable = true),
-          StructField(s"rolling_max_$nm", DoubleType, nullable = true),
-          StructField(s"rolling_n_$nm", LongType, nullable = false),
-        )
-      }
-    )
+  /** Per-symbol deque scan over ticks in time order: each window keeps
+    * its trailing rows in a deque with running cent sums and monotonic
+    * min/max deques, so a tick costs O(1) amortized per window. Rows
+    * with equal ts see each other (RANGE-frame ties) and leave with
+    * the same values. The null-ts rows of a symbol sort first and, as
+    * in a RANGE frame, form one frame of their own. Columns are named
+    * `rolling_<stat><suffix>`, one suffix per window.
+    */
+  private def featuresScan(df: DataFrame, specs: Seq[(String, Long)], c: TradingCols): DataFrame = {
+    val input = df.select(col("*"), unix_micros(col(c.ts)).as("__uts"))
+    val kept = df.schema.fields
+    val nK = kept.length
+    val utsIdx = nK
+    val priceIdx = df.schema.fieldIndex(c.price)
+    val sizeIdx = df.schema.fieldIndex(c.size)
+    val out = StructType(kept.toSeq ++ specs.flatMap { case (sfx, _) =>
+      Seq(
+        StructField(s"rolling_vwap$sfx", DoubleType, nullable = true),
+        StructField(s"rolling_mean_price$sfx", DoubleType, nullable = true),
+        StructField(s"rolling_min$sfx", DoubleType, nullable = true),
+        StructField(s"rolling_max$sfx", DoubleType, nullable = true),
+        StructField(s"rolling_n$sfx", LongType, nullable = false),
+      )
+    })
     val ms = specs.map(_._2).toArray
-    val nW = ms.length
+    KeyedScan(input, Seq(col(c.symbol)), Seq(col("__uts")), out, keyOut = Seq(c.symbol)) { () =>
+      new ScanKernel {
+        private val nW = ms.length
+        private val q = Array.fill(nW)(new java.util.ArrayDeque[(Long, Double, Long)]()) // (uts, price, size)
+        private val minQ = Array.fill(nW)(new java.util.ArrayDeque[(Long, Double)]())
+        private val maxQ = Array.fill(nW)(new java.util.ArrayDeque[(Long, Double)]())
+        // exact integer accumulation: cents = round(price*100) is an
+        // exact Long for 2-decimal prices, so add/evict cannot drift
+        private val sumPS, sumP, sumS, nn = new Array[Long](nW)
+        // the rows of the current equal-ts group, emitted when it ends
+        private val group = new java.util.ArrayList[InternalRow]()
+        private var groupNull = false
+        private var groupUts = 0L
 
-    sorted.mapPartitions { it =>
-      val buf = it.buffered
-      new Iterator[Row] {
-        var curSym: Any = null
-        var curChunk: Long = Long.MinValue
-        val q = Array.fill(nW)(new java.util.ArrayDeque[(Long, Double, Long)]())
-        val minQ = Array.fill(nW)(new java.util.ArrayDeque[(Long, Double)]())
-        val maxQ = Array.fill(nW)(new java.util.ArrayDeque[(Long, Double)]())
-        val sumPS = new Array[Long](nW)
-        val sumP = new Array[Long](nW)
-        val sumS = new Array[Long](nW)
-        val nn = new Array[Long](nW)
-        var pendingOut: List[Row] = Nil
+        def reset(k: InternalRow): Unit = { clear(); group.clear() }
 
-        private def resetChunk(): Unit = {
+        private def clear(): Unit = {
           var k = 0
           while (k < nW) {
             q(k).clear(); minQ(k).clear(); maxQ(k).clear()
@@ -341,46 +194,48 @@ object Rolling {
           }
         }
 
-        override def hasNext: Boolean = {
-          while (pendingOut.isEmpty && buf.hasNext) {
-            val head = buf.head
-            val sym = head.get(symIdx)
-            val chunk = head.getLong(chunkIdx)
-            if (sym != curSym || chunk != curChunk) {
-              curSym = sym; curChunk = chunk; resetChunk()
+        private def emitGroup(o: ScanOut): Unit = if (!group.isEmpty) {
+          if (!groupNull) evict(groupUts)
+          var r = 0
+          while (r < group.size) {
+            val row = group.get(r)
+            val w = o.begin()
+            var i = 0
+            while (i < nK) { o.copy(i, row, i, kept(i).dataType); i += 1 }
+            var k = 0
+            while (k < nW) {
+              val at = nK + 5 * k
+              w.write(at, sumPS(k).toDouble / sumS(k) / 100.0)
+              w.write(at + 1, sumP(k).toDouble / nn(k) / 100.0)
+              w.write(at + 2, minQ(k).peekFirst()._2)
+              w.write(at + 3, maxQ(k).peekFirst()._2)
+              w.write(at + 4, nn(k))
+              k += 1
             }
-            val uts = head.getLong(utsIdx)
-            var group: List[Row] = Nil
-            while (
-              buf.hasNext && buf.head.get(symIdx) == sym &&
-              buf.head.getLong(chunkIdx) == chunk && buf.head.getLong(utsIdx) == uts
-            ) {
-              val r = buf.next()
-              add(uts, r.getDouble(priceIdx), r.getLong(sizeIdx))
-              if (!r.getBoolean(ctxIdx)) group = r :: group
-            }
-            evict(uts)
-            pendingOut = group.reverse.map { r =>
-              val feats = (0 until nW).flatMap { k =>
-                Seq[Any](
-                  sumPS(k).toDouble / sumS(k) / 100.0,
-                  sumP(k).toDouble / nn(k) / 100.0,
-                  minQ(k).peekFirst()._2,
-                  maxQ(k).peekFirst()._2,
-                  nn(k),
-                )
-              }
-              Row.fromSeq(keepIdx.map(r.get).toSeq ++ feats)
-            }
+            o.emit()
+            r += 1
           }
-          pendingOut.nonEmpty
+          group.clear()
         }
 
-        override def next(): Row = {
-          val r = pendingOut.head; pendingOut = pendingOut.tail; r
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          if (row.isNullAt(priceIdx) || row.isNullAt(sizeIdx))
+            throw new IllegalArgumentException(s"rolling features need a ${c.price} and a ${c.size} on every tick")
+          val isNull = row.isNullAt(utsIdx)
+          val uts = if (isNull) 0L else row.getLong(utsIdx)
+          if (group.isEmpty || isNull != groupNull || uts != groupUts) {
+            emitGroup(o)
+            // the null-ts frame is its own: the first timed tick starts afresh
+            if (groupNull && !isNull) clear()
+            groupNull = isNull; groupUts = uts
+          }
+          add(uts, row.getDouble(priceIdx), row.getLong(sizeIdx))
+          group.add(row.copy())
         }
+
+        def flush(o: ScanOut): Unit = emitGroup(o)
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   private[graft] def windowMicros(window: String): Long = {

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Embedding similarity search (ANN) over an Array[Float] column.
   *
@@ -310,8 +312,17 @@ object Similarity {
     val cents = kmeans(nv, seed, kmeansIters)
     // cell assignment: nearest centroid by cosine with the SMALLEST
     // centroid id tiebreak — per-row inline argmax inside the inline
-    // gate (see assignToCells), the join + max_by form past it
-    val assigned = assignToCells(nv, cents)
+    // gate (see assignToCells), the join + max_by form past it. Inside
+    // the gate a null vector has a null cell, which the cell join
+    // drops: those rows leave first and the cell is declared non-null,
+    // so Catalyst infers no isnotnull(cell) filter, which it would push
+    // below the projection and so run the argmax twice per vector.
+    val assigned = cents match {
+      case Left(_) =>
+        val a = assignToCells(nv.where(col("nv").isNotNull), cents)
+        a.withColumn("cell", ColumnBridge.toColumn(KnownNotNull(ColumnBridge.toExpression(a("cell")))))
+      case Right(_) => assignToCells(nv, cents)
+    }
     // queries probe their nProbe nearest cells: a per-row ranking over
     // the centroid matrix already held for the inline assignment, or a
     // keyed top-n over the query × centroid product past the gate

@@ -3,13 +3,17 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Ascending, Attribute, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeArrayData,
-  UnsafeProjection, UnsafeRow
+  Alias, Ascending, Attribute, AttributeMap, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeArrayData,
+  UnsafeMapData, UnsafeProjection, UnsafeRow
 }
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{
+  AllTuples, ClusteredDistribution, CoalescedHashPartitioning, Distribution, HashPartitioning, Partitioning, PartitioningCollection,
+  UnknownPartitioning
+}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -71,6 +75,8 @@ final class ScanOut(numFields: Int) {
       case BinaryType => w.write(ordinal, row.getBinary(from))
       case t: DecimalType => w.write(ordinal, row.getDecimal(from, t.precision, t.scale), t.precision, t.scale)
       case _: ArrayType => arrayData(ordinal, row.getArray(from).asInstanceOf[UnsafeArrayData])
+      case t: StructType => w.write(ordinal, row.getStruct(from, t.length).asInstanceOf[UnsafeRow])
+      case _: MapType => w.write(ordinal, row.getMap(from).asInstanceOf[UnsafeMapData])
       case other => throw new IllegalArgumentException(s"keyed scan cannot copy a $other field")
     }
 }
@@ -90,6 +96,17 @@ final class ScanOut(numFields: Int) {
   * puts them next to each other). Null values in an ascending order
   * column sort first within their group, in a descending one last;
   * what a null means is the kernel's business.
+  *
+  * Layout pass-through: `keyOut(i)` is the output column into which
+  * the kernel writes `keys(i)` unchanged. Every output row comes from
+  * its group's task, so when the child is hash-partitioned on keys
+  * that all have such a column, the output is hash-partitioned on
+  * those columns, and a chained scan or join on them plans no second
+  * exchange.
+  *
+  * The node is a `MultiInstanceRelation`: when a plan joins a scan's
+  * output with itself, the analyzer gives the second copy fresh output
+  * attributes.
   */
 case class KeyedScanPlan(
     child: LogicalPlan,
@@ -98,19 +115,25 @@ case class KeyedScanPlan(
     newKernel: () => ScanKernel,
     output: Seq[Attribute],
     partitions: Option[Int],
-) extends UnaryNode {
+    keyOut: Seq[Attribute],
+) extends UnaryNode with MultiInstanceRelation {
   override def producedAttributes: AttributeSet = AttributeSet(output)
   // the kernel reads child columns by ordinal: keep every one of them
   override def references: AttributeSet = child.outputSet
   override lazy val resolved: Boolean = childrenResolved
   override def simpleString(maxFields: Int): String = KeyedScan.describe(keys, order, output)
   override protected def withNewChildInternal(c: LogicalPlan): KeyedScanPlan = copy(child = c)
+
+  override def newInstance(): KeyedScanPlan = {
+    val fresh = AttributeMap(output.map(a => a -> a.newInstance()))
+    copy(output = output.map(fresh), keyOut = keyOut.map(fresh))
+  }
 }
 
 object KeyedScanStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: KeyedScanPlan =>
-      KeyedScanExec(planLater(p.child), p.keys, p.order, p.newKernel, p.output, p.partitions) :: Nil
+      KeyedScanExec(planLater(p.child), p.keys, p.order, p.newKernel, p.output, p.partitions, p.keyOut) :: Nil
     case _ => Nil
   }
 }
@@ -122,10 +145,28 @@ case class KeyedScanExec(
     newKernel: () => ScanKernel,
     output: Seq[Attribute],
     partitions: Option[Int],
+    keyOut: Seq[Attribute],
 ) extends UnaryExecNode {
 
   override def producedAttributes: AttributeSet = AttributeSet(output)
   override def simpleString(maxFields: Int): String = KeyedScan.describe(keys, order, output)
+
+  override def outputPartitioning: Partitioning = {
+    def passed(p: Partitioning): Seq[Partitioning] = p match {
+      case HashPartitioning(exprs, n) =>
+        val mapped = exprs.map(e => keys.zip(keyOut).collectFirst { case (k, o) if k.semanticEquals(e) => o })
+        if (mapped.forall(_.isDefined)) Seq(HashPartitioning(mapped.flatten, n)) else Nil
+      case CoalescedHashPartitioning(h, bounds) =>
+        passed(h).collect { case p: HashPartitioning => CoalescedHashPartitioning(p, bounds) }
+      case PartitioningCollection(ps) => ps.flatMap(passed)
+      case _ => Nil
+    }
+    passed(child.outputPartitioning) match {
+      case Seq() => UnknownPartitioning(child.outputPartitioning.numPartitions)
+      case Seq(one) => one
+      case many => PartitioningCollection(many)
+    }
+  }
 
   override def requiredChildDistribution: Seq[Distribution] =
     (if (keys.isEmpty) AllTuples else ClusteredDistribution(keys, requiredNumPartitions = partitions)) :: Nil
@@ -186,10 +227,13 @@ object KeyedScan {
     * which Catalyst folds into the scan below the exchange).
     * An `order` column may carry a direction (`col("x").desc`);
     * a plain column sorts ascending, nulls first. `partitions` fixes
-    * the exchange's partition count.
+    * the exchange's partition count. `keyOut` names, for the leading
+    * keys in turn, the output column the kernel writes that key into
+    * unchanged (see [[KeyedScanPlan]]): the scan then keeps the child's
+    * hash partitioning on those keys.
     */
   def apply(df: DataFrame, keys: Seq[Column], order: Seq[Column], out: StructType,
-      partitions: Option[Int] = None)(kernel: () => ScanKernel): DataFrame = {
+      partitions: Option[Int] = None, keyOut: Seq[String] = Nil)(kernel: () => ScanKernel): DataFrame = {
     val spark = df.sparkSession
     if (!spark.experimental.extraStrategies.contains(KeyedScanStrategy)) {
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ KeyedScanStrategy
@@ -206,6 +250,12 @@ object KeyedScan {
         case other => throw new IllegalStateException(s"unexpected order plan $other")
       }
     val attrs = out.fields.toSeq.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-    ColumnBridge.ofRows(spark, KeyedScanPlan(child, keyExprs, sortOrder, kernel, attrs, partitions))
+    require(keyOut.length <= keyExprs.length, s"keyOut $keyOut names more columns than there are keys")
+    val passed = keyOut.zip(keyExprs).map { case (name, k) =>
+      val a = attrs(out.fieldIndex(name))
+      require(a.dataType == k.dataType, s"keyOut column $name is ${a.dataType}, its key is ${k.dataType}")
+      a
+    }
+    ColumnBridge.ofRows(spark, KeyedScanPlan(child, keyExprs, sortOrder, kernel, attrs, partitions, passed))
   }
 }

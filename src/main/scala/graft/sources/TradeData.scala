@@ -50,6 +50,14 @@ object TradeData {
     * Timestamps arrive in whatever encoding the driver's current
     * generator used (see [[normalizeTs]]); the oracle casts
     * `ts::TIMESTAMP` to get the identical µs truncation in DuckDB.
+    *
+    * Layout: the tape is hash-clustered by symbol (one hash exchange
+    * on `symbol` over the session's shuffle partitions, no sort).
+    * Cache it once and the per-symbol ops (bars, imbalance bars,
+    * daily vol, the as-of join, the barrier, frac-diff, rolling and
+    * uniqueness scans) run on its partitions with no exchange of their
+    * own. Hash, not round-robin, so a retried task reads the same rows;
+    * not range, so building the plan runs no sampling job.
     */
   def fromEvents(spark: SparkSession, sfDir: String): DataFrame = {
     val c = TradingCols.default
@@ -71,6 +79,7 @@ object TradeData {
         (col("event_id") % 97 + 1).as(c.size),
         col("event_id").as(c.tradeId),
       )
+      .repartition(col(c.symbol))
   }
 
   /** `events.parquet` with `ts` normalized to micro-precision

@@ -13,4 +13,9 @@ class BenchLineSpec extends AnyFunSuite {
     assert(j.get("sf").asText() == "/data/sf0.1" && j.get("n_queries").asInt() == 133)
     assert(j.get("codegen_compiles").asLong() == 57L)
   }
+
+  test("SPARK_GRAFT_CONF entries split on ';', each at its first '='") {
+    assert(HarnessConf.parse("a.b=1;c=x=y;;no-equals;d=") == Seq("a.b" -> "1", "c" -> "x=y", "d" -> ""))
+    assert(HarnessConf.parse("").isEmpty)
+  }
 }

@@ -843,9 +843,9 @@ class CoreOperatorsSpec extends SparkSpec {
     }
   }
 
-  // --- hot-symbol skew: the (symbol, day)-chunk split is the §6
-  // scale claim — one symbol carrying ~90% of rows still yields one
-  // independent chunk per day, and halo stitching stays bit-exact ---
+  // --- hot-symbol skew: one symbol carrying ~90% of rows over five
+  // days. The scan runs per symbol, so HOT is one task; it stays
+  // bit-exact against RANGE frames across every day edge ---
   test("rolling scan survives hot-symbol skew with per-day parallelism") {
     val rnd = new scala.util.Random(11)
     val t0 = java.time.Instant.parse("2021-03-01T00:00:00Z")

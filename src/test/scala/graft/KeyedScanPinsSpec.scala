@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Rolling, Similarity}
 
-/** The corpus ops rebuilt on keyed scans and driver-side k-means means
-  * give exactly the rows of the forms they replaced (`LshReference`,
-  * `WindowReference`): every value, doubles by bit pattern.
+/** The ops rebuilt on keyed scans and driver-side k-means means give
+  * exactly the rows of the forms they replaced (`LshReference`,
+  * `WindowReference`, `RollingReference`): every value, doubles by bit
+  * pattern.
   */
 class KeyedScanPinsSpec extends SparkSpec {
   import spark.implicits._
@@ -68,17 +69,61 @@ class KeyedScanPinsSpec extends SparkSpec {
   test("ivf top-k: keyed ranking and driver k-means == window-form reference, bit-exact with score ties") {
     // a few directions, each many times: identical centroids tie in the
     // probe ranking, identical vectors and mirror pairs (equal dots
-    // with the query, different cells) tie in the top-k
+    // with the query, different cells) tie in the top-k; a null vector
+    // has no cell and is nobody's neighbour
     val dirs = Seq(Seq(1f, 0f, 0f, 0f), Seq(0.6f, 0.8f, 0f, 0f), Seq(0.6f, -0.8f, 0f, 0f),
       Seq(0f, 0f, 1f, 0f), Seq(0f, 0.6f, 0f, 0.8f), Seq(0f, 0.6f, 0f, -0.8f), Seq(-1f, 0f, 0f, 0f))
     val rnd = new scala.util.Random(3)
     val emb = (0 until 400).map { i =>
       val d = dirs(rnd.nextInt(dirs.length))
       (i.toLong, if (i % 3 == 0) d.map(x => x + (rnd.nextInt(3) - 1) * 0.25f) else d)
-    }.toDF("vec_id", "embedding").repartition(3)
+    }.toDF("vec_id", "embedding").union(Seq((400L, null: Seq[Float])).toDF("vec_id", "embedding")).repartition(3)
     for (iters <- Seq(0, 2); probe <- Seq(1, 3))
       assertSame(
         Similarity.ivfTopK(emb, nQueries = 12, k = 15, nCells = 20, nProbe = probe, kmeansIters = iters),
         WindowReference.ivfTopK(emb, nQueries = 12, k = 15, nCells = 20, nProbe = probe, kmeansIters = iters))
+  }
+
+  test("rolling: per-symbol deque scan == day-chunk + halo reference, bit-exact (ties, day edges, null keys)") {
+    // three days of ticks for two symbols and a null one, with equal-ts
+    // ties, ticks on and just past each midnight and exactly one window
+    // before it, plus null-ts rows
+    val rnd = new scala.util.Random(5)
+    val day = 86400L
+    val t0 = java.time.Instant.parse("2024-03-04T00:00:00Z").getEpochSecond
+    val edges = (1 to 2).flatMap(d => Seq(d * day, d * day + 1, d * day - 1800, d * day - 3600, d * day - day))
+    val syms = Seq("A", "B", null)
+    val at = (0 until 500).map(i => (syms(i % 3), rnd.nextInt(3 * day.toInt).toLong)) ++
+      (0 until 40).map(i => (syms(i / 3 % 3), (i / 3) * 7L)) ++ // runs of 3 equal-ts ticks per symbol
+      syms.flatMap(sym => (edges ++ edges.take(4)).map(sym -> _))
+    val ticks = at.zipWithIndex.map { case ((sym, s), i) =>
+      (sym, Option(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(t0 + s))),
+        1.0 + rnd.nextInt(9999) / 100.0, (rnd.nextInt(50) + 1).toLong, i.toLong)
+    } ++ Seq(("A", None, 12.34, 7L, 9001L), ("A", None, 12.35, 3L, 9002L), (null, None, 5.0, 1L, 9003L))
+    // struct and map passengers ride along unchanged
+    val df = ticks.toDF("symbol", "ts", "price", "size", "trade_id")
+      .withColumn("meta", struct(col("trade_id"), map(lit("size"), col("size"))))
+      .repartition(3)
+    val timed = df.where(col("ts").isNotNull)
+    val windows = Seq("30 minutes", "1 hour", "1 day")
+    val us = windows.map(Rolling.windowMicros)
+    assertSame(Rolling.featuresMulti(df, windows).where(col("ts").isNotNull),
+      RollingReference.haloChunked(timed, windows.map("_" + _.replace(" ", "")).zip(us), graft.api.TradingCols.default))
+    for ((w, m) <- windows.zip(us))
+      assertSame(Rolling.features(df, w).where(col("ts").isNotNull),
+        RollingReference.haloChunked(timed, Seq("" -> m), graft.api.TradingCols.default))
+    // the halo form fails on a null ts; the RANGE frame groups the null-ts
+    // rows of a symbol into one frame of their own
+    assertSame(Rolling.features(df, "1 hour").where(col("ts").isNull),
+      Rolling.featuresDeclarative(df, "1 hour").where(col("ts").isNull))
+  }
+
+  test("a keyed scan's output joins itself: the second copy gets fresh attributes") {
+    val t = graft.sources.TradeData.synthetic(spark, 400, nSymbols = 3)
+    val vol = graft.operators.Labels.dailyVol(t, span = 10)
+    val last = vol.groupBy("symbol").agg(max("ts").as("ts"))
+    val joined = vol.join(last, Seq("symbol", "ts"))
+    assert(joined.count() == last.count())
+    assert(vol.as("a").join(vol.as("b"), Seq("symbol", "ts")).count() == vol.count())
   }
 }
