@@ -535,10 +535,10 @@ object SparkEntry {
     },
     "sadf" -> { (s, dir) =>
       // bounded sup-ADF explosiveness, backward windows 10..40;
-      // O(maxW)-state streaming scan, bit-identical to the
-      // declarative window form (pinned)
+      // O(maxW)-state keyed scan per symbol, bit-identical to the
+      // declarative window reference in the tests
       usTs("ts")(
-        operators.Sadf.sadfScan(TradeData.fromEvents(s, dir), minWindow = 10, maxWindow = 40)
+        operators.Sadf.sadf(TradeData.fromEvents(s, dir), minWindow = 10, maxWindow = 40)
       ).orderBy(col("symbol"), col("ts"))
     },
     "csw_breaks" -> { (s, dir) =>
@@ -689,12 +689,11 @@ object SparkEntry {
     },
     "trend_labels" -> { (s, dir) =>
       // horizons 5..20; integer OLS moments, engine-exact argmax.
-      // Production O(maxHorizon)-state scan over symbol x day chunks
-      // with the multi-day halo — bit-identical to the declarative
-      // chunked and whole-symbol window forms (pinned in ScalaTest)
+      // O(maxHorizon)-state keyed scan per symbol, bit-identical to
+      // the declarative whole-symbol window reference in the tests
       usTs("ts")(
         operators.TrendScan
-          .labelsScan(TradeData.fromEvents(s, dir), minHorizon = 5, maxHorizon = 20)
+          .labels(TradeData.fromEvents(s, dir), minHorizon = 5, maxHorizon = 20)
       ).orderBy(col("symbol"), col("ts"))
     },
     "return_attribution" -> { (s, dir) =>

@@ -1,8 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Exponentially-weighted moving statistics.
   *
@@ -16,14 +19,14 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * the reference's weekend-returns test).
   *
   * The EWM recurrence is a linear scan that no window function
-  * expresses; implemented as a streaming per-partition pass with
-  * O(1) state after one hash repartition on the group keys — no
-  * per-group materialization, so arbitrarily long histories stream.
+  * expresses; it runs as one keyed scan per key group with O(1)
+  * state ([[EwmStd]]), so arbitrarily long histories stream.
   */
 object Ewm {
 
   /** Appends `outCol` = EWM std of `valueCol` per `keyCols` group in
-    * `orderCols` order.
+    * `orderCols` order (a null key is a group of its own; null order
+    * values sort first).
     *
     * Column contract: by default the output carries every input
     * column (full rows through the shuffle). Pass `keep` to project
@@ -40,217 +43,58 @@ object Ewm {
       keep: Seq[String] = Nil,
   ): DataFrame = {
     require(span >= 1, "span must be >= 1")
-    val alpha = 2.0 / (span + 1.0)
-    val decay = 1.0 - alpha
-
     val pruned =
       if (keep.isEmpty) df
       else df.select((keyCols ++ orderCols ++ Seq(valueCol) ++ keep).distinct.map(col): _*)
-    val sorted = pruned
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-
-    val schema = StructType(sorted.schema.fields :+ StructField(outCol, DoubleType, nullable = true))
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex)
-    val valIdx = sorted.schema.fieldIndex(valueCol)
-
-    sorted.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var sumW, sumWX, sumWX2, sumW2 = 0.0
-      var nObs = 0L
-      it.map { row =>
-        val key = keyIdx.map(row.get)
-        if (key != curKey) {
-          curKey = key
-          sumW = 0.0; sumWX = 0.0; sumWX2 = 0.0; sumW2 = 0.0; nObs = 0L
+    val fields = pruned.schema.fields
+    val n = fields.length
+    val valIdx = pruned.schema.fieldIndex(valueCol)
+    val out = StructType(fields :+ StructField(outCol, DoubleType, nullable = true))
+    KeyedScan(pruned, keyCols.map(col), orderCols.map(col), out, keyOut = keyCols) { () =>
+      new ScanKernel {
+        private val ewm = new EwmStd(span)
+        def reset(key: InternalRow): Unit = ewm.reset()
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          val w = o.begin()
+          var i = 0
+          while (i < n) { o.copy(i, row, i, fields(i).dataType); i += 1 }
+          if (row.isNullAt(valIdx)) { ewm.skip(); w.setNullAt(n) }
+          else w.write(n, ewm.add(row.getDouble(valIdx)))
+          o.emit()
         }
-        sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
-        val out: Any =
-          if (row.isNullAt(valIdx)) null
-          else {
-            val x = row.getDouble(valIdx)
-            sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0; nObs += 1
-            val mean = sumWX / sumW
-            val varBiased = math.max(sumWX2 / sumW - mean * mean, 0.0)
-            val denom = sumW * sumW - sumW2
-            if (denom <= 0.0) 0.0
-            else math.sqrt(varBiased * sumW * sumW / denom)
-          }
-        Row.fromSeq(row.toSeq :+ out)
+        def flush(o: ScanOut): Unit = ()
       }
-    }(Encoders.row(schema))
+    }
+  }
+}
+
+/** The EWM std recurrence of one key group (adjust=true, bias=false,
+  * ignore_na=false), shared by [[Ewm.stdOverKey]] and
+  * `Labels.dailyVol`: every step decays the four weight sums, and an
+  * observation then adds to them. The multiply-add sequence is fixed,
+  * so both callers give the same doubles.
+  */
+final class EwmStd(span: Int) {
+  private val decay = 1.0 - 2.0 / (span + 1.0)
+  private var sumW, sumWX, sumWX2, sumW2 = 0.0
+
+  def reset(): Unit = { sumW = 0.0; sumWX = 0.0; sumWX2 = 0.0; sumW2 = 0.0 }
+
+  /** A step without an observation: older weights decay. */
+  def skip(): Unit = { sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay }
+
+  /** A step observing `x`; returns the std after it. */
+  def add(x: Double): Double = {
+    skip()
+    sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0
+    std
   }
 
-  /** Segmented-scan EWM std: same statistic as [[stdOverKey]], but
-    * the EWM recurrence — a LINEAR recurrence, hence parallelizable
-    * by prefix composition — is split at `chunkCol` boundaries so a
-    * hot key no longer serializes through one core (the round-1
-    * design limit: repartition(symbol) bounds throughput by the
-    * largest symbol's full history).
-    *
-    * Three passes:
-    *  1. local scans per (key, chunk) from zero state — parallelism
-    *     key × chunk; emits one summary row per chunk
-    *     (n, end sums). The state after n rows satisfies
-    *     S_true = S_in·decay^n + S_local (decay² for the
-    *     squared-weight sum) — exact for a linear recurrence.
-    *  2. a sequential fold per key over the CHUNK SUMMARIES (one row
-    *     per chunk — metadata-sized) producing each chunk's carry-in.
-    *  3. rescan per (key, chunk) seeded with the carry-in.
-    *
-    * The chunked input is checkpointed so passes 1 and 3 scan a
-    * parquet table instead of recomputing the (possibly expensive)
-    * upstream plan twice. Results agree with the monolithic scan to
-    * float-associativity (~1e-13 relative); both are within the
-    * oracle's 6-decimal compare.
-    *
-    * `chunkCol` must be ascending in `orderCols` order within each
-    * key (e.g. the tick date) — bars of parallelism, not semantics.
-    *
-    * `keep`: same column contract as [[stdOverKey]] — non-empty
-    * projects to `keep` ∪ key/order/value columns before the
-    * checkpoint, so both scan passes and all three shuffles carry
-    * only the needed columns.
-    */
-  def stdOverKeyChunked(
-      df: DataFrame,
-      keyCols: Seq[String],
-      chunkCol: org.apache.spark.sql.Column,
-      orderCols: Seq[String],
-      valueCol: String,
-      span: Int,
-      outCol: String,
-      keep: Seq[String] = Nil,
-  ): DataFrame = {
-    require(span >= 1, "span must be >= 1")
-    val alpha = 2.0 / (span + 1.0)
-    val decay = 1.0 - alpha
-
-    val pruned =
-      if (keep.isEmpty) df
-      else df.select((keyCols ++ orderCols ++ Seq(valueCol) ++ keep).distinct.map(col): _*)
-    val chunked = graft.sources.Checkpoint.tableGated(
-      pruned.withColumn("__chunk", chunkCol),
-      "ewm-chunked",
-    )
-    val groupCols = keyCols :+ "__chunk"
-    val sorted = chunked
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-    val keyIdx = groupCols.map(sorted.schema.fieldIndex)
-    val valIdx = sorted.schema.fieldIndex(valueCol)
-
-    // pass 1: per-chunk local end states
-    val sumSchema = StructType(
-      groupCols.map(n => sorted.schema(n)) ++ Seq(
-        StructField("__n", org.apache.spark.sql.types.LongType, nullable = false),
-        StructField("__eW", DoubleType, nullable = false),
-        StructField("__eWX", DoubleType, nullable = false),
-        StructField("__eWX2", DoubleType, nullable = false),
-        StructField("__eW2", DoubleType, nullable = false),
-      )
-    )
-    val summaries = sorted.mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var curKey: Seq[Any] = null
-      var keyVals: Seq[Any] = null
-      var n = 0L
-      var sumW, sumWX, sumWX2, sumW2 = 0.0
-      def flush(): Unit =
-        // Seq[Any]: a bare Seq would numerically widen the Long count
-        // to Double and break the BIGINT field
-        if (curKey != null) out += Row.fromSeq(keyVals ++ Seq[Any](n, sumW, sumWX, sumWX2, sumW2))
-      it.foreach { row =>
-        val key = keyIdx.map(row.get)
-        if (key != curKey) {
-          flush()
-          curKey = key; keyVals = key
-          n = 0L; sumW = 0.0; sumWX = 0.0; sumWX2 = 0.0; sumW2 = 0.0
-        }
-        n += 1
-        sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
-        if (!row.isNullAt(valIdx)) {
-          val x = row.getDouble(valIdx)
-          sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0
-        }
-      }
-      flush()
-      out.iterator
-    }(Encoders.row(sumSchema))
-
-    // pass 2: fold summaries per key (metadata-sized) -> carry-ins
-    val carrySchema = StructType(
-      groupCols.map(n => sorted.schema(n)) ++ Seq(
-        StructField("__cW", DoubleType, nullable = false),
-        StructField("__cWX", DoubleType, nullable = false),
-        StructField("__cWX2", DoubleType, nullable = false),
-        StructField("__cW2", DoubleType, nullable = false),
-      )
-    )
-    val baseKeyIdx = keyCols.indices
-    val nChunkCols = groupCols.length
-    val carries = summaries
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions(groupCols.map(col): _*)
-      .mapPartitions { it =>
-        var curKey: Seq[Any] = null
-        var cW, cWX, cWX2, cW2 = 0.0
-        it.map { s =>
-          val key = baseKeyIdx.map(s.get)
-          if (key != curKey) {
-            curKey = key; cW = 0.0; cWX = 0.0; cWX2 = 0.0; cW2 = 0.0
-          }
-          val carry = Row.fromSeq((0 until nChunkCols).map(s.get) ++ Seq(cW, cWX, cWX2, cW2))
-          val n = s.getLong(nChunkCols)
-          val dn = math.pow(decay, n.toDouble)
-          val dn2 = math.pow(decay * decay, n.toDouble)
-          cW = cW * dn + s.getDouble(nChunkCols + 1)
-          cWX = cWX * dn + s.getDouble(nChunkCols + 2)
-          cWX2 = cWX2 * dn + s.getDouble(nChunkCols + 3)
-          cW2 = cW2 * dn2 + s.getDouble(nChunkCols + 4)
-          carry
-        }
-      }(Encoders.row(carrySchema))
-
-    // pass 3: rescan each chunk seeded with its carry-in
-    val joined = chunked
-      .join(carries, groupCols, "left")
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-    val outSchema = StructType(chunked.schema.fields :+ StructField(outCol, DoubleType, nullable = true))
-    val jKeyIdx = groupCols.map(joined.schema.fieldIndex)
-    val jValIdx = joined.schema.fieldIndex(valueCol)
-    val cIdx = Seq("__cW", "__cWX", "__cWX2", "__cW2").map(joined.schema.fieldIndex)
-    val keepIdx = chunked.schema.fieldNames.map(joined.schema.fieldIndex)
-
-    joined
-      .mapPartitions { it =>
-        var curKey: Seq[Any] = null
-        var sumW, sumWX, sumWX2, sumW2 = 0.0
-        it.map { row =>
-          val key = jKeyIdx.map(row.get)
-          if (key != curKey) {
-            curKey = key
-            sumW = if (row.isNullAt(cIdx(0))) 0.0 else row.getDouble(cIdx(0))
-            sumWX = if (row.isNullAt(cIdx(1))) 0.0 else row.getDouble(cIdx(1))
-            sumWX2 = if (row.isNullAt(cIdx(2))) 0.0 else row.getDouble(cIdx(2))
-            sumW2 = if (row.isNullAt(cIdx(3))) 0.0 else row.getDouble(cIdx(3))
-          }
-          sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
-          val out: Any =
-            if (row.isNullAt(jValIdx)) null
-            else {
-              val x = row.getDouble(jValIdx)
-              sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0
-              val mean = sumWX / sumW
-              val varBiased = math.max(sumWX2 / sumW - mean * mean, 0.0)
-              val denom = sumW * sumW - sumW2
-              if (denom <= 0.0) 0.0
-              else math.sqrt(varBiased * sumW * sumW / denom)
-            }
-          Row.fromSeq(keepIdx.map(row.get).toSeq :+ out)
-        }
-      }(Encoders.row(outSchema))
-      .drop("__chunk")
+  /** Unbiased std of the observations so far (0.0 for a single one). */
+  def std: Double = {
+    val mean = sumWX / sumW
+    val varBiased = math.max(sumWX2 / sumW - mean * mean, 0.0)
+    val denom = sumW * sumW - sumW2
+    if (denom <= 0.0) 0.0 else math.sqrt(varBiased * sumW * sumW / denom)
   }
 }

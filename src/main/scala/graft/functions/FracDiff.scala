@@ -54,9 +54,8 @@ object FracDiff {
     * sorted window per symbol: the state a chunk needs from its past
     * is exactly the previous n_w−1 values, so per-chunk tail
     * summaries (≤ n_w−1 doubles each) are folded per symbol into
-    * carry-ins (metadata-sized pass, same shape as
-    * Ewm.stdOverKeyChunked) and each chunk scans independently seeded
-    * with its carry. Three keyed scans in one plan: tails per
+    * carry-ins (a metadata-sized pass) and each chunk scans
+    * independently seeded with its carry. Three keyed scans in one plan: tails per
     * (symbol, chunk), carries per symbol, the FFD per (symbol, chunk).
     *
     * The carry reaches its chunk as ONE sentinel row unioned ahead of

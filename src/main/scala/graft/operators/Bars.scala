@@ -175,13 +175,21 @@ object Bars {
     typed(df, c.symbol -> StringType, c.ts -> TimestampType, c.price -> DoubleType,
       c.size -> LongType, c.tradeId -> LongType)
 
+  /** The ticks with a price (`na.drop(price)`: no null or NaN price) as
+    * symbol STRING, ts TIMESTAMP, price DOUBLE, trade_id BIGINT, at
+    * ordinals 0-3: the input of the per-symbol statistic scans.
+    */
+  private[operators] def pricedTicks(df: DataFrame, c: TradingCols): DataFrame =
+    typed(df.na.drop(Seq(c.price)), c.symbol -> StringType, c.ts -> TimestampType, c.price -> DoubleType,
+      c.tradeId -> LongType)
+
+  /** The rows `na.drop(price)` drops: a null or NaN price at `i`. */
+  private[operators] def noPrice(row: InternalRow, i: Int): Boolean = row.isNullAt(i) || row.getDouble(i).isNaN
+
   /** `df` pruned to `cols` in this order, each cast only where its type
     * differs — a pure column selection otherwise, which Catalyst folds
     * into the scan below the exchange.
     */
-  /** The rows `na.drop(price)` drops: a null or NaN price at `i`. */
-  private[operators] def noPrice(row: InternalRow, i: Int): Boolean = row.isNullAt(i) || row.getDouble(i).isNaN
-
   private[operators] def typed(df: DataFrame, cols: (String, DataType)*): DataFrame =
     df.select(cols.map { case (n, t) => typedCol(df, n, t) }: _*)
 

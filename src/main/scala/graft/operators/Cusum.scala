@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.api.TradingCols
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Symmetric CUSUM event filter (AFML ch.2.5.2.1, snippet 2.4 — the
   * event-sampling step the reference's label operators expect their
@@ -20,20 +23,12 @@ import graft.api.TradingCols
   *
   * All state is integer cents, so event placement is engine-exact.
   * Inherently sequential per symbol (the clamp is a data-dependent
-  * recurrence), so the scale pattern is the imbalance-bar one: one
-  * hash repartition on symbol, sortWithinPartitions, O(1)-state
-  * streaming pass; throughput is bounded by the largest single
-  * symbol's history, documented in SURVEY §6.
+  * recurrence): one keyed scan per symbol in (ts, trade_id) order
+  * with O(1) state; on a symbol-clustered tape it plans no exchange.
+  * Throughput is bounded by the largest single symbol's history,
+  * documented in SURVEY §6.
   */
 object Cusum {
-
-  final case class EventRow(
-      symbol: String,
-      ts: java.sql.Timestamp,
-      side: Int,
-      s_pos: Long,
-      s_neg: Long,
-  )
 
   /** @param threshold h in PRICE units (e.g. 100.0 = $100); compared
     *                   against the cusum of cent deltas as round(h*100).
@@ -45,54 +40,49 @@ object Cusum {
   ): DataFrame = {
     require(threshold > 0, "threshold > 0")
     val h = math.round(threshold * 100)
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        col(c.ts).cast("timestamp").as("ts"),
-        col(c.price).cast("double").as("price"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Timestamp, Double, Long)]
-      .mapPartitions { it =>
-        var curSym: String = null
-        var havePrev = false
-        var prevCents = 0L
-        var sPos = 0L
-        var sNeg = 0L
-        new Iterator[EventRow] {
-          private var pending: EventRow = null
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ts, price, _) = it.next()
-              if (sym != curSym) {
-                curSym = sym; havePrev = false; sPos = 0L; sNeg = 0L
-              }
-              val cents = math.round(price * 100)
-              if (!havePrev) { havePrev = true; prevCents = cents }
-              else {
-                val d = cents - prevCents
-                prevCents = cents
-                sPos = math.max(0L, sPos + d)
-                sNeg = math.min(0L, sNeg + d)
-                if (sNeg < -h) {
-                  pending = EventRow(sym, ts, -1, sPos, sNeg)
-                  sNeg = 0L
-                } else if (sPos > h) {
-                  pending = EventRow(sym, ts, 1, sPos, sNeg)
-                  sPos = 0L
-                }
-              }
-            }
-            pending != null
+    val out = StructType(Seq(
+      StructField("symbol", StringType),
+      StructField("ts", TimestampType),
+      StructField("side", IntegerType, nullable = false),
+      StructField("s_pos", LongType, nullable = false),
+      StructField("s_neg", LongType, nullable = false),
+    ))
+    KeyedScan(Bars.pricedTicks(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), out,
+      keyOut = Seq("symbol")) { () =>
+      new ScanKernel {
+        private var key: InternalRow = null
+        private var havePrev = false
+        private var prevCents = 0L
+        private var sPos = 0L
+        private var sNeg = 0L
+
+        def reset(k: InternalRow): Unit = { key = k; havePrev = false; sPos = 0L; sNeg = 0L }
+
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          val cents = math.round(row.getDouble(2) * 100)
+          if (!havePrev) { havePrev = true; prevCents = cents }
+          else {
+            val d = cents - prevCents
+            prevCents = cents
+            sPos = math.max(0L, sPos + d)
+            sNeg = math.min(0L, sNeg + d)
+            if (sNeg < -h) { event(row, -1, o); sNeg = 0L }
+            else if (sPos > h) { event(row, 1, o); sPos = 0L }
           }
-          override def next(): EventRow = { val r = pending; pending = null; r }
         }
+
+        private def event(row: InternalRow, side: Int, o: ScanOut): Unit = {
+          val w = o.begin()
+          o.copy(0, key, 0, StringType)
+          o.copy(1, row, 1, TimestampType)
+          w.write(2, side)
+          w.write(3, sPos)
+          w.write(4, sNeg)
+          o.emit()
+        }
+
+        def flush(o: ScanOut): Unit = ()
       }
-      .toDF()
+    }
   }
 }

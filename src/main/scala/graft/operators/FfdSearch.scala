@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.api.TradingCols
 import graft.functions.FracDiff
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Minimum-d search for fractional differencing (AFML ch.5.5): for a
   * grid of d values, fractionally difference the price series and run
@@ -24,27 +27,14 @@ import graft.functions.FracDiff
   * DuckDB list_reduce over a scalar-struct accumulator. The t-stat
   * tree then matches op-for-op.
   *
-  * Scale note: the ordered fold collects each (symbol, d) series into
-  * one task — the price of bit-stable double moments over a
-  * non-associative reduction. ~10^8 rows per symbol is a few GB of
-  * doubles and fine; beyond that, the segmented-scan pattern
-  * (Ewm.stdOverKeyChunked) applies at the cost of a documented
-  * tolerance instead of bit-equality.
+  * Scale note: one keyed scan per symbol folds every d at once, so a
+  * symbol's whole series streams through one task — the price of
+  * bit-stable double moments over a non-associative reduction. State
+  * is O(max n_w + |ds|), whatever the history's length.
   */
 object FfdSearch {
 
   val CriticalValue5pct: Double = -2.86
-
-  final case class MomentsRow(
-      symbol: String,
-      d: Double,
-      n_vals: Long,
-      sx: Double,
-      sxx: Double,
-      sd: Double,
-      sdd: Double,
-      sxd: Double,
-  )
 
   def adfGrid(
       df: DataFrame,
@@ -65,44 +55,28 @@ object FfdSearch {
     val weightSets = ds.map(d => FracDiff.weights(d, threshold)).toArray
     val dsArr = ds.toArray
     val maxW = weightSets.map(_.length).max
-    val spark = df.sparkSession
-    import spark.implicits._
-    val moments = df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        col(c.ts).cast("timestamp").as("ts"),
-        col(c.price).cast("double").as("price"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Timestamp, Double, Long)]
-      .mapPartitions { it =>
-        val nD = dsArr.length
-        var curSym: String = null
-        var rn = 0L
-        val ring = new Array[Double](maxW) // last prices, slot rn % maxW
-        val nVals = new Array[Long](nD)
-        val prev = new Array[Double](nD)
-        val sx, sxx, sd, sdd, sxd = new Array[Double](nD)
-        val out = scala.collection.mutable.ArrayBuffer.empty[MomentsRow]
-        def flush(): Unit =
-          if (curSym != null) {
-            var i = 0
-            while (i < nD) {
-              out += MomentsRow(curSym, dsArr(i), nVals(i), sx(i), sxx(i), sd(i), sdd(i), sxd(i))
-              i += 1
-            }
-          }
-        def reset(sym: String): Unit = {
-          curSym = sym; rn = 0L
+    val nD = dsArr.length
+    val out = StructType(Seq(StructField("symbol", StringType), StructField("d", DoubleType, nullable = false),
+      StructField("n_vals", LongType, nullable = false)) ++
+      Seq("sx", "sxx", "sd", "sdd", "sxd").map(StructField(_, DoubleType, nullable = false)))
+    val moments = KeyedScan(Bars.pricedTicks(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), out,
+      keyOut = Seq("symbol")) { () =>
+      new ScanKernel {
+        private var key: InternalRow = null
+        private var rn = 0L
+        private val ring = new Array[Double](maxW) // last prices, slot rn % maxW
+        private val nVals = new Array[Long](nD)
+        private val prev = new Array[Double](nD)
+        private val sx, sxx, sd, sdd, sxd = new Array[Double](nD)
+
+        def reset(k: InternalRow): Unit = {
+          key = k; rn = 0L
           java.util.Arrays.fill(nVals, 0L)
-          var i = 0
-          while (i < nD) { prev(i) = 0.0; sx(i) = 0.0; sxx(i) = 0.0; sd(i) = 0.0; sdd(i) = 0.0; sxd(i) = 0.0; i += 1 }
+          for (a <- Seq(prev, sx, sxx, sd, sdd, sxd)) java.util.Arrays.fill(a, 0.0)
         }
-        it.foreach { case (sym, _, price, _) =>
-          if (sym != curSym) { flush(); reset(sym) }
+
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          val price = row.getDouble(2)
           rn += 1
           ring((rn % maxW).toInt) = price
           var i = 0
@@ -128,10 +102,21 @@ object FfdSearch {
             i += 1
           }
         }
-        flush()
-        out.iterator
+
+        def flush(o: ScanOut): Unit = {
+          var i = 0
+          while (i < nD) {
+            val w = o.begin()
+            o.copy(0, key, 0, StringType)
+            w.write(1, dsArr(i))
+            w.write(2, nVals(i))
+            w.write(3, sx(i)); w.write(4, sxx(i)); w.write(5, sd(i)); w.write(6, sdd(i)); w.write(7, sxd(i))
+            o.emit()
+            i += 1
+          }
+        }
       }
-      .toDF()
+    }
 
     val nd = (col("n_vals") - lit(1L)).cast("double")
     val den = nd * col("sxx") - col("sx") * col("sx")

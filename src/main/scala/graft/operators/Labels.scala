@@ -138,8 +138,8 @@ object Labels {
     * joins, no barriers, no second pass. Per-row arithmetic is
     * identical to returns24h + Ewm.stdOverKey: the lookback row is the
     * last tick with rts <= ts-24h (inclusive), x = price/lookback - 1
-    * via the same IEEE ops, and the recurrence is the same multiply-add
-    * sequence.
+    * via the same IEEE ops, and the recurrence is the same
+    * [[graft.functions.EwmStd]].
     *
     * Parallelism is per symbol: one core consumes a symbol's stream
     * (~1-2M ticks/s), so the densest symbol's history bounds the wall
@@ -147,8 +147,6 @@ object Labels {
     */
   private def dailyVolScan(df: DataFrame, span: Int, c: TradingCols): DataFrame = {
     require(span >= 1, "span must be >= 1")
-    val alpha = 2.0 / (span + 1.0)
-    val decay = 1.0 - alpha
     val input = df.select(col(c.symbol), col(c.ts), col(c.price))
     val symType = input.schema(0).dataType
     val tsType = input.schema(1).dataType
@@ -165,11 +163,9 @@ object Labels {
         // trailing 24h of (ts micros, price-or-null); head is the
         // current as-of candidate once its successor passes the target
         private val ring = new java.util.ArrayDeque[(Long, Any)]()
-        private var sumW, sumWX, sumWX2, sumW2 = 0.0
+        private val ewm = new graft.functions.EwmStd(span)
 
-        def reset(k: InternalRow): Unit = {
-          key = k; ring.clear(); sumW = 0.0; sumWX = 0.0; sumWX2 = 0.0; sumW2 = 0.0
-        }
+        def reset(k: InternalRow): Unit = { key = k; ring.clear(); ewm.reset() }
 
         def step(row: InternalRow, o: graft.plans.ScanOut): Unit = {
           val w = o.begin()
@@ -187,16 +183,8 @@ object Labels {
               if (!ring.isEmpty && ring.peekFirst()._1 <= target) ring.peekFirst()._2 else null
             val px: Any = if (row.isNullAt(2)) null else row.getDouble(2)
             ring.addLast((ts, px))
-            sumW *= decay; sumWX *= decay; sumWX2 *= decay; sumW2 *= decay * decay
-            if (px == null || lb == null || lb.asInstanceOf[Double] == 0.0) w.setNullAt(2)
-            else {
-              val x = px.asInstanceOf[Double] / lb.asInstanceOf[Double] - 1
-              sumW += 1.0; sumWX += x; sumWX2 += x * x; sumW2 += 1.0
-              val mean = sumWX / sumW
-              val varBiased = math.max(sumWX2 / sumW - mean * mean, 0.0)
-              val denom = sumW * sumW - sumW2
-              w.write(2, if (denom <= 0.0) 0.0 else math.sqrt(varBiased * sumW * sumW / denom))
-            }
+            if (px == null || lb == null || lb.asInstanceOf[Double] == 0.0) { ewm.skip(); w.setNullAt(2) }
+            else w.write(2, ewm.add(px.asInstanceOf[Double] / lb.asInstanceOf[Double] - 1))
           }
           o.emit()
         }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.api.TradingCols
 import graft.plans.{KeyedScan, ScanKernel, ScanOut}
@@ -372,15 +373,6 @@ object Microstructure {
         ).as("amihud_illiq"),
       )
 
-  final case class RvRow(
-      symbol: String,
-      date: String,
-      n_returns: Long,
-      rv: Option[Double],
-      bv: Option[Double],
-      jump: Option[Double],
-  )
-
   /** Realized variance, bipower variation and the jump component
     * (Barndorff-Nielsen & Shephard 2004; the jump-robust volatility
     * decomposition next to AFML ch.19's impact estimators): per
@@ -394,78 +386,71 @@ object Microstructure {
     *
     * Determinism: the return sums are double folds, so the scan
     * accumulates them SEQUENTIALLY in (ts, trade_id) order per day
-    * (one symbol-hash exchange + sortWithinPartitions, the dollar-bar
-    * pattern) and the oracle replays the identical left fold via
-    * ordered list_reduce — bit-equal per day, day-bounded state.
+    * and the oracle replays the identical left fold via ordered
+    * list_reduce — bit-equal per day, day-bounded state. One keyed
+    * scan per symbol (no exchange on a symbol-clustered tape); the
+    * kernel closes a day when the UTC date of ts changes, and the
+    * null-ts ticks (sorted first) are one day with a null date.
     * rv is null on days without a return, bv/jump on days with
     * fewer than two.
     */
   def realizedVol(df: DataFrame, c: TradingCols = TradingCols.default): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        col(c.ts).cast("timestamp").as("ts"),
-        round(col(c.price) * 100).cast("long").as("pc"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Timestamp, Long, Long)]
-      .mapPartitions { it =>
-        val dayFmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
-          .withZone(java.time.ZoneOffset.UTC)
-        var curSym: String = null
-        var curDay: String = null
-        var prevPc = 0L
-        var prevR = 0.0
-        var nR = 0L
-        var rv = 0.0
-        var cs = 0.0 // Σ |r_i||r_{i-1}|
-        def emit(): RvRow = {
-          val rvO = if (nR >= 1) Some(rv) else None
-          val bvO = if (nR >= 2) Some(math.Pi / 2 * cs) else None
-          val jO = for (a <- rvO; b <- bvO) yield math.max(a - b, 0.0)
-          RvRow(curSym, curDay, nR, rvO, bvO, jO)
-        }
-        def reset(sym: String, day: String, pc: Long): Unit = {
-          curSym = sym; curDay = day; prevPc = pc
-          nR = 0L; rv = 0.0; cs = 0.0; prevR = 0.0
-        }
-        new Iterator[RvRow] {
-          private var pending: RvRow = null
-          private var drained = false
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ts, pc, _) = it.next()
-              val day = dayFmt.format(java.time.Instant.ofEpochMilli(ts.getTime))
-              if (curSym == null) reset(sym, day, pc)
-              else if (sym != curSym || day != curDay) {
-                pending = emit()
-                reset(sym, day, pc)
-              } else {
-                val r = (pc - prevPc).toDouble / prevPc.toDouble
-                prevPc = pc
-                if (nR >= 1) cs += math.abs(r) * math.abs(prevR)
-                rv += r * r
-                nR += 1
-                prevR = r
-              }
-            }
-            if (pending == null && !drained && curSym != null) {
-              drained = true
-              pending = emit()
-            }
-            pending != null
-          }
-          override def next(): RvRow = {
-            val r = pending; pending = null; r
+    val ticks = Bars.pricedTicks(df, c)
+      .select(col(c.symbol), col(c.ts), round(col(c.price) * 100).cast("long").as("pc"), col(c.tradeId))
+    val out = StructType(Seq(StructField("symbol", StringType), StructField("date", StringType),
+      StructField("n_returns", LongType, nullable = false), StructField("rv", DoubleType),
+      StructField("bv", DoubleType), StructField("jump", DoubleType)))
+    val microsPerDay = 86400L * 1000000L
+    val noDay = Long.MinValue // the day of a null ts
+    KeyedScan(ticks, Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), out, keyOut = Seq("symbol")) { () =>
+      new ScanKernel {
+        private var key: InternalRow = null
+        private var open = false
+        private var curDay = noDay
+        private var prevPc = 0L
+        private var prevR = 0.0
+        private var nR = 0L
+        private var rv = 0.0
+        private var cs = 0.0 // Σ |r_i||r_{i-1}|
+
+        def reset(k: InternalRow): Unit = { key = k; open = false }
+
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          val day = if (row.isNullAt(1)) noDay else Math.floorDiv(row.getLong(1), microsPerDay)
+          val pc = row.getLong(2)
+          if (!open || day != curDay) {
+            if (open) emit(o)
+            open = true; curDay = day; prevPc = pc
+            nR = 0L; rv = 0.0; cs = 0.0; prevR = 0.0
+          } else {
+            val r = (pc - prevPc).toDouble / prevPc.toDouble
+            prevPc = pc
+            if (nR >= 1) cs += math.abs(r) * math.abs(prevR)
+            rv += r * r
+            nR += 1
+            prevR = r
           }
         }
+
+        private def emit(o: ScanOut): Unit = {
+          val w = o.begin()
+          o.copy(0, key, 0, StringType)
+          if (curDay == noDay) w.setNullAt(1)
+          else w.write(1, UTF8String.fromString(
+            java.time.format.DateTimeFormatter.ISO_LOCAL_DATE.format(java.time.LocalDate.ofEpochDay(curDay))))
+          w.write(2, nR)
+          if (nR >= 1) w.write(3, rv) else w.setNullAt(3)
+          if (nR >= 2) {
+            val bv = math.Pi / 2 * cs
+            w.write(4, bv)
+            w.write(5, math.max(rv - bv, 0.0))
+          } else { w.setNullAt(4); w.setNullAt(5) }
+          o.emit()
+        }
+
+        def flush(o: ScanOut): Unit = if (open) emit(o)
       }
-      .toDF()
+    }
   }
 
   /** Plug-in entropy of the tick-rule sign stream (AFML ch.18):

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.api.TradingCols
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Bounded SADF — supremum ADF explosiveness statistic (AFML ch.17 /
   * Phillips-Shi-Yu, beyond the reference): for each observation, run
@@ -15,139 +17,27 @@ import graft.api.TradingCols
   * row — the bounded window set is the scalable form and the common
   * deployment).
   *
-  * Two implementations, bit-identical (pinned in ScalaTest):
-  *
-  *  - [[sadf]] — declarative: five cumulative BIGINT moments + one
-  *    struct lag per window length, sup via struct array_max. Kept as
-  *    the reference formulation, but measured SUPER-LINEAR in the
-  *    window count (WindowExec's cost grows with functions × row
-  *    width: 11 struct lags ran 1.4 s at sf0.1, 31 ran 9.4 s, and
-  *    day-chunking made it worse — the bottleneck is row copying,
-  *    not parallelism).
-  *  - [[sadfScan]] — the production path (the dollar-bar/EWM scale
-  *    pattern): one hash exchange on symbol, sortWithinPartitions,
-  *    and an O(maxWindow)-state streaming pass over a prefix-sum
-  *    ring buffer; each row scores all windows with ~15 integer
-  *    flops per window. 31 windows in well under a second at sf0.1.
+  * One keyed scan per symbol in (ts, trade_id) order with
+  * O(maxWindow) state: a ring of the last maxWindow+1 cumulative
+  * (Σx, Σx², Σd, Σd², Σxd) snapshots, so each row scores all windows
+  * with ~15 integer flops per window. A declarative form (five
+  * cumulative BIGINT moments + one struct lag per window length, sup
+  * via struct array_max) is kept in the tests as the reference; its
+  * WindowExec cost grows super-linearly with the window count (11
+  * struct lags ran 1.4 s at sf0.1, 31 ran 9.4 s).
   *
   * All moments are exact integers and the t-stat is a fixed double
   * tree — engine-exact, replicated by the DuckDB oracle; brute-force
-  * bit-equality pinned in ScalaTest. Degenerate guards (replicated
-  * by the oracle): zero x-variance in a window → 0.0 t-stat (flat
-  * price carries no explosiveness evidence); perfect fit (SSR ≤ 0)
-  * → ±1e308 by the sign of the slope numerator.
+  * bit-equality pinned in ScalaTest. The cumulative moments may wrap
+  * on a very long history, but a window reads them only as
+  * differences over ≤ maxWindow rows, which two's-complement
+  * arithmetic keeps exact. Degenerate guards (replicated by the
+  * oracle): zero x-variance in a window → 0.0 t-stat (flat price
+  * carries no explosiveness evidence); perfect fit (SSR ≤ 0) → ±1e308
+  * by the sign of the slope numerator.
   */
 object Sadf {
 
-  final case class SadfRow(
-      symbol: String,
-      ts: java.sql.Timestamp,
-      price: Double,
-      best_window: Int,
-      beta: Double,
-      sadf: Double,
-  )
-
-  /** Production form: O(maxWindow)-state streaming scan per symbol. */
-  def sadfScan(
-      df: DataFrame,
-      minWindow: Int = 10,
-      maxWindow: Int = 40,
-      c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    require(minWindow >= 4, "ADF t-stat needs n-2 > 1")
-    require(maxWindow >= minWindow)
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        col(c.ts).cast("timestamp").as("ts"),
-        col(c.price).cast("double").as("price"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Timestamp, Double, Long)]
-      .mapPartitions { it =>
-        val W = maxWindow
-        // ring of the last W+1 cumulative-moment snapshots (cum AFTER
-        // processing row rn lives at slot rn % (W+1))
-        val ringLen = W + 1
-        var curSym: String = null
-        var havePrev = false
-        var prevCents = 0L
-        var rn = 0L // rows with a defined delta, per symbol
-        var cx, cxx, cd, cdd, cxd = 0L
-        val rcx, rcxx, rcd, rcdd, rcxd = new Array[Long](ringLen)
-        new Iterator[SadfRow] {
-          private var pending: SadfRow = null
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ts, price, _) = it.next()
-              if (sym != curSym) {
-                curSym = sym; havePrev = false; rn = 0L
-                cx = 0L; cxx = 0L; cd = 0L; cdd = 0L; cxd = 0L
-                rcx(0) = 0L; rcxx(0) = 0L; rcd(0) = 0L; rcdd(0) = 0L; rcxd(0) = 0L
-              }
-              val cents = math.round(price * 100)
-              if (!havePrev) { havePrev = true; prevCents = cents }
-              else {
-                val x = prevCents
-                val d = cents - prevCents
-                prevCents = cents
-                rn += 1
-                cx += x; cxx += x * x; cd += d; cdd += d * d; cxd += x * d
-                val slot = (rn % ringLen).toInt
-                rcx(slot) = cx; rcxx(slot) = cxx; rcd(slot) = cd
-                rcdd(slot) = cdd; rcxd(slot) = cxd
-                if (rn > W) {
-                  // score all windows; sup by (t, -n) like the
-                  // declarative struct array_max
-                  var bestT = Double.NegativeInfinity
-                  var bestN = 0
-                  var bestB = 0.0
-                  var n = minWindow
-                  while (n <= W) {
-                    val base = ((rn - n) % ringLen).toInt
-                    val sx = cx - rcx(base)
-                    val sxx = cxx - rcxx(base)
-                    val sd = cd - rcd(base)
-                    val sdd = cdd - rcdd(base)
-                    val sxd = cxd - rcxd(base)
-                    val den = n * sxx - sx * sx
-                    val num = n * sxd - sx * sd
-                    var t = 0.0
-                    var b = 0.0
-                    if (den != 0L) {
-                      b = num.toDouble / den.toDouble
-                      val sxxc = den.toDouble / n.toDouble
-                      val sddc = sdd.toDouble - sd.toDouble * sd.toDouble / n.toDouble
-                      val ssr = sddc - b * b * sxxc
-                      t =
-                        if (ssr <= 0.0) math.signum(num.toDouble) * 1e308
-                        else b * math.sqrt(sxxc) / math.sqrt(ssr / (n - 2).toDouble)
-                    }
-                    // strict >: earlier (smaller) n wins ties
-                    if (t > bestT) { bestT = t; bestN = n; bestB = b }
-                    n += 1
-                  }
-                  pending = SadfRow(sym, ts, price, bestN, bestB, bestT)
-                }
-              }
-            }
-            pending != null
-          }
-          override def next(): SadfRow = { val r = pending; pending = null; r }
-        }
-      }
-      .toDF()
-  }
-
-  /** Declarative reference form (see the class doc for why the scan
-    * is the production path).
-    */
   def sadf(
       df: DataFrame,
       minWindow: Int = 10,
@@ -156,87 +46,92 @@ object Sadf {
   ): DataFrame = {
     require(minWindow >= 4, "ADF t-stat needs n-2 > 1")
     require(maxWindow >= minWindow)
-    val ord = Window.partitionBy(col("__sym")).orderBy(col("__ts"), col("__tid"))
-    val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val out = StructType(Seq(
+      StructField(c.symbol, StringType),
+      StructField(c.ts, TimestampType),
+      StructField(c.price, DoubleType, nullable = false),
+      StructField("best_window", IntegerType, nullable = false),
+      StructField("beta", DoubleType, nullable = false),
+      StructField("sadf", DoubleType, nullable = false),
+    ))
+    KeyedScan(Bars.pricedTicks(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), out,
+      keyOut = Seq(c.symbol)) { () =>
+      new ScanKernel {
+        private val W = maxWindow
+        // ring of the last W+1 cumulative-moment snapshots (cum AFTER
+        // processing row rn lives at slot rn % (W+1))
+        private val ringLen = W + 1
+        private val rcx, rcxx, rcd, rcdd, rcxd = new Array[Long](ringLen)
+        private var key: InternalRow = null
+        private var havePrev = false
+        private var prevCents = 0L
+        private var rn = 0L // rows with a defined delta
+        private var cx, cxx, cd, cdd, cxd = 0L
 
-    val base = df
-      .select(
-        col(c.symbol).cast("string").as("__sym"),
-        col(c.ts).cast("timestamp").as("__ts"),
-        col(c.price).cast("double").as("__price"),
-        col(c.tradeId).cast("long").as("__tid"),
-      )
-      .withColumn("__cents", round(col("__price") * 100).cast("long"))
-      .withColumn("__x", lag(col("__cents"), 1).over(ord)) // y_{t-1}
-      .withColumn("__d", col("__cents") - col("__x")) // Δy_t
-      .where(col("__x").isNotNull)
-      .withColumn("__rn", row_number().over(ord).cast("long"))
-      .withColumn("__cx", sum(col("__x")).over(cum))
-      .withColumn("__cxx", sum(col("__x") * col("__x")).over(cum))
-      .withColumn("__cd", sum(col("__d")).over(cum))
-      .withColumn("__cdd", sum(col("__d") * col("__d")).over(cum))
-      .withColumn("__cxd", sum(col("__x") * col("__d")).over(cum))
+        def reset(k: InternalRow): Unit = {
+          key = k; havePrev = false; rn = 0L
+          cx = 0L; cxx = 0L; cd = 0L; cdd = 0L; cxd = 0L
+          rcx(0) = 0L; rcxx(0) = 0L; rcd(0) = 0L; rcdd(0) = 0L; rcxd(0) = 0L
+        }
 
-    val ns = minWindow to maxWindow
-    val cums = struct(
-      col("__cx").as("cx"), col("__cxx").as("cxx"), col("__cd").as("cd"),
-      col("__cdd").as("cdd"), col("__cxd").as("cxd"),
-    )
-    val lagCols = ns.map(n => lag(cums, n).over(ord).as(s"__s_$n"))
-    val withLags = base.select(
-      Seq(
-        col("__sym"), col("__ts"), col("__tid"), col("__price"), col("__rn"),
-        col("__cx"), col("__cxx"), col("__cd"), col("__cdd"), col("__cxd"),
-      ) ++ lagCols: _*
-    )
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          val price = row.getDouble(2)
+          val cents = math.round(price * 100)
+          if (!havePrev) { havePrev = true; prevCents = cents }
+          else {
+            val x = prevCents
+            val d = cents - prevCents
+            prevCents = cents
+            rn += 1
+            cx += x; cxx += x * x; cd += d; cdd += d * d; cxd += x * d
+            val slot = (rn % ringLen).toInt
+            rcx(slot) = cx; rcxx(slot) = cxx; rcd(slot) = cd
+            rcdd(slot) = cdd; rcxd(slot) = cxd
+            if (rn > W) {
+              // score all windows; sup by (t, -n) like the declarative
+              // struct array_max
+              var bestT = Double.NegativeInfinity
+              var bestN = 0
+              var bestB = 0.0
+              var n = minWindow
+              while (n <= W) {
+                val base = ((rn - n) % ringLen).toInt
+                val sx = cx - rcx(base)
+                val sxx = cxx - rcxx(base)
+                val sd = cd - rcd(base)
+                val sdd = cdd - rcdd(base)
+                val sxd = cxd - rcxd(base)
+                val den = n * sxx - sx * sx
+                val num = n * sxd - sx * sd
+                var t = 0.0
+                var b = 0.0
+                if (den != 0L) {
+                  b = num.toDouble / den.toDouble
+                  val sxxc = den.toDouble / n.toDouble
+                  val sddc = sdd.toDouble - sd.toDouble * sd.toDouble / n.toDouble
+                  val ssr = sddc - b * b * sxxc
+                  t =
+                    if (ssr <= 0.0) math.signum(num.toDouble) * 1e308
+                    else b * math.sqrt(sxxc) / math.sqrt(ssr / (n - 2).toDouble)
+                }
+                // strict >: earlier (smaller) n wins ties
+                if (t > bestT) { bestT = t; bestN = n; bestB = b }
+                n += 1
+              }
+              val w = o.begin()
+              o.copy(0, key, 0, StringType)
+              o.copy(1, row, 1, TimestampType)
+              w.write(2, price)
+              w.write(3, bestN)
+              w.write(4, bestB)
+              w.write(5, bestT)
+              o.emit()
+            }
+          }
+        }
 
-    // backward-window moments: S = cum(t) - cum(t-n); lag(cum, n) is
-    // null for the first n rows -> those candidates drop with __have
-    def windowCols(n: Int): Seq[Column] = {
-      val sx = col("__cx") - col(s"__s_$n.cx")
-      val sxx = col("__cxx") - col(s"__s_$n.cxx")
-      val sd = col("__cd") - col(s"__s_$n.cd")
-      val sdd = col("__cdd") - col(s"__s_$n.cdd")
-      val sxd = col("__cxd") - col(s"__s_$n.cxd")
-      val den = lit(n.toLong) * sxx - sx * sx // n * centered Sxx (BIGINT)
-      val num = lit(n.toLong) * sxd - sx * sd
-      val b = num.cast("double") / den.cast("double")
-      val sxxc = den.cast("double") / lit(n.toDouble)
-      val sddc = sdd.cast("double") - sd.cast("double") * sd.cast("double") / lit(n.toDouble)
-      val ssr = sddc - b * b * sxxc
-      val tstat = when(den === 0L, lit(0.0))
-        .when(ssr <= lit(0.0), signum(num).cast("double") * lit(1e308))
-        .otherwise(b * sqrt(sxxc) / sqrt(ssr / lit((n - 2).toDouble)))
-      // beta guarded too: a zero-variance window has no slope (0.0,
-      // not 0/0) — keeps the output finite and engine-exact
-      Seq(tstat.as(s"__t_$n"), when(den === 0L, lit(0.0)).otherwise(b).as(s"__b_$n"))
+        def flush(o: ScanOut): Unit = ()
+      }
     }
-
-    val projected = withLags.select(
-      Seq(col("__sym"), col("__ts"), col("__tid"), col("__price"), col("__rn")) ++
-        ns.flatMap(windowCols): _*
-    )
-    val cands = array(ns.map { n =>
-      struct(
-        col(s"__t_$n").as("t"),
-        lit(-n).as("nn"),
-        col(s"__b_$n").as("b"),
-        lit(n).as("n"),
-      )
-    }: _*)
-    projected
-      // the longest backward window must fit (rn > maxWindow); the
-      // Window below is also the CollapseProject barrier (TrendScan)
-      .withColumn("__have", lag(col("__rn"), maxWindow).over(ord).isNotNull)
-      .where(col("__have"))
-      .withColumn("__best", array_max(cands))
-      .select(
-        col("__sym").as(c.symbol),
-        col("__ts").as(c.ts),
-        col("__price").as(c.price),
-        col("__best.n").as("best_window"),
-        col("__best.b").as("beta"),
-        col("__best.t").as("sadf"),
-      )
   }
 }

@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.api.TradingCols
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Chu-Stinchcombe-White levels CUSUM test (AFML ch.17.4.2, beyond
   * the reference — the structural-break detector next to [[Sadf]]):
@@ -27,21 +30,13 @@ import graft.api.TradingCols
   * (flat history) → 0.0, the no-evidence convention shared with
   * Sadf's zero-variance guard.
   *
-  * Scale shape (the sadfScan pattern): one hash exchange on symbol,
-  * sortWithinPartitions, then an O(maxLag)-state streaming pass over
-  * a ring of the last maxLag+1 level snapshots — ~3 flops per
-  * (row, lag), no windows, no per-row allocation.
+  * Scale shape (the [[Sadf]] pattern): one keyed scan per symbol in
+  * (ts, trade_id) order with O(maxLag) state, a ring of the last
+  * maxLag+1 level snapshots — ~3 flops per (row, lag), no windows, no
+  * per-row allocation; on a symbol-clustered tape it plans no
+  * exchange.
   */
 object StructuralBreak {
-
-  final case class CswRow(
-      symbol: String,
-      ts: java.sql.Timestamp,
-      price: Double,
-      best_lag: Int,
-      cs_stat: Double,
-      cs_crit: Double,
-  )
 
   def cswScan(
       df: DataFrame,
@@ -51,71 +46,66 @@ object StructuralBreak {
   ): DataFrame = {
     require(minLag >= 1, "lag must be positive")
     require(maxLag >= minLag, "maxLag >= minLag")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        col(c.ts).cast("timestamp").as("ts"),
-        col(c.price).cast("double").as("price"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("ts"), col("trade_id"))
-      .as[(String, java.sql.Timestamp, Double, Long)]
-      .mapPartitions { it =>
-        val ringLen = maxLag + 1
-        val ring = new Array[Long](ringLen)
-        var curSym: String = null
-        var rn = 0L // 0-based row index within symbol; #deltas = rn
-        var prevCents = 0L
-        var cdd = 0L // Σ Δ² (exact)
-        new Iterator[CswRow] {
-          private var pending: CswRow = null
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ts, price, _) = it.next()
-              // HALF_UP like Catalyst/DuckDB round(): plain math.round
-              // sends negative half-cents toward +inf
-              val cents = graft.streaming.StatefulBars.cents(price)
-              if (sym != curSym) {
-                curSym = sym; rn = 0L; cdd = 0L
-                ring(0) = cents; prevCents = cents
-              } else {
-                rn += 1
-                val d = cents - prevCents
-                prevCents = cents
-                cdd += d * d
-                ring((rn % ringLen).toInt) = cents
-                if (rn >= maxLag) {
-                  var bestS = Double.NegativeInfinity
-                  var bestN = minLag
-                  if (cdd == 0L) { bestS = 0.0 }
-                  else {
-                    val sigma = math.sqrt(cdd.toDouble / rn.toDouble)
-                    var n = minLag
-                    while (n <= maxLag) {
-                      val dy = cents - ring(((rn - n) % ringLen).toInt)
-                      val s = dy.toDouble / (sigma * math.sqrt(n.toDouble))
-                      if (s > bestS) { bestS = s; bestN = n }
-                      n += 1
-                    }
-                  }
-                  pending = CswRow(
-                    sym, ts, price, bestN, bestS,
-                    math.sqrt(4.6 + math.log(bestN.toDouble)),
-                  )
+    val out = StructType(Seq(
+      StructField("symbol", StringType),
+      StructField("ts", TimestampType),
+      StructField("price", DoubleType, nullable = false),
+      StructField("best_lag", IntegerType, nullable = false),
+      StructField("cs_stat", DoubleType, nullable = false),
+      StructField("cs_crit", DoubleType, nullable = false),
+    ))
+    KeyedScan(Bars.pricedTicks(df, c), Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), out,
+      keyOut = Seq("symbol")) { () =>
+      new ScanKernel {
+        private val ringLen = maxLag + 1
+        private val ring = new Array[Long](ringLen)
+        private var key: InternalRow = null
+        private var rn = -1L // 0-based row index within symbol; #deltas = rn
+        private var prevCents = 0L
+        private var cdd = 0L // Σ Δ² (exact)
+
+        def reset(k: InternalRow): Unit = { key = k; rn = -1L; cdd = 0L }
+
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          val price = row.getDouble(2)
+          // HALF_UP like Catalyst/DuckDB round(): plain math.round
+          // sends negative half-cents toward +inf
+          val cents = graft.streaming.StatefulBars.cents(price)
+          rn += 1
+          if (rn == 0L) { ring(0) = cents; prevCents = cents }
+          else {
+            val d = cents - prevCents
+            prevCents = cents
+            cdd += d * d
+            ring((rn % ringLen).toInt) = cents
+            if (rn >= maxLag) {
+              var bestS = Double.NegativeInfinity
+              var bestN = minLag
+              if (cdd == 0L) { bestS = 0.0 }
+              else {
+                val sigma = math.sqrt(cdd.toDouble / rn.toDouble)
+                var n = minLag
+                while (n <= maxLag) {
+                  val dy = cents - ring(((rn - n) % ringLen).toInt)
+                  val s = dy.toDouble / (sigma * math.sqrt(n.toDouble))
+                  if (s > bestS) { bestS = s; bestN = n }
+                  n += 1
                 }
               }
+              val w = o.begin()
+              o.copy(0, key, 0, StringType)
+              o.copy(1, row, 1, TimestampType)
+              w.write(2, price)
+              w.write(3, bestN)
+              w.write(4, bestS)
+              w.write(5, math.sqrt(4.6 + math.log(bestN.toDouble)))
+              o.emit()
             }
-            pending != null
-          }
-          override def next(): CswRow = {
-            val r = pending; pending = null; r
           }
         }
+
+        def flush(o: ScanOut): Unit = ()
       }
-      .toDF()
+    }
   }
 }

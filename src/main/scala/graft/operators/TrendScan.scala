@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.api.TradingCols
+import graft.plans.{KeyedScan, ScanKernel, ScanOut}
 
 /** Trend-scanning labels (AFML ch.5.2 — beyond the reference's
   * fixed-horizon labels): for each observation, fit OLS of price on
@@ -12,19 +14,22 @@ import graft.api.TradingCols
   * maxHorizon], pick the horizon with the largest |t-value| of the
   * slope (smallest L wins ties), and label by the slope's sign.
   *
-  * Fully declarative — no sequential state. [[labels]] windows per
-  * symbol (the reference formulation); [[labelsChunked]] is the scale
-  * path: because every window spans at most maxHorizon rows, the
-  * computation chunks by (symbol, day) with a (maxHorizon-1)-row halo
-  * borrowed from the next trading day — parallelism symbol × day
-  * instead of symbol, BIT-identical output (integer moments with
-  * chunk-local rebasing; equality pinned in ScalaTest).
+  * One keyed scan per symbol over the ticks with a price, in
+  * (ts, trade_id) order, with O(maxHorizon) state: a ring of
+  * cumulative (Σy, Σy², Σrn·y) snapshots scores every horizon of the
+  * row maxHorizon−1 behind the cursor in ~10 integer flops each. On a
+  * symbol-clustered tape it plans no exchange. A declarative form
+  * (cumulative window sums and one packed lead per horizon) is kept
+  * in the tests as the reference, pinned bit for bit.
   *
   * Exactness: prices become integer cents and the time index is the
   * row number, so every OLS moment (Sy, Syy, Sxy) is an exact BIGINT;
   * the t-value is a fixed double expression tree over those integers,
   * replicated op-for-op by the DuckDB oracle. The horizon argmax
-  * compares (|t|, -L) structs — engine-exact.
+  * compares (|t|, -L) — engine-exact. The cumulative moments may wrap
+  * on a very long history, but a horizon reads them only as
+  * differences over ≤ maxHorizon rows (and Σxy rebased to the
+  * window's first row), which two's-complement arithmetic keeps exact.
   *
   * Only rows where the LONGEST horizon fits are labeled (every
   * candidate window complete).
@@ -39,315 +44,106 @@ object TrendScan {
   ): DataFrame = {
     require(minHorizon >= 3, "t-value needs at least 3 points")
     require(maxHorizon >= minHorizon, "maxHorizon >= minHorizon")
-    val base = prepared(df, c).withColumn("__halo", lit(false))
-    scanPipeline(base, Seq(col("__sym")), minHorizon, maxHorizon, c)
-  }
-
-  /** Day-chunked halo variant: same output, symbol×day parallelism.
-    * Each day-chunk borrows the symbol's NEXT (maxHorizon-1) rows —
-    * across as many following days as it takes (thin days at small
-    * scale, exactly the next day when days are thick) — so every
-    * chunk-tail row still sees its complete forward windows; halo
-    * rows are dropped from the output (their own day-chunk emits
-    * them).
-    *
-    * Halo assignment without any global window: a per-(symbol, day)
-    * count/cum-end table (tiny — symbols × days rows) gives every row
-    * an exact global symbol rank r = day_start + within-day rank; day
-    * d needs exactly the rows ranked day_end(d)+1 .. day_end(d)+
-    * maxHorizon-1, so the day table explodes those (maxHorizon-1)
-    * target ranks into keys and a broadcast EQUI-join on
-    * (symbol, rank) replicates each row into every chunk that needs
-    * it — O(1) probe per row, no range scan over the symbol's days.
-    * Equality with [[labels]] is pinned in ScalaTest on the gate
-    * data; the sparse-day case is pinned by its own spec.
-    */
-  def labelsChunked(
-      df: DataFrame,
-      minHorizon: Int = 5,
-      maxHorizon: Int = 20,
-      c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    require(minHorizon >= 3, "t-value needs at least 3 points")
-    require(maxHorizon >= minHorizon, "maxHorizon >= minHorizon")
-    scanPipeline(
-      chunkedWithHalo(df, maxHorizon, c),
-      Seq(col("__sym"), col("__chunk")),
-      minHorizon,
-      maxHorizon,
-      c,
-    )
-  }
-
-  /** Chunk assignment shared by the declarative pipeline and the
-    * streaming scan: each row once under its own day (`__halo` false)
-    * plus a copy in every earlier day-chunk whose forward window
-    * reaches it (`__halo` true) — the multi-day halo described on
-    * [[labelsChunked]].
-    */
-  private def chunkedWithHalo(df: DataFrame, maxHorizon: Int, c: TradingCols): DataFrame = {
-    val pre = prepared(df, c).withColumn("__day", to_date(col("__ts")))
-    val wD = Window.partitionBy(col("__sym")).orderBy(col("__day"))
-    val dayStats = pre
-      .groupBy(col("__sym"), col("__day"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__day_end", sum(col("__cnt")).over(wD.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__day_start", col("__day_end") - col("__cnt"))
-    val wDay = Window.partitionBy(col("__sym"), col("__day")).orderBy(col("__ts"), col("__tid"))
-    val ranked = pre
-      .withColumn("__rk", row_number().over(wDay).cast("long"))
-      .join(broadcast(dayStats.select(col("__sym"), col("__day"), col("__day_start"))), Seq("__sym", "__day"))
-      .withColumn("__r", col("__day_start") + col("__rk"))
-    // day d's halo keys: the (maxHorizon-1) global ranks following it
-    val haloKeys = dayStats
-      .select(
-        col("__sym"),
-        col("__day").as("__chunk"),
-        explode(sequence(col("__day_end") + 1, col("__day_end") + lit(maxHorizon - 1).cast("long")))
-          .as("__r"),
-      )
-    val halo = ranked
-      .join(broadcast(haloKeys), Seq("__sym", "__r"))
-      .withColumn("__halo", lit(true))
-      .select("__sym", "__ts", "__tid", "__price", "__cents", "__chunk", "__halo")
-    val main = ranked
-      .withColumn("__chunk", col("__day"))
-      .withColumn("__halo", lit(false))
-      .select("__sym", "__ts", "__tid", "__price", "__cents", "__chunk", "__halo")
-    main.unionByName(halo)
-  }
-
-  // public: the object serializer's generated code constructs and
-  // reads this class; a private case class forces the whole
-  // SerializeFromObject stage into interpreted fallback
-  final case class ScanRow(
-      symbol: String,
-      ts: java.sql.Timestamp,
-      price: Double,
-      best_l: Int,
-      label: Int,
-      beta: Double,
-      tval: Double,
-  )
-
-  /** Production form of [[labelsChunked]]: identical chunk + halo
-    * assignment, but the per-chunk computation is an O(maxHorizon)-
-    * state streaming pass (the sadfScan pattern) instead of 16 packed
-    * struct leads — a ring of cumulative (Σy, Σy², Σrn·y) snapshots
-    * scores every horizon of the row maxHorizon−1 behind the cursor
-    * in ~10 integer flops each. Same integers, same double trees,
-    * same (|t|, −L) argmax ⇒ BIT-identical to [[labelsChunked]] and
-    * [[labels]] (pinned in ScalaTest).
-    */
-  def labelsScan(
-      df: DataFrame,
-      minHorizon: Int = 5,
-      maxHorizon: Int = 20,
-      c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    require(minHorizon >= 3, "t-value needs at least 3 points")
-    require(maxHorizon >= minHorizon, "maxHorizon >= minHorizon")
-    val spark = df.sparkSession
-    import spark.implicits._
     val minL = minHorizon
     val maxL = maxHorizon
     // per-horizon integer constants of the rebased x = 0..L-1 axis
     val sxArr = Array.tabulate(maxL + 1)(l => l.toLong * (l - 1) / 2)
     val sxxArr = Array.tabulate(maxL + 1)(l => (l - 1).toLong * l * (2 * l - 1) / 6)
     val denArr = Array.tabulate(maxL + 1)(l => l * sxxArr(l) - sxArr(l) * sxArr(l))
-    chunkedWithHalo(df, maxL, c)
-      .withColumn("__ck", col("__chunk").cast("string"))
-      .select("__sym", "__ck", "__ts", "__tid", "__price", "__cents", "__halo")
-      .repartition(col("__sym"), col("__ck"))
-      .sortWithinPartitions(col("__sym"), col("__ck"), col("__ts"), col("__tid"))
-      .as[(String, String, java.sql.Timestamp, Long, Double, Long, Boolean)]
-      .mapPartitions { it =>
-        val ringLen = maxL + 1
+    val ticks = Bars.pricedTicks(df, c)
+      .select(col(c.symbol), col(c.ts), col(c.price), round(col(c.price) * 100).cast("long").as("__cents"),
+        col(c.tradeId))
+    val out = StructType(Seq(
+      StructField(c.symbol, StringType),
+      StructField(c.ts, TimestampType),
+      StructField(c.price, DoubleType, nullable = false),
+      StructField("best_l", IntegerType, nullable = false),
+      StructField("label", IntegerType, nullable = false),
+      StructField("beta", DoubleType, nullable = false),
+      StructField("tval", DoubleType, nullable = false),
+    ))
+    KeyedScan(ticks, Seq(col(c.symbol)), Seq(col(c.ts), col(c.tradeId)), out, keyOut = Seq(c.symbol)) { () =>
+      new ScanKernel {
+        private val ringLen = maxL + 1
         // cumulative-moment snapshots; slot rn % ringLen = cum AFTER row rn
-        val rcy, rcyy, rcjy = new Array[Long](ringLen)
-        // meta ring of the last maxL rows awaiting their full window
-        val mTs = new Array[java.sql.Timestamp](maxL)
-        val mPrice = new Array[Double](maxL)
-        val mHalo = new Array[Boolean](maxL)
-        var curKey: (String, String) = null
-        var rn = 0L
-        var cy, cyy, cjy = 0L
-        new Iterator[ScanRow] {
-          private var pending: ScanRow = null
-          private def score(iRow: Long): ScanRow = {
-            // emit row i (1-based rn): windows [i, i+L-1], cum base i-1
-            val meta = ((iRow - 1) % maxL).toInt
-            if (mHalo(meta)) return null
-            val cy0 = rcy(((iRow - 1) % ringLen).toInt)
-            val cyy0 = rcyy(((iRow - 1) % ringLen).toInt)
-            val cjy0 = rcjy(((iRow - 1) % ringLen).toInt)
-            var bestA = Double.NegativeInfinity
-            var bestNl = Int.MinValue
-            var bestT = 0.0
-            var bestB = 0.0
-            var bestLab = 0
-            var bestL = 0
-            var l = minL
-            while (l <= maxL) {
-              val endSlot = (((iRow + l - 1) % ringLen)).toInt
-              val sy = rcy(endSlot) - cy0
-              val syy = rcyy(endSlot) - cyy0
-              val sjy = rcjy(endSlot) - cjy0
-              val sxy = sjy - iRow * sy // x rebased to 0..L-1
-              val sx = sxArr(l)
-              val sxx = sxxArr(l)
-              val den = denArr(l)
-              val num = l.toLong * sxy - sx * sy
-              val b = num.toDouble / den.toDouble
-              val sxxc = den.toDouble / l
-              val syyc = syy.toDouble - sy.toDouble * sy.toDouble / l.toDouble
-              val ssr = syyc - b * b * sxxc
-              val tval =
-                if (ssr <= 0.0) math.signum(num.toDouble) * 1e308
-                else b * math.sqrt(sxxc) / math.sqrt(ssr / (l - 2).toDouble)
-              val a = math.abs(tval)
-              val nl = -l
-              if (a > bestA || (a == bestA && nl > bestNl)) {
-                bestA = a; bestNl = nl; bestT = tval; bestB = b
-                bestLab = math.signum(num.toDouble).toInt; bestL = l
-              }
-              l += 1
-            }
-            ScanRow(curKey._1, mTs(meta), mPrice(meta), bestL, bestLab, bestB, bestT)
-          }
-          override def hasNext: Boolean = {
-            while (pending == null && it.hasNext) {
-              val (sym, ck, ts, _, price, cents, halo) = it.next()
-              if (curKey == null || curKey != ((sym, ck))) {
-                curKey = (sym, ck)
-                rn = 0L; cy = 0L; cyy = 0L; cjy = 0L
-                rcy(0) = 0L; rcyy(0) = 0L; rcjy(0) = 0L
-              }
-              rn += 1
-              cy += cents; cyy += cents * cents; cjy += rn * cents
-              val slot = (rn % ringLen).toInt
-              rcy(slot) = cy; rcyy(slot) = cyy; rcjy(slot) = cjy
-              if (rn >= maxL) pending = score(rn - maxL + 1)
-              val meta = ((rn - 1) % maxL).toInt
-              mTs(meta) = ts; mPrice(meta) = price; mHalo(meta) = halo
-            }
-            pending != null
-          }
-          override def next(): ScanRow = {
-            val r = pending; pending = null; r
-          }
+        private val rcy, rcyy, rcjy = new Array[Long](ringLen)
+        // the last maxL rows awaiting their full window, slot (rn - 1) % maxL
+        private val mTs = new Array[Long](maxL)
+        private val mTsNull = new Array[Boolean](maxL)
+        private val mPrice = new Array[Double](maxL)
+        private var key: InternalRow = null
+        private var rn = 0L
+        private var cy, cyy, cjy = 0L
+
+        def reset(k: InternalRow): Unit = {
+          key = k; rn = 0L; cy = 0L; cyy = 0L; cjy = 0L
+          rcy(0) = 0L; rcyy(0) = 0L; rcjy(0) = 0L
         }
+
+        def step(row: InternalRow, o: ScanOut): Unit = {
+          val cents = row.getLong(3)
+          rn += 1
+          cy += cents; cyy += cents * cents; cjy += rn * cents
+          val slot = (rn % ringLen).toInt
+          rcy(slot) = cy; rcyy(slot) = cyy; rcjy(slot) = cjy
+          val meta = ((rn - 1) % maxL).toInt
+          mTsNull(meta) = row.isNullAt(1)
+          mTs(meta) = if (mTsNull(meta)) 0L else row.getLong(1)
+          mPrice(meta) = row.getDouble(2)
+          if (rn >= maxL) score(rn - maxL + 1, o)
+        }
+
+        /** Row `iRow` (1-based): windows [iRow, iRow+L-1], cum base iRow-1. */
+        private def score(iRow: Long, o: ScanOut): Unit = {
+          val base = ((iRow - 1) % ringLen).toInt
+          val cy0 = rcy(base)
+          val cyy0 = rcyy(base)
+          val cjy0 = rcjy(base)
+          var bestA = Double.NegativeInfinity
+          var bestNl = Int.MinValue
+          var bestT = 0.0
+          var bestB = 0.0
+          var bestLab = 0
+          var bestL = 0
+          var l = minL
+          while (l <= maxL) {
+            val endSlot = ((iRow + l - 1) % ringLen).toInt
+            val sy = rcy(endSlot) - cy0
+            val syy = rcyy(endSlot) - cyy0
+            val sjy = rcjy(endSlot) - cjy0
+            val sxy = sjy - iRow * sy // x rebased to 0..L-1
+            val sx = sxArr(l)
+            val den = denArr(l)
+            val num = l.toLong * sxy - sx * sy
+            val b = num.toDouble / den.toDouble
+            val sxxc = den.toDouble / l
+            val syyc = syy.toDouble - sy.toDouble * sy.toDouble / l.toDouble
+            val ssr = syyc - b * b * sxxc
+            val tval =
+              if (ssr <= 0.0) math.signum(num.toDouble) * 1e308
+              else b * math.sqrt(sxxc) / math.sqrt(ssr / (l - 2).toDouble)
+            val a = math.abs(tval)
+            val nl = -l
+            if (a > bestA || (a == bestA && nl > bestNl)) {
+              bestA = a; bestNl = nl; bestT = tval; bestB = b
+              bestLab = math.signum(num.toDouble).toInt; bestL = l
+            }
+            l += 1
+          }
+          val meta = ((iRow - 1) % maxL).toInt
+          val w = o.begin()
+          o.copy(0, key, 0, StringType)
+          if (mTsNull(meta)) w.setNullAt(1) else w.write(1, mTs(meta))
+          w.write(2, mPrice(meta))
+          w.write(3, bestL)
+          w.write(4, bestLab)
+          w.write(5, bestB)
+          w.write(6, bestT)
+          o.emit()
+        }
+
+        def flush(o: ScanOut): Unit = ()
       }
-      .toDF()
-      .select(
-        col("symbol").as(c.symbol),
-        col("ts").as(c.ts),
-        col("price").as(c.price),
-        col("best_l"),
-        col("label"),
-        col("beta"),
-        col("tval"),
-      )
-  }
-
-  private def prepared(df: DataFrame, c: TradingCols): DataFrame =
-    df.select(
-      col(c.symbol).cast("string").as("__sym"),
-      col(c.ts).cast("timestamp").as("__ts"),
-      col(c.price).cast("double").as("__price"),
-      col(c.tradeId).cast("long").as("__tid"),
-    ).withColumn("__cents", round(col("__price") * 100).cast("long"))
-
-  /** Shared moment/argmax pipeline over an arbitrary partitioning.
-    * Input needs __sym/__ts/__tid/__price/__cents/__halo; the row
-    * number (and so the x-rebasing) is partition-local, which cancels
-    * out of the rebased moments — the chunked and whole-symbol forms
-    * produce bit-identical values.
-    */
-  private def scanPipeline(
-      base0: DataFrame,
-      partCols: Seq[Column],
-      minHorizon: Int,
-      maxHorizon: Int,
-      c: TradingCols,
-  ): DataFrame = {
-    val ord = Window.partitionBy(partCols: _*).orderBy(col("__ts"), col("__tid"))
-    val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val base = base0
-      .withColumn("__rn", row_number().over(ord).cast("long"))
-      .withColumn("__cy", sum(col("__cents")).over(cum))
-      .withColumn("__cyy", sum(col("__cents") * col("__cents")).over(cum))
-      .withColumn("__cjy", sum(col("__rn") * col("__cents")).over(cum))
-
-    // Three perf-critical structural choices, all measured at sf0.1:
-    //  1. Every lead() is materialized ONCE as a named column — Spark
-    //     does NOT deduplicate textually repeated window expressions,
-    //     so referencing lead(cy, L-1) six times inside a t-value
-    //     tree would plan six separate window functions.
-    //  2. Each horizon's t-value tree is computed ONCE into a column.
-    //  3. The argmax projection lives ABOVE the __full Window node,
-    //     which CollapseProject cannot cross — without that barrier
-    //     the struct array would inline ~4 copies of every tree
-    //     (abs, t, b, sign), quadrupling codegen size and runtime.
-    val ls = minHorizon to maxHorizon
-    // one lead per horizon of a packed (cy, cyy, cjy) struct — 16
-    // window functions instead of 48 (each lead frame iterates the
-    // whole partition; a third of the frames is a third of that cost)
-    val cums = struct(col("__cy").as("cy"), col("__cyy").as("cyy"), col("__cjy").as("cjy"))
-    val leadCols = ls.map(l => lead(cums, l - 1).over(ord).as(s"__e_$l"))
-    val keep = Seq(
-      col("__sym"), col("__ts"), col("__tid"), col("__price"), col("__halo"),
-      col("__rn"), col("__cents"), col("__cy"), col("__cyy"), col("__cjy"),
-    ) ++ partCols.drop(1)
-    val withLeads = base.select(keep ++ leadCols: _*)
-
-    // forward-window moments for horizon L: S = cum(end) - cum(before start)
-    def horizonCols(l: Int): Seq[Column] = {
-      val sy = col(s"__e_$l.cy") - (col("__cy") - col("__cents"))
-      val syy = col(s"__e_$l.cyy") - (col("__cyy") - col("__cents") * col("__cents"))
-      val sjy = col(s"__e_$l.cjy") - (col("__cjy") - col("__rn") * col("__cents"))
-      val sxy = sjy - col("__rn") * sy // x rebased to 0..L-1
-      val sx = l.toLong * (l - 1) / 2
-      val sxx = (l - 1).toLong * l * (2 * l - 1) / 6
-      val den = l * sxx - sx * sx // = L * centered Sxx
-      val num = lit(l.toLong) * sxy - lit(sx) * sy
-      val b = num.cast("double") / lit(den.toDouble)
-      val sxxc = den.toDouble / l
-      val syyc = syy.cast("double") - sy.cast("double") * sy.cast("double") / lit(l.toDouble)
-      val ssr = syyc - b * b * lit(sxxc)
-      val tval = when(ssr <= lit(0.0), signum(num).cast("double") * lit(1e308))
-        .otherwise(b * lit(math.sqrt(sxxc)) / sqrt(ssr / lit((l - 2).toDouble)))
-      Seq(tval.as(s"__t_$l"), b.as(s"__b_$l"), signum(num).cast("int").as(s"__lab_$l"))
     }
-
-    val projected = withLeads.select(
-      Seq(col("__sym"), col("__ts"), col("__tid"), col("__price"), col("__rn"), col("__halo")) ++
-        partCols.drop(1) ++ ls.flatMap(horizonCols): _*
-    )
-    val cands = array(ls.map { l =>
-      struct(
-        abs(col(s"__t_$l")).as("a"),
-        lit(-l).as("nl"),
-        col(s"__t_$l").as("t"),
-        col(s"__b_$l").as("b"),
-        col(s"__lab_$l").as("lab"),
-        lit(l).as("l"),
-      )
-    }: _*)
-    projected
-      // every horizon complete: the longest lead must exist. This
-      // Window is also the CollapseProject barrier described above.
-      .withColumn("__full", lead(col("__rn"), maxHorizon - 1).over(ord).isNotNull)
-      .where(col("__full") && !col("__halo"))
-      .withColumn("__best", array_max(cands))
-      .select(
-        col("__sym").as(c.symbol),
-        col("__ts").as(c.ts),
-        col("__price").as(c.price),
-        col("__best.l").as("best_l"),
-        col("__best.lab").as("label"),
-        col("__best.b").as("beta"),
-        col("__best.t").as("tval"),
-      )
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming twin of [[graft.operators.Sadf.sadfScan]]: the bounded
+/** Streaming twin of [[graft.operators.Sadf.sadf]]: the bounded
   * sup-ADF statistic over a stream of ticks. State per symbol is the
   * same O(maxWindow) prefix-moment ring the batch scan keeps —
   * cumulative (Σx, Σx², Σd, Σd², Σxd) snapshots — plus the previous

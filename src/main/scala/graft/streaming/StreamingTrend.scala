@@ -15,9 +15,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * per symbol.
   *
   * The per-row OLS is the same integer-moment + fixed double tree as
-  * the batch Catalyst expressions (cents sums are exact integers, the
-  * t-value tree is replicated op-for-op in Scala), so streaming ==
-  * batch is BIT-exact — pinned in ScalaTest.
+  * the batch keyed scan (cents sums are exact integers, the same
+  * t-value tree and (|t|, -L) argmax), so streaming == batch is
+  * BIT-exact — pinned in ScalaTest.
   */
 object StreamingTrend {
 

@@ -928,42 +928,6 @@ class CoreOperatorsSpec extends SparkSpec {
     assert(out.head.getAs[Long]("n_trades") == 4L)
   }
 
-  // --- segmented EWM: the chunked linear-recurrence scan must agree
-  // with the monolithic per-key scan (up to float associativity) ---
-  test("chunked EWM scan matches the monolithic scan across chunk boundaries") {
-    val rnd = new scala.util.Random(3)
-    val t0 = java.time.Instant.parse("2021-01-01T00:00:00Z")
-    val rows = (0 until 500).map { i =>
-      val sym = if (i % 3 == 0) "A" else "B"
-      // some nulls to exercise ignore_na=false decay across chunks;
-      // unique hourly timestamps spanning ~21 days (many chunks)
-      val v: Option[Double] = if (i % 17 == 0) None else Some(rnd.nextGaussian())
-      (sym, java.sql.Timestamp.from(t0.plusSeconds(i * 3600L)), v)
-    }
-    val df = rows.toDF("symbol", "ts", "x")
-    val plain = Ewm
-      .stdOverKey(df, Seq("symbol"), Seq("ts"), "x", span = 20, outCol = "v")
-      .select($"symbol", $"ts", $"v")
-      .orderBy("symbol", "ts")
-      .collect()
-    val chunked = Ewm
-      .stdOverKeyChunked(df, Seq("symbol"), to_date($"ts"), Seq("ts"), "x", span = 20, outCol = "v")
-      .select($"symbol", $"ts", $"v")
-      .orderBy("symbol", "ts")
-      .collect()
-    assert(plain.length == chunked.length)
-    plain.zip(chunked).foreach { case (p, c) =>
-      assert(p.getString(0) == c.getString(0) && p.getTimestamp(1) == c.getTimestamp(1))
-      (p.isNullAt(2), c.isNullAt(2)) match {
-        case (true, true) => ()
-        case (false, false) =>
-          assert(math.abs(p.getDouble(2) - c.getDouble(2)) < 1e-10,
-            s"${p.getDouble(2)} vs ${c.getDouble(2)} at ${p.getTimestamp(1)}")
-        case _ => fail(s"null mismatch at ${p.getTimestamp(1)}")
-      }
-    }
-  }
-
   // --- single-frame parity: reference labels take symbol=None
   // (labels.py:35) — a frame without the symbol column is one
   // instrument ---

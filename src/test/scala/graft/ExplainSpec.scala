@@ -333,14 +333,14 @@ class ExplainSpec extends SparkSpec {
     assert(!p.contains("rangepartitioning"), "stratum window must not global-sort")
   }
 
-  test("trend-scanning labels: one symbol exchange, windows share the sort") {
+  test("trend-scanning labels: the tape's symbol exchange, one keyed scan, no window") {
     val t = TradeData.fromEvents(spark, dir)
     val p = graft.operators.TrendScan.labels(t, 4, 8)
       .queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(p).length == 1, p)
     assert(!p.contains("rangepartitioning"), "no global sort inside the operator")
-    // cumsums + 16 leads + the full-window flag all ride one sorted window
-    assert("\\bSort\\b".r.findAllIn(p).length <= 1, s"windows must share one sort:\n$p")
+    assert("KeyedScan keys".r.findAllIn(p).length == 1, p)
+    assert(!p.contains("Window") && !p.contains("Union") && !p.contains("Join"), s"no day chunks, no halo:\n$p")
   }
 
   test("decontaminate broadcasts the benchmark grams; one doc-key exchange") {
@@ -369,18 +369,42 @@ class ExplainSpec extends SparkSpec {
     assert(!p.contains("rangepartitioning"))
   }
 
-  test("sadf: one symbol exchange, all window functions share the sort") {
+  test("sadf: the tape's symbol exchange, one keyed scan, no window") {
     val t = TradeData.fromEvents(spark, dir)
     val p = graft.operators.Sadf.sadf(t, 6, 12)
       .queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(p).length == 1, p)
     assert(!p.contains("rangepartitioning"))
-    assert("\\bSort\\b".r.findAllIn(p).length <= 1, s"lags must share one sort:\n$p")
-    // production scan: same single-exchange shape
-    val ps = graft.operators.Sadf.sadfScan(t, 6, 12)
-      .queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(ps).length == 1, ps)
-    assert(!ps.contains("rangepartitioning"))
+    assert("KeyedScan keys".r.findAllIn(p).length == 1, p)
+    assert(!p.contains("Window"), p)
+  }
+
+  test("per-symbol tick scans over a cached tape plan no exchange of their own") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Cusum, FfdSearch, Microstructure, Sadf, StructuralBreak, TrendScan}
+    // materialized, as a caller reuses it: the cached plan's final
+    // partitioning is the tape's symbol clustering
+    val t = TradeData.fromEvents(spark, dir).cache()
+    t.count()
+    try {
+      for ((name, df) <- Seq(
+          "cusum" -> Cusum.events(t, 50.0),
+          "sadf" -> Sadf.sadf(t, 6, 12),
+          "csw" -> StructuralBreak.cswScan(t, 5, 12),
+          "ffd" -> FfdSearch.adfGrid(t),
+          "realizedVol" -> Microstructure.realizedVol(t),
+          "trend" -> TrendScan.labels(t, 4, 8),
+          "ewm" -> graft.functions.Ewm.stdOverKey(t, Seq("symbol"), Seq("ts", "trade_id"), "price", 5, "es"),
+          "ewm keep" -> graft.functions.Ewm.stdOverKey(t.where(col("size") > 0), Seq("symbol"), Seq("ts"),
+            "price", 5, "es", keep = Seq("trade_id")))) {
+        val p = df.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case other => other
+        }
+        assert(p.collect { case e: ShuffleExchangeExec => e }.isEmpty, s"$name:\n$p")
+        assert(p.collect { case k: graft.plans.KeyedScanExec => k }.size == 1, s"$name:\n$p")
+      }
+    } finally t.unpersist()
   }
 
   test("corwin-schultz aggregates daily ranges with a map-side partial phase") {

@@ -3,12 +3,17 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Rolling, Similarity}
+import graft.functions.Ewm
+import graft.operators.{
+  Cusum, Dedup, FfdSearch, Microstructure, Rolling, Sadf, Similarity, StructuralBreak, TrendScan
+}
 
 /** The ops rebuilt on keyed scans and driver-side k-means means give
   * exactly the rows of the forms they replaced (`LshReference`,
-  * `WindowReference`, `RollingReference`): every value, doubles by bit
-  * pattern.
+  * `WindowReference`, `RollingReference`, `TickScanReference`): every
+  * value, doubles by bit pattern. The per-symbol tick scans also follow
+  * one null policy: a null symbol is a group of its own, null ts and
+  * trade_id values sort first, and a tick without a price is dropped.
   */
 class KeyedScanPinsSpec extends SparkSpec {
   import spark.implicits._
@@ -125,5 +130,100 @@ class KeyedScanPinsSpec extends SparkSpec {
     val joined = vol.join(last, Seq("symbol", "ts"))
     assert(joined.count() == last.count())
     assert(vol.as("a").join(vol.as("b"), Seq("symbol", "ts")).count() == vol.count())
+  }
+
+  // --- per-symbol tick scans ---
+
+  private val t0 = java.time.Instant.parse("2024-03-04T00:00:00Z").toEpochMilli
+  private val earlyDay = "2024-03-01"
+  private val early = java.time.Instant.parse(s"${earlyDay}T00:00:00Z").toEpochMilli
+
+  /** Three days of ticks for symbols A, B and a null one: runs of equal
+    * ts (distinct trade ids), ticks on and next to each midnight, a
+    * flat price stretch, null-ts ticks, null-trade_id ticks at a ts of
+    * their own, and ticks without a price. `nullTs` gives the null-ts
+    * ticks `early` + their trade id in seconds instead (a day before
+    * all the others, in the same order); `nullTid` gives the
+    * null-trade_id ticks an id instead (their ts orders them alone);
+    * `nullSym` names the null symbol; `priced` drops the priceless
+    * ticks.
+    */
+  private def tape(nullTs: Boolean = true, nullTid: Boolean = true, nullSym: Boolean = true,
+      priced: Boolean = false): DataFrame = {
+    val rnd = new scala.util.Random(9)
+    val day = 86400000L
+    val edges = (1 to 2).flatMap(d => Seq(d * day - 1000, d * day, d * day + 1000))
+    val rows = Seq("A", "B", null).zipWithIndex.flatMap { case (sym, k) =>
+      val at = ((0 until 90).map(_ => rnd.nextInt(3 * 86400).toLong * 1000) ++ edges ++
+        Seq.fill(3)(7000L) ++ Seq.fill(3)(day + 60000)).sorted
+      var cents = 10000L
+      val walk = at.zipWithIndex.map { case (ms, i) =>
+        if (i < 30 || i > 55) cents = math.max(100L, cents + rnd.nextInt(9) - 4)
+        (sym, Option(t0 + ms), Option(cents / 100.0), Option(k * 1000L + i))
+      }
+      val odd = Seq(
+        (sym, None, Some(99.5), Some(k * 1000L + 900)), (sym, None, Some(99.75), Some(k * 1000L + 901)),
+        (sym, None, Some(99.25), Some(k * 1000L + 902)),
+        (sym, Some(t0 + 3500), Some(100.5), None), (sym, Some(t0 + day + 500), Some(101.0), None),
+        (sym, Some(t0 + 9500), None, Some(k * 1000L + 950)), (sym, Some(t0 + 2 * day + 500), None, Some(k * 1000L + 951)))
+      walk ++ odd
+    }.map { case (sym, ts, price, tid) =>
+      (if (sym == null && !nullSym) "Z" else sym,
+        ts.orElse(if (nullTs) None else Some(early + tid.get * 1000)).map(new java.sql.Timestamp(_)),
+        price, tid.orElse(if (nullTid) None else Some(-1L)))
+    }.filter(r => !priced || r._3.isDefined)
+    rows.toDF("symbol", "ts", "price", "trade_id").withColumn("size", lit(1L)).repartition(3)
+  }
+
+  private def tickScans(df: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "cusum" -> Cusum.events(df, 0.05),
+    "sadf" -> Sadf.sadf(df, 5, 12),
+    "csw" -> StructuralBreak.cswScan(df, 3, 12),
+    "ffd" -> FfdSearch.adfGrid(df, Seq(0.4, 1.0), 1e-2),
+    "realizedVol" -> Microstructure.realizedVol(df),
+    "trend" -> TrendScan.labels(df, 4, 10),
+    "ewm" -> Ewm.stdOverKey(df.na.drop(Seq("price")), Seq("symbol"), Seq("ts", "trade_id"), "price", 10, "es"),
+  )
+
+  test("trend labels and sadf: keyed scans == whole-symbol window references, bit-exact (ties, day edges, null keys)") {
+    val df = tape()
+    assertSame(TrendScan.labels(df, 4, 10), TickScanReference.trendLabels(df, 4, 10))
+    assertSame(TrendScan.labels(df, 3, 3), TickScanReference.trendLabels(df, 3, 3))
+    assertSame(Sadf.sadf(df, 5, 12), TickScanReference.sadf(df, 5, 12))
+    assertSame(Sadf.sadf(df, 4, 4), TickScanReference.sadf(df, 4, 4))
+  }
+
+  // each null policy below is checked with the other null inputs left out
+  test("tick scans: a null symbol is a group of its own, with a named symbol's values") {
+    val named = tickScans(tape(nullSym = false, nullTs = false, nullTid = false)).toMap
+    for ((name, got) <- tickScans(tape(nullTs = false, nullTid = false)))
+      assertSame(got.where(col("symbol").isNull).drop("symbol"),
+        named(name).where(col("symbol") === "Z").drop("symbol"))
+  }
+
+  test("tick scans: a null trade_id sorts first; values equal an id that orders the same") {
+    val filled = tickScans(tape(nullTid = false, nullTs = false)).toMap
+    for ((name, got) <- tickScans(tape(nullTs = false))) {
+      if (name == "ewm") assertSame(got.drop("trade_id"), filled(name).drop("trade_id"))
+      else assertSame(got, filled(name))
+    }
+  }
+
+  test("tick scans: null-ts ticks sort first; realized vol makes them a day with a null date") {
+    // the early frame's timestamps and day, read back as nulls
+    def nulled(df: DataFrame): DataFrame = df.columns.foldLeft(df) {
+      case (d, "ts") => d.withColumn("ts", when(col("ts") >= lit(new java.sql.Timestamp(t0)), col("ts")))
+      case (d, "date") => d.withColumn("date", when(col("date") =!= earlyDay, col("date")))
+      case (d, _) => d
+    }
+    val dated = tickScans(tape(nullTs = false, nullTid = false)).toMap
+    for ((name, got) <- tickScans(tape(nullTid = false))) assertSame(got, nulled(dated(name)))
+    val rv = Microstructure.realizedVol(tape(nullTid = false)).where(col("date").isNull)
+    assert(rv.count() == 3, "one null-date day per symbol")
+  }
+
+  test("tick scans: a tick without a price is dropped") {
+    val priced = tickScans(tape(priced = true, nullTs = false, nullTid = false)).toMap
+    for ((name, got) <- tickScans(tape(nullTs = false, nullTid = false))) assertSame(got, priced(name))
   }
 }

@@ -448,11 +448,11 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
 
   test("sadf scan is bit-identical to the declarative window form") {
     val t = graft.sources.TradeData.fromEvents(spark, "/root/testdata/sf0.01")
-    val a = operators.Sadf.sadf(t, 10, 40)
+    val a = TickScanReference.sadf(t, 10, 40)
       .orderBy("symbol", "ts")
       .as[(String, java.sql.Timestamp, Double, Int, Double, Double)]
       .collect().toSeq
-    val b = operators.Sadf.sadfScan(t, 10, 40)
+    val b = operators.Sadf.sadf(t, 10, 40)
       .orderBy("symbol", "ts")
       .as[(String, java.sql.Timestamp, Double, Int, Double, Double)]
       .collect().toSeq
@@ -464,36 +464,23 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
     }
   }
 
-  test("chunked trend scan is bit-identical to the whole-symbol window form") {
-    // sf0.01 days (~66 rows) need a single-day halo; sf0.001 days
-    // (~7 rows) force the multi-day halo path — both must match the
-    // whole-symbol form exactly
+  test("trend scan is bit-identical to the whole-symbol window form") {
+    // sf0.01 days hold ~66 rows, sf0.001 days ~7: windows span day
+    // edges on both
     for (sf <- Seq("sf0.01", "sf0.001")) {
       val t = graft.sources.TradeData.fromEvents(spark, s"/root/testdata/$sf")
-      val a = operators.TrendScan.labels(t, 5, 20)
+      val a = TickScanReference.trendLabels(t, 5, 20)
         .orderBy("symbol", "ts")
         .as[(String, java.sql.Timestamp, Double, Int, Int, Double, Double)]
         .collect().toSeq
-      val b = operators.TrendScan.labelsChunked(t, 5, 20)
+      val s = operators.TrendScan.labels(t, 5, 20)
         .orderBy("symbol", "ts")
         .as[(String, java.sql.Timestamp, Double, Int, Int, Double, Double)]
         .collect().toSeq
-      assert(a.size == b.size && a.nonEmpty)
-      for ((x, y) <- a.zip(b)) {
-        assert(x._1 == y._1 && x._2 == y._2 && x._4 == y._4 && x._5 == y._5)
-        // doubles must be BIT-equal (identical integer moments + trees)
-        assert(java.lang.Double.doubleToLongBits(x._6) == java.lang.Double.doubleToLongBits(y._6))
-        assert(java.lang.Double.doubleToLongBits(x._7) == java.lang.Double.doubleToLongBits(y._7))
-      }
-      // the production O(maxHorizon)-state scan: same chunks, same
-      // integers, same trees — bit-equal to both declarative forms
-      val s = operators.TrendScan.labelsScan(t, 5, 20)
-        .orderBy("symbol", "ts")
-        .as[(String, java.sql.Timestamp, Double, Int, Int, Double, Double)]
-        .collect().toSeq
-      assert(s.size == a.size)
+      assert(a.size == s.size && a.nonEmpty)
       for ((x, y) <- a.zip(s)) {
         assert(x._1 == y._1 && x._2 == y._2 && x._4 == y._4 && x._5 == y._5)
+        // doubles must be BIT-equal (identical integer moments + trees)
         assert(java.lang.Double.doubleToLongBits(x._6) == java.lang.Double.doubleToLongBits(y._6))
         assert(java.lang.Double.doubleToLongBits(x._7) == java.lang.Double.doubleToLongBits(y._7))
       }

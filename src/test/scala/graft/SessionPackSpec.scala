@@ -105,4 +105,11 @@ class SessionPackSpec extends SparkSpec {
     assert(stats.forall(r => r.getAs[Long]("seq_tokens") <= 300L ||
       r.getAs[Long]("n_docs") == 1L))
   }
+
+  test("packing a document without a token count fails with a message naming the columns") {
+    val d = Seq((0L, Option(10L)), (1L, None)).toDF("doc_id", "n_tokens")
+    val e = intercept[Exception](Packing.packSequences(d, 100L, 1).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(m => m.contains("doc_id") && m.contains("n_tokens")), e.toString)
+  }
 }

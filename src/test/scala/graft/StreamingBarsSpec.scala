@@ -432,7 +432,7 @@ class StreamingBarsSpec extends SparkSpec {
     q.awaitTermination(120000)
 
     val streamed = spark.table("stream_sadf")
-    val batch = graft.operators.Sadf.sadfScan(trades, minWindow = 6, maxWindow = 15)
+    val batch = graft.operators.Sadf.sadf(trades, minWindow = 6, maxWindow = 15)
     assert(streamed.count() == batch.count() && streamed.count() > 0)
     val joined = streamed.as("s").join(batch.as("b"), Seq("symbol", "ts"))
     assert(joined.count() == batch.count())
