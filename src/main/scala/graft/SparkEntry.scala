@@ -566,7 +566,7 @@ object SparkEntry {
     },
     "sign_entropy" -> { (s, dir) =>
       operators.Microstructure
-        .signEntropyScan(TradeData.fromEvents(s, dir))
+        .signEntropy(TradeData.fromEvents(s, dir))
         .withColumn("date", col("date").cast("string"))
         .orderBy(col("symbol"), col("date"))
     },

@@ -74,7 +74,7 @@ object Ewm {
   * observation then adds to them. The multiply-add sequence is fixed,
   * so both callers give the same doubles.
   */
-final class EwmStd(span: Int) {
+final class EwmStd(span: Int) extends Serializable {
   private val decay = 1.0 - 2.0 / (span + 1.0)
   private var sumW, sumWX, sumWX2, sumW2 = 0.0
 

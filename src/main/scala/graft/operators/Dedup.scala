@@ -66,19 +66,6 @@ object Dedup {
   def shingleHashes(shingles: Column): Column =
     transform(shingles, s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
 
-  /** MinHash signature from pre-hashed shingles: per hash function,
-    * the minimum of (a_i * h + b_i) mod P. Returns array<long>.
-    *
-    * IMPORTANT: pass a MATERIALIZED (persisted) hash column — the 16
-    * per-function subtrees each re-evaluate their input expression
-    * (interpreted HOFs get no CSE and CollapseProject re-inlines
-    * aliases), so an inline md5 subtree would be computed 16x.
-    */
-  def minhashSignature(hashedShingles: Column, nHashes: Int = 16): Column =
-    array((0 until nHashes).map { i =>
-      array_min(transform(hashedShingles, h => (lit(minhashA(i)) * h + lit(minhashB(i))) % MinhashP))
-    }: _*)
-
   /** LSH band hashes: md5 over each band's concatenated signature
     * slice. nHashes must be divisible by bands.
     */

@@ -788,14 +788,9 @@ object Labels {
     }
   }
 
-  /** @param bucket used only by the pair-materializing twin
-    *               ([[returnAttributionPairs]]); the chunked-fold
-    *               scan has no bucket parameter.
-    */
   def returnAttribution(
       trades: DataFrame,
       events: DataFrame,
-      bucket: String = "10 minutes",
       c: TradingCols = TradingCols.default,
   ): DataFrame = {
     val w = Window.partitionBy(col(c.symbol)).orderBy(col(c.ts), col(c.tradeId))
@@ -816,76 +811,9 @@ object Labels {
     intervalConcFold(ticks, ev, "attribution")((s, _) => math.abs(s))
   }
 
-  /** Pair-materializing twin of [[returnAttribution]] (quadratic in
-    * tick density — kept for the equality pin and A/B benching).
-    */
-  private[graft] def returnAttributionPairs(
-      trades: DataFrame,
-      events: DataFrame,
-      bucket: String = "10 minutes",
-      c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    val bucketUs = java.util.concurrent.TimeUnit.MINUTES.toMicros(
-      bucket match {
-        case s if s.endsWith("minutes") => s.stripSuffix("minutes").trim.toLong
-        case other => throw new IllegalArgumentException(s"bucket: $other")
-      }
-    )
-    val w = Window.partitionBy(col(c.symbol)).orderBy(col(c.ts), col(c.tradeId))
-    val ticks = trades
-      .select(
-        col(c.symbol).as("symbol"),
-        col(c.ts).as("ts"),
-        col(c.tradeId).as("trade_id"),
-        log(col(c.price) / lag(col(c.price), 1).over(w)).as("ret"),
-      )
-      .where(col("ret").isNotNull)
-    val pairs = RangeJoin
-      .intervalJoin(
-        events.select(col("symbol"), col("t0"), col("t1"), col("event_id")),
-        ticks,
-        by = Seq("symbol"),
-        startCol = "t0",
-        endCol = "t1",
-        pointCol = "ts",
-        bucketMicros = bucketUs,
-        inclusiveStart = true,
-      )
-      .select(col("symbol"), col("event_id"), col("ts"), col("trade_id"), col("ret"))
-    val conc = pairs
-      .groupBy(col("symbol"), col("ts"), col("trade_id"))
-      .agg(count(lit(1)).as("c"))
-    pairs
-      .join(conc, Seq("symbol", "ts", "trade_id"))
-      .groupBy(col("symbol"), col("event_id"))
-      .agg(
-        aggregate(
-          array_sort(collect_list(struct(
-            unix_micros(col("ts")).as("us"),
-            col("trade_id").as("tid"),
-            (col("ret") / col("c")).as("rc"),
-          ))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("rc"),
-        ).as("__s"),
-        count(lit(1)).as("n_ticks"),
-      )
-      .select(
-        col("symbol"),
-        col("event_id"),
-        abs(col("__s")).as("attribution"),
-        col("n_ticks"),
-      )
-  }
-
-  /** @param bucket used only by the pair-materializing twin
-    *               ([[uniquenessWeightsPairs]]); the chunked-fold
-    *               scan has no bucket parameter.
-    */
   def uniquenessWeights(
       trades: DataFrame,
       events: DataFrame,
-      bucket: String = "10 minutes",
       c: TradingCols = TradingCols.default,
   ): DataFrame = {
     val ticks = trades.select(
@@ -972,64 +900,6 @@ object Labels {
         col("avg_uniqueness"),
         greatest(lit(0.0), lit(const) + lit(slope) * (col("__x").cast("double") / lit(1e9)))
           .as("decay_weight"),
-      )
-  }
-
-  /** Pair-materializing twin of [[uniquenessWeights]] (quadratic in
-    * tick density — kept for the equality pin and A/B benching).
-    */
-  private[graft] def uniquenessWeightsPairs(
-      trades: DataFrame,
-      events: DataFrame,
-      bucket: String = "10 minutes",
-      c: TradingCols = TradingCols.default,
-  ): DataFrame = {
-    val bucketUs = java.util.concurrent.TimeUnit.MINUTES.toMicros(
-      bucket match {
-        case s if s.endsWith("minutes") => s.stripSuffix("minutes").trim.toLong
-        case other => throw new IllegalArgumentException(s"bucket: $other")
-      }
-    )
-    val ticks = trades.select(
-      col(c.symbol).as("symbol"),
-      col(c.ts).as("ts"),
-      col(c.tradeId).as("trade_id"),
-    )
-    val pairs = RangeJoin
-      .intervalJoin(
-        events.select(col("symbol"), col("t0"), col("t1"), col("event_id")),
-        ticks,
-        by = Seq("symbol"),
-        startCol = "t0",
-        endCol = "t1",
-        pointCol = "ts",
-        bucketMicros = bucketUs,
-        inclusiveStart = true,
-      )
-      .select(col("symbol"), col("event_id"), col("ts"), col("trade_id"))
-    val conc = pairs
-      .groupBy(col("symbol"), col("ts"), col("trade_id"))
-      .agg(count(lit(1)).as("c"))
-    pairs
-      .join(conc, Seq("symbol", "ts", "trade_id"))
-      .groupBy(col("symbol"), col("event_id"))
-      .agg(
-        aggregate(
-          array_sort(collect_list(struct(
-            unix_micros(col("ts")).as("us"),
-            col("trade_id").as("tid"),
-            (lit(1.0) / col("c")).as("inv"),
-          ))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("inv"),
-        ).as("__sinv"),
-        count(lit(1)).as("n_ticks"),
-      )
-      .select(
-        col("symbol"),
-        col("event_id"),
-        (col("__sinv") / col("n_ticks").cast("double")).as("avg_uniqueness"),
-        col("n_ticks"),
       )
   }
 }

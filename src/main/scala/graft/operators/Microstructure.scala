@@ -457,98 +457,26 @@ object Microstructure {
     * per (symbol, day), the empirical Shannon entropy RATE of the
     * up/down message at word lengths k = 1, 2, 3 (bits per symbol,
     * H_k / k). Low entropy = predictable one-sided flow (informed
-    * trading proxy); ~1 bit = coin-flip flow.
+    * trading proxy); ~1 bit = coin-flip flow. 0.0 for days shorter
+    * than k ticks.
     *
-    * The k-gram distribution is computed WITHOUT a shuffle per gram:
-    * one collect per (symbol, day) group (bounded by the day's
-    * ticks), then a sorted-array run-length fold — the entropy sum
-    * accumulates in ascending gram order, a fixed order both engines
-    * replay (the oracle uses unnest+group+ordered list_reduce).
-    * 0.0 for days shorter than k ticks.
-    */
-  def signEntropy(df: DataFrame, c: TradingCols = TradingCols.default): DataFrame = {
-    val wOrd = Window.partitionBy(col("symbol"), col("date")).orderBy(col("ts"), col("trade_id"))
-    val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val base = df.na
-      .drop(Seq(c.price))
-      .select(
-        col(c.symbol).cast("string").as("symbol"),
-        to_date(col(c.ts)).as("date"),
-        col(c.ts).as("ts"),
-        round(col(c.price) * 100).cast("long").as("pc"),
-        col(c.tradeId).cast("long").as("trade_id"),
-      )
-      .withColumn("d", col("pc") - lag(col("pc"), 1).over(wOrd))
-      .withColumn(
-        "sgn",
-        coalesce(
-          last(when(col("d") =!= 0, signum(col("d")).cast("long")), ignoreNulls = true).over(wCum),
-          lit(1L),
-        ),
-      )
-      .withColumn("ch", when(col("sgn") > 0, lit("u")).otherwise(lit("d")))
-    val grouped = base
-      .groupBy(col("symbol"), col("date"))
-      .agg(
-        count(lit(1)).as("n_ticks"),
-        array_sort(collect_list(struct(col("ts"), col("trade_id"), col("ch")))).as("ordered"),
-      )
-      .withColumn("msg", transform(col("ordered"), x => x.getField("ch")))
-    def entropyRate(k: Int): Column = {
-      val n = size(col("msg")) - lit(k - 1)
-      // zip_with chain, not transform(sequence, i -> ..msg..): a
-      // lambda referencing msg would re-evaluate its (inlined)
-      // producing expression per element — see TextAnalysis.ngramsOfTokens
-      val msg = col("msg")
-      val joined = (2 to k).foldLeft(msg) { case (acc, j) =>
-        zip_with(acc, slice(msg, lit(j), size(msg)), (a, b) => concat(a, b))
-      }
-      val g = array_sort(filter(joined, x => x.isNotNull))
-      val nd = n.cast("double")
-      def term(run: Column): Column =
-        when(run === 0, lit(0.0)).otherwise {
-          val p = run.cast("double") / nd
-          -p * log(p) / lit(math.log(2.0))
-        }
-      val h = aggregate(
-        g,
-        struct(lit("").as("prev"), lit(0L).as("run"), lit(0.0).as("acc")),
-        (st, x) =>
-          struct(
-            x.as("prev"),
-            when(x === st.getField("prev"), st.getField("run") + 1).otherwise(lit(1L)).as("run"),
-            when(x === st.getField("prev"), st.getField("acc"))
-              .otherwise(st.getField("acc") + term(st.getField("run"))).as("acc"),
-          ),
-        st => st.getField("acc") + term(st.getField("run")),
-      )
-      when(size(col("msg")) < k, lit(0.0)).otherwise(h / lit(k.toDouble))
-    }
-    grouped.select(
-      col("symbol"),
-      col("date"),
-      col("n_ticks"),
-      entropyRate(1).as("h1"),
-      entropyRate(2).as("h2"),
-      entropyRate(3).as("h3"),
-    )
-  }
-
-  /** Production path for [[signEntropy]]: one keyed scan per
-    * (symbol, day) in (ts, trade_id) order that derives the tick-rule
-    * u/d character AND accumulates the k-gram counters inline — O(1)
-    * state per group (14 counters for the binary alphabet + last sign
-    * + two lag codes), no collect_list array, no array_sort, no
-    * interpreted fold. On a symbol-clustered tape it plans no exchange.
+    * One keyed scan per (symbol, day) in (ts, trade_id) order that
+    * derives the tick-rule u/d character AND accumulates the k-gram
+    * counters inline — O(1) state per group (14 counters for the
+    * binary alphabet + last sign + two lag codes), no collect_list
+    * array, no array_sort, no interpreted fold. On a symbol-clustered
+    * tape it plans no exchange.
     *
-    * Bit-identical to the declarative form (pinned in
-    * CoreOperatorsSpec): the k-gram counts are exact integers, and
+    * Bit-identical to the declarative form kept in the tests as the
+    * reference (windows, collect_list and a sorted-array fold; pinned
+    * in CoreOperatorsSpec): the k-gram counts are exact integers, and
     * the entropy accumulates term-by-term in ascending gram order —
     * exactly the order the sorted-array fold visits (d < u in binary
     * UTF8 order = counter index order), with the same
-    * ((-p)·ln p)/ln 2 term tree (StrictMath.log == Catalyst LOG).
+    * ((-p)·ln p)/ln 2 term tree (StrictMath.log == Catalyst LOG). The
+    * DuckDB oracle replays the same fold.
     */
-  def signEntropyScan(df: DataFrame, c: TradingCols = TradingCols.default): DataFrame = {
+  def signEntropy(df: DataFrame, c: TradingCols = TradingCols.default): DataFrame = {
     val ln2 = math.log(2.0)
     signScan(df, c, Seq(StructField("h1", DoubleType, nullable = false),
       StructField("h2", DoubleType, nullable = false), StructField("h3", DoubleType, nullable = false))) {
@@ -598,7 +526,7 @@ object Microstructure {
     }
   }
 
-  /** The per-(symbol, day) tick-rule scan behind [[signEntropyScan]] and
+  /** The per-(symbol, day) tick-rule scan behind [[signEntropy]] and
     * [[lzEntropyScan]], over the ticks with a price in (ts, trade_id)
     * order. Output: symbol, date, n_ticks, then `stats`.
     */
@@ -729,7 +657,7 @@ object Microstructure {
 
   /** Kontoyiannis window LZ entropy of the tick-rule sign stream
     * (AFML ch.18.4's second entropy estimator next to the plug-in
-    * [[signEntropyScan]]): per (symbol, day), for every point i with
+    * [[signEntropy]]): per (symbol, day), for every point i with
     * `window` signs of history and lookahead, Λ_i = 1 + the longest
     * substring starting at i that re-occurs starting in the trailing
     * window, and Ĥ = mean(log₂(window+1)/Λ_i) — low for repetitive
@@ -740,7 +668,7 @@ object Microstructure {
     * the query is rows-only; the estimator is pinned in ScalaTest on
     * constant / alternating / pseudo-random streams plus a brute-
     * force replay of the textbook matchLength definition. Same
-    * per-(symbol, day) keyed scan as [[signEntropyScan]]; O(window)
+    * per-(symbol, day) keyed scan as [[signEntropy]]; O(window)
     * state, O(window) work per tick (bit-parallel match).
     */
   def lzEntropyScan(df: DataFrame, window: Int = 32, c: TradingCols = TradingCols.default): DataFrame =

@@ -122,16 +122,6 @@ object Similarity {
     if (probeBits <= 0) array(bucket)
     else array((bucket +: (0 until nPlanes).map(j => bucket.bitwiseXOR(lit(1L << j)))): _*)
 
-  /** Random-hyperplane LSH bucket id in [0, 2^nPlanes). */
-  def lshBucket(v: Column, nPlanes: Int, dim: Int): Column = {
-    val w = planeWeights(nPlanes, dim)
-    val bits = (0 until nPlanes).map { j =>
-      val wj = array(w(j).map(lit): _*)
-      when(dot(v, wj) > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduceLeft(_ + _)
-  }
-
   /** Multi-table LSH buckets: table t uses planes
     * [t*nPlanes, (t+1)*nPlanes) of the shared deterministic plane
     * pool. Union-of-tables candidate retrieval is what makes

@@ -1,12 +1,17 @@
 package graft.plans
 
+import java.nio.ByteBuffer
+
+import org.apache.spark.SparkEnv
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Ascending, Attribute, AttributeMap, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeArrayData,
-  UnsafeMapData, UnsafeProjection, UnsafeRow
+  Alias, Ascending, Attribute, AttributeMap, AttributeReference, AttributeSeq, AttributeSet, BindReferences, Expression,
+  InterpretedOrdering, SortOrder, UnsafeArrayData, UnsafeMapData, UnsafeProjection, UnsafeRow
 }
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, UnaryNode}
@@ -16,6 +21,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{
 }
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** A per-key sequential kernel, one instance per task. For each key
@@ -24,8 +30,13 @@ import org.apache.spark.sql.types._
   * child's, in child column order; they are reused by the caller, so a
   * kernel copies what it keeps past `step`. The key row stays valid
   * until the next `reset`.
+  *
+  * A kernel's fields are its streaming state: over a streaming
+  * DataFrame (see [[KeyedScan.apply]]) a key's kernel is Java-serialized
+  * after each micro-batch and restored for the next, so everything it
+  * holds must serialize.
   */
-trait ScanKernel {
+trait ScanKernel extends Serializable {
   def reset(key: InternalRow): Unit
   def step(row: InternalRow, out: ScanOut): Unit
   def flush(out: ScanOut): Unit
@@ -231,31 +242,100 @@ object KeyedScan {
     * keys in turn, the output column the kernel writes that key into
     * unchanged (see [[KeyedScanPlan]]): the scan then keeps the child's
     * hash partitioning on those keys.
+    *
+    * A streaming `df` runs the same kernel under
+    * `flatMapGroupsWithState`, in append mode with no timeout and no
+    * watermark (the ordered-arrival contract of
+    * [[graft.streaming.StatefulBars]]):
+    *  - rows group by the same key expressions; a null key is a key
+    *    value;
+    *  - within each micro-batch a key's rows are sorted by `order`,
+    *    with the null rules above;
+    *  - on a key's first rows a fresh kernel is made and `reset` with
+    *    the key; on later micro-batches the stored kernel is restored;
+    *  - every row is `step`ped, and `flush` is never called: an open
+    *    bar, day or window stays in state;
+    *  - the kernel is stored back Java-serialized in a
+    *    `GroupState[Array[Byte]]`;
+    *  - every row the kernel wrote is emitted, streamed ones included.
+    *
+    * `partitions` and `keyOut` apply to a batch `df` only.
     */
   def apply(df: DataFrame, keys: Seq[Column], order: Seq[Column], out: StructType,
       partitions: Option[Int] = None, keyOut: Seq[String] = Nil)(kernel: () => ScanKernel): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(KeyedScanStrategy)) {
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ KeyedScanStrategy
-    }
     val child = df.queryExecution.analyzed
-    val keyExprs = df.select(keys: _*).queryExecution.analyzed match {
-      case Project(list, _) => list.map { case Alias(e, _) => e; case e => e }
-      case other => throw new IllegalStateException(s"unexpected key plan $other")
-    }
     val sortOrder =
       if (order.isEmpty) Nil
       else df.sortWithinPartitions(order: _*).queryExecution.analyzed match {
         case Sort(o, false, _, _) => o
         case other => throw new IllegalStateException(s"unexpected order plan $other")
       }
-    val attrs = out.fields.toSeq.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-    require(keyOut.length <= keyExprs.length, s"keyOut $keyOut names more columns than there are keys")
-    val passed = keyOut.zip(keyExprs).map { case (name, k) =>
-      val a = attrs(out.fieldIndex(name))
-      require(a.dataType == k.dataType, s"keyOut column $name is ${a.dataType}, its key is ${k.dataType}")
-      a
+    if (df.isStreaming)
+      streaming(df, keys, BindReferences.bindReferences(sortOrder, AttributeSeq(child.output)), out, kernel)
+    else {
+      val spark = df.sparkSession
+      if (!spark.experimental.extraStrategies.contains(KeyedScanStrategy)) {
+        spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ KeyedScanStrategy
+      }
+      val keyExprs = df.select(keys: _*).queryExecution.analyzed match {
+        case Project(list, _) => list.map { case Alias(e, _) => e; case e => e }
+        case other => throw new IllegalStateException(s"unexpected key plan $other")
+      }
+      val attrs = out.fields.toSeq.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+      require(keyOut.length <= keyExprs.length, s"keyOut $keyOut names more columns than there are keys")
+      val passed = keyOut.zip(keyExprs).map { case (name, k) =>
+        val a = attrs(out.fieldIndex(name))
+        require(a.dataType == k.dataType, s"keyOut column $name is ${a.dataType}, its key is ${k.dataType}")
+        a
+      }
+      ColumnBridge.ofRows(spark, KeyedScanPlan(child, keyExprs, sortOrder, kernel, attrs, partitions, passed))
     }
-    ColumnBridge.ofRows(spark, KeyedScanPlan(child, keyExprs, sortOrder, kernel, attrs, partitions, passed))
+  }
+
+  /** The streaming driver of [[apply]]; `order` is bound to `df`'s columns. */
+  private def streaming(df: DataFrame, keys: Seq[Column], order: Seq[SortOrder], out: StructType,
+      kernel: () => ScanKernel): DataFrame = {
+    val keySchema = df.select(keys: _*).schema
+    val scan = new StreamingScan(ExpressionEncoder(keySchema), ExpressionEncoder(df.schema),
+      ExpressionEncoder(out).resolveAndBind(), order, kernel)
+    df.groupBy(keys: _*).as(Encoders.row(keySchema), Encoders.row(df.schema))
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(scan.apply)(
+        Encoders.BINARY, Encoders.row(out))
+      .toDF()
+  }
+}
+
+/** One key group's micro-batch of a streaming [[KeyedScan]]: rows in
+  * and out through Row encoders, the kernel kept between micro-batches
+  * as Java-serialized bytes.
+  */
+private final class StreamingScan(
+    key: ExpressionEncoder[Row],
+    row: ExpressionEncoder[Row],
+    out: ExpressionEncoder[Row],
+    order: Seq[SortOrder],
+    newKernel: () => ScanKernel,
+) extends Serializable {
+  private val numOut = out.schema.length
+  @transient private lazy val toKey = key.createSerializer()
+  @transient private lazy val toRow = row.createSerializer()
+  @transient private lazy val fromOut = out.createDeserializer()
+  @transient private lazy val ordering = new InterpretedOrdering(order)
+  @transient private lazy val ser = SparkEnv.get.closureSerializer.newInstance()
+
+  def apply(k: Row, rows: Iterator[Row], state: GroupState[Array[Byte]]): Iterator[Row] = {
+    val kernel =
+      if (state.exists) ser.deserialize[ScanKernel](ByteBuffer.wrap(state.get))
+      else { val fresh = newKernel(); fresh.reset(toKey(k).copy()); fresh }
+    val sorted = rows.map(r => toRow(r).copy()).toArray
+    java.util.Arrays.sort(sorted, ordering) // stable: equal rows keep arrival order
+    val o = new ScanOut(numOut)
+    val emitted = Seq.newBuilder[Row]
+    sorted.foreach { r =>
+      kernel.step(r, o)
+      while (!o.isEmpty) emitted += fromOut(o.next())
+    }
+    state.update(JavaUtils.bufferToArray(ser.serialize(kernel)))
+    emitted.result().iterator
   }
 }

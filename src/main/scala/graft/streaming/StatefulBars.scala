@@ -11,13 +11,19 @@ import graft.api.TradingCols
 /** Stateful streaming bars (count/volume-triggered bars cannot be
   * expressed as windowed aggregations — the bar boundary depends on
   * accumulated state, so this is the flatMapGroupsWithState shape).
+  * Only the bars whose batch form is a window expression live here;
+  * the dollar, volume-overflow, imbalance and run bars are keyed
+  * scans, and the batch operators (`Bars.dollarBars`,
+  * `Bars.volumeBars(allowSplits = false)`, `ImbalanceBars.*`) run
+  * their kernels on a streaming DataFrame themselves.
   *
   * State per symbol is one open bar (O(1)); completed bars emit in
   * append mode exactly once. Ticks are processed in (ts, trade_id)
   * order within each micro-batch; as with any count-based streaming
   * bar, cross-batch reordering follows arrival order.
   *
-  * ==Ordered-arrival contract (ALL entry points in this object)==
+  * ==Ordered-arrival contract (ALL entry points in this object, and
+  * every keyed scan over a stream)==
   * State carries across micro-batches with NO watermark: every
   * operator here assumes micro-batch N+1's ticks are event-time ≥
   * micro-batch N's for the same key. This holds for the intended
@@ -211,26 +217,24 @@ object StatefulBars {
 
   /** Streaming volume bars keyed by (symbol, UTC day) — the batch
     * default splitByDate=true grouping, carried across micro-batches
-    * in O(1) state per key. `allowSplits=true`: a trade straddling the
-    * boundary is split at the exact multiple of `barSize` in
-    * cumulative volume and n_trades counts pieces (batch
-    * Bars.volumeBars split form); `allowSplits=false`: the whole trade
-    * joins the open bar, which closes with overflow once its total
-    * reaches barSize (batch volumeBarsOverflow). Completed bars emit
-    * exactly once in append mode; open partials (including day-tail
-    * partials) stay in state, so streaming == batch on completed bars.
-    * Requires size >= 1 per tick (the canonical trades contract).
+    * in O(1) state per key. A trade straddling the boundary is split
+    * at the exact multiple of `barSize` in cumulative volume and
+    * n_trades counts pieces (batch Bars.volumeBars split form).
+    * Completed bars emit exactly once in append mode; open partials
+    * (including day-tail partials) stay in state, so streaming ==
+    * batch on completed bars. Requires size >= 1 per tick (the
+    * canonical trades contract).
     */
-  def volumeBars(trades: DataFrame, barSize: Long, allowSplits: Boolean = true): Dataset[Bar] = {
+  def volumeBars(trades: DataFrame, barSize: Long): Dataset[Bar] = {
     val spark = trades.sparkSession
     import spark.implicits._
     bydayTicks(trades)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
-        processVolume(barSize, allowSplits)
+        processVolume(barSize)
       )
   }
 
-  private def processVolume(barSize: Long, allowSplits: Boolean)(
+  private def processVolume(barSize: Long)(
       key: (String, Long),
       rows: Iterator[Tick],
       state: GroupState[OpenBar],
@@ -241,65 +245,13 @@ object StatefulBars {
     sorted.foreach { t =>
       val tsUs = tsMicros(t.ts)
       val pc = cents(t.price)
-      if (allowSplits) {
-        var remaining = t.size
-        while (remaining > 0) {
-          val room = barSize - (if (bar == null) 0L else bar.volume)
-          val take = math.min(remaining, room)
-          bar = addPiece(bar, tsUs, t.price, take, pc * take)
-          remaining -= take
-          if (bar.volume >= barSize) { out += toBar(key._1, bar); bar = null }
-        }
-      } else {
-        bar = addPiece(bar, tsUs, t.price, t.size, pc * t.size)
+      var remaining = t.size
+      while (remaining > 0) {
+        val room = barSize - (if (bar == null) 0L else bar.volume)
+        val take = math.min(remaining, room)
+        bar = addPiece(bar, tsUs, t.price, take, pc * take)
+        remaining -= take
         if (bar.volume >= barSize) { out += toBar(key._1, bar); bar = null }
-      }
-    }
-    if (bar == null) state.remove() else state.update(bar)
-    out.result().iterator
-  }
-
-  /** Streaming dollar bars with the reference's unit-level overflow
-    * semantics (batch Bars.dollarBars: each trade is conceptually
-    * `size` unit trades; a bar closes on the unit pushing its dollar
-    * total to >= barSize, overflow allowed). The closed-form per-trade
-    * unit split of the batch carry scan runs inside O(1) per-(symbol,
-    * day) streaming state — the open bar's exact Σcents IS the carry.
-    * Zero-cent ticks contribute no dollar value and are skipped
-    * (same degenerate-price policy as batch).
-    */
-  def dollarBars(trades: DataFrame, barSize: Double): Dataset[Bar] = {
-    val spark = trades.sparkSession
-    import spark.implicits._
-    val barCents = math.round(barSize * 100)
-    bydayTicks(trades)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
-        processDollarOverflow(barCents)
-      )
-  }
-
-  private def processDollarOverflow(barCents: Long)(
-      key: (String, Long),
-      rows: Iterator[Tick],
-      state: GroupState[OpenBar],
-  ): Iterator[Bar] = {
-    val sorted = rows.toSeq.sortBy(t => (tsMicros(t.ts), t.trade_id))
-    var bar = state.getOption.orNull
-    val out = Seq.newBuilder[Bar]
-    sorted.foreach { t =>
-      val tsUs = tsMicros(t.ts)
-      val pc = cents(t.price)
-      if (pc > 0L) {
-        var remaining = t.size
-        while (remaining > 0) {
-          val carry = if (bar == null) 0L else bar.pv
-          // units needed to push the bar's Σcents to >= barCents
-          val k = (barCents - carry + pc - 1) / pc
-          val take = math.min(remaining, k)
-          bar = addPiece(bar, tsUs, t.price, take, pc * take)
-          remaining -= take
-          if (bar.pv >= barCents) { out += toBar(key._1, bar); bar = null }
-        }
       }
     }
     if (bar == null) state.remove() else state.update(bar)
@@ -351,336 +303,6 @@ object StatefulBars {
       }
     }
     if (bar == null) state.remove() else state.update(bar)
-    out.result().iterator
-  }
-
-  // ---- streaming tick-imbalance bars (adaptive thresholds) ----
-
-  final case class ImbBar(
-      symbol: String,
-      ts_start: Timestamp,
-      ts_end: Timestamp,
-      open: Double,
-      high: Double,
-      low: Double,
-      close: Double,
-      volume: Long,
-      vwap: Double,
-      n_trades: Long,
-      theta: Long,
-  )
-
-  final case class ImbState(
-      hasPrev: Boolean,
-      prevPrice: Double,
-      prevSign: Int,
-      expT: Double,
-      expB: Double,
-      theta: Long,
-      bar: OpenBar, // null when no bar open
-  )
-
-  /** Streaming tick-imbalance bars: the same per-symbol state machine
-    * as the batch operators.ImbalanceBars scan (tick-rule signs,
-    * EWMA-adaptive |theta| threshold), carried across micro-batches in
-    * O(1) state per symbol. Completed bars emit exactly once in
-    * append mode; the open partial bar lives in state (the batch
-    * operator never emits partials either, so streaming == batch on
-    * the same input).
-    */
-  def tickImbalanceBars(
-      trades: DataFrame,
-      initTicks: Double = 100.0,
-      initImbalance: Double = 0.2,
-      minImbalance: Double = 0.05,
-      alpha: Double = 0.1,
-  ): Dataset[ImbBar] = {
-    val spark = trades.sparkSession
-    import spark.implicits._
-    val ticks = trades
-      .select(
-        col("symbol").cast("string"),
-        col("ts").cast("timestamp"),
-        col("price").cast("double"),
-        col("size").cast("long"),
-        col("trade_id").cast("long"),
-      )
-      .as[Tick]
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
-        processImbalance(initTicks, initImbalance, minImbalance, alpha)
-      )
-  }
-
-  /** Streaming dollar-imbalance bars: θ accumulates sign·(price
-    * cents)·size, same state machine as the batch
-    * operators.ImbalanceBars.dollarImbalanceBars (seeds and the
-    * minimum scaled to cents exactly like the batch form).
-    */
-  def dollarImbalanceBars(
-      trades: DataFrame,
-      initTicks: Double = 100.0,
-      initDollarImbalance: Double = 25.0,
-      minDollarImbalance: Double = 1.0,
-      alpha: Double = 0.1,
-  ): Dataset[ImbBar] =
-    imbalanceBarsBy(trades, initTicks, initDollarImbalance * 100.0, minDollarImbalance * 100.0, alpha)(
-      (t, sign) => sign * math.round(t.price * 100) * t.size
-    )
-
-  /** Streaming volume-imbalance bars: θ accumulates sign·size
-    * (batch twin: operators.ImbalanceBars.volumeImbalanceBars).
-    */
-  def volumeImbalanceBars(
-      trades: DataFrame,
-      initTicks: Double = 100.0,
-      initVolumeImbalance: Double = 10.0,
-      minVolumeImbalance: Double = 1.0,
-      alpha: Double = 0.1,
-  ): Dataset[ImbBar] =
-    imbalanceBarsBy(trades, initTicks, initVolumeImbalance, minVolumeImbalance, alpha)(
-      (t, sign) => sign * t.size
-    )
-
-  // ---- streaming tick run bars ----
-
-  final case class RunBar(
-      symbol: String,
-      ts_start: Timestamp,
-      ts_end: Timestamp,
-      open: Double,
-      high: Double,
-      low: Double,
-      close: Double,
-      volume: Long,
-      vwap: Double,
-      n_trades: Long,
-      up_ticks: Long,
-      down_ticks: Long,
-  )
-
-  final case class RunState(
-      hasPrev: Boolean,
-      prevPrice: Double,
-      prevSign: Int,
-      expT: Double,
-      pMax: Double,
-      up: Long,
-      down: Long,
-      bar: OpenBar, // null when no bar open
-  )
-
-  /** Streaming tick run bars: θ = max(up-run, down-run), closes at
-    * θ ≥ E[T]·max(P[up], 1−P[up]) — the batch
-    * operators.ImbalanceBars.tickRunBars state machine carried in
-    * O(1) per-symbol streaming state.
-    */
-  def tickRunBars(
-      trades: DataFrame,
-      initTicks: Double = 100.0,
-      initPmax: Double = 0.55,
-      alpha: Double = 0.1,
-  ): Dataset[RunBar] = {
-    val spark = trades.sparkSession
-    import spark.implicits._
-    val ticks = trades
-      .select(
-        col("symbol").cast("string"),
-        col("ts").cast("timestamp"),
-        col("price").cast("double"),
-        col("size").cast("long"),
-        col("trade_id").cast("long"),
-      )
-      .as[Tick]
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
-        processRuns(initTicks, initPmax, alpha)
-      )
-  }
-
-  private def processRuns(
-      initTicks: Double,
-      initPmax: Double,
-      alpha: Double,
-  )(
-      symbol: String,
-      rows: Iterator[Tick],
-      state: GroupState[RunState],
-  ): Iterator[RunBar] = {
-    val sorted = rows.toSeq.sortBy(t => (tsMicros(t.ts), t.trade_id))
-    var st = state.getOption.getOrElse(
-      RunState(hasPrev = false, 0.0, 1, initTicks, initPmax, 0L, 0L, null)
-    )
-    val out = Seq.newBuilder[RunBar]
-    sorted.foreach { t =>
-      val tsUs = tsMicros(t.ts)
-      val sign =
-        if (!st.hasPrev || t.price == st.prevPrice) st.prevSign
-        else if (t.price > st.prevPrice) 1
-        else -1
-      val bar =
-        if (st.bar == null)
-          OpenBar(1, tsUs, tsUs, t.price, t.price, t.price, t.price, t.size, math.round(t.price * 100) * t.size)
-        else
-          OpenBar(
-            st.bar.n + 1, st.bar.tsStart, tsUs, st.bar.open,
-            math.max(st.bar.high, t.price), math.min(st.bar.low, t.price), t.price,
-            st.bar.volume + t.size, st.bar.pv + math.round(t.price * 100) * t.size,
-          )
-      val up = st.up + (if (sign > 0) 1L else 0L)
-      val down = st.down + (if (sign > 0) 0L else 1L)
-      if (math.max(up, down).toDouble >= st.expT * st.pMax) {
-        out += RunBar(
-          symbol, microsTs(bar.tsStart), microsTs(bar.tsEnd),
-          bar.open, bar.high, bar.low, bar.close,
-          bar.volume, bar.pv.toDouble / 100.0 / bar.volume.toDouble, bar.n, up, down,
-        )
-        val (expT, pMax) =
-          if (alpha > 0)
-            ((1 - alpha) * st.expT + alpha * bar.n,
-             (1 - alpha) * st.pMax + alpha * (math.max(up, down).toDouble / bar.n))
-          else (st.expT, st.pMax)
-        st = RunState(hasPrev = true, t.price, sign, expT, pMax, 0L, 0L, null)
-      } else {
-        st = RunState(hasPrev = true, t.price, sign, st.expT, st.pMax, up, down, bar)
-      }
-    }
-    state.update(st)
-    out.result().iterator
-  }
-
-  /** Shared θ-increment-parametrized streaming imbalance state
-    * machine (tick form keeps its original dedicated processor).
-    */
-  private def imbalanceBarsBy(
-      trades: DataFrame,
-      initTicks: Double,
-      initB: Double,
-      minB: Double,
-      alpha: Double,
-  )(inc: (Tick, Int) => Long): Dataset[ImbBar] = {
-    val spark = trades.sparkSession
-    import spark.implicits._
-    val ticks = trades
-      .select(
-        col("symbol").cast("string"),
-        col("ts").cast("timestamp"),
-        col("price").cast("double"),
-        col("size").cast("long"),
-        col("trade_id").cast("long"),
-      )
-      .as[Tick]
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
-        processImbalanceBy(initTicks, initB, minB, alpha, inc)
-      )
-  }
-
-  private def processImbalanceBy(
-      initTicks: Double,
-      initB: Double,
-      minB: Double,
-      alpha: Double,
-      inc: (Tick, Int) => Long,
-  )(
-      symbol: String,
-      rows: Iterator[Tick],
-      state: GroupState[ImbState],
-  ): Iterator[ImbBar] = {
-    val sorted = rows.toSeq.sortBy(t => (tsMicros(t.ts), t.trade_id))
-    var st = state.getOption.getOrElse(
-      ImbState(hasPrev = false, 0.0, 1, initTicks, initB, 0L, null)
-    )
-    val out = Seq.newBuilder[ImbBar]
-    sorted.foreach { t =>
-      val tsUs = tsMicros(t.ts)
-      val sign =
-        if (!st.hasPrev || t.price == st.prevPrice) st.prevSign
-        else if (t.price > st.prevPrice) 1
-        else -1
-      val bar =
-        if (st.bar == null)
-          OpenBar(1, tsUs, tsUs, t.price, t.price, t.price, t.price, t.size, math.round(t.price * 100) * t.size)
-        else
-          OpenBar(
-            st.bar.n + 1, st.bar.tsStart, tsUs, st.bar.open,
-            math.max(st.bar.high, t.price), math.min(st.bar.low, t.price), t.price,
-            st.bar.volume + t.size, st.bar.pv + math.round(t.price * 100) * t.size,
-          )
-      val theta = st.theta + inc(t, sign)
-      val threshold = st.expT * math.max(math.abs(st.expB), minB)
-      if (math.abs(theta.toDouble) >= threshold) {
-        out += ImbBar(
-          symbol, microsTs(bar.tsStart), microsTs(bar.tsEnd),
-          bar.open, bar.high, bar.low, bar.close,
-          bar.volume, bar.pv.toDouble / 100.0 / bar.volume.toDouble, bar.n, theta,
-        )
-        val (expT, expB) =
-          if (alpha > 0)
-            ((1 - alpha) * st.expT + alpha * bar.n,
-             (1 - alpha) * st.expB + alpha * (theta.toDouble / bar.n))
-          else (st.expT, st.expB)
-        st = ImbState(hasPrev = true, t.price, sign, expT, expB, 0L, null)
-      } else {
-        st = ImbState(hasPrev = true, t.price, sign, st.expT, st.expB, theta, bar)
-      }
-    }
-    state.update(st)
-    out.result().iterator
-  }
-
-  private def processImbalance(
-      initTicks: Double,
-      initImbalance: Double,
-      minImbalance: Double,
-      alpha: Double,
-  )(
-      symbol: String,
-      rows: Iterator[Tick],
-      state: GroupState[ImbState],
-  ): Iterator[ImbBar] = {
-    val sorted = rows.toSeq.sortBy(t => (tsMicros(t.ts), t.trade_id))
-    var st = state.getOption.getOrElse(
-      ImbState(hasPrev = false, 0.0, 1, initTicks, initImbalance, 0L, null)
-    )
-    val out = Seq.newBuilder[ImbBar]
-    sorted.foreach { t =>
-      val tsUs = tsMicros(t.ts)
-      val sign =
-        if (!st.hasPrev || t.price == st.prevPrice) st.prevSign
-        else if (t.price > st.prevPrice) 1
-        else -1
-      val bar =
-        if (st.bar == null)
-          OpenBar(1, tsUs, tsUs, t.price, t.price, t.price, t.price, t.size, math.round(t.price * 100) * t.size)
-        else
-          OpenBar(
-            st.bar.n + 1, st.bar.tsStart, tsUs, st.bar.open,
-            math.max(st.bar.high, t.price), math.min(st.bar.low, t.price), t.price,
-            st.bar.volume + t.size, st.bar.pv + math.round(t.price * 100) * t.size,
-          )
-      val theta = st.theta + sign
-      val threshold = st.expT * math.max(math.abs(st.expB), minImbalance)
-      if (math.abs(theta.toDouble) >= threshold) {
-        out += ImbBar(
-          symbol, microsTs(bar.tsStart), microsTs(bar.tsEnd),
-          bar.open, bar.high, bar.low, bar.close,
-          bar.volume, bar.pv.toDouble / 100.0 / bar.volume.toDouble, bar.n, theta,
-        )
-        val (expT, expB) =
-          if (alpha > 0)
-            ((1 - alpha) * st.expT + alpha * bar.n,
-             (1 - alpha) * st.expB + alpha * (theta.toDouble / bar.n))
-          else (st.expT, st.expB)
-        st = ImbState(hasPrev = true, t.price, sign, expT, expB, 0L, null)
-      } else {
-        st = ImbState(hasPrev = true, t.price, sign, st.expT, st.expB, theta, bar)
-      }
-    }
-    state.update(st)
     out.result().iterator
   }
 }

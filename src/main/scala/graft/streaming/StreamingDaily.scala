@@ -23,6 +23,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    last (k-1) signs; entropy folds the counters in ascending gram
   *    order, the batch sorted-fold's order.
   *
+  * Realized vol has no twin: `Microstructure.realizedVol` is one keyed
+  * scan per symbol whose kernel closes a day on rollover, so it runs
+  * on a stream itself with the same emission.
+  *
   * Ordered-arrival contract: day rollover only works if micro-batch
   * N+1's ticks are event-time ≥ batch N's per symbol (unwatermarked
   * state, like [[StatefulBars]] — see its header note). A tick for an
@@ -446,74 +450,6 @@ object StreamingDaily {
           sxd = st.sxd + x * d,
           sxx = st.sxx + x * x,
         )
-      }
-    }
-    state.update(st)
-    out.result().iterator
-  }
-
-  // ---- realized variance / bipower variation / jump ----
-
-  final case class RvState(
-      day: String,
-      prevPc: Long,
-      prevR: Double,
-      nR: Long,
-      rv: Double,
-      cs: Double,
-  )
-
-  final case class RvOut(
-      symbol: String,
-      date: String,
-      n_returns: Long,
-      rv: Option[Double],
-      bv: Option[Double],
-      jump: Option[Double],
-  )
-
-  /** Streaming twin of `operators.Microstructure.realizedVol`: the
-    * sequential per-day double folds live in O(1) per-symbol state
-    * (previous price, previous return, the running RV and cross
-    * sums); arrival order within a batch is (ts, trade_id)-sorted
-    * like every scan here, so the fold order — and therefore every
-    * bit of the emitted doubles — matches the batch scan on
-    * completed days.
-    */
-  def realizedVol(trades: DataFrame): Dataset[RvOut] = {
-    val spark = trades.sparkSession
-    import spark.implicits._
-    ticks(trades)
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(processRv)
-  }
-
-  private def rvOut(symbol: String, st: RvState): RvOut = {
-    val rvO = if (st.nR >= 1) Some(st.rv) else None
-    val bvO = if (st.nR >= 2) Some(math.Pi / 2 * st.cs) else None
-    val jO = for (a <- rvO; b <- bvO) yield math.max(a - b, 0.0)
-    RvOut(symbol, st.day, st.nR, rvO, bvO, jO)
-  }
-
-  private def processRv(
-      symbol: String,
-      rows: Iterator[Tick],
-      state: GroupState[RvState],
-  ): Iterator[RvOut] = {
-    val sorted = rows.toSeq.sortBy(t => (StatefulBars.tsMicros(t.ts), t.trade_id))
-    var st = state.getOption.orNull
-    val out = Seq.newBuilder[RvOut]
-    sorted.foreach { t =>
-      val d0 = dayOf(t.ts)
-      val pc = StatefulBars.cents(t.price)
-      if (st == null) st = RvState(d0, pc, 0.0, 0L, 0.0, 0.0)
-      else if (st.day != d0) {
-        out += rvOut(symbol, st)
-        st = RvState(d0, pc, 0.0, 0L, 0.0, 0.0)
-      } else {
-        val r = (pc - st.prevPc).toDouble / st.prevPc.toDouble
-        val cs2 = if (st.nR >= 1) st.cs + math.abs(r) * math.abs(st.prevR) else st.cs
-        st = st.copy(prevPc = pc, prevR = r, nR = st.nR + 1, rv = st.rv + r * r, cs = cs2)
       }
     }
     state.update(st)

@@ -1053,10 +1053,10 @@ class CoreOperatorsSpec extends SparkSpec {
     for ((name, scan, pairsForm) <- Seq(
         ("uniqueness",
          Labels.uniquenessWeights(t, ev),
-         Labels.uniquenessWeightsPairs(t, ev)),
+         WeightPairsReference.uniquenessWeights(t, ev)),
         ("attribution",
          Labels.returnAttribution(t, ev),
-         Labels.returnAttributionPairs(t, ev)),
+         WeightPairsReference.returnAttribution(t, ev)),
       )) {
       val got = scan.orderBy("symbol", "event_id").collect()
       val want = pairsForm.orderBy("symbol", "event_id").collect()
@@ -1850,12 +1850,12 @@ class CoreOperatorsSpec extends SparkSpec {
           .fromEvents(spark, "/root/testdata/sf0.001")
           .select("symbol", "ts", "price", "size", "trade_id")
       )
-    val want = Microstructure
+    val want = TickScanReference
       .signEntropy(t)
       .orderBy("symbol", "date")
       .collect()
     val got = Microstructure
-      .signEntropyScan(t)
+      .signEntropy(t)
       .orderBy("symbol", "date")
       .collect()
     assert(got.length == want.length && got.nonEmpty)

@@ -434,7 +434,7 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
       ("s", new java.sql.Timestamp(1700000000000L), new java.sql.Timestamp(1700000000000L + 5 * 60000L), 1L),
       ("s", new java.sql.Timestamp(1700000000000L + 3 * 60000L), new java.sql.Timestamp(1700000000000L + 8 * 60000L), 2L),
     ).toDF("symbol", "t0", "t1", "event_id")
-    val got = operators.Labels.returnAttribution(df, ev, bucket = "10 minutes")
+    val got = operators.Labels.returnAttribution(df, ev)
       .orderBy("event_id").as[(String, Long, Double, Long)].collect()
     // reference: ret_i = ln(p_i/p_{i-1}) for i=1..9; c_t = 2 on the
     // overlap ticks 3..5, else 1
@@ -508,8 +508,8 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
       }
       val ev = evs.toDF("symbol", "t0", "t1", "event_id")
       for ((scan, pairsForm) <- Seq(
-          (operators.Labels.uniquenessWeights(df, ev), operators.Labels.uniquenessWeightsPairs(df, ev)),
-          (operators.Labels.returnAttribution(df, ev), operators.Labels.returnAttributionPairs(df, ev)),
+          (operators.Labels.uniquenessWeights(df, ev), WeightPairsReference.uniquenessWeights(df, ev)),
+          (operators.Labels.returnAttribution(df, ev), WeightPairsReference.returnAttribution(df, ev)),
         )) {
         val got = scan.orderBy("symbol", "event_id").collect()
         val want = pairsForm.orderBy("symbol", "event_id").collect()

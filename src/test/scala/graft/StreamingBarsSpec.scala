@@ -58,7 +58,7 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(trades.schema).parquet(dir)
-    val q = graft.streaming.StatefulBars
+    val q = graft.operators.ImbalanceBars
       .tickImbalanceBars(stream, initTicks = 20.0)
       .writeStream
       .outputMode("append")
@@ -92,15 +92,15 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     for (
-      (name, streamFn, batchDf) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[graft.streaming.StatefulBars.ImbBar], org.apache.spark.sql.DataFrame)](
+      (name, streamFn, batchDf) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
         (
           "stream_dimb",
-          s => graft.streaming.StatefulBars.dollarImbalanceBars(s, initTicks = 20.0),
+          s => graft.operators.ImbalanceBars.dollarImbalanceBars(s, initTicks = 20.0),
           graft.operators.ImbalanceBars.dollarImbalanceBars(trades, initTicks = 20.0),
         ),
         (
           "stream_vimb",
-          s => graft.streaming.StatefulBars.volumeImbalanceBars(s, initTicks = 20.0),
+          s => graft.operators.ImbalanceBars.volumeImbalanceBars(s, initTicks = 20.0),
           graft.operators.ImbalanceBars.volumeImbalanceBars(trades, initTicks = 20.0),
         ),
       )
@@ -152,12 +152,12 @@ class StreamingBarsSpec extends SparkSpec {
       ),
       (
         "stream_vbar_ovf",
-        s => graft.streaming.StatefulBars.volumeBars(s, barSize = 500L, allowSplits = false).toDF(),
+        s => Bars.volumeBars(s, barSize = 500L, allowSplits = false),
         Bars.volumeBars(trades, barSize = 500L, allowSplits = false).where(col("volume") >= 500L),
       ),
       (
         "stream_dbar_ovf",
-        s => graft.streaming.StatefulBars.dollarBars(s, barSize = 50000.0).toDF(),
+        s => Bars.dollarBars(s, barSize = 50000.0),
         Bars.dollarBars(trades, barSize = 50000.0)
           .where(round(col("vwap") * 100.0 * col("volume")) >= 50000L * 100L),
       ),
@@ -195,7 +195,7 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(trades.schema).parquet(dir)
-    val q = graft.streaming.StatefulBars
+    val q = graft.operators.ImbalanceBars
       .tickRunBars(stream, initTicks = 20.0)
       .writeStream
       .outputMode("append")
@@ -330,7 +330,7 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(trades.schema).parquet(dir)
-    val q = graft.streaming.StreamingTrend
+    val q = graft.operators.TrendScan
       .labels(stream, minHorizon = 5, maxHorizon = 12)
       .writeStream
       .outputMode("append")
@@ -421,7 +421,7 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(trades.schema).parquet(dir)
-    val q = graft.streaming.StreamingSadf
+    val q = graft.operators.Sadf
       .sadf(stream, minWindow = 6, maxWindow = 15)
       .writeStream
       .outputMode("append")
@@ -450,8 +450,8 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(trades.schema).parquet(dir)
-    val q = graft.streaming.StreamingCsw
-      .csw(stream, minLag = 5, maxLag = 15)
+    val q = graft.operators.StructuralBreak
+      .cswScan(stream, minLag = 5, maxLag = 15)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -754,7 +754,7 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(trades.schema).parquet(dir)
-    val q = graft.streaming.StreamingDaily
+    val q = graft.operators.Microstructure
       .realizedVol(stream)
       .writeStream
       .outputMode("append")
@@ -861,7 +861,7 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(trades.schema).parquet(dir)
-    val q = graft.streaming.StreamingCusum
+    val q = graft.operators.Cusum
       .events(stream, threshold = 50.0)
       .writeStream
       .outputMode("append")
@@ -964,7 +964,7 @@ class StreamingBarsSpec extends SparkSpec {
     trades.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(trades.schema).parquet(dir)
-    val q = graft.streaming.StreamingDailyVol
+    val q = graft.operators.Labels
       .dailyVol(stream, span = 100)
       .writeStream
       .outputMode("append")
@@ -992,37 +992,91 @@ class StreamingBarsSpec extends SparkSpec {
   }
 
   test("streaming daily_vol state carry: a mid-symbol batch split changes nothing") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    import graft.streaming.StreamingDailyVol.{processGroup, VolState}
-    import graft.streaming.StatefulBars.Tick
-    // 30-second spacing with a 10-minute lookback: ticks 21+ have a
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    // 72-minute spacing with the 24-hour lookback: ticks 21+ have a
     // lookback price, crossing the warm-up boundary inside the run
     val ticks = (1 to 90).map { i =>
-      Tick("A", java.sql.Timestamp.valueOf(f"2024-01-01 00:${i / 2}%02d:${30 * (i % 2)}%02d"), 100.0 + (i % 11) * 0.5, 1L, i.toLong)
-    }
-    val lookbackUs = 10L * 60 * 1000000
-
-    def run(chunks: Seq[Seq[Tick]]): Seq[Option[Double]] = {
-      var st: Option[VolState] = None
-      chunks.flatMap { chunk =>
-        val gs = TestGroupState.create[VolState](
-          org.apache.spark.api.java.Optional.ofNullable(st.orNull),
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          0L,
-          org.apache.spark.api.java.Optional.empty[Long](),
-          false,
-        )
-        val out = processGroup(100, lookbackUs)("A", chunk.iterator, gs).toSeq
-        st = if (gs.exists) Some(gs.get) else None
-        out.map(_.daily_return_volatility)
-      }
+      ("A", new java.sql.Timestamp(i * 72L * 60000L), 100.0 + (i % 11) * 0.5, 1L, i.toLong)
     }
 
-    val whole = run(Seq(ticks))
+    def run(tag: String, chunks: Seq[Seq[(String, java.sql.Timestamp, Double, Long, Long)]]): Seq[Option[Double]] = {
+      val ms = MemoryStream[(String, java.sql.Timestamp, Double, Long, Long)](spark)
+      val q = graft.operators.Labels
+        .dailyVol(ms.toDF().toDF("symbol", "ts", "price", "size", "trade_id"), span = 100)
+        .writeStream.outputMode("append").format("memory").queryName(s"stream_dvol_$tag")
+        .start()
+      chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
+      q.stop()
+      spark.table(s"stream_dvol_$tag").orderBy("ts").collect().toSeq
+        .map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2)))
+    }
+
+    val whole = run("whole", Seq(ticks))
     assert(whole.take(20).forall(_.isEmpty) && whole.drop(21).forall(_.isDefined))
     for (cut <- Seq(7, 20, 21, 55)) {
-      val split = run(Seq(ticks.take(cut), ticks.drop(cut)))
+      val split = run(s"cut$cut", Seq(ticks.take(cut), ticks.drop(cut)))
       assert(split == whole, s"state carry diverged at split $cut")
     }
+  }
+
+  test("priceless ticks: every keyed scan gives its batch rows on a stream") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators._
+    def tick(sym: String, i: Int, price: Option[Double]) =
+      (sym, new java.sql.Timestamp(1704067200000L + i * 7200000L), price, 10L + (i * 7) % 41, i.toLong)
+    // A and B: 40 two-hourly ticks over four days, each with one NaN
+    // and one null price; C and D: the five-tick CUSUM case with a NaN
+    // and a null price in the middle
+    val walk = (0 until 40).map(i => 100.0 + ((i * 13) % 9 - 4) * 0.75 + i * 0.1)
+    val rows = Seq("A", "B").flatMap { sym =>
+      walk.indices.map { i =>
+        val price =
+          if (sym == "A" && i == 10 || sym == "B" && i == 15) Some(Double.NaN)
+          else if (sym == "A" && i == 20 || sym == "B" && i == 25) None
+          else Some(walk(i) + (if (sym == "B") 3.0 else 0.0))
+        tick(sym, i, price)
+      }
+    } ++ Seq(Some(100.0), Some(101.0), Some(Double.NaN), Some(101.5), Some(99.0)).zipWithIndex.map {
+      case (p, i) => tick("C", i, p)
+    } ++ Seq(Some(100.0), Some(101.0), None, Some(101.5), Some(99.0)).zipWithIndex.map {
+      case (p, i) => tick("D", i, p)
+    }
+    val trades = rows.toDF("symbol", "ts", "price", "size", "trade_id")
+    // the batch rows a stream also emits: a bar, or a realized-vol day,
+    // that only `flush` closes stays in streaming state
+    val lastDays = (df: DataFrame) =>
+      df.join(df.groupBy("symbol").agg(max("date").as("date")), Seq("symbol", "date"), "left_anti")
+    val cases = Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)](
+      ("cusum", Cusum.events(_, threshold = 1.0), identity),
+      ("sadf", Sadf.sadf(_, minWindow = 4, maxWindow = 6), identity),
+      ("csw", StructuralBreak.cswScan(_, minLag = 2, maxLag = 5), identity),
+      ("trend", TrendScan.labels(_, minHorizon = 3, maxHorizon = 5), identity),
+      ("dvol", Labels.dailyVol(_, span = 10), identity),
+      ("rvol", Microstructure.realizedVol(_), lastDays),
+      ("dbar", Bars.dollarBars(_, barSize = 5000.0), _.where(round(col("vwap") * 100.0 * col("volume")) >= 500000L)),
+      ("vbar", Bars.volumeBars(_, barSize = 100L, allowSplits = false), _.where(col("volume") >= 100L)),
+      ("timb", ImbalanceBars.tickImbalanceBars(_, initTicks = 5.0), identity),
+      ("dimb", ImbalanceBars.dollarImbalanceBars(_, initTicks = 5.0), identity),
+      ("vimb", ImbalanceBars.volumeImbalanceBars(_, initTicks = 5.0), identity),
+      ("run", ImbalanceBars.tickRunBars(_, initTicks = 5.0), identity),
+    )
+    for ((name, op, emitted) <- cases) {
+      val ms = MemoryStream[(String, java.sql.Timestamp, Option[Double], Long, Long)](spark)
+      val q = op(ms.toDF().toDF("symbol", "ts", "price", "size", "trade_id"))
+        .writeStream.outputMode("append").format("memory").queryName(s"priceless_$name")
+        .start()
+      // two micro-batches, split in the middle of A and B
+      Seq(rows.filter(_._5 < 20), rows.filter(_._5 >= 20)).foreach { b => ms.addData(b); q.processAllAvailable() }
+      q.stop()
+      val streamed = spark.table(s"priceless_$name")
+      val batch = emitted(op(trades))
+      assert(streamed.count() > 0 && streamed.count() == batch.count(), name)
+      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty, name)
+    }
+    // the NaN tick is dropped, not read as a price: two CUSUM events
+    assert(spark.table("priceless_cusum").where(col("symbol") === "C").count() == 2)
   }
 }

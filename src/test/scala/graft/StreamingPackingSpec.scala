@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Packing
-import graft.streaming.StreamingPacking
 
 class StreamingPackingSpec extends SparkSpec {
   import spark.implicits._
@@ -18,7 +17,7 @@ class StreamingPackingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-spack").toString
     docs.coalesce(1).write.mode("overwrite").parquet(dir)
 
-    val q = StreamingPacking
+    val q = Packing
       .packSequences(spark.readStream.schema(docs.schema).parquet(dir), 400L, 4)
       .writeStream
       .outputMode("append").format("memory").queryName("stream_pack")
@@ -37,7 +36,7 @@ class StreamingPackingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-spack2").toString
     // many small files -> maxFilesPerTrigger forces multiple batches
     docs.repartition(6).write.mode("overwrite").parquet(dir)
-    val q = StreamingPacking
+    val q = Packing
       .packSequences(
         spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "2").parquet(dir),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.operators.{ImbalanceBars, Sadf}
 import graft.streaming.{StatefulBars, StreamingAsof, StreamingTickQc}
 
 /** Checkpoint-restart recovery for the flatMapGroupsWithState twins
@@ -20,7 +21,8 @@ import graft.streaming.{StatefulBars, StreamingAsof, StreamingTickQc}
   * StatefulBars.OpenBar (an open bar spanning the restart),
   * StreamingTickQc.QcState (its Array[Long] duplicate-id seen-set),
   * StreamingAsof.AsofState (Vector-of-tuple ref buffer + pending
-  * ticks held back by the watermark).
+  * ticks held back by the watermark), and the Java-serialized
+  * `ScanKernel` a keyed scan over a stream keeps per key.
   *
   * The restarted runs sink to parquet (the memory sink refuses
   * checkpoint recovery in append mode by design — it is not
@@ -186,5 +188,46 @@ class StreamingRestartSpec extends SparkSpec {
     q3.stop()
     val ref = spark.table("restart_asof_ref").where(col("symbol") === "A")
     assert(multiset(got) == multiset(ref), "restarted asof != uninterrupted asof")
+  }
+
+  test("keyed scans: a SADF ring and an open imbalance bar survive a restart") {
+    // one symbol, restarted 23 ticks in: the SADF windows of the
+    // post-restart ticks reach back across the cut, and the imbalance
+    // bar open at the cut closes only on post-restart ticks
+    def tick(i: Int): (String, Timestamp, Double, Long, Long) =
+      ("A", new Timestamp(1704067200000L + i * 1000L), 100.0 + ((i * 7) % 5 - 2) * 0.25 + i * 0.05, 1L + i % 3,
+        i.toLong)
+    val b1 = (0 until 23).map(tick)
+    val b2 = (23 until 50).map(tick)
+    val cut = tick(23)._2
+    for ((name, op) <- Seq[(String, DataFrame => DataFrame)](
+        "sadf" -> (Sadf.sadf(_, minWindow = 4, maxWindow = 8)),
+        "imbalance" -> (ImbalanceBars.tickImbalanceBars(_, initTicks = 6.0)),
+      )) {
+      val ms = MemoryStream[(String, Timestamp, Double, Long, Long)](spark)
+      val out = temp(s"$name-out")
+      val ckpt = temp(s"$name-ckpt")
+      def start() = op(ms.toDF().toDF("symbol", "ts", "price", "size", "trade_id"))
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .start()
+      val q1 = start()
+      ms.addData(b1); q1.processAllAvailable(); q1.stop()
+      val q2 = start()
+      ms.addData(b2); q2.processAllAvailable(); q2.stop()
+
+      // uninterrupted twin: same data, same micro-batch boundaries
+      val ms2 = MemoryStream[(String, Timestamp, Double, Long, Long)](spark)
+      val q3 = op(ms2.toDF().toDF("symbol", "ts", "price", "size", "trade_id"))
+        .writeStream.outputMode("append").format("memory").queryName(s"restart_${name}_ref")
+        .start()
+      Seq(b1, b2).foreach { b => ms2.addData(b); q3.processAllAvailable() }
+      q3.stop()
+      assert(multiset(spark.read.parquet(out)) == multiset(spark.table(s"restart_${name}_ref")),
+        s"restarted $name != uninterrupted $name")
+    }
+    assert(spark.table("restart_sadf_ref").where(col("ts") > cut).count() > 0)
+    assert(spark.table("restart_imbalance_ref").where(col("ts_start") < cut && col("ts_end") >= cut).count() == 1,
+      "no imbalance bar is open across the restart")
   }
 }

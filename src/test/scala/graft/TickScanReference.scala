@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 
 import graft.api.TradingCols
 
-/** The declarative window forms of `TrendScan.labels` and `Sadf.sadf`,
-  * kept as the references those keyed scans are pinned against. Both
-  * window over the whole symbol in (ts, trade_id) order after dropping
-  * the ticks without a price, as the scans do; a null symbol is one
-  * partition and null order values sort first, as in the scans.
+/** The declarative window forms of `TrendScan.labels`, `Sadf.sadf` and
+  * `Microstructure.signEntropy`, kept as the references those keyed
+  * scans are pinned against. The first two window over the whole
+  * symbol in (ts, trade_id) order after dropping the ticks without a
+  * price, as the scans do; a null symbol is one partition and null
+  * order values sort first, as in the scans. Sign entropy windows per
+  * (symbol, day).
   */
 object TickScanReference {
 
@@ -182,4 +184,80 @@ object TickScanReference {
       col(c.price).cast("double").as("__price"),
       col(c.tradeId).cast("long").as("__tid"),
     )
+
+  /** Sign entropy (`Microstructure.signEntropy`) in declarative form.
+    * The k-gram distribution is computed WITHOUT a shuffle per gram:
+    * one collect per (symbol, day) group (bounded by the day's
+    * ticks), then a sorted-array run-length fold — the entropy sum
+    * accumulates in ascending gram order, a fixed order both engines
+    * replay (the oracle uses unnest+group+ordered list_reduce).
+    * 0.0 for days shorter than k ticks.
+    */
+  def signEntropy(df: DataFrame, c: TradingCols = TradingCols.default): DataFrame = {
+    val wOrd = Window.partitionBy(col("symbol"), col("date")).orderBy(col("ts"), col("trade_id"))
+    val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val base = df.na
+      .drop(Seq(c.price))
+      .select(
+        col(c.symbol).cast("string").as("symbol"),
+        to_date(col(c.ts)).as("date"),
+        col(c.ts).as("ts"),
+        round(col(c.price) * 100).cast("long").as("pc"),
+        col(c.tradeId).cast("long").as("trade_id"),
+      )
+      .withColumn("d", col("pc") - lag(col("pc"), 1).over(wOrd))
+      .withColumn(
+        "sgn",
+        coalesce(
+          last(when(col("d") =!= 0, signum(col("d")).cast("long")), ignoreNulls = true).over(wCum),
+          lit(1L),
+        ),
+      )
+      .withColumn("ch", when(col("sgn") > 0, lit("u")).otherwise(lit("d")))
+    val grouped = base
+      .groupBy(col("symbol"), col("date"))
+      .agg(
+        count(lit(1)).as("n_ticks"),
+        array_sort(collect_list(struct(col("ts"), col("trade_id"), col("ch")))).as("ordered"),
+      )
+      .withColumn("msg", transform(col("ordered"), x => x.getField("ch")))
+    def entropyRate(k: Int): Column = {
+      val n = size(col("msg")) - lit(k - 1)
+      // zip_with chain, not transform(sequence, i -> ..msg..): a
+      // lambda referencing msg would re-evaluate its (inlined)
+      // producing expression per element — see TextAnalysis.ngramsOfTokens
+      val msg = col("msg")
+      val joined = (2 to k).foldLeft(msg) { case (acc, j) =>
+        zip_with(acc, slice(msg, lit(j), size(msg)), (a, b) => concat(a, b))
+      }
+      val g = array_sort(filter(joined, x => x.isNotNull))
+      val nd = n.cast("double")
+      def term(run: Column): Column =
+        when(run === 0, lit(0.0)).otherwise {
+          val p = run.cast("double") / nd
+          -p * log(p) / lit(math.log(2.0))
+        }
+      val h = aggregate(
+        g,
+        struct(lit("").as("prev"), lit(0L).as("run"), lit(0.0).as("acc")),
+        (st, x) =>
+          struct(
+            x.as("prev"),
+            when(x === st.getField("prev"), st.getField("run") + 1).otherwise(lit(1L)).as("run"),
+            when(x === st.getField("prev"), st.getField("acc"))
+              .otherwise(st.getField("acc") + term(st.getField("run"))).as("acc"),
+          ),
+        st => st.getField("acc") + term(st.getField("run")),
+      )
+      when(size(col("msg")) < k, lit(0.0)).otherwise(h / lit(k.toDouble))
+    }
+    grouped.select(
+      col("symbol"),
+      col("date"),
+      col("n_ticks"),
+      entropyRate(1).as("h1"),
+      entropyRate(2).as("h2"),
+      entropyRate(3).as("h3"),
+    )
+  }
 }
